@@ -284,12 +284,19 @@ def ktruss_peel(edges: DataFrame, *, k: int, rounds: int = 2) -> DataFrame:
     on the surviving graph.
 
     ``edges``: undirected distinct pairs (a, b), a < b. Bounded rounds
-    keep the operator a FIXED composition of joins (each round: one
-    wedge join shuffled on the shared neighbor + one anti-filter,
-    lineage cut by localCheckpoint) so an unrolled SQL oracle can replay
-    it exactly; run more rounds for a fixpoint — convergence is reached
-    when a round deletes nothing (the classic truss decomposition runs
-    O(max support) rounds; sparse real graphs converge in a handful).
+    keep the operator a FIXED composition of joins so an unrolled SQL
+    oracle can replay it exactly; run more rounds for a fixpoint —
+    convergence is reached when a round deletes nothing (the classic
+    truss decomposition runs O(max support) rounds; sparse real graphs
+    converge in a handful).
+
+    Superstep shape: the distinct edge set is built and checkpointed
+    once; each round is the wedge join shuffled on the shared neighbor
+    and one combine (the support count per edge), and the round's
+    survivors are read straight off that support frame — its keys are a
+    subset of the current edges, and an edge with no triangle has no
+    row — so no join back to the edge set runs. For k <= 2 every edge
+    survives and the peel rounds are skipped.
     """
     e = edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct()
     e = e.localCheckpoint(eager=True)
@@ -307,11 +314,10 @@ def ktruss_peel(edges: DataFrame, *, k: int, rounds: int = 2) -> DataFrame:
             .agg(F.count("*").alias("sup"))
         )
 
-    for _ in range(rounds):
-        sup = support(e)
+    for _ in range(rounds if k >= 3 else 0):
         e = (
-            e.join(sup, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("sup"), F.lit(0)) >= k - 2)
+            support(e)
+            .filter(F.col("sup") >= k - 2)
             .select("a", "b")
             .localCheckpoint(eager=True)
         )

@@ -7,9 +7,14 @@ repair tool's fixed-depth chain exploration
 
 Design: BFS = iterative frontier equi-joins with a visited-set anti-join.
 Each iteration is one shuffle on the frontier key; ``localCheckpoint()``
-every few rounds cuts lineage so plans don't grow unboundedly (the classic
+cuts lineage every round so plans don't grow unboundedly (the classic
 iterative-Spark pitfall at scale). Frontiers stay DataFrames end-to-end —
 no driver-side collection of node ids.
+
+Superstep loops (connected components, PageRank) do only per-round work:
+their loop invariants are built and checkpointed once before the loop,
+each round is one message join and one combine, and the halt test reads
+the round's own checkpoint.
 """
 
 from __future__ import annotations
@@ -277,46 +282,97 @@ def chain_explorer(rels: DataFrame, broken_rel_ids: DataFrame) -> DataFrame:
 def connected_components(rels: DataFrame, max_iter: int = 20) -> DataFrame:
     """Batch analytics: connected components via iterative label
     propagation (small-star style: every node adopts the min component id
-    among itself and its neighbors until fixpoint).
+    among itself and its neighbors until fixpoint, or for ``max_iter``
+    synchronous rounds).
 
-    Returns (node_id, component). Each round = one shuffle on node_id;
-    lineage cut by localCheckpoint. This is the DataFrame rendering of
+    Returns (node_id, component). This is the DataFrame rendering of
     GraphX's connectedComponents (the north-star analytics in SURVEY §7 M7).
+
+    Superstep shape: the loop invariant — the distinct undirected edge set
+    plus one self-loop ``(a, a)`` per node — is built and checkpointed
+    once. Round 1 needs no label frame: a node's label is ``min(b)`` over
+    its rows. Every later round is one message join (edges ⋈ labels on
+    ``b = node_id``) and one combine (``groupBy(a)`` with
+    ``min(component)``); the node's old label comes back through its
+    self-loop row. Each round's checkpoint carries
+    ``changed = new < old`` and the loop halts when that checkpoint has
+    no changed row, so no old⋈new join runs. A NULL node id keeps a NULL
+    label: only its own self-loop reaches it.
     """
-    edges = (
-        rels.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(rels.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
+    pairs = rels.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
+        rels.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     )
-    labels = (
-        edges.select(F.col("a").alias("node_id"))
+    edges = (
+        pairs.unionByName(pairs.select("a", F.col("a").alias("b")))
+        .filter(F.col("a").isNotNull() | F.col("b").isNull())
         .distinct()
-        .withColumn("component", F.col("node_id"))
     ).localCheckpoint(eager=True)
-    for i in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges["b"] == labels["node_id"])
-            .groupBy(F.col("a").alias("node_id"))
-            .agg(F.min("component").alias("nbr_component"))
+    if max_iter < 1:
+        return edges.select(F.col("a").alias("node_id")).distinct().withColumn(
+            "component", F.col("node_id")
         )
-        new_labels = (
-            labels.join(nbr_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(F.col("component"), F.col("nbr_component")).alias("component"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+    labels = (
+        edges.groupBy(F.col("a").alias("node_id"))
+        .agg(F.min("b").alias("component"))
+        .withColumn("changed", F.col("component") < F.col("node_id"))
+    ).localCheckpoint(eager=True)
+    for _ in range(max_iter - 1):
+        if labels.filter("changed").limit(1).count() == 0:
             break
-    return labels
+        nbr = labels.select(F.col("node_id").alias("nbr"), "component")
+        labels = (
+            edges.join(nbr, edges["b"].eqNullSafe(nbr["nbr"]))
+            .groupBy(F.col("a").alias("node_id"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("component"))).alias("old"),
+            )
+            .select("node_id", "component", (F.col("component") < F.col("old")).alias("changed"))
+        ).localCheckpoint(eager=True)
+    return labels.select("node_id", "component")
+
+
+def _pagerank_invariants(rels: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """PageRank's loop invariants, built once: the node frame
+    (node_id, dangling) and the edge list carrying its source's
+    out-degree (src, dst, out_degree), both checkpointed, plus the node
+    count."""
+    out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
+        F.count("*").alias("out_degree")
+    )
+    nodes = (
+        rels.select(F.col("src").alias("node_id"))
+        .unionByName(rels.select(F.col("dst").alias("node_id")))
+        .distinct()
+        .join(out_deg, "node_id", "left")
+        .select("node_id", F.col("out_degree").isNull().alias("dangling"))
+    ).localCheckpoint(eager=True)
+    edges = (
+        rels.select("src", "dst")
+        .join(out_deg.withColumnRenamed("node_id", "src"), "src")
+    ).localCheckpoint(eager=True)
+    return nodes, edges, nodes.count()
+
+
+def _in_contribs(ranks: DataFrame, edges: DataFrame) -> DataFrame:
+    """One PageRank message round: rank / out_degree sent along every
+    edge and summed per destination."""
+    return (
+        ranks.join(edges, ranks["node_id"] == edges["src"])
+        .select(
+            F.col("dst").alias("node_id"),
+            (F.col("rank") / F.col("out_degree")).alias("contrib"),
+        )
+        .groupBy("node_id")
+        .agg(F.sum("contrib").alias("in_contrib"))
+    )
+
+
+def _dangling_mass(ranks: DataFrame) -> DataFrame:
+    """1-row frame: the summed rank of nodes without out-edges."""
+    return ranks.filter("dangling").agg(
+        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
+    )
 
 
 def pagerank(
@@ -325,44 +381,25 @@ def pagerank(
     """Batch analytics: PageRank over the directed graph (dangling mass
     redistributed uniformly). Returns (node_id, rank); ranks sum to ~N.
 
-    Pure DataFrame iteration: contributions = rank/out_degree joined to
-    edges, aggregated by destination — one shuffle per iteration, lineage
-    checkpointed. The per-iteration dangling-mass SCALAR stays inside the
-    plan: the 1-row aggregate is broadcast-crossJoined onto the rank
-    update instead of ``.collect()``-ed, so no driver action runs between
-    iterations (one job per checkpoint cadence, not per iteration).
+    Superstep shape: the loop invariants — the node frame with a
+    ``dangling`` flag and the edge list carrying its source's out-degree
+    — are built and checkpointed once. A round is then one message join
+    (rank / out_degree along the edges) and one combine (sum per
+    destination), and the dangling mass is a filter on the rank frame.
+    The per-iteration dangling-mass SCALAR stays inside the plan: the
+    1-row aggregate is broadcast-crossJoined onto the rank update instead
+    of ``.collect()``-ed, so no driver action runs between iterations
+    (one job per checkpoint cadence, not per iteration).
     """
-    nodes = (
-        rels.select(F.col("src").alias("node_id"))
-        .unionByName(rels.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_total = nodes.count()
-    out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("out_degree")
-    )
+    nodes, edges, n_total = _pagerank_invariants(rels)
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "node_id")
-            .join(rels, ranks["node_id"] == rels["src"])
-            .select(
-                F.col("dst").alias("node_id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("node_id")
-            .agg(F.sum("contrib").alias("in_contrib"))
-        )
-        dangling_1row = (
-            ranks.join(out_deg, "node_id", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        )
         ranks = (
-            nodes.join(contribs, "node_id", "left")
-            .crossJoin(F.broadcast(dangling_1row))
+            nodes.join(_in_contribs(ranks, edges), "node_id", "left")
+            .crossJoin(F.broadcast(_dangling_mass(ranks)))
             .select(
                 "node_id",
+                "dangling",
                 (
                     F.lit(1.0 - damping)
                     + F.lit(damping)
@@ -375,7 +412,8 @@ def pagerank(
         )
         if (i + 1) % CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return ranks.select("node_id", "rank")
+
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """Batch analytics: per-node triangle count + local clustering
@@ -681,50 +719,29 @@ def personalized_pagerank(
     """Personalized PageRank: teleport returns to the SEED set instead
     of everywhere — ranks measure proximity to the seeds (the
     recommendation / related-entities primitive). Same closed-plan
-    iteration as ``pagerank`` (one shuffle per round, dangling mass and
-    teleport both broadcast 1-row aggregates, no driver action between
-    rounds); mass conserves at ~N.
+    iteration as ``pagerank`` (loop invariants built once, one message
+    join and one combine per round, dangling mass and teleport both
+    broadcast 1-row aggregates, no driver action between rounds); mass
+    conserves at ~N.
 
     ``seeds``: one column ``seed``. Returns (node_id, rank).
     """
-    nodes = (
-        rels.select(F.col("src").alias("node_id"))
-        .unionByName(rels.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_total = nodes.count()
+    nodes, edges, n_total = _pagerank_invariants(rels)
     seed_set = seeds.select(F.col("seed").cast("long").alias("node_id")).distinct()
     n_seeds_1row = seed_set.agg(F.count("*").alias("n_seeds"))
     is_seed = seed_set.withColumn("__is_seed", F.lit(1))
-    out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("out_degree")
-    )
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "node_id")
-            .join(rels, ranks["node_id"] == rels["src"])
-            .select(
-                F.col("dst").alias("node_id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("node_id")
-            .agg(F.sum("contrib").alias("in_contrib"))
-        )
-        dangling_1row = (
-            ranks.join(out_deg, "node_id", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        )
         # teleport mass (1-d per node, N total) concentrates on seeds;
         # dangling mass also restarts at the seeds in personalized PR
         ranks = (
-            nodes.join(contribs, "node_id", "left")
+            nodes.join(_in_contribs(ranks, edges), "node_id", "left")
             .join(F.broadcast(is_seed), "node_id", "left")
-            .crossJoin(F.broadcast(dangling_1row))
+            .crossJoin(F.broadcast(_dangling_mass(ranks)))
             .crossJoin(F.broadcast(n_seeds_1row))
             .select(
                 "node_id",
+                "dangling",
                 (
                     F.coalesce(F.col("__is_seed"), F.lit(0))
                     * (
@@ -738,4 +755,4 @@ def personalized_pagerank(
         )
         if (i + 1) % CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return ranks.select("node_id", "rank")

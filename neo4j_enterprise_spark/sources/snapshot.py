@@ -51,7 +51,10 @@ def incremental_backup(
     slice_ = export_range(txlog, start, up_to_tx)
     slice_.write.mode("overwrite").parquet(os.path.join(backup_dir, f"txlog_{start}_{up_to_tx}"))
     with open(os.path.join(backup_dir, _META), "w") as f:
-        json.dump({"last_tx": up_to_tx, "base_version": meta["last_tx"]}, f)
+        # every incremental in a chain replays on top of the full
+        # backup's snapshot, so its version is carried forward
+        base_version = meta.get("base_version", meta["last_tx"])
+        json.dump({"last_tx": up_to_tx, "base_version": base_version}, f)
     return slice_
 
 

@@ -148,6 +148,18 @@ def test_ktruss_peel_keeps_k4_drops_tail(spark):
     assert got == {e: 2 for e in k4}
 
 
+def test_ktruss_peel_low_k_keeps_every_edge_and_k3_drops_tail(spark):
+    from neo4j_enterprise_spark.operators.community import ktruss_peel
+
+    # K4 on {0,1,2,3} (support 2 each) + tail 3-4-5 (support 0)
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    edges = spark.createDataFrame(k4 + [(3, 4), (4, 5)], "a long, b long")
+    got = {(r.a, r.b): r.support for r in ktruss_peel(edges, k=2).collect()}
+    assert got == {**{e: 2 for e in k4}, (3, 4): 0, (4, 5): 0}
+    got = {(r.a, r.b): r.support for r in ktruss_peel(edges, k=3).collect()}
+    assert got == {e: 2 for e in k4}
+
+
 def test_ktruss_peel_cascading_deletion_needs_second_round(spark):
     from neo4j_enterprise_spark.operators.community import ktruss_peel
 

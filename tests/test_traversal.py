@@ -54,6 +54,74 @@ def test_pagerank_sums_to_n_and_ranks_hub_highest(spark):
     assert out[0] == max(out.values())
 
 
+def test_connected_components_max_iter_cut_keeps_partial_labels(spark):
+    # path 0-1-2-3-4-5: each round moves the minimum one hop, so after
+    # max_iter rounds node v holds max(0, v - max_iter); 0 rounds is the
+    # identity labelling
+    rels = _edges_df(spark, [(v, v + 1) for v in range(5)])
+    for max_iter in (0, 1, 2):
+        out = {
+            r["node_id"]: r["component"]
+            for r in traversal.connected_components(rels, max_iter=max_iter).collect()
+        }
+        assert out == {v: max(0, v - max_iter) for v in range(6)}, max_iter
+
+
+def test_connected_components_self_loop_isolated_pair_and_null_endpoint(spark):
+    # a src == dst relationship is a component of its own; an isolated
+    # pair takes its smaller id; a NULL endpoint is a node of its own
+    # with a NULL label and links its other endpoint to nothing
+    rels = _edges_df(spark, [(3, 1), (1, 2), (5, 5), (9, 8), (7, None)])
+    out = {
+        r["node_id"]: r["component"]
+        for r in traversal.connected_components(rels).collect()
+    }
+    assert out == {1: 1, 2: 1, 3: 1, 5: 5, 8: 8, 9: 8, 7: 7, None: None}
+
+
+# dangling nodes (3 and 4 have no out-edges), a self-loop on 2 and a
+# duplicate edge 0->1: the shapes the loop-invariant frames must preserve
+_PR_EDGES = [(0, 1), (0, 1), (1, 2), (2, 2), (2, 0), (2, 3), (0, 4), (5, 1)]
+
+
+def _power_iteration(pairs, iterations, damping, seeds=None):
+    nodes = sorted({v for e in pairs for v in e})
+    out_deg = {v: sum(1 for s, _ in pairs if s == v) for v in nodes}
+    rank = {v: 1.0 for v in nodes}
+    n = float(len(nodes))
+    for _ in range(iterations):
+        inc = {v: 0.0 for v in nodes}
+        for s, d in pairs:
+            inc[d] += rank[s] / out_deg[s]
+        dangling = sum(rank[v] for v in nodes if out_deg[v] == 0)
+        if seeds is None:
+            rank = {v: (1 - damping) + damping * (inc[v] + dangling / n) for v in nodes}
+        else:
+            restart = ((1 - damping) * n + damping * dangling) / len(seeds)
+            rank = {v: (restart if v in seeds else 0.0) + damping * inc[v] for v in nodes}
+    return rank
+
+
+def test_pagerank_matches_power_iteration_with_dangling_and_self_loop(spark):
+    rels = _edges_df(spark, _PR_EDGES)
+    got = {r["node_id"]: r["rank"] for r in traversal.pagerank(rels, iterations=7).collect()}
+    want = _power_iteration(_PR_EDGES, 7, 0.85)
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
+
+
+def test_personalized_pagerank_matches_power_iteration(spark):
+    rels = _edges_df(spark, _PR_EDGES)
+    seeds = spark.createDataFrame([(0,), (3,)], "seed long")
+    got = {
+        r["node_id"]: r["rank"]
+        for r in traversal.personalized_pagerank(rels, seeds, iterations=7).collect()
+    }
+    want = _power_iteration(_PR_EDGES, 7, 0.85, seeds={0, 3})
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
+
+
 def test_triangle_counts_k4_minus_edge(spark):
     # K4 on {0,1,2,3} minus edge (2,3): triangles {0,1,2} and {0,1,3}.
     # deg: 0→3, 1→3, 2→2, 3→2; T: 0→2, 1→2, 2→1, 3→1.

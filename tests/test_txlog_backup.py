@@ -104,6 +104,26 @@ def test_incremental_backup_restore(spark, tmp_path):
     assert a == b
 
 
+def test_chained_incremental_backups_restore(spark, tmp_path):
+    # every incremental replays on top of the full backup's snapshot, so
+    # restore must still find that version after the second incremental
+    g = generate_graph(spark, node_count=100)
+    # node deletes dangle relationships, which a verified restore refuses
+    log = synthesize_txlog(spark, n_txs=45, base_nodes=100).filter(
+        F.col("op") != "delete_node"
+    )
+    d = str(tmp_path / "bk3")
+    bk.full_backup(replay(g, log, up_to_tx=14), d, last_tx=14)
+    bk.incremental_backup(d, log, up_to_tx=29)
+    bk.incremental_backup(d, log, up_to_tx=44)
+    restored = bk.restore(spark, d, verify=True)
+    expected = replay(g, log)
+    for table in ("nodes", "relationships"):
+        a = {tuple(r) for r in getattr(restored, table).collect()}
+        b = {tuple(r) for r in getattr(expected, table).collect()}
+        assert a == b, table
+
+
 def test_write_graph_tables_roundtrip(spark, sf_dir, tmp_path):
     from neo4j_enterprise_spark.graph.derive import (
         derived_nodes,
