@@ -930,7 +930,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
+def label_propagation(edges: DataFrame, *, rounds: int) -> DataFrame:
     """Synchronous label-propagation community detection, engine-exact:
     labels start as node ids; each round every node adopts the most
     frequent label among its NEIGHBORS, ties broken by the smaller
@@ -940,43 +940,37 @@ def label_propagation(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
     the same verifiable-unit contract as ``louvain_move_round`` and
     ``maximal_independent_set`` (full LPA = iterate to stability).
 
-    Returns (node_id, label). Each round is one adjacency join shuffled
-    on the node key + one map-side-combinable (node, label) count +
-    one argmax aggregation — no windows, no driver actions; at cluster
-    scale rounds are the only sequential barrier (O(diameter) for
-    convergence, fixed here).
+    ``edges`` (a, b) are read as undirected and deduplicated; a
+    self-loop (a, a) makes a its own neighbor, so it votes for its own
+    label. Returns (node_id, label). Each round is one adjacency join
+    shuffled on the node key + one map-side-combinable (node, label)
+    count + one argmax aggregation — no windows, no driver actions; at
+    cluster scale rounds are the only sequential barrier (O(diameter)
+    for convergence, fixed here).
 
     The reference's cluster-membership gossip converges the same way
     (members adopt the majority view of their peers —
     `ha/.../ClusterManager` member lists); on the analytics side LPA
     is the cheap community baseline beside Louvain.
     """
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
+    e = edges.select("a", "b")
     adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = adj.select(F.col("u").alias("node_id")).distinct().select(
+    labels = adj.select(F.col("a").alias("node_id")).distinct().select(
         "node_id", F.col("node_id").alias("label")
     )
     for _ in range(rounds):
         nbr = (
-            adj.join(
-                labels.select(F.col("node_id").alias("v"), "label"), "v"
-            )
-            .groupBy(F.col("u").alias("node_id"), "label")
+            adj.join(labels.select(F.col("node_id").alias("b"), "label"), "b")
+            .groupBy(F.col("a").alias("node_id"), "label")
             .agg(F.count("*").alias("cnt"))
         )
-        # argmax by (cnt desc, label asc) without a window: max of the
-        # struct (cnt, -label) is the lexicographic winner
-        labels = (
-            nbr.groupBy("node_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
-                ).alias("w")
-            )
-            .select("node_id", (-F.col("w.neg")).cast("long").alias("label"))
+        # argmax by (cnt desc, label asc) without a window: min of the
+        # struct (-cnt, label) is the lexicographic winner
+        labels = nbr.groupBy("node_id").agg(
+            F.min(F.struct((-F.col("cnt")).alias("neg"), "label"))["label"].alias("label")
         )
     return labels

@@ -522,8 +522,8 @@ def lsh_buckets(
     # `size(bks) > 0 AND isnotnull(bks)` filter was pushed BELOW the
     # projection, duplicating the ArrowEvalPython node — every corpus
     # vector crossed the Python boundary and paid the signature matmul
-    # TWICE per bucket derivation (plan receipt:
-    # plans/r12/ann_lsh_top5_before.txt nodes (3)+(6)). The UDF is in
+    # TWICE per bucket derivation (two ArrowEvalPython nodes in the
+    # old plan). The UDF is in
     # fact deterministic; the marker only forbids the optimizer from
     # cloning it. The filter is redundant anyway: _buckets always
     # returns exactly `bands` entries.
@@ -572,8 +572,8 @@ def lsh_ann_topk(
     # localCheckpoint (r12, guide §2.4): ``buckets`` feeds BOTH sides of
     # the candidate join; left lazy, the whole signature subtree
     # (corpus scan → ArrowEvalPython matmul → posexplode → window cap)
-    # was planned twice (plans/r12/ann_lsh_top5_before.txt nodes 3-14 vs
-    # 23-34) — two full Arrow passes over the corpus per query. One
+    # was planned twice (two copies of the subtree in the old plan) —
+    # two full Arrow passes over the corpus per query. One
     # eager materialization runs the signature exactly once; the stored
     # rows are 16 B × bands per vector, far smaller than the embeddings
     # they index, so this is the cheaper side at any scale.

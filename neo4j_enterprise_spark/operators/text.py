@@ -1413,10 +1413,10 @@ def phrase_search_postings(
 
     ``prefilter=True`` (default) applies the same coarse rlike
     superset-gate as ``phrase_search`` BEFORE the posexplode, so only
-    candidate documents are exploded and joined — measured at sf10
-    (tools/profile_sf10_tail.py): HOF verify 56.3 s, postings corpus-
-    wide 12.9 s, postings prefiltered wins again on top of that; the
-    DuckDB oracle (the same list_filter loop) is 6.4 s, so at volume
+    candidate documents are exploded and joined — measured at sf10:
+    HOF verify 56.3 s, postings corpus-wide 12.9 s, postings
+    prefiltered wins again on top of that; the DuckDB oracle (the same
+    list_filter loop) is 6.4 s, so at volume
     the postings plan — NOT the HOF verify — is the scale path, and
     BASELINE §10 re-documents the r6 floor claim accordingly.
     """

@@ -51,49 +51,18 @@ def bfs_reachable(
     ``seeds``: one column ``seed``. Returns (seed, node_id, hops) with the
     minimal hop count ≤ k (seed itself at hops=0). Per-seed visited sets
     are kept distributed; dedup per round is a groupBy-min on
-    (seed, node_id) — map-side combinable.
+    (seed, node_id) — map-side combinable. It is ``traverse`` with no
+    ``prune`` / ``emit`` predicate.
 
     ``cache_edges`` persists the (filtered, projected) edge set once so
     each hop re-reads memory instead of re-deriving/re-scanning the
     relationship source — the standard iterative-join optimization.
     """
-    edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
-        edges = edges.persist()
-    reached = seeds.select(
-        F.col("seed").cast("long").alias("seed"),
-        F.col("seed").cast("long").alias("node_id"),
-        F.lit(0).alias("hops"),
-    )
-    frontier = reached
-    for depth in range(1, k + 1):
-        nxt = (
-            frontier.join(edges, frontier["node_id"] == edges["a"])
-            .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
-            .join(reached.select("seed", "node_id"), ["seed", "node_id"], "left_anti")
-            .groupBy("seed", "node_id")
-            .agg(F.min("hops").alias("hops"))
-        )
-        # Every-round materialization (r12, guide §2.4/§3.3): each
-        # round's frontier feeds THREE consumers (the next round's
-        # expand join, its anti-join visited set, and the final union)
-        # — left lazy, round d's subtree is re-planned AND re-executed
-        # by every later round, an O(k²) recomputation the 1965-line
-        # bfs_2hop_reach before-plan shows as 297 InMemoryTableScans
-        # (plans/r12/bfs_2hop_reach_before.txt). The frontier rows are
-        # (seed, node_id, hops) — tiny next to the edge set — so one
-        # eager cut per round is strictly less work than one re-join
-        # per later round. Measured same-session: bfs_2hop_reach
-        # 2.45 → 1.77s, graph_harmonic_centrality (k=3) 4.83 → 1.85s,
-        # traverse_pruned_2hop 2.61 → 1.79s.
-        nxt = nxt.localCheckpoint(eager=True)
-        reached = reached.unionByName(nxt)
-        frontier = nxt
-    return reached
+    return traverse(None, rels, seeds, k, direction, types, cache_edges=cache_edges)
 
 
 def traverse(
-    nodes: DataFrame,
+    nodes: DataFrame | None,
     rels: DataFrame,
     seeds: DataFrame,
     k: int,
@@ -113,6 +82,8 @@ def traverse(
     (ReturnableEvaluator). Column predicates keep evaluation JVM-side;
     arbitrary Python evaluators can be wrapped as pandas_udf booleans and
     passed the same way (the UDF is evaluated once per frontier batch).
+    ``nodes`` (with an ``id`` column) is read only by those two
+    predicates; without them it may be None.
     """
     edges = _edges(rels, direction, types)
     if cache_edges and k > 1:
@@ -143,8 +114,18 @@ def traverse(
             .groupBy("seed", "node_id")
             .agg(F.min("hops").alias("hops"))
         )
-        # same every-round cut as bfs_reachable (three consumers per
-        # frontier; see the receipt there)
+        # Every-round materialization: each round's frontier feeds THREE
+        # consumers (the next round's expand join, its anti-join visited
+        # set, and the final union) — left lazy, round d's subtree is
+        # re-planned AND re-executed by every later round, an O(k²)
+        # recomputation (the lazy k=2 bfs_2hop_reach plan carried 120
+        # InMemoryTableScans, 10 with the cut). The frontier rows are
+        # (seed, node_id, hops) — tiny next to the edge set — so one eager
+        # cut per round is strictly less work than one re-join per later
+        # round.
+        # Measured same-session: bfs_2hop_reach 2.45 → 1.77s,
+        # graph_harmonic_centrality (k=3) 4.83 → 1.85s,
+        # traverse_pruned_2hop 2.61 → 1.79s.
         nxt = nxt.localCheckpoint(eager=True)
         reached = reached.unionByName(nxt)
         frontier = nxt
@@ -529,46 +510,6 @@ def weighted_shortest_paths(
         ).localCheckpoint(eager=True)
         frontier = improved
     return dist
-
-
-def label_propagation(rels: DataFrame, rounds: int = 2) -> DataFrame:
-    """Batch analytics: community detection via synchronous label
-    propagation (LPA). Every node starts labeled with its own id; each
-    round it adopts the most frequent label among its neighbors, ties
-    broken by the smallest label — fully deterministic, unlike classic
-    async LPA (an upgrade the oracle can check by unrolling rounds).
-
-    Returns (node_id, label). Per round: one shuffle to count
-    (node, neighbor-label) pairs and one window argmax per node; lineage
-    cut by localCheckpoint. Fixed-round (not fixpoint) so results are
-    reproducible across cluster sizes.
-    """
-    edges = (
-        rels.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(rels.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    ).persist()
-    labels = (
-        edges.select(F.col("a").alias("node_id"))
-        .distinct()
-        .withColumn("label", F.col("node_id"))
-    ).localCheckpoint(eager=True)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("node_id").orderBy(F.desc("n"), F.asc("label"))
-    for i in range(rounds):
-        counts = (
-            edges.join(labels, edges["b"] == labels["node_id"])
-            .groupBy(F.col("a").alias("node_id"), "label")
-            .agg(F.count("*").alias("n"))
-        )
-        labels = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select("node_id", "label")
-        ).localCheckpoint(eager=True)
-    edges.unpersist()
-    return labels
 
 
 def k_core(rels: DataFrame, k: int, max_iter: int = 30) -> DataFrame:

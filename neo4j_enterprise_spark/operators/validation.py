@@ -42,8 +42,8 @@ def endpoints_not_in_use(rels: DataFrame, nodes: DataFrame) -> DataFrame:
     set against live nodes. The old two-join form (src anti-join ∪ dst
     anti-join) let Catalyst push the anti-join below the 5-branch rels
     union — 10 join branches, each rebuilding the live-node build side
-    (plans/r12/endpoints_not_in_use_before.txt: 10 BroadcastExchanges of
-    the same id set, 0 reuse in the initial plan). Stacking (src, dst)
+    (its initial plan had 10 BroadcastExchanges of the same id set, 0
+    reuse). Stacking (src, dst)
     into (rule, node) rows above the union blocks that pushdown: the
     probe volume is identical (2 rows per rel vs each rel probed twice)
     but the live side is built/shuffled ONCE — at 100 TB that is one

@@ -1633,15 +1633,15 @@ def cypher_string_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LPA) over the undirected derived graph; top-20 community sizes. "
     "Oracle unrolls both rounds as SQL CTEs — the 4th oracle-checked "
     "iterative algorithm (after BFS, Bellman-Ford, near-dup closure). "
-    "Per round: one count shuffle + one per-node window argmax. "
-    "Renamed from graph_label_propagation in r11: that name was "
-    "accidentally reused by the lineitem co-purchase LPA (which keeps "
-    "it); this derived-graph variant exercises "
-    "traversal.label_propagation, the other community.label_propagation.",
+    "Per round: one count shuffle + one per-node argmax aggregation. "
+    "Same operator as graph_label_propagation "
+    "(community.label_propagation); like the oracle's UNION edge set, it "
+    "counts a self-loop as a vote for the node's own label.",
 )
 def graph_label_propagation_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = derived_rels(spark, sf_dir)
-    labels = traversal.label_propagation(rels, rounds=2)
+    edges = rels.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    labels = community.label_propagation(edges, rounds=2)
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(F.count("*").alias("n_nodes"))
@@ -3725,8 +3725,8 @@ def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a total argmax order make the unrolled rounds bit-deterministic, "
     "so the oracle replays them as QUALIFY CTEs (the cheap community "
     "baseline beside the Louvain round and MIS, same "
-    "verifiable-unit contract). Spark argmax is max(struct(cnt, "
-    "-label)) — no window, one combinable aggregation per round.",
+    "verifiable-unit contract). Spark argmax is min(struct(-cnt, "
+    "label)) — no window, one combinable aggregation per round.",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (

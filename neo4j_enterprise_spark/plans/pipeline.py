@@ -1870,8 +1870,8 @@ def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the nearest-class-mean / cluster-balanced-curation primitive. The "
     "vector payload is oracle-checked EXPLODED to (label, d, value) "
     "rows: list cells are unhashable in the driver's pandas canon "
-    "(CORRECTNESS_r04 red row), and double→string rendering is not "
-    "cross-engine stable, so exploded doubles are the only "
+    "(the r04 correctness run failed on it), and double→string "
+    "rendering is not cross-engine stable, so exploded doubles are the only "
     "payload-exact encoding.",
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2075,7 +2075,7 @@ def docs_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pair table beat the lazy join form 0.525s vs 0.600s at sf0.1, so "
     "the subtree WAS re-executed); the window form evaluates the "
     "explode once BY CONSTRUCTION and drops the join outright "
-    "(receipts: tools/profile_r13_ops.py bigram — sf0.1 0.600→0.483s, "
+    "(receipts: sf0.1 0.600→0.483s, "
     "sf10 interleaved 5.563→5.383s, rows IDENTICAL both scales).",
 )
 def docs_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

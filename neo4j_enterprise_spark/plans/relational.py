@@ -378,7 +378,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Revenue on cent-quantized BIGINTs like q5 (exact integer "
     "arithmetic; r9: hi/lo split-sum accumulation, BASELINE §12 — "
     "overflow-safe past 10¹³ rows/group), ONE sum->double cast + ONE /10^4 at "
-    "the end. Profiled at sf1 (tools/profile_q10_variants.py): the "
+    "the end. Profiled at sf1: the "
     "per-order pre-aggregate the r3-r5 plan carried only shrinks the "
     "returned-lineitem side 1.5M->1.0M rows and costs its own hash "
     "aggregate — dropping it is 20% faster (1.28s -> 1.03s); the "

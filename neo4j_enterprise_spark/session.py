@@ -41,7 +41,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Measured (tools/profile_q18.py): the 64m default advisory size
+        # Measured on q18: the 64m default advisory size
         # makes AQE coalescing unstable on multi-join plans — q18 swings
         # 1.0-3.6s run-to-run at sf0.1; at 128m it is a stable ~0.85s.
         # 128m is also the right post-shuffle partition size for large

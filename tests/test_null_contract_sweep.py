@@ -22,8 +22,8 @@ same class is now tested for every other nullable input):
 Each sweep feeds a 10%-NULL synthetic table (full production schema) to
 every oracle-bearing query of the family that reads ONLY that table and
 requires exact engine/oracle parity. Divergences found get fixed on BOTH
-sides; the manifest test then forces the changed query into the r12
-driver window.
+sides, and the fixed query's own oracle rows re-prove it in
+``tests/test_oracle_parity.py`` and ``tools/verify_gate.py``.
 """
 
 from __future__ import annotations

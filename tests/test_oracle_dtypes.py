@@ -22,8 +22,8 @@ Categories (what the hash layer actually distinguishes):
 - str/date/timestamp/bool/binary: like-for-like
 - HUGEINT / UHUGEINT: always an error — no Spark twin serializes equal.
 - list (either side): always an error — the driver's pandas canon
-  ``sort_values`` cannot hash list cells (CORRECTNESS_r04
-  ``emb_label_centroids`` red row). Serialize at the output boundary
+  ``sort_values`` cannot hash list cells (``emb_label_centroids``
+  failed the r04 correctness run this way). Serialize at the output boundary
   (``array_join``/``concat_ws``/``to_json``) or explode to rows.
 """
 

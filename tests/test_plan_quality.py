@@ -248,15 +248,14 @@ def test_bfs_frontier_lineage_is_cut_every_round(spark, sf_dir):
     (Scan ExistingRDD) rather than re-derived — without the per-round
     cut the k=2 plan carried 120 InMemoryTableScans (O(k²)
     recomputation of the frontier cascade; the r12 doc's "297" was an
-    overstatement the r12 verdict corrected against the committed
-    dumps — 120→10 is the real count)."""
+    overstatement the r12 verdict corrected against the EXPLAIN
+    output — 120→10 is the real count)."""
     plan = _plan(spark, sf_dir, "bfs_2hop_reach")
     assert "Scan ExistingRDD" in plan
     # the full 5-branch edge-union cache is scanned by the final
     # union-aggregate only; the checkpointed frontiers must not
     # re-derive it per round. Measured after the r12 fix: 10 scans in
-    # the committed dump (plans/r12/bfs_2hop_reach_after.txt), 120
-    # before; bound at 2x the observed value so a partial regression
+    # the EXPLAIN output, 120 before; bound at 2x the observed value so a partial regression
     # trips the pin without flaking on minor plan drift.
     assert plan.count("InMemoryTableScan") <= 20, plan.count("InMemoryTableScan")
 

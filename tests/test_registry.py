@@ -14,23 +14,24 @@ from neo4j_enterprise_spark.plans import REGISTRY, all_queries, register
 PLANS_DIR = pathlib.Path(plans.__file__).parent
 
 
-def _register_call_names() -> list[str]:
+def _register_call_names(paths=None) -> list[str]:
     """Every literal first argument of a ``@register(...)`` decorator
-    across the plans package, by AST (source of truth for 'how many
-    registrations were written')."""
+    across the plans package (or the given files), by AST, in source
+    order (source of truth for 'which registrations were written')."""
     names: list[str] = []
-    for path in sorted(PLANS_DIR.glob("*.py")):
-        tree = ast.parse(path.read_text())
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Name)
-                and node.func.id == "register"
-                and node.args
-                and isinstance(node.args[0], ast.Constant)
-                and isinstance(node.args[0].value, str)
-            ):
-                names.append(node.args[0].value)
+    for path in paths or sorted(PLANS_DIR.glob("*.py")):
+        calls = [
+            node
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "register"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+        ]
+        calls.sort(key=lambda node: (node.lineno, node.col_offset))
+        names += [node.args[0].value for node in calls]
     return names
 
 
@@ -49,11 +50,15 @@ def test_register_raises_on_collision():
         register(existing, None)(lambda spark, sf_dir: None)
 
 
-def test_driver_priority_names_resolve():
-    """Window names must be real registry entries — a typo here would
-    silently shrink the driver's 50-slot correctness window."""
-    queries = all_queries()
-    from neo4j_enterprise_spark.plans import _DRIVER_PRIORITY
+def test_entry_contract_is_the_registry_in_registration_order():
+    import __spark_entry__ as entry
 
-    missing = [n for n in _DRIVER_PRIORITY if n not in queries]
-    assert not missing, f"_DRIVER_PRIORITY names not in REGISTRY: {missing}"
+    names = list(entry.queries())
+    assert names == list(REGISTRY)
+    # each plans module's queries sit in the order they are written
+    for path in sorted(PLANS_DIR.glob("*.py")):
+        module = f"{plans.__name__}.{path.stem}"
+        registered = [n for n in names if REGISTRY[n].spark.__module__ == module]
+        assert registered == _register_call_names([path]), module
+    assert set(entry.oracle_sql()) <= set(names)
+    assert "endpoints_not_in_use" in REGISTRY  # what entry() runs

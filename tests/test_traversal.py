@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from neo4j_enterprise_spark.operators import traversal
+from neo4j_enterprise_spark.operators.community import label_propagation
 
 
 def _edges_df(spark, pairs):
@@ -171,20 +172,30 @@ def test_label_propagation_two_triangles(spark):
     # smallest neighbor label; round 2 the majority settles it).
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12)],
-        "src long, dst long",
+        "a long, b long",
     )
-    out = {r["node_id"]: r["label"] for r in traversal.label_propagation(edges, rounds=2).collect()}
+    out = {r["node_id"]: r["label"] for r in label_propagation(edges, rounds=2).collect()}
     assert out == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
 
 
 def test_label_propagation_is_deterministic(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)],
-        "src long, dst long",
+        "a long, b long",
     )
-    a = sorted(map(tuple, traversal.label_propagation(edges, rounds=3).collect()))
-    b = sorted(map(tuple, traversal.label_propagation(edges, rounds=3).collect()))
+    a = sorted(map(tuple, label_propagation(edges, rounds=3).collect()))
+    b = sorted(map(tuple, label_propagation(edges, rounds=3).collect()))
     assert a == b
+
+
+def test_label_propagation_self_loop_votes_for_own_label(spark):
+    # Node 5 hears one vote each from 7, 8 and (through its self-loop)
+    # itself: the tie goes to the smallest label, its own 5 — without the
+    # self vote it would take 7. A node whose only edge is a self-loop
+    # keeps its own label instead of dropping out.
+    edges = spark.createDataFrame([(5, 5), (5, 7), (5, 8), (9, 9)], "a long, b long")
+    out = {r["node_id"]: r["label"] for r in label_propagation(edges, rounds=1).collect()}
+    assert out == {5: 5, 7: 5, 8: 5, 9: 9}
 
 
 def test_k_core_triangle_with_pendant(spark):
