@@ -16,7 +16,7 @@ compact contract schema only so any tail-bounded, last-line, or
 whole-stdout parser reads it (VERDICT r12 ask #3).
 
 Scale dir from ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-cores from ``$SPARK_GRAFT_CPUS`` (default 32).
+cores from ``$SPARK_GRAFT_CPUS`` (default: the host's, see session.py).
 """
 
 from __future__ import annotations

@@ -16,10 +16,13 @@ specs like ``{"INTEGER": 2, "STRING": 1, "ARRAY": 1}``
 (`PropertyGenerator.java:45-52`), ARRAY of 50 ints in [0,256)
 (`PropertyGenerator.java:54-67`).
 
-Chain pointers (the linked-list storage of SURVEY §1.2) are *computed*
-with window functions — chain order is ascending rel/property id per
-owner (FIXTURES.md §2) — which makes the generator double as the spec for
-the validation suite's chain checks.
+Chain pointers (the linked-list storage of SURVEY §1.2) follow one order,
+ascending rel/property id per owner (FIXTURES.md §2), which makes the
+generator double as the spec for the validation suite's chain checks.
+A node's relationships and properties have contiguous ids
+(``id = owner * slots + slot``), so the source-side and property chains
+and the nodes' first pointers are arithmetic on the id; only the
+destination chain, whose members are scattered, needs a window.
 """
 
 from __future__ import annotations
@@ -44,6 +47,11 @@ def _h_md5(seed: int, *cols) -> F.Column:
     return F.conv(F.substring(F.md5(F.concat_ws(":", *parts)), 1, 15), 16, 10).cast(
         "long"
     )
+
+
+def _ptr(cond: F.Column, value: F.Column) -> F.Column:
+    """``value`` where ``cond`` holds, else NO_POINTER; never null."""
+    return F.coalesce(F.when(cond, value), F.lit(NO_POINTER))
 
 
 def generate_graph(
@@ -81,28 +89,30 @@ def generate_graph(
     R = len(slots)
     slot_df = spark.createDataFrame(slots, "slot int, type_id int")
 
+    # chain pointers: per-endpoint doubly-linked lists in ascending id.
+    # A source's rels are its R contiguous ids, so its chain is id ± 1
+    # within the slot range.
+    rel_id = F.col("src") * R + F.col("slot")
     base = spark.range(node_count).select(F.col("id").alias("src"))
     rels = (
         base.join(F.broadcast(slot_df))
         .select(
-            (F.col("src") * R + F.col("slot")).alias("id"),
+            rel_id.alias("id"),
             F.lit(True).alias("in_use"),
             "src",
             # dst uniform over nodes, seeded per rel id (DataGenerator.java:173-188)
-            (h(seed, F.col("src") * R + F.col("slot")) % node_count).alias("dst"),
+            (h(seed, rel_id) % node_count).alias("dst"),
             "type_id",
+            _ptr(F.col("slot") > 0, rel_id - 1).alias("src_prev"),
+            _ptr(F.col("slot") < R - 1, rel_id + 1).alias("src_next"),
         )
     )
 
-    # chain pointers: per-endpoint doubly-linked lists in ascending id
-    w_src = Window.partitionBy("src").orderBy("id")
     # the dst chain must exclude self-loop double-membership; keep it simple:
     # dst chain over all rels incident as dst, ascending id
     w_dst = Window.partitionBy("dst").orderBy("id")
     rels = (
-        rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
+        rels.withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
         .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
         # relationship properties are empty by default (DataGenerator.java:70-72)
         .withColumn("next_prop", F.lit(NO_POINTER).cast("long"))
@@ -117,18 +127,22 @@ def generate_graph(
     P = len(pslots)
     pslot_df = spark.createDataFrame(pslots, "pslot int, key_id int, vtype string")
 
+    prop_id = F.col("owner_id") * P + F.col("pslot")
     props = (
         spark.range(node_count)
         .select(F.col("id").alias("owner_id"))
         .join(F.broadcast(pslot_df))
         .select(
-            (F.col("owner_id") * P + F.col("pslot")).alias("id"),
+            prop_id.alias("id"),
             F.lit(True).alias("in_use"),
             "owner_id",
             F.lit("node").alias("owner_kind"),
             F.col("pslot").alias("seq"),
             "key_id",
             "vtype",
+            # an owner's P properties are contiguous ids, chained by id ± 1
+            _ptr(F.col("pslot") > 0, prop_id - 1).alias("prev_prop"),
+            _ptr(F.col("pslot") < P - 1, prop_id + 1).alias("next_prop"),
         )
     )
     hv = h(seed + 1, F.col("id"))
@@ -152,30 +166,17 @@ def generate_graph(
         F.when(F.col("vtype") == "INT", (hv % 16).cast("long")).alias("value_long"),
         F.when(F.col("vtype") == "STRING", str_val).alias("value_string"),
         F.when(F.col("vtype") == "ARRAY", arr_val).alias("value_array"),
+        "prev_prop",
+        "next_prop",
     )
-    w_owner = Window.partitionBy("owner_kind", "owner_id").orderBy("id")
-    props = props.withColumn(
-        "prev_prop", F.coalesce(F.lag("id").over(w_owner), F.lit(NO_POINTER))
-    ).withColumn("next_prop", F.coalesce(F.lead("id").over(w_owner), F.lit(NO_POINTER)))
 
     # --- nodes --------------------------------------------------------
-    first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
-        F.col("src").alias("id"), F.col("id").alias("next_rel")
-    )
-    first_prop = props.filter(
-        (F.col("prev_prop") == NO_POINTER) & (F.col("owner_kind") == "node")
-    ).select(F.col("owner_id").alias("id"), F.col("id").alias("next_prop"))
-    nodes = (
-        spark.range(node_count)
-        .select(F.col("id"), F.lit(True).alias("in_use"))
-        .join(first_rel, "id", "left")
-        .join(first_prop, "id", "left")
-        .select(
-            "id",
-            "in_use",
-            F.coalesce("next_rel", F.lit(NO_POINTER)).alias("next_rel"),
-            F.coalesce("next_prop", F.lit(NO_POINTER)).alias("next_prop"),
-        )
+    # each chain starts at the owner's slot 0
+    nodes = spark.range(node_count).select(
+        "id",
+        F.lit(True).alias("in_use"),
+        _ptr(F.lit(R > 0), F.col("id") * R).alias("next_rel"),
+        _ptr(F.lit(P > 0), F.col("id") * P).alias("next_prop"),
     )
 
     # --- graph-level properties (NeoStore singleton chain) ------------

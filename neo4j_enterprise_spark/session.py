@@ -7,6 +7,10 @@ chosen to also be the right call on a large cluster:
   join-strategy switching are exactly what keeps a 100 TB shuffle healthy.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
   real cluster AQE's coalescing makes the initial number far less critical.
+- Sized from the host: the driver heap defaults to half the memory this
+  process may use (``MemAvailable``, or the cgroup limit when lower),
+  capped at 16g; local cores default to the cores it may run on (nproc).
+  ``SPARK_GRAFT_DRIVER_MEM`` / ``SPARK_GRAFT_CPUS`` override either.
 - Arrow enabled: every Pandas-UDF path in this engine is Arrow-batched.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle bit-for-bit.
@@ -19,7 +23,53 @@ import sys
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_HEAP_CAP = 16 * 2**30
+_MEMINFO = "/proc/meminfo"
+# cgroup v2, then v1; an unlimited group reads "max" or a near-2**63 figure
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def available_memory(meminfo: str = _MEMINFO, cgroup_limits=_CGROUP_LIMITS) -> int:
+    """Bytes this process may use: ``MemAvailable``, or the cgroup memory
+    limit when that is lower."""
+    with open(meminfo) as f:
+        avail = next(
+            int(line.split()[1]) * 1024 for line in f if line.startswith("MemAvailable:")
+        )
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            avail = min(avail, int(limit))
+    return avail
+
+
+def _size_bytes(size: str) -> int:
+    """A JVM size ("4g", "512m", "1048576") in bytes."""
+    size = size.strip().lower()
+    return int(size[:-1]) * _UNITS[size[-1]] if size[-1] in _UNITS else int(size)
+
+
+def driver_heap(available: int) -> tuple[str, bool]:
+    """``(heap, pretouch)``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half
+    of ``available`` bytes capped at 16g; pretouch only when the heap fits
+    in ``available``."""
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{min(available // 2, _HEAP_CAP) // 2**20}m"
+    )
+    return heap, _size_bytes(heap) <= available
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -33,8 +83,9 @@ def get_spark(
     ``cpus`` only matters in local mode; on a cluster the master URL comes
     from the environment and this builder leaves it untouched.
     """
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or cpus
+    heap, pretouch = driver_heap(available_memory())
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -92,17 +143,20 @@ def get_spark(
         # real cluster Xms=Xmx + AlwaysPreTouch on executors is the
         # standard production setting for exactly this reason.
         #
-        # Default heap dropped 48g -> 16g with the pretouch: zeroing
+        # The default heap is capped at 16g with the pretouch: zeroing
         # runs ~1 GB/s in this guest and NONLINEARLY worse above ~16g
-        # (measured startup: 16g=23s, 24g=72s, 48g>180s), and the 48g
-        # figure was sized for headroom the fault-storm fix makes
-        # unnecessary (steady-state live set is ~2-6g; GC on pretouched
-        # pages is cheap). Big one-off runs (tools/b1_scale.py 10M) set
+        # (measured startup: 16g=23s, 24g=72s, 48g>180s), and the
+        # steady-state live set is ~2-6g (GC on pretouched pages is
+        # cheap). Below the cap it is half the memory available, so a
+        # small host still starts the JVM; a heap that does not fit in
+        # available memory (an override) is neither pinned nor
+        # pretouched, since faulting it all in would exhaust the host.
+        # Big one-off runs (tools/b1_scale.py 10M) set
         # SPARK_GRAFT_DRIVER_MEM=48g and pay the longer pretouch once.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+ExplicitGCInvokesConcurrent -XX:+AlwaysPreTouch -Xms"
-            + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            "-XX:+ExplicitGCInvokesConcurrent"
+            + (" -XX:+AlwaysPreTouch -Xms" + heap if pretouch else ""),
         )
         .config(
             "spark.executor.extraJavaOptions",
@@ -124,7 +178,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # the 1g default aborts any multi-10M-row collect/toPandas (the
         # sf30 degree_by_type materialization is ~1.5 GiB of Arrow
         # batches) — size it to the analysis rig's driver heap. On a
@@ -142,13 +196,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # The r5 default heap change (48g -> 16g, justified above) silently
-    # affects any consumer sized against the old default — state the
-    # effective heap once so an OOM is attributable to it.
+    # The defaults follow the host, so state what this session got: an
+    # OOM or a slow run is then attributable to its sizing.
     print(
-        "# spark-graft session: driver heap "
-        + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        + " (override with SPARK_GRAFT_DRIVER_MEM)",
+        f"# spark-graft session: driver heap {heap}"
+        + ("" if pretouch else " (not pretouched)")
+        + f", {cpus} cores, {shuffle_partitions} shuffle partitions"
+        " (override with SPARK_GRAFT_DRIVER_MEM / SPARK_GRAFT_CPUS)",
         file=sys.stderr,
     )
     return spark

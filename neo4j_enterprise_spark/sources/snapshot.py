@@ -138,7 +138,12 @@ def restore(
 ) -> PropertyGraph:
     """S10 + R6: load the base snapshot, replay every exported incremental
     in tx order, optionally run the full consistency check and refuse a
-    corrupt restore (`VerificationLevel.VERIFYING`)."""
+    corrupt restore (`VerificationLevel.VERIFYING`).
+
+    Each replay runs its jobs here, at call time, and leaves checkpoint-
+    backed tables, so the check scans the rebuilt store once per family
+    rather than re-running every replay. With no incremental to replay
+    the tables are the snapshot's parquet scans."""
     with open(os.path.join(backup_dir, _META)) as f:
         meta = json.load(f)
     base_version = meta.get("base_version", meta["last_tx"])

@@ -19,6 +19,13 @@ upserts — so replaying a log range is O(ops) shuffles, not O(txs)
 (the reference applies tx-at-a-time; a columnar engine applies
 log-at-a-time with identical final state because ops are keyed and the
 last write per key wins via tx ordering).
+``replay`` runs those shuffles when it is called: each rebuilt table
+(relationships, properties, then nodes) is computed once and held as an
+eager local checkpoint, the bounded-lineage rule the iterative operators
+follow. The returned store is checkpoint-backed, so a consistency check
+over it (a verified restore runs seven check families) scans the rebuilt
+rows instead of re-running the log parse and windows per family, and a
+replay on top of a replay does not nest the earlier replay's plan.
 """
 
 from __future__ import annotations
@@ -76,6 +83,10 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
     write wins by tx_id) instead of iterating txs — the columnar
     rendering of "apply strictly in txId order"
     (`RebuildFromLogs.java:85-100`, O3).
+
+    Runs its Spark jobs at call time: nodes, relationships and properties
+    of the result are local checkpoints of the rebuilt rows (see "Replay
+    design" above); the dictionaries and graph properties pass through.
     """
     log = txlog if up_to_tx is None else txlog.filter(F.col("tx_id") <= up_to_tx)
     log = log.withColumn("args", F.from_json("payload", _PAYLOAD_SCHEMA))
@@ -134,6 +145,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
         .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
         .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
         .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
+        .localCheckpoint(eager=True)
     )
 
     # property ops: last write per (owner, key) wins; remove drops the row
@@ -216,9 +228,10 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
             "id", "in_use", "owner_id", "owner_kind", "prev_prop", "next_prop",
             "seq", "key_id", "vtype", "value_long", "value_string", "value_array",
         )
+        .localCheckpoint(eager=True)
     )
 
-    # refresh node first-pointers from the rebuilt chains
+    # refresh node first-pointers from the two checkpoints above
     first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
         F.col("src").alias("id"), F.col("id").alias("new_next_rel")
     )
@@ -234,6 +247,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
             F.coalesce("new_next_rel", F.lit(NO_POINTER)).alias("next_rel"),
             F.coalesce("new_next_prop", F.lit(NO_POINTER)).alias("next_prop"),
         )
+        .localCheckpoint(eager=True)
     )
 
     return PropertyGraph(

@@ -36,7 +36,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests")
     yield s
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from neo4j_enterprise_spark.graph.generator import generate_graph
 from neo4j_enterprise_spark.graph.model import NO_POINTER, PropertyGraph
@@ -56,6 +57,57 @@ def test_generator_shape(clean):
     # every node's first outgoing rel is its chain head
     heads = clean.relationships.filter(F.col("src_prev") == NO_POINTER)
     assert heads.count() == N
+
+
+def _window_chains(g: PropertyGraph) -> PropertyGraph:
+    """Reference chain pointers: ascending id per owner, by window."""
+
+    def link(df, prev, nxt, *owner):
+        w = Window.partitionBy(*owner).orderBy("id")
+        return df.withColumn(prev, F.coalesce(F.lag("id").over(w), F.lit(NO_POINTER))).withColumn(
+            nxt, F.coalesce(F.lead("id").over(w), F.lit(NO_POINTER))
+        )
+
+    rels = link(g.relationships, "src_prev", "src_next", "src")
+    rels = link(rels, "dst_prev", "dst_next", "dst").select(*g.relationships.columns)
+    props = link(g.properties, "prev_prop", "next_prop", "owner_kind", "owner_id").select(
+        *g.properties.columns
+    )
+    first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
+        F.col("src").alias("id"), F.col("id").alias("first_rel")
+    )
+    first_prop = props.filter(F.col("prev_prop") == NO_POINTER).select(
+        F.col("owner_id").alias("id"), F.col("id").alias("first_prop")
+    )
+    nodes = (
+        g.nodes.join(first_rel, "id", "left")
+        .join(first_prop, "id", "left")
+        .select(
+            "id",
+            "in_use",
+            F.coalesce("first_rel", F.lit(NO_POINTER)).alias("next_rel"),
+            F.coalesce("first_prop", F.lit(NO_POINTER)).alias("next_prop"),
+        )
+    )
+    return PropertyGraph(nodes, rels, props, g.relationship_types, g.property_keys)
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        {"node_count": 30},
+        {"node_count": 7, "rel_specs": {"A": 2, "B": 3}, "prop_specs": {"INTEGER": 3, "ARRAY": 1}},
+        {"node_count": 5, "rel_specs": {"A": 1}, "prop_specs": {"STRING": 1}},
+        {"node_count": 4, "rel_specs": {}, "prop_specs": {}},
+    ],
+)
+def test_generator_chain_pointers_match_window_reference(spark, spec):
+    g = generate_graph(spark, **spec)
+    ref = _window_chains(g)
+    for table in ("nodes", "relationships", "properties"):
+        got, want = getattr(g, table), getattr(ref, table)
+        assert got.schema == want.schema, table
+        assert sorted(got.collect()) == sorted(want.collect()), table
 
 
 def test_node_dangling_next_rel(clean):

@@ -1,10 +1,11 @@
 """The scripts in ``tools/``: each one imports cleanly and does nothing at
 import (no Spark session, no output), and ``tools/ab.py`` reports row
-identity in both directions."""
+identity in both directions and counts jobs from pool threads."""
 
 import importlib.util
 import pathlib
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import SparkSession
@@ -44,3 +45,17 @@ def test_ab_reports_row_identity_in_both_directions(spark):
     assert (short_b["identical"], short_b["only_in_a"], short_b["only_in_b"]) == (False, 1, 0)
     short_a = ab(spark, lambda: spark.range(4), lambda: spark.range(5), reps=1)
     assert (short_a["identical"], short_a["only_in_a"], short_a["only_in_b"]) == (False, 0, 1)
+
+
+def test_ab_counts_jobs_run_in_pool_threads(spark):
+    ab = _load(TOOLS_DIR / "ab.py").ab
+
+    def pooled():
+        # the side's only job runs in a pool thread: an inline table is
+        # collected without a job
+        with ThreadPoolExecutor(1) as pool:
+            pool.submit(spark.range(10).count).result()
+        return spark.sql("VALUES (1) AS t(x)")
+
+    report = ab(spark, pooled, pooled, reps=1)
+    assert report["a"]["jobs"] >= 1 and report["b"]["jobs"] >= 1

@@ -81,6 +81,48 @@ def test_replay_is_idempotent_and_prefix_consistent(spark):
     assert a == b
 
 
+def _is_checkpoint_scan(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    tree = plan.treeString()
+    return (
+        plan.getClass().getSimpleName() == "LogicalRDD"
+        and plan.children().isEmpty()
+        and not any(op in tree for op in ("Window", "JsonToStructs", "from_json"))
+    )
+
+
+def test_replay_returns_checkpoint_backed_tables(spark):
+    base = generate_graph(spark, node_count=60)
+    log = synthesize_txlog(spark, n_txs=30, base_nodes=60)
+    once = replay(base, export_range(log, 0, 14))
+    twice = replay(once, export_range(log, 15, 29))
+    for g in (once, twice):
+        for table in ("nodes", "relationships", "properties"):
+            assert _is_checkpoint_scan(getattr(g, table)), table
+
+
+# restore(verify=True) of the 100-node backup below measured 60 jobs once
+# each replayed table is a checkpoint; re-running the replay plan in every
+# check family took 130.
+RESTORE_JOB_CEILING = 66
+
+
+def test_verified_restore_runs_the_replay_once(spark, tmp_path):
+    g = generate_graph(spark, node_count=100)
+    d = str(tmp_path / "bk_jobs")
+    bk.full_backup(g, d, last_tx=-1)
+    # node deletes dangle relationships, which a verified restore refuses
+    log = synthesize_txlog(spark, n_txs=30, base_nodes=100).filter(
+        F.col("op") != "delete_node"
+    )
+    bk.incremental_backup(d, log, up_to_tx=29)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
+    bk.restore(spark, d, verify=True)
+    jobs = dag.nextJobId() - first_job
+    assert jobs <= RESTORE_JOB_CEILING, jobs
+
+
 def test_full_backup_restore_verified(spark, tmp_path):
     g = generate_graph(spark, node_count=100)
     d = str(tmp_path / "bk")

@@ -7,33 +7,30 @@ Each side is a zero-argument callable that builds a DataFrame. One run of
 a side builds its frame and collects it, so eager work done while the
 plan is built (checkpoints) is timed and counted too. Reps alternate which
 side runs first, so drift within the session falls on both sides alike.
-Every run tags its jobs with its own job group, which gives the per-side
-job count. After the timed runs, the rows of the last frame of each side
-are compared in both directions with ``exceptAll`` (a multiset compare).
+A run's job count is the range of Spark job ids submitted while it ran,
+so jobs from pool threads (``validate()`` runs its check families in
+threads) count too; a job group would miss them. After the timed runs,
+the rows of the last frame of each side are compared in both directions
+with ``exceptAll`` (a multiset compare).
 """
 
 from __future__ import annotations
 
 import statistics
 import time
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _run(spark: SparkSession, build: Callable[[], DataFrame], group: str):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        t0 = time.perf_counter()
-        df = build()
-        df.collect()
-        seconds = time.perf_counter() - t0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return df, seconds, len(sc.statusTracker().getJobIdsForGroup(group))
+def _run(spark: SparkSession, build: Callable[[], DataFrame]):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
+    t0 = time.perf_counter()
+    df = build()
+    df.collect()
+    seconds = time.perf_counter() - t0
+    return df, seconds, dag.nextJobId() - first_job
 
 
 def ab(
@@ -50,12 +47,11 @@ def ab(
     ``only_in_a`` counts rows of ``a`` that ``b`` lacks (with multiplicity).
     """
     builders = {"a": a, "b": b}
-    tag = uuid.uuid4().hex[:8]
     runs: dict[str, list[tuple[float, int]]] = {"a": [], "b": []}
     last: dict[str, DataFrame] = {}
     for rep in range(reps):
         for side in ("a", "b") if rep % 2 == 0 else ("b", "a"):
-            df, seconds, jobs = _run(spark, builders[side], f"ab-{tag}-{side}-{rep}")
+            df, seconds, jobs = _run(spark, builders[side])
             runs[side].append((seconds, jobs))
             last[side] = df
     only_in_a = last["a"].exceptAll(last["b"]).count()
