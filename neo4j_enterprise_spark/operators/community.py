@@ -9,6 +9,10 @@ queries over directed graphs; these are their Spark-first renderings.
 
 Scale notes
 -----------
+- Every loop here runs on ``superstep.supersteps``, in the superstep shape
+  stated in ``traversal``: invariants checkpointed once, each round's
+  state cut, and the halt read off that cut as an observed count of the
+  rows the round changed, at no extra Spark job.
 - ``neighborhood_jaccard`` is the inverted-index self-join: pair
   candidates come only from shared neighbors, so cost is
   sum(d(n)^2) over neighbor nodes — bounded by dropping hub neighbors
@@ -16,8 +20,8 @@ Scale notes
   then computed on the SAME filtered edge set so the Jaccard stays exact
   on the filtered graph). One shuffle keyed on the shared neighbor.
 - ``transitive_closure`` doubles path length per round (R ∪ R·R), so a
-  diameter-d graph closes in ceil(log2(d)) joins, each cut with
-  localCheckpoint — the O(log d) pattern that survives wide graphs,
+  diameter-d graph closes in ceil(log2(d)) joins, one round each — the
+  O(log d) pattern that survives wide graphs,
   vs. the O(d) rounds of one-hop propagation.
 - ``strongly_connected`` / ``condensation_layers`` are meant for
   *condensed* graphs that are small relative to the input (here the
@@ -31,6 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .superstep import cut, supersteps
+from .traversal import endpoints, undirected
 
 
 def neighborhood_jaccard(
@@ -85,23 +92,34 @@ def transitive_closure(edges: DataFrame, *, max_rounds: int = 6) -> DataFrame:
     """Reachability closure (u, v) with u ≠ v by path-doubling:
     R_{2k} = R_k ∪ (R_k ∘ R_k). After r rounds paths up to length 2^r
     are covered, so ``max_rounds=6`` closes any graph of diameter ≤ 64.
-    Each round: one self-join shuffled on the middle node + distinct.
+    Each round: one self-join shuffled on the middle node + one groupBy
+    that flags the pairs new this round ``fresh``; a round with none is
+    the fixpoint.
     """
-    reach = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    reach = reach.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def double(reach: DataFrame, _: int) -> DataFrame:
         hop2 = (
             reach.alias("x")
             .join(reach.alias("y"), F.col("x.dst") == F.col("y.src"))
             .select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
+            .withColumn("fresh", F.lit(True))
         )
-        new_reach = reach.unionByName(hop2).distinct().localCheckpoint(eager=True)
-        if new_reach.count() == reach.count():
-            reach = new_reach
-            break
-        reach = new_reach
-    return reach
+        return (
+            reach.withColumn("fresh", F.lit(False))
+            .unionByName(hop2)
+            .groupBy("src", "dst")
+            .agg(F.min("fresh").alias("fresh"))
+        )
+
+    reach, _ = cut(
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .withColumn("fresh", F.lit(True))
+    )
+    reach = supersteps(reach, double, max_rounds, halt=F.count_if("fresh"))
+    return reach.select("src", "dst")
 
 
 def strongly_connected(edges: DataFrame, *, max_rounds: int = 6) -> DataFrame:
@@ -112,11 +130,7 @@ def strongly_connected(edges: DataFrame, *, max_rounds: int = 6) -> DataFrame:
     reachable iff (u,v) and (v,u) are both in the closure, so
     scc_id(v) = min(v, min{u : mutual(u, v)}).
     """
-    nodes = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
+    nodes = endpoints(edges, "src", "dst")
     reach = transitive_closure(edges, max_rounds=max_rounds)
     mutual = (
         reach.alias("f")
@@ -157,8 +171,8 @@ def condensation_layers(
         .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .distinct()
     )
-    dist = cond.withColumn("len", F.lit(1)).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def relax(dist: DataFrame, _: int) -> DataFrame:
         combo = (
             dist.alias("x")
             .join(dist.alias("y"), F.col("x.dst") == F.col("y.src"))
@@ -166,23 +180,21 @@ def condensation_layers(
                 F.col("x.src").alias("src"),
                 F.col("y.dst").alias("dst"),
                 (F.col("x.len") + F.col("y.len")).alias("len"),
+                F.lit(None).alias("old"),
             )
         )
-        new_dist = (
-            dist.unionByName(combo)
+        # max-plus lengths only grow, so a pair changed iff it is new or
+        # its length grew
+        return (
+            dist.select("src", "dst", "len", F.col("len").alias("old"))
+            .unionByName(combo)
             .groupBy("src", "dst")
-            .agg(F.max("len").alias("len"))
-            .localCheckpoint(eager=True)
+            .agg(F.max("len").alias("len"), F.max("old").alias("old"))
+            .withColumn("changed", F.col("old").isNull() | (F.col("len") > F.col("old")))
         )
-        # stable iff no (src, dst, len) row is new — max-plus lengths
-        # only grow, so any change surfaces as a fresh triple
-        stable = (
-            new_dist.join(dist, ["src", "dst", "len"], "left_anti").limit(1).count()
-            == 0
-        )
-        dist = new_dist
-        if stable:
-            break
+
+    dist, _ = cut(cond.withColumn("len", F.lit(1)))
+    dist = supersteps(dist, relax, max_rounds, halt=F.count_if("changed"))
     all_sccs = scc.select(F.col("scc_id")).distinct()
     layers = dist.groupBy(F.col("dst").alias("scc_id")).agg(
         F.max("len").alias("layer")
@@ -290,23 +302,20 @@ def ktruss_peel(edges: DataFrame, *, k: int, rounds: int = 2) -> DataFrame:
     truss decomposition runs O(max support) rounds; sparse real graphs
     converge in a handful).
 
-    Superstep shape: the distinct edge set is built and checkpointed
-    once; each round is the wedge join shuffled on the shared neighbor
-    and one combine (the support count per edge), and the round's
-    survivors are read straight off that support frame — its keys are a
-    subset of the current edges, and an edge with no triangle has no
-    row — so no join back to the edge set runs. For k <= 2 every edge
-    survives and the peel rounds are skipped.
+    The distinct edge set is built and checkpointed once; each round is
+    the wedge join shuffled on the shared neighbor and one combine (the
+    support count per edge), and the round's survivors are read straight
+    off that support frame — its keys are a subset of the current edges,
+    and an edge with no triangle has no row — so no join back to the edge
+    set runs. For k <= 2 every edge survives and the peel rounds are
+    skipped.
     """
-    e = edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct()
-    e = e.localCheckpoint(eager=True)
+    e, _ = cut(edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct())
 
     def support(cur: DataFrame) -> DataFrame:
-        adj = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        x = adj.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        y = adj.select(F.col("u").alias("b"), F.col("v").alias("c"))
+        adj = undirected(cur)
+        x = adj.select("a", F.col("b").alias("c"))
+        y = adj.select(F.col("a").alias("b"), F.col("b").alias("c"))
         return (
             cur.join(x, "a")
             .join(y, ["b", "c"])
@@ -314,13 +323,10 @@ def ktruss_peel(edges: DataFrame, *, k: int, rounds: int = 2) -> DataFrame:
             .agg(F.count("*").alias("sup"))
         )
 
-    for _ in range(rounds if k >= 3 else 0):
-        e = (
-            support(e)
-            .filter(F.col("sup") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
+    def peel(cur: DataFrame, _: int) -> DataFrame:
+        return support(cur).filter(F.col("sup") >= k - 2).select("a", "b")
+
+    e = supersteps(e, peel, rounds if k >= 3 else 0)
     final = support(e)
     return (
         e.join(final, ["a", "b"], "left")
@@ -355,15 +361,8 @@ def louvain_move_round(
     """
     e = edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct()
     if communities is None:
-        communities = (
-            e.select(F.col("a").alias("node_id"))
-            .unionByName(e.select(F.col("b").alias("node_id")))
-            .distinct()
-            .withColumn("community", F.col("node_id"))
-        )
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+        communities = endpoints(e).withColumn("community", F.col("node_id"))
+    adj = undirected(e).toDF("u", "v")
     m = e.agg(F.count("*").alias("m"))
     deg = adj.groupBy(F.col("u").alias("node_id")).agg(F.count("*").alias("deg"))
     com = communities.select("node_id", "community")
@@ -427,21 +426,117 @@ def louvain_communities(
     every accepted round is deterministic; modularity monotonicity is
     pinned in tests via partition_modularity.
     """
-    e = edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct()
-    e = e.localCheckpoint(eager=True)
-    com = None
-    for _ in range(max_rounds):
-        moved = louvain_move_round(e, com)
-        new_com = moved.select(
-            "node_id", F.col("new_com").alias("community")
-        ).localCheckpoint(eager=True)
-        changed = (
-            moved.filter(F.col("new_com") != F.col("old_com")).limit(1).count()
+    e, _ = cut(edges.select("a", "b").filter(F.col("a") < F.col("b")).distinct())
+
+    def move(com: DataFrame, _: int) -> DataFrame:
+        return louvain_move_round(e, com).select(
+            "node_id",
+            F.col("new_com").alias("community"),
+            (F.col("new_com") != F.col("old_com")).alias("changed"),
         )
-        com = new_com
-        if changed == 0:
-            break
-    return com
+
+    com = endpoints(e).withColumn("community", F.col("node_id"))
+    com = supersteps(com, move, max_rounds, halt=F.count_if("changed"))
+    return com.select("node_id", "community")
+
+
+def _brandes(edges: DataFrame, sources: DataFrame | None, max_depth: int) -> DataFrame:
+    """Brandes betweenness over the undirected simple graph of ``edges``,
+    summed over ``sources`` (column ``s``), or over every node with
+    exact BIGINT dependencies when ``sources`` is None.
+
+    All sources advance TOGETHER: state is keyed (source, node), so each
+    BFS level and each δ level is ONE join shuffled on the node key
+    regardless of |S|. Forward pass: level-synchronous shortest-path DAG
+    with path counts σ, the new level flagged ``fresh``; backward pass:
+    δ(v) = Σ_w σ(v)/σ(w)·(1 + δ(w)), walked level by level from the
+    deepest. The DAG's checkpoint observes the depth reached and the
+    largest σ.
+    """
+    exact = sources is None
+    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
+    adj, _ = cut(undirected(e).toDF("u", "v"))
+    if exact:
+        sources = adj.select(F.col("u").alias("s")).distinct()
+
+    def level(visited: DataFrame, d: int) -> DataFrame:
+        frontier = visited.filter("fresh")
+        nxt = (
+            frontier.join(adj, frontier["v"] == adj["u"])
+            .groupBy("s", adj["v"].alias("w"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .select("s", F.col("w").alias("v"), F.lit(d).alias("dist"), "sigma")
+            .join(visited.select("s", "v"), ["s", "v"], "left_anti")
+            .withColumn("fresh", F.lit(True))
+        )
+        return visited.withColumn("fresh", F.lit(False)).unionByName(nxt)
+
+    visited, _ = cut(
+        sources.select(
+            "s",
+            F.col("s").alias("v"),
+            F.lit(0).alias("dist"),
+            F.lit(1).cast("long").alias("sigma"),
+            F.lit(True).alias("fresh"),
+        )
+    )
+    # EXACT runs one probe level past max_depth: every (s, t) pair must be
+    # reached, so a BFS still expanding there fails loudly below instead
+    # of silently undercounting bc
+    rounds = max_depth + 1 if exact else max_depth
+    visited = supersteps(visited, level, rounds, halt=F.count_if("fresh"))
+
+    # predecessor pairs on the shortest-path DAG: u at dist d, w at d+1
+    vu = visited.select(
+        "s", F.col("v").alias("u"), F.col("dist").alias("du"), F.col("sigma").alias("sig_u")
+    )
+    vw = visited.select(
+        "s", F.col("v").alias("w"), F.col("dist").alias("dw"), F.col("sigma").alias("sig_w")
+    )
+    dag, seen = cut(
+        vu.join(adj, "u")
+        .join(vw, (F.col("v") == F.col("w")) & (vu["s"] == vw["s"]))
+        .filter(F.col("dw") == F.col("du") + 1)
+        .select(vu["s"], "u", "du", "sig_u", "w", "dw", "sig_w"),
+        depth=F.max("dw"),
+        sigma=F.max("sig_w"),
+    )
+    if exact and seen["depth"] > max_depth:
+        raise ValueError(
+            "betweenness_exact_tree: BFS still expanding past "
+            f"max_depth={max_depth}; the graph's diameter exceeds the "
+            "bound and the exact dependency sums would be truncated — "
+            "raise max_depth (or use betweenness_sampled)"
+        )
+    if exact and seen["sigma"] > 1:
+        raise ValueError(
+            "betweenness_exact_tree: graph has parallel shortest paths "
+            f"(max sigma = {seen['sigma']}); exact integer deltas need unique "
+            "paths — use betweenness_sampled"
+        )
+    zero = F.lit(0).cast("long") if exact else F.lit(0.0)
+    share = F.lit(1) if exact else F.col("sig_u").cast("double") / F.col("sig_w")
+    dmax = seen["depth"]
+
+    def accumulate(delta: DataFrame, i: int) -> DataFrame:
+        contrib = (
+            dag.filter(F.col("du") == dmax - i)
+            .join(delta.select("s", F.col("v").alias("w"), "delta"), ["s", "w"])
+            .groupBy("s", F.col("u").alias("v"))
+            .agg(F.sum(share * (F.lit(1) + F.col("delta"))).alias("inc"))
+        )
+        return delta.join(contrib, ["s", "v"], "left").select(
+            "s", "v", (F.col("delta") + F.coalesce(F.col("inc"), zero)).alias("delta")
+        )
+
+    delta = supersteps(visited.select("s", "v", zero.alias("delta")), accumulate, dmax)
+    # undirected: every pair is counted from both endpoints via sources —
+    # report the raw per-source sum (callers halve / normalise)
+    return (
+        delta.filter(F.col("s") != F.col("v"))
+        .groupBy(F.col("v").alias("node_id"))
+        .agg(F.sum("delta").alias("bc"))
+    )
 
 
 def betweenness_sampled(
@@ -454,102 +549,11 @@ def betweenness_sampled(
     undirected. Returns (node_id, bc) — the exact Brandes contribution
     summed over the given sources (sample all nodes for exact BC; a
     uniform source sample is the standard unbiased estimator at scale).
-
-    All sources advance TOGETHER: state is keyed (source, node), so
-    each BFS level is ONE join shuffled on the node key regardless of
-    |S| — the batched-multi-source form that amortizes scheduling at
-    cluster scale. Forward pass: level-synchronous shortest-path DAG
-    with path counts (sigma); backward pass: dependency accumulation
-    delta(v) = Σ_w σ(v)/σ(w)·(1+delta(w)) walked level-by-level from
-    the deepest frontier. Float ratios appear only here (like
-    pagerank, the reduction order is engine-internal → rows-only
-    oracle; the python-reference property test pins values).
+    Float ratios appear only here (like pagerank, the reduction order is
+    engine-internal → rows-only oracle; the python-reference property
+    test pins values).
     """
-    from pyspark.sql.window import Window  # noqa: F401  (parity with siblings)
-
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=True)
-
-    frontier = sources.select(
-        F.col("source").alias("s"),
-        F.col("source").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    visited = frontier
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(adj, frontier["v"] == adj["u"])
-            .groupBy("s", adj["v"].alias("w"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select(
-                "s",
-                F.col("w").alias("v"),
-                F.lit(d).alias("dist"),
-                "sigma",
-            )
-            .join(visited.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-
-    # predecessor pairs on the shortest-path DAG: u at dist d, w at d+1
-    vu = visited.select(
-        F.col("s"), F.col("v").alias("u"), F.col("dist").alias("du"),
-        F.col("sigma").alias("sig_u"),
-    )
-    vw = visited.select(
-        F.col("s"), F.col("v").alias("w"), F.col("dist").alias("dw"),
-        F.col("sigma").alias("sig_w"),
-    )
-    dag = (
-        vu.join(adj, "u")
-        .join(vw, (F.col("v") == F.col("w")) & (vu["s"] == vw["s"]))
-        .filter(F.col("dw") == F.col("du") + 1)
-        .select(vu["s"], "u", "du", "sig_u", "w", "dw", "sig_w")
-        .localCheckpoint(eager=True)
-    )
-    dmax = visited.agg(F.max("dist")).collect()[0][0] or 0
-    # delta accumulates level by level, deepest first
-    delta = visited.select("s", "v", F.lit(0.0).alias("delta"))
-    for d in range(dmax - 1, -1, -1):
-        contrib = (
-            dag.filter(F.col("du") == d)
-            .join(
-                delta.select("s", F.col("v").alias("w"), F.col("delta")),
-                ["s", "w"],
-            )
-            .groupBy("s", F.col("u").alias("v"))
-            .agg(
-                F.sum(
-                    (F.col("sig_u").cast("double") / F.col("sig_w"))
-                    * (F.lit(1.0) + F.col("delta"))
-                ).alias("inc")
-            )
-        )
-        delta = (
-            delta.join(contrib, ["s", "v"], "left")
-            .select(
-                "s",
-                "v",
-                (F.col("delta") + F.coalesce(F.col("inc"), F.lit(0.0))).alias(
-                    "delta"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    # undirected: every pair counted from both endpoints via sources —
-    # report the raw per-source sum (caller halves/normalizes as needed)
-    return (
-        delta.filter(F.col("s") != F.col("v"))
-        .groupBy(F.col("v").alias("node_id"))
-        .agg(F.sum("delta").alias("bc"))
-    )
+    return _brandes(edges, sources.select(F.col("source").alias("s")), max_depth)
 
 
 def betweenness_exact_tree(edges: DataFrame, *, max_depth: int = 8) -> DataFrame:
@@ -560,99 +564,16 @@ def betweenness_exact_tree(edges: DataFrame, *, max_depth: int = 8) -> DataFrame
     the integer-δ counterpart of :func:`betweenness_sampled` (whose
     float σ-ratio accumulation keeps it rows-only). Raises
     ``ValueError`` if any σ > 1 (the graph has parallel shortest paths;
-    use the sampled estimator there).
+    use the sampled estimator there), or if the BFS is still expanding
+    past ``max_depth`` (the sums would be truncated).
 
     Returns (node_id, bc BIGINT) over ALL sources: bc(v) = # ordered
     (s, t) pairs, s ≠ v ≠ t, whose unique shortest path has v strictly
     interior (halve for the undirected convention). All-pairs is
     inherently quadratic in reach — at cluster scale you run the same
-    batched-multi-source machinery on a source sample; every BFS level
-    and every δ level is ONE join shuffled on the node key regardless
-    of |S|.
+    batched-multi-source machinery on a source sample.
     """
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    sources = adj.select(F.col("u").alias("s")).distinct()
-    frontier = sources.select(
-        "s",
-        F.col("s").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    visited = frontier
-    # one probe level past max_depth: EXACT means every (s, t) pair is
-    # reached, so an unconverged BFS (frontier still expanding after the
-    # last permitted level) must fail loudly instead of silently
-    # undercounting bc — the sigma>1 guard below cannot see truncation.
-    for d in range(1, max_depth + 2):
-        nxt = (
-            frontier.join(adj, frontier["v"] == adj["u"])
-            .groupBy("s", adj["v"].alias("w"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("s", F.col("w").alias("v"), F.lit(d).alias("dist"), "sigma")
-            .join(visited.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        if d > max_depth:
-            raise ValueError(
-                "betweenness_exact_tree: BFS still expanding past "
-                f"max_depth={max_depth}; the graph's diameter exceeds the "
-                "bound and the exact dependency sums would be truncated — "
-                "raise max_depth (or use betweenness_sampled)"
-            )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    max_sigma = visited.agg(F.max("sigma")).collect()[0][0] or 1
-    if max_sigma > 1:
-        raise ValueError(
-            "betweenness_exact_tree: graph has parallel shortest paths "
-            f"(max sigma = {max_sigma}); exact integer deltas need unique "
-            "paths — use betweenness_sampled"
-        )
-    vu = visited.select(
-        "s", F.col("v").alias("u"), F.col("dist").alias("du")
-    )
-    vw = visited.select(
-        "s", F.col("v").alias("w"), F.col("dist").alias("dw")
-    )
-    dag = (
-        vu.join(adj, "u")
-        .join(vw, (F.col("v") == F.col("w")) & (vu["s"] == vw["s"]))
-        .filter(F.col("dw") == F.col("du") + 1)
-        .select(vu["s"], "u", "du", "w")
-        .localCheckpoint(eager=True)
-    )
-    dmax = visited.agg(F.max("dist")).collect()[0][0] or 0
-    delta = visited.select("s", "v", F.lit(0).cast("long").alias("delta"))
-    for d in range(dmax - 1, -1, -1):
-        contrib = (
-            dag.filter(F.col("du") == d)
-            .join(delta.select("s", F.col("v").alias("w"), "delta"), ["s", "w"])
-            .groupBy("s", F.col("u").alias("v"))
-            .agg(F.sum(F.lit(1) + F.col("delta")).alias("inc"))
-        )
-        delta = (
-            delta.join(contrib, ["s", "v"], "left")
-            .select(
-                "s",
-                "v",
-                (F.col("delta") + F.coalesce(F.col("inc"), F.lit(0)))
-                .cast("long")
-                .alias("delta"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        delta.filter(F.col("s") != F.col("v"))
-        .groupBy(F.col("v").alias("node_id"))
-        .agg(F.sum("delta").cast("long").alias("bc"))
-    )
+    return _brandes(edges, None, max_depth)
 
 
 def maximal_independent_set(
@@ -668,24 +589,20 @@ def maximal_independent_set(
     O(log n) rounds w.h.p.; a round over an empty active set is a
     no-op, so a FIXED unroll ≥ the actual round count replays the loop
     exactly (the louvain_communities idempotency trick). Each round is
-    one neighbor-min join shuffled on the node key. Returns (node_id).
+    one neighbor-min join shuffled on the node key; the state is the set
+    so far (``in_mis``) plus the still-active nodes, and the loop halts
+    when none is active. Returns (node_id).
 
     The symmetry-breaking primitive under distributed coloring /
     scheduling — the dataflow shadow of the reference's coordinator
     election (`ClusterManager` masters pick one winner per partition).
     """
     e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=True)
+    adj, _ = cut(undirected(e).toDF("u", "v"))
     pri = F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("node_id").cast("string")))
-    active = (
-        adj.select(F.col("u").alias("node_id")).distinct().withColumn("pri", pri)
-    ).localCheckpoint(eager=True)
-    mis = None
-    for _ in range(max_rounds):
-        if active.limit(1).count() == 0:
-            break
+
+    def luby(state: DataFrame, _: int) -> DataFrame:
+        active = state.filter(~F.col("in_mis"))
         nbr_min = (
             adj.join(
                 active.select(F.col("node_id").alias("v"), F.col("pri").alias("vp")),
@@ -694,23 +611,22 @@ def maximal_independent_set(
             .groupBy(F.col("u").alias("node_id"))
             .agg(F.min("vp").alias("min_nbr"))
         )
-        winners = (
-            active.join(nbr_min, "node_id", "left")
-            .filter(F.col("min_nbr").isNull() | (F.col("pri") < F.col("min_nbr")))
-            .select("node_id")
-            .localCheckpoint(eager=True)
+        voted = active.join(nbr_min, "node_id", "left").select(
+            "node_id",
+            "pri",
+            (F.col("min_nbr").isNull() | (F.col("pri") < F.col("min_nbr"))).alias("in_mis"),
         )
-        mis = winners if mis is None else mis.unionByName(winners)
-        killed = winners.unionByName(
-            adj.join(winners.withColumnRenamed("node_id", "u"), "u")
-            .select(F.col("v").alias("node_id"))
-            .distinct()
-        ).distinct()
-        active = active.join(killed, "node_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-    out = mis if mis is not None else active.select("node_id").limit(0)
-    return out.localCheckpoint(eager=True)
+        # winners are never adjacent, so this drops only their neighbors
+        losers = adj.join(
+            voted.filter("in_mis").select(F.col("node_id").alias("u")), "u"
+        ).select(F.col("v").alias("node_id"))
+        return state.filter("in_mis").unionByName(voted.join(losers, "node_id", "left_anti"))
+
+    state = adj.select(F.col("u").alias("node_id")).distinct().select(
+        "node_id", pri.alias("pri"), F.lit(False).alias("in_mis")
+    )
+    state = supersteps(state, luby, max_rounds, halt=F.count_if(~F.col("in_mis")))
+    return state.filter("in_mis").select("node_id")
 
 
 def hits_unnormalized(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
@@ -724,33 +640,31 @@ def hits_unnormalized(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
     ``edges``: directed (src, dst). Returns (node_id, hub, auth).
     Each half-round is one shuffle keyed on the join endpoint.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    h = nodes.withColumn("hub", F.lit(1).cast("long"))
-    a = None
-    for _ in range(iterations):
-        a = (
-            e.join(h.select(F.col("node_id").alias("src"), "hub"), "src")
+    e, _ = cut(edges.select("src", "dst").distinct())
+    nodes = endpoints(e, "src", "dst")
+
+    def hub_auth(scores: DataFrame, _: int) -> DataFrame:
+        auth = (
+            e.join(scores.select(F.col("node_id").alias("src"), "hub"), "src")
             .groupBy(F.col("dst").alias("node_id"))
             .agg(F.sum("hub").alias("auth"))
         )
-        a = nodes.join(a, "node_id", "left").select(
+        auth = nodes.join(auth, "node_id", "left").select(
             "node_id", F.coalesce(F.col("auth"), F.lit(0)).alias("auth")
         )
-        h = (
-            e.join(a.select(F.col("node_id").alias("dst"), "auth"), "dst")
+        hub = (
+            e.join(auth.select(F.col("node_id").alias("dst"), "auth"), "dst")
             .groupBy(F.col("src").alias("node_id"))
             .agg(F.sum("auth").alias("hub"))
         )
-        h = nodes.join(h, "node_id", "left").select(
-            "node_id", F.coalesce(F.col("hub"), F.lit(0)).alias("hub")
+        return auth.join(hub, "node_id", "left").select(
+            "node_id", F.coalesce(F.col("hub"), F.lit(0)).alias("hub"), "auth"
         )
-        h = h.localCheckpoint(eager=True)
-    return h.join(a, "node_id").select("node_id", "hub", "auth")
+
+    scores = nodes.select(
+        "node_id", F.lit(1).cast("long").alias("hub"), F.lit(0).cast("long").alias("auth")
+    )
+    return supersteps(scores, hub_auth, iterations)
 
 
 def katz_truncated(
@@ -766,51 +680,31 @@ def katz_truncated(
     key; truncation is the standard scale trade (full Katz inverts
     (I−αA) — not a dataflow op).
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    # walks(v) at step k: number of length-k paths ENDING at v
-    walks = e.select(F.col("src"), F.col("dst")).withColumn(
-        "n", F.lit(1).cast("long")
-    )
-    scale = alpha_denom ** (max_len - 1)
-    total = (
-        walks.groupBy(F.col("dst").alias("node_id"))
-        .agg(F.sum("n").alias("p"))
-        .select("node_id", (F.col("p") * scale).alias("num"))
-    )
-    frontier = walks.groupBy(F.col("dst").alias("node_id")).agg(
-        F.sum("n").alias("cnt")
-    )
-    for k in range(2, max_len + 1):
-        frontier = (
-            frontier.join(
-                e.select(F.col("src").alias("node_id"), "dst"), "node_id"
-            )
+    e, _ = cut(edges.select("src", "dst").distinct())
+    # per node: cnt = the number of length-k paths ENDING at it (NULL when
+    # none does) and num = the scaled sum over lengths so far
+    walks = e.groupBy(F.col("dst").alias("node_id")).agg(F.count("*").alias("cnt"))
+    walks = walks.withColumn("num", F.col("cnt") * alpha_denom ** (max_len - 1))
+
+    def extend(walks: DataFrame, i: int) -> DataFrame:
+        cnt = (
+            walks.join(e.select(F.col("src").alias("node_id"), "dst"), "node_id")
             .groupBy(F.col("dst").alias("node_id"))
             .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)
         )
-        scale = alpha_denom ** (max_len - k)
-        total = (
-            total.join(
-                frontier.select("node_id", (F.col("cnt") * scale).alias("add")),
-                "node_id",
-                "full_outer",
-            )
-            .select(
-                "node_id",
-                (
-                    F.coalesce(F.col("num"), F.lit(0))
-                    + F.coalesce(F.col("add"), F.lit(0))
-                ).alias("num"),
-            )
+        scale = alpha_denom ** (max_len - 1 - i)
+        return walks.select("node_id", "num").join(cnt, "node_id", "full_outer").select(
+            "node_id",
+            "cnt",
+            (
+                F.coalesce(F.col("num"), F.lit(0))
+                + F.coalesce(F.col("cnt") * scale, F.lit(0))
+            ).alias("num"),
         )
+
+    walks = supersteps(walks, extend, max_len - 1)
     denom = float(alpha_denom**max_len)
-    return nodes.join(total, "node_id", "left").select(
+    return endpoints(e, "src", "dst").join(walks, "node_id", "left").select(
         "node_id",
         F.coalesce(F.col("num"), F.lit(0)).alias("katz_num"),
         (F.coalesce(F.col("num"), F.lit(0)).cast("double") / denom).alias("katz"),
@@ -835,53 +729,32 @@ def greedy_coloring(
     partial coloring. An edge-free input yields an empty (node_id,
     color) frame, never ``None``.
     """
-    remaining = (
-        edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    ).localCheckpoint(eager=True)
-    nodes = (
-        remaining.select(F.col("a").alias("node_id"))
-        .unionByName(remaining.select(F.col("b").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    simple, _ = cut(edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct())
+
+    def peel(colored: DataFrame, i: int) -> DataFrame:
+        if i > max_colors:
+            raise ValueError(
+                f"greedy_coloring: nodes remain uncolored after {max_colors} "
+                "MIS-peel rounds; raise max_colors (needs ≥ chromatic number)"
+            )
+        left = colored.filter(F.col("color").isNull()).select("node_id")
+        remaining = simple.join(
+            left.withColumnRenamed("node_id", "a"), "a", "left_semi"
+        ).join(left.withColumnRenamed("node_id", "b"), "b", "left_semi")
+        # an isolated node has no uncolored neighbor left: it takes this color
+        layer = maximal_independent_set(remaining, seed=seed).unionByName(
+            left.join(endpoints(remaining), "node_id", "left_anti")
+        )
+        return colored.join(layer.withColumn("new", F.lit(i - 1)), "node_id", "left").select(
+            "node_id", F.coalesce("color", "new").alias("color")
+        )
+
+    colored, _ = cut(endpoints(simple).withColumn("color", F.lit(None).cast("int")))
+    # a round is only run while a node is uncolored, so a round past
+    # max_colors means the budget ran out
+    return supersteps(
+        colored, peel, max_colors + 1, halt=F.count_if(F.col("color").isNull())
     )
-    colored = None
-    for c in range(max_colors):
-        if nodes.limit(1).count() == 0:
-            break
-        if remaining.limit(1).count() == 0:
-            # isolated remainder: all one color
-            layer = nodes.withColumn("color", F.lit(c))
-            colored = layer if colored is None else colored.unionByName(layer)
-            nodes = nodes.limit(0)
-            break
-        mis = maximal_independent_set(remaining, seed=seed)
-        isolated = nodes.join(
-            remaining.select(F.col("a").alias("node_id"))
-            .unionByName(remaining.select(F.col("b").alias("node_id")))
-            .distinct(),
-            "node_id",
-            "left_anti",
-        )
-        layer = mis.unionByName(isolated).withColumn("color", F.lit(c))
-        colored = layer if colored is None else colored.unionByName(layer)
-        done = layer.select("node_id")
-        nodes = nodes.join(done, "node_id", "left_anti").localCheckpoint(eager=True)
-        remaining = (
-            remaining.join(done.withColumnRenamed("node_id", "a"), "a", "left_anti")
-            .join(done.withColumnRenamed("node_id", "b"), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    if colored is None:
-        # edge-free input: stable empty frame, not None
-        return nodes.withColumn("color", F.lit(0)).limit(0)
-    leftover = nodes.limit(1).count()
-    if leftover:
-        raise ValueError(
-            f"greedy_coloring: nodes remain uncolored after {max_colors} "
-            "MIS-peel rounds; raise max_colors (needs ≥ chromatic number)"
-        )
-    return colored
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -895,9 +768,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     whether hubs attach to hubs.
     """
     e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = undirected(e).toDF("u", "v")
     deg = adj.groupBy(F.col("u").alias("node_id")).agg(F.count("*").alias("deg"))
     stubs = (
         adj.join(deg.select(F.col("node_id").alias("u"), F.col("deg").alias("x")), "u")
@@ -953,12 +824,7 @@ def label_propagation(edges: DataFrame, *, rounds: int) -> DataFrame:
     `ha/.../ClusterManager` member lists); on the analytics side LPA
     is the cheap community baseline beside Louvain.
     """
-    e = edges.select("a", "b")
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    adj, _ = cut(undirected(edges).distinct())
     labels = adj.select(F.col("a").alias("node_id")).distinct().select(
         "node_id", F.col("node_id").alias("label")
     )

@@ -6,25 +6,47 @@ repair tool's fixed-depth chain exploration
 (`RelationshipChainExplorer.java:39-63`).
 
 Design: BFS = iterative frontier equi-joins with a visited-set anti-join.
-Each iteration is one shuffle on the frontier key; ``localCheckpoint()``
-cuts lineage every round so plans don't grow unboundedly (the classic
-iterative-Spark pitfall at scale). Frontiers stay DataFrames end-to-end —
-no driver-side collection of node ids.
+Frontiers stay DataFrames end-to-end — no driver-side collection of node
+ids.
 
-Superstep loops (connected components, PageRank) do only per-round work:
-their loop invariants are built and checkpointed once before the loop,
-each round is one message join and one combine, and the halt test reads
-the round's own checkpoint.
+Every iterative operator here and in ``community`` is written in one
+superstep shape (Pregelix): vertex ⋈ message, then a combine, then halt
+when no vertex is active. Loop invariants are built and checkpointed once
+before the loop. ``superstep.supersteps`` runs the rounds: it cuts each
+round's state with an eager local checkpoint, so neither plans nor
+lineage grow with the round count, and it halts on an active-row count
+observed on that checkpoint, so halting costs no extra Spark job. A state
+whose frontier is part of it carries a ``fresh`` (or ``changed``) flag on
+the rows the last round produced, and the loop halts when none is set.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .superstep import cut, supersteps
+
 CHECKPOINT_EVERY = 3
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """The (a, b) pairs of ``edges`` in both directions."""
+    return edges.select("a", "b").unionByName(
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    )
+
+
+def endpoints(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """The distinct ids at either end of ``edges``, as ``node_id``."""
+    return (
+        edges.select(F.col(a).alias("node_id"))
+        .unionByName(edges.select(F.col(b).alias("node_id")))
+        .distinct()
+    )
 
 
 def _edges(rels: DataFrame, direction: str, types: Iterable[str] | None) -> DataFrame:
@@ -32,10 +54,9 @@ def _edges(rels: DataFrame, direction: str, types: Iterable[str] | None) -> Data
     out = r.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     if direction == "out":
         return out
-    inn = r.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     if direction == "in":
-        return inn
-    return out.unionByName(inn)
+        return r.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+    return undirected(out)
 
 
 def bfs_reachable(
@@ -91,47 +112,46 @@ def traverse(
         # upstream: a second persist here is a per-invocation cache-entry
         # leak (each call makes a new DataFrame → a new storage entry)
         edges = edges.persist()
-    node_attrs = nodes
-    reached = seeds.select(
+    # the frontiers of the rounds so far; their union is the visited set.
+    # The loop state proper is this list, not what supersteps returns:
+    # hop records each frontier it is handed, which relies on supersteps
+    # passing every round's (cut) state to step exactly once (every=1),
+    # and the last cut frontier, which no hop sees, is added after the loop
+    visited: list[DataFrame] = []
+
+    def hop(frontier: DataFrame, depth: int) -> DataFrame:
+        visited.append(frontier)
+        if prune is not None:
+            frontier = (
+                frontier.join(nodes, frontier["node_id"] == nodes["id"])
+                .filter(~prune)
+                .select("seed", "node_id", "hops")
+            )
+        # each round's frontier is cut: it feeds the next round's expand
+        # join, every later anti-join and the final union, and left lazy
+        # it would be re-planned and re-run by each of them (O(k²) work)
+        return (
+            frontier.join(edges, frontier["node_id"] == edges["a"])
+            .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
+            .join(
+                reduce(DataFrame.unionByName, visited).select("seed", "node_id"),
+                ["seed", "node_id"],
+                "left_anti",
+            )
+            .groupBy("seed", "node_id")
+            .agg(F.min("hops").alias("hops"))
+        )
+
+    seeds = seeds.select(
         F.col("seed").cast("long").alias("seed"),
         F.col("seed").cast("long").alias("node_id"),
         F.lit(0).alias("hops"),
     )
-    frontier = reached
-    for depth in range(1, k + 1):
-        if prune is not None:
-            expandable = (
-                frontier.join(node_attrs, frontier["node_id"] == node_attrs["id"])
-                .filter(~prune)
-                .select("seed", "node_id", "hops")
-            )
-        else:
-            expandable = frontier
-        nxt = (
-            expandable.join(edges, expandable["node_id"] == edges["a"])
-            .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
-            .join(reached.select("seed", "node_id"), ["seed", "node_id"], "left_anti")
-            .groupBy("seed", "node_id")
-            .agg(F.min("hops").alias("hops"))
-        )
-        # Every-round materialization: each round's frontier feeds THREE
-        # consumers (the next round's expand join, its anti-join visited
-        # set, and the final union) — left lazy, round d's subtree is
-        # re-planned AND re-executed by every later round, an O(k²)
-        # recomputation (the lazy k=2 bfs_2hop_reach plan carried 120
-        # InMemoryTableScans, 10 with the cut). The frontier rows are
-        # (seed, node_id, hops) — tiny next to the edge set — so one eager
-        # cut per round is strictly less work than one re-join per later
-        # round.
-        # Measured same-session: bfs_2hop_reach 2.45 → 1.77s,
-        # graph_harmonic_centrality (k=3) 4.83 → 1.85s,
-        # traverse_pruned_2hop 2.61 → 1.79s.
-        nxt = nxt.localCheckpoint(eager=True)
-        reached = reached.unionByName(nxt)
-        frontier = nxt
+    visited.append(supersteps(seeds, hop, k, halt=F.count("*")))
+    reached = reduce(DataFrame.unionByName, visited)
     if emit is not None:
         reached = (
-            reached.join(node_attrs, reached["node_id"] == node_attrs["id"])
+            reached.join(nodes, reached["node_id"] == nodes["id"])
             .filter(emit)
             .select("seed", "node_id", "hops")
         )
@@ -175,9 +195,10 @@ def dfs_preorder(
     plain string MIN is path-lexicographic MIN; an id array rides along
     for the simple-path (no-revisit) membership test.
 
-    Per round: one frontier⋈edges shuffle + one groupBy-min — the same
-    iterative shape as ``bfs_reachable``, so it scales the same way.
-    Returns (seed, node_id, preorder) with preorder = 1-based rank.
+    Per round: one frontier⋈edges shuffle + one groupBy-min that merges
+    the candidates into the per-node best paths, flagging improved rows
+    ``fresh`` — the next round's frontier. Returns (seed, node_id,
+    preorder) with preorder = 1-based rank.
     """
     edges = _edges(rels, direction, types)
     if cache_edges and k > 1:
@@ -186,45 +207,43 @@ def dfs_preorder(
     def _enc(c) -> F.Column:
         return F.format_string("%016x", c)
 
-    best = seeds.select(
-        F.col("seed").cast("long").alias("seed"),
-        F.col("seed").cast("long").alias("node_id"),
-        _enc(F.col("seed").cast("long")).alias("path"),
-        F.array(F.col("seed").cast("long")).alias("path_arr"),
-    ).localCheckpoint(eager=True)
-    frontier = best
-    for depth in range(1, k + 1):
+    def extend(best: DataFrame, _: int) -> DataFrame:
         ext = (
-            frontier.join(edges, frontier["node_id"] == edges["a"])
+            best.filter("fresh")
+            .join(edges, F.col("node_id") == edges["a"])
             .filter(~F.array_contains(F.col("path_arr"), F.col("b")))
             .select(
                 "seed",
                 F.col("b").alias("node_id"),
                 F.concat(F.col("path"), _enc(F.col("b"))).alias("path"),
                 F.array_append(F.col("path_arr"), F.col("b")).alias("path_arr"),
+                F.lit(None).cast("string").alias("old"),
             )
         )
-        cand = (
-            ext.groupBy("seed", "node_id")
-            .agg(F.min(F.struct("path", "path_arr")).alias("s"))
-            .select("seed", "node_id", F.col("s.path").alias("path"), F.col("s.path_arr").alias("path_arr"))
-        )
-        improved = (
-            cand.join(
-                best.select("seed", "node_id", F.col("path").alias("cur_path")),
-                ["seed", "node_id"],
-                "left",
+        return (
+            best.select("seed", "node_id", "path", "path_arr", F.col("path").alias("old"))
+            .unionByName(ext)
+            .groupBy("seed", "node_id")
+            .agg(F.min(F.struct("path", "path_arr")).alias("s"), F.min("old").alias("old"))
+            .select(
+                "seed",
+                "node_id",
+                F.col("s.path").alias("path"),
+                F.col("s.path_arr").alias("path_arr"),
+                (F.col("old").isNull() | (F.col("s.path") < F.col("old"))).alias("fresh"),
             )
-            .filter(F.col("cur_path").isNull() | (F.col("path") < F.col("cur_path")))
-            .select("seed", "node_id", "path", "path_arr")
-        ).localCheckpoint(eager=True)
-        if improved.limit(1).count() == 0:
-            break
-        best = (
-            best.join(improved.select("seed", "node_id"), ["seed", "node_id"], "left_anti")
-            .unionByName(improved)
-        ).localCheckpoint(eager=True)
-        frontier = improved
+        )
+
+    best, _ = cut(
+        seeds.select(
+            F.col("seed").cast("long").alias("seed"),
+            F.col("seed").cast("long").alias("node_id"),
+            _enc(F.col("seed").cast("long")).alias("path"),
+            F.array(F.col("seed").cast("long")).alias("path_arr"),
+            F.lit(True).alias("fresh"),
+        )
+    )
+    best = supersteps(best, extend, k, halt=F.count_if("fresh"))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("seed").orderBy("path")
@@ -269,47 +288,39 @@ def connected_components(rels: DataFrame, max_iter: int = 20) -> DataFrame:
     Returns (node_id, component). This is the DataFrame rendering of
     GraphX's connectedComponents (the north-star analytics in SURVEY §7 M7).
 
-    Superstep shape: the loop invariant — the distinct undirected edge set
-    plus one self-loop ``(a, a)`` per node — is built and checkpointed
-    once. Round 1 needs no label frame: a node's label is ``min(b)`` over
-    its rows. Every later round is one message join (edges ⋈ labels on
-    ``b = node_id``) and one combine (``groupBy(a)`` with
-    ``min(component)``); the node's old label comes back through its
-    self-loop row. Each round's checkpoint carries
-    ``changed = new < old`` and the loop halts when that checkpoint has
-    no changed row, so no old⋈new join runs. A NULL node id keeps a NULL
-    label: only its own self-loop reaches it.
+    The loop invariant is the distinct undirected edge set plus one
+    self-loop ``(a, a)`` per node. Round 1 needs no label frame: a node's
+    label is ``min(b)`` over its rows. Every later round is one message
+    join (edges ⋈ labels on ``b = node_id``) and one combine (``groupBy(a)``
+    with ``min(component)``); the node's old label comes back through its
+    self-loop row, so ``changed = new < old`` needs no old⋈new join. A
+    NULL node id keeps a NULL label: only its own self-loop reaches it.
     """
-    pairs = rels.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
-        rels.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    )
-    edges = (
+    pairs = undirected(rels.select(F.col("src").alias("a"), F.col("dst").alias("b")))
+    edges, _ = cut(
         pairs.unionByName(pairs.select("a", F.col("a").alias("b")))
         .filter(F.col("a").isNotNull() | F.col("b").isNull())
         .distinct()
-    ).localCheckpoint(eager=True)
-    if max_iter < 1:
-        return edges.select(F.col("a").alias("node_id")).distinct().withColumn(
-            "component", F.col("node_id")
-        )
-    labels = (
-        edges.groupBy(F.col("a").alias("node_id"))
-        .agg(F.min("b").alias("component"))
-        .withColumn("changed", F.col("component") < F.col("node_id"))
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter - 1):
-        if labels.filter("changed").limit(1).count() == 0:
-            break
-        nbr = labels.select(F.col("node_id").alias("nbr"), "component")
-        labels = (
-            edges.join(nbr, edges["b"].eqNullSafe(nbr["nbr"]))
-            .groupBy(F.col("a").alias("node_id"))
+    )
+
+    def combine(labels: DataFrame, i: int) -> DataFrame:
+        if i == 1:
+            msgs = edges.withColumn("component", F.col("b"))
+        else:
+            nbr = labels.select(F.col("node_id").alias("nbr"), "component")
+            msgs = edges.join(nbr, edges["b"].eqNullSafe(nbr["nbr"]))
+        return (
+            msgs.groupBy(F.col("a").alias("node_id"))
             .agg(
                 F.min("component").alias("component"),
                 F.min(F.when(F.col("a") == F.col("b"), F.col("component"))).alias("old"),
             )
             .select("node_id", "component", (F.col("component") < F.col("old")).alias("changed"))
-        ).localCheckpoint(eager=True)
+        )
+
+    labels = edges.select(F.col("a").alias("node_id")).distinct()
+    labels = labels.withColumn("component", F.col("node_id"))
+    labels = supersteps(labels, combine, max_iter, halt=F.count_if("changed"))
     return labels.select("node_id", "component")
 
 
@@ -321,18 +332,17 @@ def _pagerank_invariants(rels: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
         F.count("*").alias("out_degree")
     )
-    nodes = (
-        rels.select(F.col("src").alias("node_id"))
-        .unionByName(rels.select(F.col("dst").alias("node_id")))
-        .distinct()
+    nodes, seen = cut(
+        endpoints(rels, "src", "dst")
         .join(out_deg, "node_id", "left")
-        .select("node_id", F.col("out_degree").isNull().alias("dangling"))
-    ).localCheckpoint(eager=True)
-    edges = (
+        .select("node_id", F.col("out_degree").isNull().alias("dangling")),
+        n=F.count("*"),
+    )
+    edges, _ = cut(
         rels.select("src", "dst")
         .join(out_deg.withColumnRenamed("node_id", "src"), "src")
-    ).localCheckpoint(eager=True)
-    return nodes, edges, nodes.count()
+    )
+    return nodes, edges, seen["n"]
 
 
 def _in_contribs(ranks: DataFrame, edges: DataFrame) -> DataFrame:
@@ -362,20 +372,17 @@ def pagerank(
     """Batch analytics: PageRank over the directed graph (dangling mass
     redistributed uniformly). Returns (node_id, rank); ranks sum to ~N.
 
-    Superstep shape: the loop invariants — the node frame with a
-    ``dangling`` flag and the edge list carrying its source's out-degree
-    — are built and checkpointed once. A round is then one message join
-    (rank / out_degree along the edges) and one combine (sum per
-    destination), and the dangling mass is a filter on the rank frame.
-    The per-iteration dangling-mass SCALAR stays inside the plan: the
-    1-row aggregate is broadcast-crossJoined onto the rank update instead
-    of ``.collect()``-ed, so no driver action runs between iterations
-    (one job per checkpoint cadence, not per iteration).
+    A round is one message join (rank / out_degree along the edge list)
+    and one combine (sum per destination); the dangling mass is a filter
+    on the rank frame, and its 1-row aggregate is broadcast-crossJoined
+    onto the rank update rather than read on the driver, so no driver
+    action runs between rounds. The ranks are cut every ``CHECKPOINT_EVERY``
+    rounds.
     """
     nodes, edges, n_total = _pagerank_invariants(rels)
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for i in range(iterations):
-        ranks = (
+
+    def update(ranks: DataFrame, _: int) -> DataFrame:
+        return (
             nodes.join(_in_contribs(ranks, edges), "node_id", "left")
             .crossJoin(F.broadcast(_dangling_mass(ranks)))
             .select(
@@ -391,8 +398,9 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = nodes.withColumn("rank", F.lit(1.0))
+    ranks = supersteps(ranks, update, iterations, every=CHECKPOINT_EVERY)
     return ranks.select("node_id", "rank")
 
 
@@ -462,7 +470,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 def weighted_shortest_paths(
-    edges: DataFrame, seeds: DataFrame, max_dist: int, max_iter: int = 30
+    edges: DataFrame, seeds: DataFrame, max_dist: int
 ) -> DataFrame:
     """Multi-source weighted shortest paths (Bellman-Ford label
     correction): ``edges`` is a directed (src, dst, weight>0) list (feed
@@ -470,86 +478,77 @@ def weighted_shortest_paths(
     source nodes. Returns (node_id, dist) for every node whose minimal
     distance from ANY seed is <= ``max_dist``.
 
-    Each round relaxes only the frontier (nodes improved last round) —
-    one shuffle per round on the join key, lineage cut by
-    localCheckpoint; terminates at fixpoint or when the frontier's
-    distances exceed ``max_dist``. This is the DataFrame rendering of
-    pregel-style SSSP. The traversal surface mirrors the reference's
-    weighted expansion (`Traverser` over `LockableNode.java:178-201`)
-    as batch dataflow.
+    Each round relaxes only the frontier (the nodes improved last round,
+    flagged ``fresh``) — one shuffle on the join key and one groupBy-min
+    that merges the candidates into the distances — and the loop runs to
+    the fixpoint, which positive weights reach within |V| rounds. This is
+    the DataFrame rendering of pregel-style SSSP. The traversal surface
+    mirrors the reference's weighted expansion (`Traverser` over
+    `LockableNode.java:178-201`) as batch dataflow.
     """
-    dist = (
-        seeds.select(F.col("seed").alias("node_id"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        relaxed = (
-            frontier.join(edges, frontier["node_id"] == edges["src"])
+
+    def relax(dist: DataFrame, _: int) -> DataFrame:
+        cand = (
+            dist.filter("fresh")
+            .join(edges, F.col("node_id") == edges["src"])
             .select(
                 F.col("dst").alias("node_id"),
-                (F.col("dist") + F.col("weight")).alias("cand"),
+                (F.col("dist") + F.col("weight")).alias("dist"),
+                F.lit(None).alias("old"),
             )
-            .filter(F.col("cand") <= max_dist)
-            .groupBy("node_id")
-            .agg(F.min("cand").alias("cand"))
+            .filter(F.col("dist") <= max_dist)
         )
-        improved = (
-            relaxed.join(dist.withColumnRenamed("dist", "cur"), "node_id", "left")
-            .filter(F.col("cur").isNull() | (F.col("cand") < F.col("cur")))
-            .select("node_id", F.col("cand").alias("dist"))
-        ).localCheckpoint(eager=True)
-        if improved.limit(1).count() == 0:
-            break
-        dist = (
-            dist.unionByName(improved)
+        return (
+            dist.select("node_id", "dist", F.col("dist").alias("old"))
+            .unionByName(cand)
             .groupBy("node_id")
-            .agg(F.min("dist").alias("dist"))
-        ).localCheckpoint(eager=True)
-        frontier = improved
-    return dist
+            .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
+            .select(
+                "node_id",
+                "dist",
+                (F.col("old").isNull() | (F.col("dist") < F.col("old"))).alias("fresh"),
+            )
+        )
+
+    dist, _ = cut(
+        seeds.select(F.col("seed").alias("node_id"))
+        .distinct()
+        .select("node_id", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("fresh"))
+    )
+    dist = supersteps(dist, relax, halt=F.count_if("fresh"))
+    return dist.select("node_id", "dist")
 
 
-def k_core(rels: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
+def k_core(rels: DataFrame, k: int) -> DataFrame:
     """Batch analytics: the k-core — the maximal subgraph where every
     node has degree >= k — via iterative peeling: repeatedly drop nodes
     with (undirected, deduped) degree < k and their incident edges until
     a fixpoint.
 
     Returns (node_id, degree) of the surviving core. Each round is one
-    degree aggregation + one semi-join edge filter; localCheckpoint cuts
-    lineage. Converges in <= max_iter rounds (each round removes at
-    least one node or stops).
+    degree aggregation and two left joins that flag the edges at a
+    low-degree endpoint ``dead``; the next round drops them. Every round
+    but the last removes at least one edge, so the loop ends, at the
+    round that flags none.
     """
-    edges = (
-        rels.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(rels.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+    edges, _ = cut(
+        undirected(rels.select(F.col("src").alias("a"), F.col("dst").alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-    ).localCheckpoint(eager=True)
-    # pruned ⊆ edges, so count equality ⇔ set equality; carrying the
-    # previous round's count halves the actions (one count per round)
-    prev_count = edges.count()
-    for _ in range(max_iter):
-        deg = edges.groupBy("a").agg(F.count("*").alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("a").localCheckpoint(eager=True)
-        pruned = (
-            edges.join(keep, "a", "left_semi")
-            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-            .select("a", "b")
-        ).localCheckpoint(eager=True)
-        n = pruned.count()
-        edges = pruned
-        if n == prev_count:
-            break
-        prev_count = n
-    return (
-        edges.groupBy(F.col("a").alias("node_id"))
-        .agg(F.count("*").alias("degree"))
-        .filter(F.col("degree") >= k)
+        .withColumn("dead", F.lit(False))
     )
+
+    def peel(edges: DataFrame, _: int) -> DataFrame:
+        live = edges.filter(~F.col("dead")).select("a", "b")
+        low = live.groupBy("a").agg(F.count("*").alias("degree")).filter(F.col("degree") < k)
+        return (
+            live.join(low.select("a", F.lit(True).alias("low_a")), "a", "left")
+            .join(low.select(F.col("a").alias("b"), F.lit(True).alias("low_b")), "b", "left")
+            .select("a", "b", F.coalesce("low_a", "low_b", F.lit(False)).alias("dead"))
+        )
+
+    edges = supersteps(edges, peel, halt=F.count_if("dead"))
+    return edges.groupBy(F.col("a").alias("node_id")).agg(F.count("*").alias("degree"))
 
 
 def hyperball(
@@ -576,25 +575,22 @@ def hyperball(
     for fixed input + lg_k).
     """
     edges = _edges(rels, direction, None)
-    nodes = (
-        edges.select(F.col("a").alias("node_id"))
-        .unionByName(edges.select(F.col("b").alias("node_id")))
-        .distinct()
-    )
-    state = nodes.groupBy("node_id").agg(
-        F.hll_sketch_agg("node_id", F.lit(lg_k)).alias("sketch")
-    )
-    for _ in range(radius):
+
+    def spread(state: DataFrame, _: int) -> DataFrame:
         contrib = (
             state.join(edges, state["node_id"] == edges["b"])
             .select(F.col("a").alias("node_id"), "sketch")
         )
-        state = (
+        return (
             state.unionByName(contrib)
             .groupBy("node_id")
             .agg(F.hll_union_agg("sketch", F.lit(True)).alias("sketch"))
-            .localCheckpoint(eager=True)
         )
+
+    state = endpoints(edges).groupBy("node_id").agg(
+        F.hll_sketch_agg("node_id", F.lit(lg_k)).alias("sketch")
+    )
+    state = supersteps(state, spread, radius)
     return state.select(
         "node_id", F.hll_sketch_estimate("sketch").alias("ball_size")
     )
@@ -671,11 +667,11 @@ def personalized_pagerank(
     seed_set = seeds.select(F.col("seed").cast("long").alias("node_id")).distinct()
     n_seeds_1row = seed_set.agg(F.count("*").alias("n_seeds"))
     is_seed = seed_set.withColumn("__is_seed", F.lit(1))
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for i in range(iterations):
+
+    def update(ranks: DataFrame, _: int) -> DataFrame:
         # teleport mass (1-d per node, N total) concentrates on seeds;
         # dangling mass also restarts at the seeds in personalized PR
-        ranks = (
+        return (
             nodes.join(_in_contribs(ranks, edges), "node_id", "left")
             .join(F.broadcast(is_seed), "node_id", "left")
             .crossJoin(F.broadcast(_dangling_mass(ranks)))
@@ -694,6 +690,7 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = nodes.withColumn("rank", F.lit(1.0))
+    ranks = supersteps(ranks, update, iterations, every=CHECKPOINT_EVERY)
     return ranks.select("node_id", "rank")

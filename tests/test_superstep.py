@@ -1,0 +1,192 @@
+"""The superstep primitive: ``cut``'s observed aggregates, ``supersteps``'
+halt, the job counts of the loops built on them, and the empty-input
+contract of every operator that runs on them."""
+
+from __future__ import annotations
+
+import itertools
+import threading
+
+import pytest
+from pyspark.sql import functions as F
+
+from neo4j_enterprise_spark.operators import community as C
+from neo4j_enterprise_spark.operators import traversal as T
+from neo4j_enterprise_spark.operators.superstep import cut, supersteps
+
+
+def _jobs(spark, build):
+    """(rows, Spark jobs run) of building and collecting ``build()``."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
+    rows = build().collect()
+    return rows, dag.nextJobId() - first_job
+
+
+def test_cut_observes_what_a_separate_count_counts(spark):
+    df = spark.range(200).withColumn("x", F.col("id") % 7).groupBy("x").count()
+    out, seen = cut(df, odd=F.count_if(F.col("x") % 2 == 1), rows=F.count("*"))
+    assert seen == {"odd": df.filter(F.col("x") % 2 == 1).count(), "rows": 7}
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_cut_runs_no_more_jobs_than_a_bare_checkpoint(spark):
+    def frame():
+        return spark.range(500).withColumn("x", F.col("id") % 5).groupBy("x").count()
+
+    _, bare = _jobs(spark, lambda: frame().localCheckpoint(eager=True))
+    _, observed = _jobs(spark, lambda: cut(frame(), rows=F.count("*"))[0])
+    assert observed <= bare
+
+
+@pytest.mark.parametrize("fold", ["none", "filter_false", "limit_0"])
+def test_cut_reads_zero_on_an_empty_frame_without_blocking(spark, fold):
+    df = spark.createDataFrame([], "x long")
+    if fold != "none":
+        # Catalyst folds these to an empty relation
+        df = spark.range(10).select(F.col("id").alias("x"))
+        df = df.filter(F.lit(False)) if fold == "filter_false" else df.limit(0)
+    got = {}
+    t = threading.Thread(
+        target=lambda: got.update(cut(df, rows=F.count("*"), total=F.sum("x"))[1])
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "the observation never arrived"
+    # sum() over zero rows is NULL; cut reads it as 0
+    assert got == {"rows": 0, "total": 0}
+
+
+def test_supersteps_stops_at_the_round_that_reads_zero(spark):
+    calls = []
+
+    def step(state, i):
+        calls.append(i)
+        return state.select((F.col("n") - 1).alias("n"))
+
+    start = spark.createDataFrame([(3,), (1,)], "n long")
+    out = supersteps(start, step, 10, halt=F.count_if(F.col("n") > 0))
+    assert calls == [1, 2, 3]
+    assert sorted(r.n for r in out.collect()) == [-2, 0]
+    assert [r.n for r in supersteps(start, step, 0).collect()] == [3, 1]
+
+
+# six 5-cliques joined in a ring, plus a separate 10-node path
+_CLIQUES = [
+    (c * 5 + a, c * 5 + b) for c in range(6) for a, b in itertools.combinations(range(5), 2)
+]
+_RING = [(c * 5 + 4, ((c + 1) % 6) * 5) for c in range(6)]
+_PATH = [(100 + v, 101 + v) for v in range(9)]
+_PAIRS = _CLIQUES + _RING + _PATH
+
+# Ceilings sit 1-2 jobs above the highest count measured on this graph
+# in the test session (get_spark("tests")) at 2 and at 4 cores, first in
+# this order in a fresh session, then three times in shuffled order:
+# CC 50 then 32 (70 with a limit(1).count() probe per round), traverse
+# 18 then 16, PageRank(2) 22-23 (24 with a separate node count), k-truss
+# 23, Louvain 61 (123 when each round's probe re-ran the unmaterialised
+# move round).
+JOB_CEILINGS = {
+    "connected_components": 52,
+    "traverse": 19,
+    "pagerank": 25,
+    "ktruss_peel": 24,
+    "louvain_communities": 64,
+}
+
+
+def test_superstep_loops_keep_their_job_counts(spark):
+    rels = spark.createDataFrame(
+        [(i, s, d, "T") for i, (s, d) in enumerate(_PAIRS)],
+        "id long, src long, dst long, type_name string",
+    )
+    und = spark.createDataFrame(_PAIRS, "a long, b long")
+    seeds = spark.createDataFrame([(0,), (100,)], "seed long")
+    builds = {
+        "connected_components": lambda: T.connected_components(rels),
+        "traverse": lambda: T.traverse(None, rels, seeds, 3),
+        "pagerank": lambda: T.pagerank(rels, iterations=2),
+        "ktruss_peel": lambda: C.ktruss_peel(und, k=4),
+        "louvain_communities": lambda: C.louvain_communities(und),
+    }
+    jobs = {name: _jobs(spark, build)[1] for name, build in builds.items()}
+    assert all(jobs[n] <= JOB_CEILINGS[n] for n in jobs), sorted(jobs.items())
+
+
+def test_bfs_stops_when_the_frontier_empties(spark):
+    # 0→1→2→3: hop 4 finds nothing, so k=10 must cost what k=4 costs
+    rels = spark.createDataFrame(
+        [(v, v, v + 1, "T") for v in range(3)],
+        "id long, src long, dst long, type_name string",
+    )
+    seeds = spark.createDataFrame([(0,)], "seed long")
+    rows4, jobs4 = _jobs(spark, lambda: T.bfs_reachable(rels, seeds, k=4))
+    rows10, jobs10 = _jobs(spark, lambda: T.bfs_reachable(rels, seeds, k=10))
+    assert sorted(map(tuple, rows10)) == sorted(map(tuple, rows4))
+    assert sorted(map(tuple, rows4)) == [(0, v, v) for v in range(4)]
+    assert jobs10 <= jobs4, (jobs10, jobs4)
+
+
+# every operator built on supersteps, given empty edges (and seeds):
+# an empty result, with the schema it had when each loop ran its own
+# probes; HITS keeps that schema at iterations=0 too
+_EMPTY_SCHEMAS = {
+    "traverse": "struct<seed:bigint,node_id:bigint,hops:int>",
+    "dfs_preorder": "struct<seed:bigint,node_id:bigint,preorder:int>",
+    "connected_components": "struct<node_id:bigint,component:bigint>",
+    "pagerank": "struct<node_id:bigint,rank:double>",
+    "weighted_shortest_paths": "struct<node_id:bigint,dist:bigint>",
+    "k_core": "struct<node_id:bigint,degree:bigint>",
+    "hyperball": "struct<node_id:bigint,ball_size:bigint>",
+    "personalized_pagerank": "struct<node_id:bigint,rank:double>",
+    "transitive_closure": "struct<src:bigint,dst:bigint>",
+    "condensation_layers": "struct<scc_id:bigint,layer:int>",
+    "ktruss_peel": "struct<a:bigint,b:bigint,support:bigint>",
+    "louvain_communities": "struct<node_id:bigint,community:bigint>",
+    "betweenness_sampled": "struct<node_id:bigint,bc:double>",
+    "betweenness_exact_tree": "struct<node_id:bigint,bc:bigint>",
+    "maximal_independent_set": "struct<node_id:bigint>",
+    "hits_unnormalized": "struct<node_id:bigint,hub:bigint,auth:bigint>",
+    "hits_unnormalized_0": "struct<node_id:bigint,hub:bigint,auth:bigint>",
+    "katz_truncated": "struct<node_id:bigint,katz_num:bigint,katz:double>",
+    "greedy_coloring": "struct<node_id:bigint,color:int>",
+    "label_propagation": "struct<node_id:bigint,label:bigint>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EMPTY_SCHEMAS))
+def test_empty_edges_give_an_empty_result(spark, name):
+    rels = spark.createDataFrame([], "id long, src long, dst long, type_name string")
+    und = spark.createDataFrame([], "a long, b long")
+    directed = spark.createDataFrame([], "src long, dst long")
+    weighted = spark.createDataFrame([], "src long, dst long, weight long")
+    seeds = spark.createDataFrame([], "seed long")
+    build = {
+        "traverse": lambda: T.traverse(None, rels, seeds, 3),
+        "dfs_preorder": lambda: T.dfs_preorder(rels, seeds, 3),
+        "connected_components": lambda: T.connected_components(rels),
+        "pagerank": lambda: T.pagerank(rels, iterations=4),
+        "weighted_shortest_paths": lambda: T.weighted_shortest_paths(weighted, seeds, max_dist=5),
+        "k_core": lambda: T.k_core(directed, 2),
+        "hyperball": lambda: T.hyperball(rels, radius=2),
+        "personalized_pagerank": lambda: T.personalized_pagerank(rels, seeds, iterations=4),
+        "transitive_closure": lambda: C.transitive_closure(directed),
+        "condensation_layers": lambda: C.condensation_layers(
+            directed, C.strongly_connected(directed)
+        ),
+        "ktruss_peel": lambda: C.ktruss_peel(und, k=4),
+        "louvain_communities": lambda: C.louvain_communities(und),
+        "betweenness_sampled": lambda: C.betweenness_sampled(
+            und, spark.createDataFrame([], "source long")
+        ),
+        "betweenness_exact_tree": lambda: C.betweenness_exact_tree(und),
+        "maximal_independent_set": lambda: C.maximal_independent_set(und),
+        "hits_unnormalized": lambda: C.hits_unnormalized(directed),
+        "hits_unnormalized_0": lambda: C.hits_unnormalized(directed, iterations=0),
+        "katz_truncated": lambda: C.katz_truncated(directed),
+        "greedy_coloring": lambda: C.greedy_coloring(und),
+        "label_propagation": lambda: C.label_propagation(und, rounds=2),
+    }[name]
+    df = build()
+    assert df.schema.simpleString() == _EMPTY_SCHEMAS[name]
+    assert df.collect() == []

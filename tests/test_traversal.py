@@ -166,6 +166,20 @@ def test_weighted_shortest_paths_respects_bound(spark):
     assert out == {0: 0, 1: 5}  # node 2 at dist 10 exceeds the bound
 
 
+def test_weighted_shortest_paths_runs_past_thirty_rounds(spark):
+    # a 41-node unit-weight path settles one node per round: 40 rounds,
+    # more than the 30 the loop was once silently capped at
+    edges = spark.createDataFrame(
+        [(v, v + 1, 1) for v in range(40)], "src long, dst long, weight long"
+    )
+    seeds = spark.createDataFrame([(0,)], "seed long")
+    out = {
+        r["node_id"]: r["dist"]
+        for r in traversal.weighted_shortest_paths(edges, seeds, max_dist=100).collect()
+    }
+    assert out == {v: v for v in range(41)}
+
+
 def test_label_propagation_two_triangles(spark):
     # Two disconnected triangles: after 2 deterministic rounds every
     # node carries its triangle's min id (round 1 ties break to the
@@ -212,6 +226,13 @@ def test_k_core_chain_cascades_to_empty(spark):
     # A path graph has no 2-core: peeling the endpoints cascades inward.
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
     assert traversal.k_core(edges, k=2).count() == 0
+
+
+def test_k_core_long_path_peels_to_empty(spark):
+    # a 100-node path peels two end nodes per round: ~50 rounds to reach
+    # the empty 2-core, past any fixed round cap of 30
+    edges = spark.createDataFrame([(v, v + 1) for v in range(99)], "src long, dst long")
+    assert traversal.k_core(edges, k=2).collect() == []
 
 
 def test_k_core_clique_survives_whole(spark):
