@@ -75,7 +75,7 @@ class Engine:
         ``operators.record_checks.validate`` on a ``PropertyGraph``."""
         from .operators.validation import endpoints_not_in_use
 
-        return endpoints_not_in_use(self.nodes(), self.rels())
+        return endpoints_not_in_use(self.rels(), self.nodes())
 
     # -- declared queries ----------------------------------------------
     def query(self, name: str) -> DataFrame:

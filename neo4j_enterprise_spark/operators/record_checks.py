@@ -22,7 +22,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.model import NO_POINTER, PropertyGraph
@@ -255,17 +255,26 @@ def check_primitive_first_property(g: PropertyGraph) -> DataFrame:
     )
 
 
-def check_properties(g: PropertyGraph) -> DataFrame:
-    """PROPERTY store checks: chain symmetry (J6,
-    `PropertyRecordCheck.java:167-230`), key validity (J7, `:131-137`),
-    typed-value shape (our analog of the dynamic-store block checks
-    `:139-158`)."""
-    props = g.properties
-    live = props.filter(F.col("in_use"))
-    out = []
-    # J6 prev/next symmetry — both pointer directions unpivot into ONE
-    # self-join on property id (same single-shuffle shape as
-    # `_rel_pointer_checks`).
+def _entry(cond: Column, rule: str, detail: Column) -> Column:
+    """One (rule, detail) entry of a per-row rule array, NULL when
+    ``cond`` does not hold."""
+    return F.when(cond, F.struct(F.lit(rule).alias("r"), detail.cast("string").alias("d")))
+
+
+def _property_chain_checks(
+    g: PropertyGraph, live: DataFrame, record_type: str, key_rules: list[Column]
+) -> list[DataFrame]:
+    """The two scans every property chain gets, whichever store holds it:
+
+    - J6 prev/next symmetry (`PropertyRecordCheck.java:167-230`) — both
+      pointer directions unpivot into ONE self-join on property id (same
+      single-shuffle shape as `_rel_pointer_checks`);
+    - one broadcast-dictionary left join whose (rule, detail) entries —
+      the caller's ``key_rules``, then the typed-value shape (exactly the
+      column matching vtype set) — explode from a per-row array: they
+      CAN co-occur on one record, and one scan replaces a union branch
+      per rule re-scanning the store.
+    """
     target = live.select(
         F.col("id").alias("t_id"),
         F.col("prev_prop").alias("t_prev"),
@@ -285,25 +294,19 @@ def check_properties(g: PropertyGraph) -> DataFrame:
     rule = F.when(F.col("t_id").isNull(), F.col("rule_niu")).when(
         back != F.col("id"), F.col("rule_back")
     )
-    out.append(
+    symmetry = (
         j.withColumn("__rule", rule)
         .filter(F.col("__rule").isNotNull())
         .select(
-            F.lit("PROPERTY").alias("record_type"),
+            F.lit(record_type).alias("record_type"),
             F.col("__rule").alias("rule"),
             F.col("id").cast("long").alias("entity_id"),
             F.col("ptr").cast("string").alias("detail"),
         )
     )
-    # J7 key checks + typed-value shape: ONE scan (r13, guide §2.4) —
-    # broadcast-dictionary left join replaces the anti-join branch, and
-    # the three (rule, detail) entries (which CAN co-occur on one
-    # record) explode from a per-row array instead of three union
-    # branches re-scanning the store.
     live_keys = g.property_keys.filter(F.col("in_use")).select(
         F.col("id").alias("key_id"), F.lit(True).alias("__key_live")
     )
-    # typed-value shape: exactly the column matching vtype must be set
     bad_value = (
         (F.col("vtype") == "INT")
         & (F.col("value_long").isNull() | F.col("value_string").isNotNull() | F.col("value_array").isNotNull())
@@ -314,41 +317,35 @@ def check_properties(g: PropertyGraph) -> DataFrame:
         (F.col("vtype") == "ARRAY")
         & (F.col("value_array").isNull() | F.col("value_long").isNotNull() | F.col("value_string").isNotNull())
     )
-    entries = F.array(
-        F.when(
-            F.col("key_id") < 0,
-            F.struct(
-                F.lit("invalidPropertyKey").alias("r"),
-                F.col("key_id").cast("string").alias("d"),
-            ),
-        ),
-        F.when(
-            (F.col("key_id") >= 0) & F.col("__key_live").isNull(),
-            F.struct(
-                F.lit("keyNotInUse").alias("r"),
-                F.col("key_id").cast("string").alias("d"),
-            ),
-        ),
-        F.when(
-            bad_value,
-            F.struct(
-                F.lit("invalidPropertyValue").alias("r"),
-                F.col("vtype").cast("string").alias("d"),
-            ),
-        ),
-    )
-    out.append(
+    entries = F.array(*key_rules, _entry(bad_value, "invalidPropertyValue", F.col("vtype")))
+    values = (
         live.join(F.broadcast(live_keys), "key_id", "left")
         .select(F.col("id"), F.explode(entries).alias("e"))
         .filter(F.col("e").isNotNull())
         .select(
-            F.lit("PROPERTY").alias("record_type"),
+            F.lit(record_type).alias("record_type"),
             F.col("e.r").alias("rule"),
             F.col("id").cast("long").alias("entity_id"),
             F.col("e.d").alias("detail"),
         )
     )
-    return reduce(DataFrame.unionByName, out)
+    return [symmetry, values]
+
+
+def check_properties(g: PropertyGraph) -> DataFrame:
+    """PROPERTY store checks: chain symmetry (J6,
+    `PropertyRecordCheck.java:167-230`), key validity (J7, `:131-137`),
+    typed-value shape (our analog of the dynamic-store block checks
+    `:139-158`)."""
+    key_id = F.col("key_id")
+    key_rules = [
+        _entry(key_id < 0, "invalidPropertyKey", key_id),
+        _entry((key_id >= 0) & F.col("__key_live").isNull(), "keyNotInUse", key_id),
+    ]
+    live = g.properties.filter(F.col("in_use"))
+    return reduce(
+        DataFrame.unionByName, _property_chain_checks(g, live, "PROPERTY", key_rules)
+    )
 
 
 def check_ownership(g: PropertyGraph) -> DataFrame:
@@ -429,9 +426,7 @@ def check_graph_props(g: PropertyGraph) -> DataFrame:
     if g.graph_props is None:
         empty = g.properties.limit(0)
         return _violation(empty, "NEO_STORE", "never", "id", F.col("id"))
-    gp = g.graph_props
-    live = gp.filter(F.col("in_use"))
-    out = []
+    live = g.graph_props.filter(F.col("in_use"))
     # chain head cardinality: != 1 head on a non-empty chain is corruption.
     # r13 (guide §2.4): both counts in ONE aggregate over one scan — the
     # r12 shape ran two aggregation jobs and cross-joined the results.
@@ -445,92 +440,22 @@ def check_graph_props(g: PropertyGraph) -> DataFrame:
         F.lit(0).cast("long").alias("entity_id"),
         F.col("n").cast("string").alias("detail"),
     )
-    out.append(bad_heads)
-    # prev/next symmetry — same unpivoted one-join shape as check_properties
-    target = live.select(
-        F.col("id").alias("t_id"),
-        F.col("prev_prop").alias("t_prev"),
-        F.col("next_prop").alias("t_next"),
-    )
-    ptrs = live.select(
-        "id",
-        F.expr(
-            "stack(2, "
-            "'prevNotInUse', 'previousDoesNotReferenceBack', prev_prop, 'next', "
-            "'nextNotInUse', 'nextDoesNotReferenceBack', next_prop, 'prev') "
-            "AS (rule_niu, rule_back, ptr, back_dir)"
-        ),
-    ).filter(F.col("ptr") != NO_POINTER)
-    j = ptrs.join(target, ptrs["ptr"] == target["t_id"], "left")
-    back = F.when(F.col("back_dir") == "next", F.col("t_next")).otherwise(F.col("t_prev"))
-    rule = F.when(F.col("t_id").isNull(), F.col("rule_niu")).when(
-        back != F.col("id"), F.col("rule_back")
-    )
-    out.append(
-        j.withColumn("__rule", rule)
-        .filter(F.col("__rule").isNotNull())
-        .select(
-            F.lit("NEO_STORE").alias("record_type"),
-            F.col("__rule").alias("rule"),
-            F.col("id").cast("long").alias("entity_id"),
-            F.col("ptr").cast("string").alias("detail"),
-        )
-    )
-    # graph ownership + key validity + typed-value shape: ONE scan (r13,
-    # guide §2.4) — same fused broadcast-left-join + exploded-entries
-    # shape as check_properties. NOTE the keyNotInUse guard here is
+    # graph ownership + key validity; the keyNotInUse guard here is
     # __key_live.isNull() with NO key_id >= 0 pre-filter, exactly
     # mirroring the r12 left_anti (a NULL key_id never matches the
     # dictionary and IS reported, unlike the property-store rule).
-    live_keys = g.property_keys.filter(F.col("in_use")).select(
-        F.col("id").alias("key_id"), F.lit(True).alias("__key_live")
-    )
-    # typed-value shape (same invariant as check_properties)
-    bad_value = (
-        (F.col("vtype") == "INT")
-        & (F.col("value_long").isNull() | F.col("value_string").isNotNull() | F.col("value_array").isNotNull())
-    ) | (
-        (F.col("vtype") == "STRING")
-        & (F.col("value_string").isNull() | F.col("value_long").isNotNull() | F.col("value_array").isNotNull())
-    ) | (
-        (F.col("vtype") == "ARRAY")
-        & (F.col("value_array").isNull() | F.col("value_long").isNotNull() | F.col("value_string").isNotNull())
-    )
-    entries = F.array(
-        F.when(
+    key_rules = [
+        _entry(
             (F.col("owner_kind") != "graph") | (F.col("owner_id") != 0),
-            F.struct(
-                F.lit("propertyForOtherOwner").alias("r"),
-                F.col("owner_id").cast("string").alias("d"),
-            ),
+            "propertyForOtherOwner",
+            F.col("owner_id"),
         ),
-        F.when(
-            F.col("__key_live").isNull(),
-            F.struct(
-                F.lit("keyNotInUse").alias("r"),
-                F.col("key_id").cast("string").alias("d"),
-            ),
-        ),
-        F.when(
-            bad_value,
-            F.struct(
-                F.lit("invalidPropertyValue").alias("r"),
-                F.col("vtype").cast("string").alias("d"),
-            ),
-        ),
+        _entry(F.col("__key_live").isNull(), "keyNotInUse", F.col("key_id")),
+    ]
+    return reduce(
+        DataFrame.unionByName,
+        [bad_heads, *_property_chain_checks(g, live, "NEO_STORE", key_rules)],
     )
-    out.append(
-        live.join(F.broadcast(live_keys), "key_id", "left")
-        .select(F.col("id"), F.explode(entries).alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select(
-            F.lit("NEO_STORE").alias("record_type"),
-            F.col("e.r").alias("rule"),
-            F.col("id").cast("long").alias("entity_id"),
-            F.col("e.d").alias("detail"),
-        )
-    )
-    return reduce(DataFrame.unionByName, out)
 
 
 def check_families(g: PropertyGraph) -> dict[str, DataFrame]:
@@ -543,7 +468,7 @@ def check_families(g: PropertyGraph) -> dict[str, DataFrame]:
 
 
 # family name -> builder; the single source of truth for the checker's
-# task list (check_families materializes it per graph; validate(eager)
+# task list (check_families materializes it per graph; validate
 # defers each build into its pool thread so analysis overlaps execution)
 _FAMILY_BUILDERS: dict[str, Callable[[PropertyGraph], DataFrame]] = {
     "nodes": check_nodes,
@@ -578,7 +503,7 @@ def family_element_counts(g: PropertyGraph) -> dict[str, int]:
     }
 
 
-def validate(g: PropertyGraph, eager: bool = True) -> DataFrame:
+def validate(g: PropertyGraph) -> DataFrame:
     """FullCheck (`FullCheck.java:71-123`): the whole checker.
 
     The reference runs 9 sequential store scans with MULTI_THREADED /
@@ -586,35 +511,23 @@ def validate(g: PropertyGraph, eager: bool = True) -> DataFrame:
     family is one Catalyst plan and AQE sizes the shuffles — both knobs
     dissolve.
 
-    ``eager`` (default) materializes each family's violations via
-    ``localCheckpoint`` before unioning. This bounds plan size: the
-    all-in-one union (~35 branches sharing deep window subtrees) chokes
-    the optimizer at scale, while the per-family plans each run in
-    seconds — the same bounded-lineage principle the iterative operators
-    follow. Each family CONSTRUCTS AND materializes inside its own pool
-    thread (r13, guide §2.6 applied to the driver side too): building a
-    family frame is ~0.15 s of Catalyst analysis / py4j round-trips that
-    release the GIL, so serial construction added ~1.1 s of driver time
-    in FRONT of the concurrent jobs — decomposed construct/pool/count =
-    1.15/1.30/0.16 s, and moving construction into the threads took the
-    warm 100 k suite 2.37 → 1.64 s (interleaved medians,
-    OPTIMIZATION_r13.md §11). This is the reference's MULTI_THREADED
-    task-execution axis (`TaskExecutionOrder.java:29-110`, pool =
-    #cores) covering analysis as well as execution. ``eager=False``
-    keeps the fully-lazy single plan (fine for small fixtures, composes
-    with further transformations).
+    Each family's violations are materialized via ``localCheckpoint``
+    before the union. This bounds plan size: the all-in-one union (~35
+    branches sharing deep window subtrees) chokes the optimizer at
+    scale, while the per-family plans each run in seconds — the same
+    bounded-lineage principle the iterative operators follow. Each
+    family is built AND materialized inside its own pool thread: building
+    a family frame is ~0.15 s of Catalyst analysis / py4j round-trips
+    that release the GIL, so building them serially would put ~1 s of
+    driver time in front of the concurrent jobs. This is the reference's
+    MULTI_THREADED task-execution axis (`TaskExecutionOrder.java:29-110`,
+    pool = #cores) covering analysis as well as execution.
     """
-    if eager:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        builders = list(_FAMILY_BUILDERS.values())
-        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-            families = list(
-                pool.map(
-                    lambda build: build(g).localCheckpoint(eager=True),
-                    builders,
-                )
-            )
-    else:
-        families = list(check_families(g).values())
+    builders = list(_FAMILY_BUILDERS.values())
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        families = list(
+            pool.map(lambda build: build(g).localCheckpoint(eager=True), builders)
+        )
     return reduce(DataFrame.unionByName, families)

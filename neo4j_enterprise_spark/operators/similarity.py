@@ -1,17 +1,31 @@
 """Similarity search over embedding columns (array<float>).
 
-Spark-native extension for training-data pipelines:
+Every ANN operator here is one filter-then-verify pipeline (REPOSE's
+shape): **route** a seed to part of the corpus, generate **candidates**
+there, then **re-rank** the candidates exactly. Only the middle stage
+differs between operators; each stage is written once:
 
-- ``cosine_topk_bruteforce`` — exact top-k per query seed. The baseline;
-  correct at any scale where |seeds| × |corpus| pairs are joinable.
-- ``lsh_ann_topk`` — random-hyperplane LSH bucketing; candidates only
-  from matching buckets (multi-probe over b bands). The 100 TB path:
-  the bucket join replaces the cross product.
+- route: ``_probe`` picks each seed's ``n_probe`` nearest IVF cells
+  (``ivf_ann_topk``, ``ivf_pq_ann_topk``, ``ivf_pq_fixed_ann_topk``);
+  ``_assign_to_centroids`` puts each corpus vector in its nearest cell;
+- candidates: LSH buckets (``lsh_buckets``), IVF cell members, a PQ
+  asymmetric-distance scan over codes — numpy over the Lloyd codebook
+  (``_codebook_matrices``) or relational over the fixed integer
+  codebook (``_pq_fixed_codes`` + ``_adc_candidates``);
+- re-rank: ``_rerank`` scores each (seed, neighbor) candidate by exact
+  quantized cosine (``_cosine``) and keeps the top k by (score desc,
+  neighbor asc) (``_topk``). ``cosine_topk_bruteforce`` is the baseline
+  with every corpus vector a candidate; the near-dup and SemDeDup pair
+  operators score their a < b pairs with the same ``_cosine``
+  (``_pair_scores``).
 
 Determinism contract (for oracle comparison): embeddings are quantized
 to BIGINT (round(x·1000)) so every dot product / norm is an exact
-integer — float-summation order stops mattering, and Spark and DuckDB
-produce bit-identical DOUBLE cosines.
+integer — float-summation order stops mattering — and the score is one
+BIGINT→DOUBLE cast of the dot, one sqrt of the BIGINT norm product, one
+divide, so Spark and DuckDB produce bit-identical DOUBLE cosines.
+Checkpoints (LSH bucket tables, Lloyd rounds) go through
+``superstep.cut`` / ``superstep.supersteps``.
 """
 
 from __future__ import annotations
@@ -24,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import QUANT, dot as _dot, dot_double as _dot_d, quantize
+from .superstep import cut, supersteps
 
 # Quadratic-hot-spot guard for the hyperplane-LSH family (mirrors
 # dedup.MAX_BUCKET_DEFAULT for the minhash/simhash family): a (band,
@@ -145,6 +160,93 @@ def _np_quantize(mat: np.ndarray, scale: int = 1000) -> np.ndarray:
     ).astype(np.int64)
 
 
+def _quantized(
+    df: DataFrame, id_as: str = "vec_id", v: str = "qv", n: str = "qn"
+) -> DataFrame:
+    """(id_as, v, n): each row's ``vec_id``, its quantized embedding and
+    that vector's exact BIGINT squared norm."""
+    vid = F.col("vec_id") if id_as == "vec_id" else F.col("vec_id").alias(id_as)
+    return df.select(vid, quantize(F.col("embedding")).alias(v)).withColumn(
+        n, _dot(F.col(v), F.col(v))
+    )
+
+
+def _cosine(u: str, v: str, nu: str, nv: str) -> Column:
+    """The quantized cosine of vectors ``u``, ``v`` with squared norms
+    ``nu``, ``nv``: the exact BIGINT dot cast to DOUBLE once, over one
+    sqrt of the BIGINT norm product — the expression the oracles replay."""
+    return _dot(F.col(u), F.col(v)).cast("double") / F.sqrt(
+        (F.col(nu) * F.col(nv)).cast("double")
+    )
+
+
+def _cell_cosine() -> Column:
+    """Cosine of a vector (qv, qn) to a centroid (ccv, ccn). Centroids
+    may be Lloyd means (array<double>), so the dot has a DOUBLE
+    accumulator and each norm is cast on its own."""
+    return _dot_d(F.col("qv"), F.col("ccv")) / F.sqrt(
+        F.col("qn").cast("double") * F.col("ccn").cast("double")
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    key: str = "seed",
+    item: str = "neighbor",
+    score: str = "score",
+) -> DataFrame:
+    """(key, item, score, rk): the ``k`` best items per key by (score
+    desc, item asc) — a total order, so ties never depend on partitioning."""
+    w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(item))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(key, item, score, "rk")
+    )
+
+
+def _rerank(
+    cand: DataFrame, seeds: DataFrame, embeddings: DataFrame, k: int
+) -> DataFrame:
+    """The exact stage of every ANN pipeline: score each (seed,
+    neighbor) candidate by quantized cosine and keep each seed's top k.
+
+    Quantization stays on the per-vector sides, before the candidate
+    join: a vector takes part in many candidate pairs, so per-vector
+    quantize + norm is the cheaper side (per-candidate evaluation
+    regressed the LSH path, measured r12). Seeds are planner-sized
+    (LIMIT-bounded in every caller) and broadcast."""
+    q = _quantized(seeds, "seed")
+    c = _quantized(embeddings, "neighbor", "cv", "cn")
+    scored = (
+        cand.join(F.broadcast(q), "seed")
+        .join(c, "neighbor")
+        .select("seed", "neighbor", _cosine("qv", "cv", "qn", "cn").alias("score"))
+    )
+    return _topk(scored, k)
+
+
+def _pair_scores(pairs: DataFrame, threshold: float, *keys: str) -> DataFrame:
+    """(keys…, a, b, score) for joined pairs carrying (a, qa, na) and
+    (b, qb, nb): the quantized cosine of each pair, kept when it
+    reaches ``threshold``."""
+    return pairs.select(
+        *keys, "a", "b", _cosine("qa", "qb", "na", "nb").alias("score")
+    ).filter(F.col("score") >= threshold)
+
+
+def _probe(seeds: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
+    """(seed, cell_id): each seed's ``n_probe`` nearest cells by cosine,
+    ties to the lower cell id. Seeds and centroids are both
+    planner-sized, so the cross join is broadcast."""
+    scores = F.broadcast(_quantized(seeds, "seed")).join(F.broadcast(centroids))
+    scores = scores.select("seed", "cell_id", _cell_cosine().alias("cscore"))
+    return _topk(scores, n_probe, item="cell_id", score="cscore").select(
+        "seed", "cell_id"
+    )
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame, seeds: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -237,12 +339,7 @@ def cosine_topk_bruteforce(
     scored = embeddings.select(
         "vec_id", F.col("embedding").alias("emb")
     ).mapInPandas(score_batches, "seed long, neighbor long, score double")
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _topk(scored, k)
 
 
 def ivf_assign(
@@ -281,11 +378,7 @@ def ivf_assign(
         .select("cell_id", "ccv")
         .withColumn("ccn", _dot(F.col("ccv"), F.col("ccv")))
     )
-    vecs = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    assignments = _assign_to_centroids(vecs, centroids)
-    return centroids, assignments
+    return centroids, _assign_to_centroids(_quantized(embeddings), centroids)
 
 
 def _assign_to_centroids(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -299,18 +392,10 @@ def _assign_to_centroids(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     vecs = vecs.filter(F.col("qn") > 0)
     centroids = centroids.filter(F.col("ccn") > 0)
     scored = vecs.join(F.broadcast(centroids)).select(
-        "vec_id",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
+        "vec_id", "cell_id", _cell_cosine().alias("cscore")
     )
-    w_best = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cell_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w_best))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "cell_id")
+    return _topk(scored, 1, key="vec_id", item="cell_id", score="cscore").select(
+        "vec_id", "cell_id"
     )
 
 
@@ -333,19 +418,13 @@ def ivf_train_kmeans(
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
     centroids, _ = ivf_assign(embeddings, n_cells, dims)
-    vecs = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv"))).persist()
-    centroids = centroids.select(
-        "cell_id", F.col("ccv").cast("array<double>").alias("ccv"), "ccn"
-    )
-    for _ in range(iters):
-        assignments = _assign_to_centroids(vecs, centroids)
-        member = assignments.join(vecs, "vec_id").select(
-            "cell_id", F.posexplode("qv").alias("d", "x")
-        )
+    vecs = _quantized(embeddings).persist()
+
+    def lloyd(centroids: DataFrame, _: int) -> DataFrame:
+        member = _assign_to_centroids(vecs, centroids).join(vecs, "vec_id")
         means = (
-            member.groupBy("cell_id", "d")
+            member.select("cell_id", F.posexplode("qv").alias("d", "x"))
+            .groupBy("cell_id", "d")
             .agg(F.avg("x").alias("m"))
             .groupBy("cell_id")
             .agg(
@@ -355,15 +434,19 @@ def ivf_train_kmeans(
                 ).alias("new_ccv")
             )
         )
-        centroids = (
+        return (
             centroids.join(means, "cell_id", "left")
             .select(
                 "cell_id",
                 F.coalesce(F.col("new_ccv"), F.col("ccv")).alias("ccv"),
             )
             .withColumn("ccn", _dot_d(F.col("ccv"), F.col("ccv")))
-            .localCheckpoint(eager=True)
         )
+
+    centroids = centroids.select(
+        "cell_id", F.col("ccv").cast("array<double>").alias("ccv"), "ccn"
+    )
+    centroids = supersteps(centroids, lloyd, rounds=iters)
     vecs.unpersist()
     return centroids
 
@@ -407,63 +490,20 @@ def ivf_ann_topk(
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
-    if centroids is not None:
-        vecs = embeddings.select(
-            "vec_id", quantize(F.col("embedding")).alias("qv")
-        ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-        assignments = _assign_to_centroids(vecs, centroids)
-    elif kmeans_iters > 0:
+    if centroids is None and kmeans_iters > 0:
         centroids = ivf_train_kmeans(embeddings, n_cells, kmeans_iters, dims)
-        vecs = embeddings.select(
-            "vec_id", quantize(F.col("embedding")).alias("qv")
-        ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-        assignments = _assign_to_centroids(vecs, centroids)
-    else:
+    if centroids is None:
         centroids, assignments = ivf_assign(embeddings, n_cells, dims)
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    probe_scores = F.broadcast(q).join(F.broadcast(centroids)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
-    )
-    w_probe = Window.partitionBy("seed").orderBy(F.desc("cscore"), F.asc("cell_id"))
-    probes = (
-        probe_scores.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
-        .select("seed", "cell_id")
-    )
+    else:
+        assignments = _assign_to_centroids(_quantized(embeddings), centroids)
     cand = (
-        probes.join(assignments, "cell_id")
+        _probe(seeds, centroids, n_probe)
+        .join(assignments, "cell_id")
         .filter(F.col("vec_id") != F.col("seed"))
         .select("seed", F.col("vec_id").alias("neighbor"))
         .distinct()
     )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def _plane_signs(plane: int, dims: int, seed: int) -> list[int]:
@@ -569,18 +609,19 @@ def lsh_ann_topk(
 
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
-    # localCheckpoint (r12, guide §2.4): ``buckets`` feeds BOTH sides of
-    # the candidate join; left lazy, the whole signature subtree
-    # (corpus scan → ArrowEvalPython matmul → posexplode → window cap)
-    # was planned twice (two copies of the subtree in the old plan) —
-    # two full Arrow passes over the corpus per query. One
-    # eager materialization runs the signature exactly once; the stored
-    # rows are 16 B × bands per vector, far smaller than the embeddings
-    # they index, so this is the cheaper side at any scale.
-    buckets = drop_oversized_buckets(
-        lsh_buckets(embeddings, planes_per_band, bands, dims, seed),
-        max_bucket_size,
-    ).localCheckpoint(eager=True)
+    # cut (r12): ``buckets`` feeds BOTH sides of the candidate join;
+    # left lazy, the whole signature subtree (corpus scan →
+    # ArrowEvalPython matmul → posexplode → window cap) was planned
+    # twice — two full Arrow passes over the corpus per query. One eager
+    # materialization runs the signature exactly once; the stored rows
+    # are 16 B × bands per vector, far smaller than the embeddings they
+    # index, so this is the cheaper side at any scale.
+    buckets, _ = cut(
+        drop_oversized_buckets(
+            lsh_buckets(embeddings, planes_per_band, bands, dims, seed),
+            max_bucket_size,
+        )
+    )
     # seed ids are planner-sized by contract (same as the codebook
     # collects) — broadcast them instead of shuffling the bucket table
     seed_buckets = buckets.join(
@@ -592,34 +633,7 @@ def lsh_ann_topk(
         .select("seed", F.col("vec_id").alias("neighbor"))
         .distinct()
     )
-    # Quantization stays on the per-vector corpus side, before the
-    # candidate join (measured r12: per-candidate evaluation regressed —
-    # a vector participates in many candidate pairs, so per-vector
-    # quantize+norm is the cheaper side; see embedding_near_dup_lsh).
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def embedding_near_dup(
@@ -636,24 +650,9 @@ def embedding_near_dup(
     engine-exact.
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
-    q = embeddings.select(
-        F.col("vec_id").alias("a"), quantize(F.col("embedding")).alias("qa")
-    ).withColumn("na", _dot(F.col("qa"), F.col("qa")))
-    c = embeddings.select(
-        F.col("vec_id").alias("b"), quantize(F.col("embedding")).alias("qb")
-    ).withColumn("nb", _dot(F.col("qb"), F.col("qb")))
-    return (
-        q.join(c, F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            (
-                _dot(F.col("qa"), F.col("qb")).cast("double")
-                / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-            ).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
+    q = _quantized(embeddings, "a", "qa", "na")
+    c = _quantized(embeddings, "b", "qb", "nb")
+    return _pair_scores(q.join(c, F.col("a") < F.col("b")), threshold)
 
 
 def embedding_near_dup_lsh(
@@ -684,13 +683,15 @@ def embedding_near_dup_lsh(
     from .dedup import drop_oversized_buckets
 
     embeddings = drop_unsearchable(embeddings, dims=dims)
-    # One signature pass, materialized (r12) — same receipt as
-    # ``lsh_ann_topk``: the lazy ``buckets`` fed both sides of the pair
-    # self-join, planning the corpus ArrowEvalPython subtree twice.
-    buckets = drop_oversized_buckets(
-        lsh_buckets(embeddings, planes_per_band, bands, dims, seed),
-        max_bucket_size,
-    ).localCheckpoint(eager=True)
+    # One signature pass, cut (r12) — same receipt as ``lsh_ann_topk``:
+    # the lazy ``buckets`` fed both sides of the pair self-join,
+    # planning the corpus ArrowEvalPython subtree twice.
+    buckets, _ = cut(
+        drop_oversized_buckets(
+            lsh_buckets(embeddings, planes_per_band, bands, dims, seed),
+            max_bucket_size,
+        )
+    )
     cand = (
         buckets.join(
             buckets.withColumnRenamed("vec_id", "other"), ["band", "bucket"]
@@ -705,25 +706,9 @@ def embedding_near_dup_lsh(
     # ~100:1 here — per-pair HOF evaluation regressed this query 6.9 s
     # → 59.9 s at sf0.1 before being reverted). Per-vector quantize+norm
     # amortizes across every pair the vector participates in.
-    q = embeddings.select(
-        F.col("vec_id").alias("a"), quantize(F.col("embedding")).alias("qa")
-    ).withColumn("na", _dot(F.col("qa"), F.col("qa")))
-    c = embeddings.select(
-        F.col("vec_id").alias("b"), quantize(F.col("embedding")).alias("qb")
-    ).withColumn("nb", _dot(F.col("qb"), F.col("qb")))
-    return (
-        cand.join(q, "a")
-        .join(c, "b")
-        .select(
-            "a",
-            "b",
-            (
-                _dot(F.col("qa"), F.col("qb")).cast("double")
-                / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-            ).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
+    q = _quantized(embeddings, "a", "qa", "na")
+    c = _quantized(embeddings, "b", "qb", "nb")
+    return _pair_scores(cand.join(q, "a").join(c, "b"), threshold)
 
 
 # --- Product quantization (IVF-PQ's compression half) -------------------
@@ -778,10 +763,11 @@ def pq_train(
         sub.join(F.broadcast(sampled), "vec_id")
         .select("sub_id", "code", F.col("sv").cast("array<double>").alias("cv"))
     )
-    for _ in range(iters):
-        assigned = _pq_assign(sub, codebook)
+
+    def lloyd(codebook: DataFrame, _: int) -> DataFrame:
         means = (
-            assigned.join(sub, ["vec_id", "sub_id"])
+            _pq_assign(sub, codebook)
+            .join(sub, ["vec_id", "sub_id"])
             .select("sub_id", "code", F.posexplode("sv").alias("d", "x"))
             .groupBy("sub_id", "code", "d")
             .agg(F.avg("x").alias("mx"))
@@ -793,15 +779,11 @@ def pq_train(
                 ).alias("new_cv")
             )
         )
-        codebook = (
-            codebook.join(means, ["sub_id", "code"], "left")
-            .select(
-                "sub_id",
-                "code",
-                F.coalesce(F.col("new_cv"), F.col("cv")).alias("cv"),
-            )
-            .localCheckpoint(eager=True)
+        return codebook.join(means, ["sub_id", "code"], "left").select(
+            "sub_id", "code", F.coalesce(F.col("new_cv"), F.col("cv")).alias("cv")
         )
+
+    codebook = supersteps(codebook, lloyd, rounds=iters)
     return codebook.withColumn("cnorm", _dot_d(F.col("cv"), F.col("cv")))
 
 
@@ -846,6 +828,33 @@ def pq_encode(
     )
 
 
+def _codebook_matrices(
+    codebook: DataFrame, m: int, codes_k: int, d: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The collected codebook (m·codes_k rows — planner-sized) as numpy
+    matrices: CB[j, c] = entry c of subspace j, CN[j, c] = its squared
+    norm."""
+    CB = np.zeros((m, codes_k, d))
+    CN = np.zeros((m, codes_k))
+    for r in codebook.collect():
+        CB[r["sub_id"], r["code"]] = r["cv"]
+        CN[r["sub_id"], r["code"]] = r["cnorm"]
+    return CB, CN
+
+
+def _adc_top(
+    lut: np.ndarray, qn: float, recon: np.ndarray, codes_arr: np.ndarray, n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Asymmetric-distance scan of one seed over a batch of PQ codes:
+    approximate cosine = Σ_j lut[j, code_j] / sqrt(qn · reconstructed
+    norm); returns the indices and scores of the best n + 1 rows (one
+    spare for the seed itself)."""
+    approx = lut[np.arange(lut.shape[0])[None, :], codes_arr].sum(axis=1)
+    score = approx / np.sqrt(qn * np.maximum(recon, 1e-9))
+    top = np.argsort(-score)[: n + 1]
+    return top, score[top]
+
+
 def pq_ann_topk(
     embeddings: DataFrame,
     seeds: DataFrame,
@@ -870,20 +879,12 @@ def pq_ann_topk(
     step on m·codes_k + |seeds| rows (same convention as
     ``sink.write_dataset``), never data-sized.
     """
-    import numpy as np
-
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
     codebook = pq_train(embeddings, m=m, codes_k=codes_k, dims=dims, iters=iters)
     codes = pq_encode(embeddings, codebook, m=m, dims=dims)
-
-    cb_rows = codebook.collect()  # m*codes_k rows — planner-sized
     d = dims // m
-    CB = np.zeros((m, codes_k, d))
-    CN = np.zeros((m, codes_k))
-    for r in cb_rows:
-        CB[r["sub_id"], r["code"]] = r["cv"]
-        CN[r["sub_id"], r["code"]] = r["cnorm"]
+    CB, CN = _codebook_matrices(codebook, m, codes_k, d)
     seed_rows = (
         seeds.select("vec_id", quantize(F.col("embedding")).alias("qv")).collect()
     )
@@ -900,15 +901,13 @@ def pq_ann_topk(
             recon = CN[np.arange(m)[None, :], codes_arr].sum(axis=1)  # (B,)
             out = []
             for si in range(len(S)):
-                approx = LUT[si][np.arange(m)[None, :], codes_arr].sum(axis=1)
-                score = approx / np.sqrt(seed_norm[si] * np.maximum(recon, 1e-9))
-                top = np.argsort(-score)[: n_keep + 1]
+                top, score = _adc_top(LUT[si], seed_norm[si], recon, codes_arr, n_keep)
                 out.append(
                     pd.DataFrame(
                         {
                             "seed": seed_ids[si],
                             "neighbor": pdf["vec_id"].to_numpy()[top],
-                            "approx": score[top],
+                            "approx": score,
                         }
                     )
                 )
@@ -918,35 +917,9 @@ def pq_ann_topk(
         codes.mapInPandas(scan, "seed long, neighbor long, approx double")
         .filter(F.col("seed") != F.col("neighbor"))
     )
-    wa = Window.partitionBy("seed").orderBy(F.desc("approx"), F.asc("neighbor"))
-    cand = cand.withColumn("rk", F.row_number().over(wa)).filter(
-        F.col("rk") <= n_keep
-    ).select("seed", "neighbor")
+    cand = _topk(cand, n_keep, score="approx").select("seed", "neighbor")
     # exact re-rank of candidates only (asymmetric refinement)
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def ivf_pq_ann_topk(
@@ -974,8 +947,6 @@ def ivf_pq_ann_topk(
     makes billion-scale ANN feasible (residual encoding is the standard
     production refinement on top of this flow).
     """
-    import numpy as np
-
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
     centroids, assignments = ivf_assign(embeddings, n_cells, dims)
@@ -983,51 +954,22 @@ def ivf_pq_ann_topk(
     codes = pq_encode(embeddings, codebook, m=m, dims=dims).join(
         assignments, "vec_id"
     )
-
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    probe_scores = F.broadcast(q).join(F.broadcast(centroids)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
-    )
-    w_probe = Window.partitionBy("seed").orderBy(F.desc("cscore"), F.asc("cell_id"))
-    probes = (
-        probe_scores.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
-        .select("seed", "cell_id")
-    )
-
-    cb_rows = codebook.collect()  # m*codes_k rows — planner-sized
+    probes = _probe(seeds, centroids, n_probe)
     d = dims // m
-    CB = np.zeros((m, codes_k, d))
-    CN = np.zeros((m, codes_k))
-    for r in cb_rows:
-        CB[r["sub_id"], r["code"]] = r["cv"]
-        CN[r["sub_id"], r["code"]] = r["cnorm"]
-    seed_rows = q.collect()
+    CB, CN = _codebook_matrices(codebook, m, codes_k, d)
     LUTS = {}
     NORMS = {}
-    for r in seed_rows:
+    for r in _quantized(seeds, "seed").collect():
         sv = np.array(r["qv"], dtype=np.float64)
         LUTS[r["seed"]] = np.einsum("jd,jcd->jc", sv.reshape(m, d), CB)
         NORMS[r["seed"]] = float(r["qn"])
     n_keep = refine * k
 
-    import pandas as pd
-
     def scan(key, pdf):
         seed = key[0]
-        LUT, qn = LUTS[seed], NORMS[seed]
         codes_arr = np.stack(pdf["codes"].to_numpy())
         recon = CN[np.arange(m)[None, :], codes_arr].sum(axis=1)
-        approx = LUT[np.arange(m)[None, :], codes_arr].sum(axis=1)
-        score = approx / np.sqrt(qn * np.maximum(recon, 1e-9))
-        top = np.argsort(-score)[: n_keep + 1]
+        top, _ = _adc_top(LUTS[seed], NORMS[seed], recon, codes_arr, n_keep)
         return pd.DataFrame(
             {"seed": seed, "neighbor": pdf["vec_id"].to_numpy()[top]}
         )
@@ -1038,27 +980,7 @@ def ivf_pq_ann_topk(
         .applyInPandas(scan, "seed long, neighbor long")
         .filter(F.col("seed") != F.col("neighbor"))
     )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def label_centroids(embeddings: DataFrame, label_col: str = "label") -> DataFrame:
@@ -1232,12 +1154,7 @@ def hard_negatives(
     scored = embeddings.select(
         "vec_id", quantize(F.col("embedding")).alias("qv"), "label"
     ).mapInPandas(score_batches, "seed long, negative long, score double")
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("negative"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "negative", "score", "rk")
-    )
+    return _topk(scored, k, item="negative")
 
 
 def _semdedup_scored_pairs(
@@ -1249,12 +1166,11 @@ def _semdedup_scored_pairs(
     Returns (cell_id, a, b, score). Candidate pairs are bounded per
     cell — the IVF bucketed-candidates contract; no all-pairs."""
     embeddings = drop_unsearchable(embeddings, dims=dims)
-    cent = ivf_fixed_centroids(embeddings, n_cells, dims)
-    vecs = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    assign = _assign_to_centroids(vecs, cent)
-    m = vecs.join(assign, "vec_id")
+    vecs = _quantized(embeddings)
+    m = vecs.join(
+        _assign_to_centroids(vecs, ivf_fixed_centroids(embeddings, n_cells, dims)),
+        "vec_id",
+    )
     a = m.select(
         "cell_id",
         F.col("vec_id").alias("a"),
@@ -1267,19 +1183,10 @@ def _semdedup_scored_pairs(
         F.col("qv").alias("qb"),
         F.col("qn").alias("nb"),
     )
-    return (
-        a.join(b, (F.col("cell_id") == F.col("cell_b")) & (F.col("a") < F.col("b")))
-        .select(
-            "cell_id",
-            "a",
-            "b",
-            (
-                _dot(F.col("qa"), F.col("qb")).cast("double")
-                / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-            ).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
+    pairs = a.join(
+        b, (F.col("cell_id") == F.col("cell_b")) & (F.col("a") < F.col("b"))
     )
+    return _pair_scores(pairs, threshold, "cell_id")
 
 
 def semdedup(
@@ -1405,6 +1312,63 @@ def semdedup_greedy(
     )
 
 
+def _pq_fixed_codes(
+    embeddings: DataFrame, seeds: DataFrame, m: int, codes_k: int, dims: int
+) -> tuple[DataFrame, DataFrame]:
+    """The fixed-codebook PQ step, all exact BIGINT arithmetic: the
+    codebook is the subvectors of the first ``codes_k`` vectors by id;
+    integer L2 is ldist = <v,v> − 2<v,c> + <c,c>.
+
+    Returns (codes(vec_id, sub_id, code) — each corpus subvector's
+    nearest entry, ties to the lower code; lut(seed, sub_id, code,
+    ldist) — every seed subvector's distance to every entry,
+    |seeds|·m·codes_k rows, planner-sized)."""
+    cb = _subvectors(
+        embeddings.filter(F.col("vec_id") < codes_k), m, dims
+    ).select(
+        "sub_id",
+        F.col("vec_id").cast("int").alias("code"),
+        F.col("sv").alias("cv"),
+    )
+    ldist = (
+        _dot(F.col("sv"), F.col("sv"))
+        - 2 * _dot(F.col("sv"), F.col("cv"))
+        + _dot(F.col("cv"), F.col("cv"))
+    )
+    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
+    codes = (
+        _subvectors(embeddings, m, dims)
+        .join(F.broadcast(cb), "sub_id")
+        .withColumn("ldist", ldist)
+        .withColumn("rk", F.row_number().over(w_enc))
+        .filter(F.col("rk") == 1)
+        .select("vec_id", "sub_id", "code")
+    )
+    lut = (
+        _subvectors(seeds, m, dims)
+        .join(F.broadcast(cb), "sub_id")
+        .select(F.col("vec_id").alias("seed"), "sub_id", "code", ldist.alias("ldist"))
+    )
+    return codes, lut
+
+
+def _adc_candidates(scan: DataFrame, n_keep: int) -> DataFrame:
+    """(seed, neighbor): from (seed, vec_id, ldist) rows of a code ⋈ LUT
+    join, ADC(seed, vec) = Σ_sub ldist, and each seed's ``n_keep``
+    nearest vectors by (adc, id)."""
+    adc = (
+        scan.filter(F.col("vec_id") != F.col("seed"))
+        .groupBy("seed", F.col("vec_id").alias("neighbor"))
+        .agg(F.sum("ldist").alias("adc"))
+    )
+    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
+    return (
+        adc.withColumn("crk", F.row_number().over(w_cand))
+        .filter(F.col("crk") <= n_keep)
+        .select("seed", "neighbor")
+    )
+
+
 def pq_fixed_ann_topk(
     embeddings: DataFrame,
     seeds: DataFrame,
@@ -1440,77 +1404,9 @@ def pq_fixed_ann_topk(
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
-    cb = _subvectors(
-        embeddings.filter(F.col("vec_id") < codes_k), m, dims
-    ).select(
-        "sub_id",
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("sv").alias("cv"),
-    )
-
-    def _ldist():
-        return (
-            _dot(F.col("sv"), F.col("sv"))
-            - 2 * _dot(F.col("sv"), F.col("cv"))
-            + _dot(F.col("cv"), F.col("cv"))
-        )
-
-    sub = _subvectors(embeddings, m, dims)
-    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
-    enc = (
-        sub.join(F.broadcast(cb), "sub_id")
-        .withColumn("ldist", _ldist())
-        .withColumn("rk", F.row_number().over(w_enc))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub_id", "code")
-    )
-    lut = (
-        _subvectors(seeds, m, dims)
-        .join(F.broadcast(cb), "sub_id")
-        .select(
-            F.col("vec_id").alias("seed"),
-            "sub_id",
-            "code",
-            _ldist().alias("ldist"),
-        )
-    )
-    adc = (
-        enc.join(F.broadcast(lut), ["sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("seed"))
-        .groupBy("seed", F.col("vec_id").alias("neighbor"))
-        .agg(F.sum("ldist").alias("adc"))
-    )
-    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(w_cand))
-        .filter(F.col("crk") <= refine * k)
-        .select("seed", "neighbor")
-    )
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"),
-        quantize(F.col("embedding")).alias("cvv"),
-    ).withColumn("cn", _dot(F.col("cvv"), F.col("cvv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cvv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    enc, lut = _pq_fixed_codes(embeddings, seeds, m, codes_k, dims)
+    scan = enc.join(F.broadcast(lut), ["sub_id", "code"])
+    return _rerank(_adc_candidates(scan, refine * k), seeds, embeddings, k)
 
 
 def ivf_pq_fixed_ann_topk(
@@ -1546,100 +1442,15 @@ def ivf_pq_fixed_ann_topk(
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
     cent = ivf_fixed_centroids(embeddings, n_cells, dims)
-    vecs = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    assign = _assign_to_centroids(vecs, cent)
-    svecs = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    pscore = svecs.join(F.broadcast(cent)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
-    )
-    w_probe = Window.partitionBy("seed").orderBy(
-        F.desc("cscore"), F.asc("cell_id")
-    )
-    probes = (
-        pscore.withColumn("prk", F.row_number().over(w_probe))
-        .filter(F.col("prk") <= n_probe)
-        .select("seed", "cell_id")
-    )
-
-    cb = _subvectors(
-        embeddings.filter(F.col("vec_id") < codes_k), m, dims
-    ).select(
-        "sub_id",
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("sv").alias("cv"),
-    )
-
-    def _ldist():
-        return (
-            _dot(F.col("sv"), F.col("sv"))
-            - 2 * _dot(F.col("sv"), F.col("cv"))
-            + _dot(F.col("cv"), F.col("cv"))
-        )
-
-    sub = _subvectors(embeddings, m, dims)
-    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
-    enc = (
-        sub.join(F.broadcast(cb), "sub_id")
-        .withColumn("ldist", _ldist())
-        .withColumn("rk", F.row_number().over(w_enc))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub_id", "code")
-    )
-    lut = (
-        _subvectors(seeds, m, dims)
-        .join(F.broadcast(cb), "sub_id")
-        .select(
-            F.col("vec_id").alias("seed"),
-            "sub_id",
-            "code",
-            _ldist().alias("ldist"),
-        )
-    )
-    adc = (
+    assign = _assign_to_centroids(_quantized(embeddings), cent)
+    probes = _probe(seeds, cent, n_probe)
+    enc, lut = _pq_fixed_codes(embeddings, seeds, m, codes_k, dims)
+    scan = (
         enc.join(assign, "vec_id")
         .join(F.broadcast(probes), "cell_id")
         .join(F.broadcast(lut), ["seed", "sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("seed"))
-        .groupBy("seed", F.col("vec_id").alias("neighbor"))
-        .agg(F.sum("ldist").alias("adc"))
     )
-    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(w_cand))
-        .filter(F.col("crk") <= refine * k)
-        .select("seed", "neighbor")
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"),
-        quantize(F.col("embedding")).alias("cvv"),
-    ).withColumn("cn", _dot(F.col("cvv"), F.col("cvv")))
-    exact = (
-        cand.join(F.broadcast(svecs), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cvv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(_adc_candidates(scan, refine * k), seeds, embeddings, k)
 
 
 def norm_outliers(embeddings: DataFrame, dims: int = 64) -> DataFrame:
@@ -1693,7 +1504,7 @@ def norm_outliers(embeddings: DataFrame, dims: int = 64) -> DataFrame:
     # projection — without it the corpus scan + quantize batch runs
     # twice (the dominant cost; r8 ADVICE). The cached frame is two
     # int64 columns (16 B/row), MEMORY_AND_DISK spills if it must,
-    # and lineage survives executor loss (unlike localCheckpoint).
+    # and lineage survives executor loss (unlike a local checkpoint).
     n = embeddings.select(
         "vec_id", F.col("embedding").alias("emb")
     ).mapInPandas(_norm_batches, "vec_id long, norm2 long").persist()

@@ -571,8 +571,8 @@ def hyperball(
     node, versus |V| BFS runs. Exact twin for error-bound tests:
     ``bfs_reachable`` counts.
 
-    Returns (node_id, ball_size DOUBLE — the HLL estimate, deterministic
-    for fixed input + lg_k).
+    Returns (node_id, ball_size BIGINT — the rounded HLL estimate,
+    deterministic for fixed input + lg_k).
     """
     edges = _edges(rels, direction, None)
 
@@ -612,9 +612,13 @@ def random_walks(
 
     Per step: one frontier equi-join + one per-walk argmin window, both
     keyed on the walk's current node / walk id — the same co-partition
-    contract as BFS. Returns (walk_id, step, node_id) with step 0 = the
-    seed.
+    contract as BFS. Each step's position is ``cut``: it is both the next
+    step's input and a branch of the result, so left lazy every step
+    would be re-derived once per later step. Returns (walk_id, step,
+    node_id) with step 0 = the seed.
     """
+    from pyspark.sql.window import Window
+
     edges = _edges(rels, direction, None)
     cur = seeds.select(
         F.col("seed").cast("long").alias("walk_id"),
@@ -635,10 +639,8 @@ def random_walks(
                 )
             ).alias("h"),
         )
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy("walk_id").orderBy("h", "cand")
-        cur = (
+        cur, _ = cut(
             nxt.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("walk_id", F.col("cand").alias("node_id"))

@@ -67,24 +67,6 @@ def endpoints_not_in_use(rels: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def illegal_type(rels: DataFrame) -> DataFrame:
-    """P6: ``relationship.getType() < 0 → illegalLabel``
-    (`RelationshipRecordCheck.java:48-51`). Pure pushed-down filter."""
-    return _violation(
-        rels.filter(F.col("type_id") < 0), "RELATIONSHIP", "illegalLabel", "id", F.col("type_id")
-    )
-
-
-def dangling_type(rels: DataFrame, rel_types: DataFrame) -> DataFrame:
-    """J2: type must resolve in the dictionary (``labelNotInUse``,
-    `RelationshipRecordCheck.java:52-80`). Broadcast anti-join — the
-    reference pre-caches small stores for exactly this
-    (`FullCheck.java:128-134`)."""
-    live = rel_types.filter(F.col("in_use")).select(F.col("id").alias("type_id"))
-    bad = rels.filter(F.col("type_id") >= 0).join(F.broadcast(live), "type_id", "left_anti")
-    return _violation(bad, "RELATIONSHIP", "labelNotInUse", "id", F.col("type_id"))
-
-
 def violations_summary(violations: DataFrame) -> DataFrame:
     """A1: ``ConsistencySummaryStatistics`` — counts per record type + rule
     (`consistency-check/.../report/ConsistencySummaryStatistics.java`)."""

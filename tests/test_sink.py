@@ -172,6 +172,17 @@ def test_engine_facade_surface(spark, sf_dir):
         pass
 
 
+def test_engine_validate_matches_registry_query(spark, sf_dir):
+    from neo4j_enterprise_spark.engine import Engine
+
+    eng = Engine(spark, sf_dir)
+    got = eng.validate()
+    want = eng.query("endpoints_not_in_use")
+    assert got.columns == want.columns
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_enrich_stream_broadcast_join(spark, sf_dir, tmp_path):
     from neo4j_enterprise_spark.streaming.feeds import enrich_stream
 

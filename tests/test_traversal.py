@@ -356,6 +356,20 @@ def test_random_walks_deterministic_and_stop_at_sinks(spark):
         assert (prev, cur) in {(0, 1), (0, 2), (1, 3)}
 
 
+def test_random_walks_plan_is_linear_in_length(spark):
+    import re
+
+    from neo4j_enterprise_spark.operators.traversal import random_walks
+
+    rels = _edges_df(spark, [(i, i + 1) for i in range(8)] + [(0, 2), (2, 5)])
+    seeds = spark.createDataFrame([(0,), (1,)], "seed long")
+    walks = random_walks(rels, seeds, length=6, seed=3)
+    plan = walks._jdf.queryExecution().optimizedPlan().toString()
+    # a lazy step re-derived by every later one gave 21 Window nodes here
+    assert len(re.findall(r"\bWindow \[", plan)) <= 6, plan
+    assert walks.filter(F.col("step") == 6).count() == 2
+
+
 def test_personalized_pagerank_concentrates_near_seeds(spark):
     from neo4j_enterprise_spark.operators.traversal import (
         pagerank,
