@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -29,6 +30,24 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _normalize_ts(events: DataFrame) -> DataFrame:
+    """``events`` with ``ts`` as a µs TIMESTAMP, from either testdata
+    vintage. Older generators wrote TIMESTAMP(NANOS), which Spark's
+    parquet reader only accepts as LONG (via the legacy nanosAsLong conf
+    the reader must set): converted exactly, the values are µs-grained.
+    Newer ones write TIMESTAMP(MICROS), which may decode as
+    ``timestamp_ntz``. Either way the result matches DuckDB's TIMESTAMP
+    semantics; batch reads and file-stream sources both go through here."""
+    ts_type = dict(events.dtypes).get("ts", "")
+    if ts_type in ("bigint", "long"):
+        return events.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
+        )
+    if ts_type == "timestamp_ntz":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Pin the session timezone: the driver's own SparkSession may default
     # to the machine timezone, and timestamp<->date comparisons /
@@ -36,24 +55,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # semantics. Runtime-settable, idempotent.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
-        # Testdata vintages differ on the ``ts`` column: older generators
-        # wrote TIMESTAMP(NANOS) (which Spark's parquet reader only accepts
-        # as LONG via the legacy conf), newer ones write TIMESTAMP(MICROS).
-        # Branch on the decoded dtype so either vintage loads; normalize to
-        # a µs TIMESTAMP (matching DuckDB's TIMESTAMP semantics).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type in ("bigint", "long"):
-            # nanos-as-long vintage: convert exactly (values are µs-grained)
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-            )
-        if ts_type == "timestamp_ntz":
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return _normalize_ts(spark.read.parquet(os.path.join(sf_dir, "events.parquet")))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 

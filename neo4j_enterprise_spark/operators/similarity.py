@@ -239,7 +239,10 @@ def _pair_scores(pairs: DataFrame, threshold: float, *keys: str) -> DataFrame:
 def _probe(seeds: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
     """(seed, cell_id): each seed's ``n_probe`` nearest cells by cosine,
     ties to the lower cell id. Seeds and centroids are both
-    planner-sized, so the cross join is broadcast."""
+    planner-sized, so the cross join is broadcast. A zero-norm centroid
+    is skipped, as in ``_assign_to_centroids``: no vector is assigned to
+    it, and the cosine would divide by zero."""
+    centroids = centroids.filter(F.col("ccn") > 0)
     scores = F.broadcast(_quantized(seeds, "seed")).join(F.broadcast(centroids))
     scores = scores.select("seed", "cell_id", _cell_cosine().alias("cscore"))
     return _topk(scores, n_probe, item="cell_id", score="cscore").select(

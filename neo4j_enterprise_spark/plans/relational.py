@@ -9,11 +9,17 @@ and broadcast of the dimension sides.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import _normalize_ts, load_table
 from ..operators.rankings import argmax, top_k_per_group
+from ..streaming import feeds
 from . import register
 
 DEC = "decimal(18,2)"
@@ -1181,9 +1187,6 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_QUERY_SEQ = iter(range(1, 1 << 30))
-
-
 def _ensure_symlink(target: str, link: str) -> None:
     """Make ``link`` a symlink to ``target``, whatever is there now.
 
@@ -1192,7 +1195,6 @@ def _ensure_symlink(target: str, link: str) -> None:
     file/dir left by an interrupted run — would silently feed a parity
     query wrong input, so it is removed unconditionally and re-linked.
     """
-    import os
     import shutil
 
     if os.path.lexists(link) and not (
@@ -1206,40 +1208,125 @@ def _ensure_symlink(target: str, link: str) -> None:
         os.symlink(target, link)
 
 
-def _staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage ``events.parquet`` behind a symlink dir and open it as a
-    normalized (UTC, µs-timestamp ``ts``) streaming DataFrame.
+def _events_file(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "events.parquet")
 
-    Self-contained: pins ``session.timeZone=UTC`` and the legacy
-    nanos-as-long parquet conf itself rather than relying on an earlier
-    ``load_table('events')`` call having set them as side effects. The
-    stage dir is keyed on a hash of the ABSOLUTE sf_dir (two datasets with
-    the same basename under different parents must not share a stage), and
-    a stale/dangling symlink is replaced rather than silently reused.
+
+def _temp(kind: str, *files: str) -> str:
+    """A tempdir path named by ``kind`` and the identity of ``files``
+    (each one's realpath, size and mtime in ns). A file-stream source
+    never re-reads a path it has seen, so a file rewritten in place must
+    get fresh stage, checkpoint and output dirs, or append-mode queries
+    would return the old file's rows."""
+    ident = []
+    for f in files:
+        st = os.stat(f)
+        ident.append((os.path.realpath(f), st.st_size, st.st_mtime_ns))
+    tag = hashlib.md5(repr(ident).encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"nes_{kind}_{tag}")
+
+
+def _stage_events(
+    spark: SparkSession, *files: str, max_files: int | None = None
+) -> tuple[DataFrame, str]:
+    """Open the events-schema parquet ``files`` as one file-stream source
+    with a µs TIMESTAMP ``ts``; returns the stream and its stage dir.
+
+    The file-stream source only reads directories, so each file is
+    linked into a stage dir (a real ingest would watch a landing dir);
+    a file listed twice is delivered twice. ``max_files`` sets
+    ``maxFilesPerTrigger``: 1 makes each file its own micro-batch, in
+    mtime order. Self-contained: pins ``session.timeZone=UTC`` and the
+    legacy nanos-as-long parquet conf itself rather than relying on an
+    earlier ``load_table('events')`` call having set them.
     """
-    import hashlib
-    import os
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    # the file-stream source only accepts directories; stage the table
-    # file behind a symlink dir (a real ingest would watch a landing dir)
-    tag = hashlib.md5(path.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nes_stream_events_{tag}")
+    stage = _temp("stream", *files)
     os.makedirs(stage, exist_ok=True)
-    _ensure_symlink(path, os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts", "")
-    if ts_type in ("bigint", "long"):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    for i, f in enumerate(files):
+        _ensure_symlink(os.path.realpath(f), os.path.join(stage, f"part{i}.parquet"))
+    reader = spark.readStream.schema(spark.read.parquet(files[0]).schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return _normalize_ts(reader.parquet(stage)), stage
+
+
+def _sentinel(src: str) -> str:
+    """A one-row events file whose ``ts`` is 10 hours past ``src``'s
+    maximum (other columns NULL), dated an hour after ``src``. Staged
+    after ``src`` with one file per trigger, it advances the watermark
+    past every real window, so append mode emits ALL of them and evicts
+    their state; its own window never closes and is never emitted. This
+    is how a production ingest drains: the watermark, not the query
+    shutdown, decides when a window is final."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = _temp("sentinel", src) + ".parquet"
+    if not os.path.exists(path):
+        sch = pq.read_schema(src)
+        max_ts = pc.max(pq.read_table(src, columns=["ts"])["ts"]).as_py()
+        arrays = []
+        for f in sch:
+            if f.name == "ts":
+                if isinstance(max_ts, datetime.datetime):
+                    val = max_ts + datetime.timedelta(hours=10)
+                else:  # int64 nanos vintage
+                    val = max_ts + 10 * 3600 * 1_000_000_000
+                arrays.append(pa.array([val], type=f.type))
+            else:
+                arrays.append(pa.array([None], type=f.type))
+        pq.write_table(pa.Table.from_arrays(arrays, schema=sch), path)
+        main_mtime = os.stat(src).st_mtime
+        os.utime(path, (main_mtime + 3600, main_mtime + 3600))
+    return path
+
+
+def _run_append(
+    spark: SparkSession,
+    sf_dir: str,
+    fresh: bool,
+    key: str,
+    build: Callable[[DataFrame], DataFrame],
+    *order: str,
+):
+    """Run ``build(events stream)`` to completion in append mode into a
+    parquet sink, the events file followed by its ``_sentinel``. Returns
+    ``(result_df, progress_dict)``: the sink's rows with ``key`` set (the
+    sentinel's are not), ordered by ``order``, and the last micro-batch
+    progress carrying state-store metrics (None on a fully-caught-up
+    rerun, where the checkpoint makes the whole run a no-op and the
+    previous output is simply re-read — the idempotent re-invocation path
+    the bench/driver exercise). ``fresh=True`` wipes the checkpoint +
+    output first, forcing a real processing run."""
+    import shutil
+
+    src = _events_file(sf_dir)
+    stream, stage = _stage_events(spark, src, _sentinel(src), max_files=1)
+    out_dir, ck_dir = f"{stage}_{key}_out", f"{stage}_{key}_ck"
+    if fresh:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        shutil.rmtree(ck_dir, ignore_errors=True)
+    q = feeds._drain(build(stream), "append", path=out_dir, checkpointLocation=ck_dir)
+    progress = next(
+        (p for p in reversed(q.recentProgress) if p.get("stateOperators")),
+        None,
+    )
+    result = spark.read.parquet(out_dir).filter(F.col(key).isNotNull())
+    return result.orderBy(*order), progress
+
+
+def _hourly(events: DataFrame) -> DataFrame:
+    return feeds.windowed_counts(events).select(
+        F.unix_timestamp("window_start").alias("hour_epoch"),
+        "event_type",
+        "n_events",
+        "total_value",
+    )
 
 
 @register(
@@ -1254,7 +1341,7 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     doc="R2/R4 as a DRIVEN streaming query: the same hourly rollup run "
-    "through Structured Streaming end-to-end — readStream file source → "
+    "through Structured Streaming end-to-end — file-stream source → "
     "watermarked window aggregate → memory sink, Trigger.AvailableNow "
     "micro-batches to completion — then hash-compared against the BATCH "
     "oracle. Proves stream/batch parity of the windowed aggregation "
@@ -1265,159 +1352,17 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # B7: streaming micro-batch throughput in the headline set
 )
 def events_stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _staged_events_stream(spark, sf_dir)
-    rolled = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-    )
-    qn = f"events_stream_rollup_{next(_STREAM_QUERY_SEQ)}"
-    # state-store partition count is pinned from shuffle.partitions at
-    # query start: 32 stores for a few thousand groups is pure per-batch
-    # setup/commit overhead (measured ~2x on the micro-batch wall clock).
-    # 8 is right for this state size; a real 100 TB ingest would size it
-    # to the key cardinality instead.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rolled.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    return (
-        spark.table(qn)
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("hour_epoch", "event_type")
-    )
-
-
-def _staged_events_append_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage dir for the APPEND-mode streaming rollup: the real events
-    file (batch 1) plus a one-row SENTINEL file whose ``ts`` is 10 hours
-    past the real maximum (batch 2, via ``maxFilesPerTrigger=1`` and a
-    later mtime). Processing the sentinel advances the watermark past
-    every real window, so append mode emits ALL of them and evicts their
-    state; the sentinel's own window never closes and is never emitted.
-    This is how a production ingest drains: the watermark, not the query
-    shutdown, decides when a window is final."""
-    import datetime
-    import hashlib
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(path.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nes_stream_append_{tag}")
-    os.makedirs(stage, exist_ok=True)
-    _ensure_symlink(path, os.path.join(stage, "aa_events.parquet"))
-    sentinel = os.path.join(stage, "zz_sentinel.parquet")
-    if not os.path.exists(sentinel):
-        sch = pq.read_schema(path)
-        max_ts = pc.max(pq.read_table(path, columns=["ts"])["ts"]).as_py()
-        arrays = []
-        for f in sch:
-            if f.name == "ts":
-                if isinstance(max_ts, datetime.datetime):
-                    val = max_ts + datetime.timedelta(hours=10)
-                else:  # int64 nanos vintage
-                    val = max_ts + 10 * 3600 * 1_000_000_000
-                arrays.append(pa.array([val], type=f.type))
-            else:
-                arrays.append(pa.array([None], type=f.type))
-        pq.write_table(pa.Table.from_arrays(arrays, schema=sch), sentinel)
-        main_mtime = os.stat(path).st_mtime
-        os.utime(sentinel, (main_mtime + 3600, main_mtime + 3600))
-    return stage
+    stream, _ = _stage_events(spark, _events_file(sf_dir))
+    q = feeds._drain(_hourly(stream), "complete")
+    return spark.table(q.name).orderBy("hour_epoch", "event_type")
 
 
 def run_events_append_rollup(spark: SparkSession, sf_dir: str, fresh: bool = False):
-    """Run the append-mode hourly rollup to completion against a file
-    sink. Returns ``(result_df, progress_dict)`` — the progress dict is
-    the last micro-batch progress carrying state-store metrics (None on
-    a fully-caught-up rerun, where the checkpoint makes the whole run a
-    no-op and the previous output is simply re-read — the idempotent
-    re-invocation path the bench/driver exercise). ``fresh=True`` wipes
-    the checkpoint + output first, forcing a real processing run."""
-    import os
-    import shutil
-    import tempfile
-
-    stage = _staged_events_append_dir(spark, sf_dir)
-    tag = os.path.basename(stage).rsplit("_", 1)[-1]
-    out_dir = os.path.join(tempfile.gettempdir(), f"nes_append_out_{tag}")
-    ck_dir = os.path.join(tempfile.gettempdir(), f"nes_append_ck_{tag}")
-    if fresh:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-    schema = spark.read.parquet(os.path.join(stage, "aa_events.parquet")).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts", "")
-    if ts_type in ("bigint", "long"):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    rolled = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    """The append-mode hourly rollup to completion against a file sink
+    (``_run_append``'s result and progress contract)."""
+    return _run_append(
+        spark, sf_dir, fresh, "event_type", _hourly, "hour_epoch", "event_type"
     )
-    # see events_stream_hourly_rollup: 8 state stores fit this state size
-    # (on a restarted checkpoint Spark pins the original count itself)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rolled.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    progress = next(
-        (p for p in reversed(q.recentProgress) if p.get("stateOperators")),
-        None,
-    )
-    result = (
-        spark.read.parquet(out_dir)
-        .filter(F.col("event_type").isNotNull())  # drop sentinel remnants
-        .orderBy("hour_epoch", "event_type")
-    )
-    return result, progress
 
 
 @register(
@@ -1467,7 +1412,7 @@ def events_stream_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_events
     FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_us
     """,
-    doc="DRIVEN STREAMING session windows: readStream → "
+    doc="DRIVEN STREAMING session windows: file-stream source → "
     "session_window(ts, 30 min) groupBy user_id → append mode + "
     "watermark eviction to a file sink, sentinel micro-batch closing "
     "every real session — hash-matched against the BATCH gap-session "
@@ -1486,66 +1431,21 @@ def run_events_sessions_append(
     spark: SparkSession, sf_dir: str, fresh: bool = False
 ):
     """Append-mode streaming session windows to completion against a file
-    sink; same staging/sentinel/progress contract as
-    ``run_events_append_rollup``."""
-    import os
-    import shutil
-    import tempfile
+    sink (``_run_append``'s result and progress contract)."""
 
-    stage = _staged_events_append_dir(spark, sf_dir)
-    tag = os.path.basename(stage).rsplit("_", 1)[-1]
-    out_dir = os.path.join(tempfile.gettempdir(), f"nes_sess_out_{tag}")
-    ck_dir = os.path.join(tempfile.gettempdir(), f"nes_sess_ck_{tag}")
-    if fresh:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ck_dir, ignore_errors=True)
-    schema = spark.read.parquet(os.path.join(stage, "aa_events.parquet")).schema
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts", "")
-    if ts_type in ("bigint", "long"):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    # same NULL-ts contract as the batch twin: session_window() would
-    # silently drop NULL ts - filter explicitly, mirrored in the oracle
-    sessions = (
-        stream.filter(F.col("ts").isNotNull())
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
+    def sessions(events: DataFrame) -> DataFrame:
+        # same NULL-ts contract as the batch twin: session_window() would
+        # silently drop NULL ts - filter explicitly, mirrored in the oracle
+        return feeds.session_windows(events.filter(F.col("ts").isNotNull())).select(
             "user_id",
-            F.unix_micros(F.col("w.start")).alias("session_start_us"),
-            F.unix_micros(F.col("w.end")).alias("session_end_us"),
+            F.unix_micros("session_start").alias("session_start_us"),
+            F.unix_micros("session_end").alias("session_end_us"),
             "n_events",
         )
+
+    return _run_append(
+        spark, sf_dir, fresh, "user_id", sessions, "user_id", "session_start_us"
     )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    progress = next(
-        (p for p in reversed(q.recentProgress) if p.get("stateOperators")),
-        None,
-    )
-    result = (
-        spark.read.parquet(out_dir)
-        .filter(F.col("user_id").isNotNull())  # drop sentinel remnants
-        .orderBy("user_id", "session_start_us")
-    )
-    return result, progress
 
 
 @register(
@@ -2643,47 +2543,27 @@ def lineitem_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(events_stream_hourly_rollup) to JOINS.",
 )
 def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = (
-        _staged_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            "user_id",
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("a_ts"),
+    def side(event_type: str) -> DataFrame:
+        stream, _ = _stage_events(spark, _events_file(sf_dir))
+        return stream.filter(F.col("event_type") == event_type).select(
+            "user_id", "event_id", "ts"
         )
-        .withWatermark("a_ts", "2 hours")
+
+    # purchases within [signup_ts, signup_ts + 1h] of a signup
+    joined = feeds.interval_join_streams(
+        side("purchase"),
+        side("signup"),
+        "user_id",
+        lower="0 seconds",
+        upper="1 hour",
+        watermark="2 hours",
+    ).select(
+        F.col("l.user_id").alias("user_id"),
+        F.col("r.event_id").alias("signup_id"),
+        F.col("l.event_id").alias("purchase_id"),
     )
-    b = (
-        _staged_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("b_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("b_ts"),
-        )
-        .withWatermark("b_ts", "2 hours")
-    )
-    joined = a.join(
-        b,
-        (F.col("user_id") == F.col("b_user"))
-        & (F.col("b_ts") >= F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("user_id", "signup_id", "purchase_id")
-    qn = f"events_stream_ij_{next(_STREAM_QUERY_SEQ)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    return spark.table(qn).orderBy("user_id", "signup_id", "purchase_id")
+    q = feeds._drain(joined, "append")
+    return spark.table(q.name).orderBy("user_id", "signup_id", "purchase_id")
 
 
 @register(
@@ -2695,7 +2575,7 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS total_milli
     FROM events GROUP BY user_id ORDER BY user_id
     """,
-    doc="DRIVEN custom stateful streaming (applyInPandasWithState): "
+    doc="DRIVEN custom stateful streaming (feeds.stateful_user_totals): "
     "per-user running totals carried in GroupState across micro-batches "
     "(values quantized to milli-ints so state merges are exact), run to "
     "completion with AvailableNow; the cumulative row with the highest "
@@ -2704,51 +2584,14 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stateful families: windowed aggregates, joins, and custom state.",
 )
 def events_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.window import Window
 
-    stream = _staged_events_stream(spark, sf_dir).filter(
-        F.col("user_id").isNotNull()
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # round per element, THEN sum — matches the oracle's
-            # SUM(ROUND(value*1000)) exactly; a float batch-sum rounded
-            # once would drift on half-unit values
-            total += int(pdf["value"].mul(1000).round().astype("int64").sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_milli": [total]}
-        )
-
-    totals = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        "user_id long, n_events long, total_milli long",
-        "n_events long, total_milli long",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    qn = f"events_stream_state_{next(_STREAM_QUERY_SEQ)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    stream, _ = _stage_events(spark, _events_file(sf_dir))
+    totals = feeds.stateful_user_totals(stream.filter(F.col("user_id").isNotNull()))
+    q = feeds._drain(totals, "update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table(qn)
+        spark.table(q.name)
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("user_id", "n_events", "total_milli")
@@ -2810,52 +2653,15 @@ def events_rolling_hour_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup).",
 )
 def events_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(path.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nes_stream_dup_{tag}")
-    os.makedirs(stage, exist_ok=True)
-    for name in ("aa_copy1.parquet", "bb_copy2.parquet"):
-        _ensure_symlink(path, os.path.join(stage, name))
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    ts_type = dict(stream.dtypes).get("ts", "")
-    if ts_type in ("bigint", "long"):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    src = _events_file(sf_dir)
+    stream, _ = _stage_events(spark, src, src, max_files=1)
     deduped = (
-        stream.withWatermark("ts", "24 hours")
-        .dropDuplicatesWithinWatermark(["event_id"])
+        feeds.dedup_stream(stream, ["event_id"], watermark="24 hours")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    qn = f"events_stream_dedup_{next(_STREAM_QUERY_SEQ)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    return spark.table(qn).orderBy("event_type")
+    q = feeds._drain(deduped, "complete")
+    return spark.table(q.name).orderBy("event_type")
 
 
 @register(
@@ -2883,41 +2689,20 @@ def events_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parity family (aggregate, join, custom state, dedup, fan-out).",
 )
 def events_stream_pushk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
-    from neo4j_enterprise_spark.streaming import feeds
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(path.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nes_pushk_src_{tag}")
-    os.makedirs(stage, exist_ok=True)
-    for name in ("aa_copy1.parquet", "bb_copy2.parquet"):
-        _ensure_symlink(path, os.path.join(stage, name))
+    src = _events_file(sf_dir)
+    stream, stage = _stage_events(spark, src, src, max_files=1)
     # sinks + checkpoint are rebuilt fresh each run: append-mode sinks
     # would otherwise accumulate copies across invocations
-    base = os.path.join(tempfile.gettempdir(), f"nes_pushk_out_{tag}")
+    base = f"{stage}_pushk"
     shutil.rmtree(base, ignore_errors=True)
     sinks = [os.path.join(base, f"sink_{i}") for i in range(3)]
-    ckpt = os.path.join(base, "ckpt")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .select("event_id", "event_type", "value")
+    feeds.push_fanout(
+        stream.select("event_id", "event_type", "value"),
+        sinks,
+        os.path.join(base, "ckpt"),
     )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = feeds.push_fanout(stream, sinks, ckpt)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     per_sink = [
         spark.read.parquet(d)
         .groupBy("event_type")
@@ -2950,7 +2735,7 @@ def events_stream_pushk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tail, `BackupService.java:383-420`): a joiner that missed the "
     "stream BACKFILLS everything before a cut point from the at-rest "
     "store (batch read, the snapshot leg) and TAILS the stream from "
-    "the cut (readStream filtered ts >= cut, AvailableNow to a memory "
+    "the cut (file-stream source filtered ts >= cut, AvailableNow to a memory "
     "sink — the tx-pull leg). The union of backfill rows and tailed "
     "rows is aggregated once; hash-matching the whole-table batch "
     "oracle proves the cut loses nothing and duplicates nothing across "
@@ -2970,27 +2755,11 @@ def events_stream_catchup_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     backfill = ev.filter(
         (F.unix_micros("ts") < cut) | F.col("ts").isNull()
     ).select(*cols)
-    tail = (
-        _staged_events_stream(spark, sf_dir)
-        .filter(F.unix_micros("ts") >= cut)
-        .select(*cols)
-    )
-    qn = f"events_stream_tail_{next(_STREAM_QUERY_SEQ)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            tail.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    stream, _ = _stage_events(spark, _events_file(sf_dir))
+    tail = stream.filter(F.unix_micros("ts") >= cut).select(*cols)
+    q = feeds._drain(tail, "append")
     return (
-        backfill.unionByName(spark.table(qn).select(*cols))
+        backfill.unionByName(spark.table(q.name).select(*cols))
         .groupBy(
             F.unix_seconds(F.date_trunc("hour", "ts")).alias("hour_epoch"),
             "event_type",
@@ -3106,20 +2875,12 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replays the vintage split + defaults in SQL.",
 )
 def store_upgrade_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from ..sources.sink import read_evolved
 
     cust = load_table(spark, sf_dir, "customer")
-    # tag includes the source mtime so a regenerated fixture at the
-    # same path invalidates the staged vintages (ADVICE r3)
-    src = os.path.join(os.path.realpath(sf_dir), "customer.parquet")
-    tag = hashlib.md5(
-        f"{src}|{int(os.path.getmtime(src))}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"nes_store_vintages_{tag}")
+    # keyed on the source's identity, so a regenerated fixture at the
+    # same path invalidates the staged vintages
+    base = _temp("store_vintages", os.path.join(sf_dir, "customer.parquet"))
     v1, v2 = os.path.join(base, "v1"), os.path.join(base, "v2")
     if not (
         os.path.exists(os.path.join(v1, "_SUCCESS"))
@@ -3811,54 +3572,25 @@ def orders_salted_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream volume) proven end-to-end.",
 )
 def events_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    from ..catalog import load_table
     from ..operators import sketches
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    src = _events_file(sf_dir)
     ev = load_table(spark, sf_dir, "events")
-    tag = hashlib.md5(
-        f"cm|{src}|{int(os.path.getmtime(src))}".encode()
-    ).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nes_stream_cm_{tag}")
-    if not (
-        os.path.exists(os.path.join(stage, "h0", "_SUCCESS"))
-        and os.path.exists(os.path.join(stage, "h1", "_SUCCESS"))
-    ):
-        for half in (0, 1):
-            ev.filter(F.col("event_id") % 2 == half).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(stage, f"h{half}"))
-    schema = spark.read.parquet(os.path.join(stage, "h0")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
+    halves = [f"{_temp('cm', src)}_h{half}.parquet" for half in (0, 1)]
+    if not all(map(os.path.exists, halves)):
+        table = pq.read_table(src)
+        parity = pc.bit_wise_and(table["event_id"], 1)
+        for half, path in enumerate(halves):
+            pq.write_table(table.filter(pc.equal(parity, half)), path)
+    stream, _ = _stage_events(spark, *halves, max_files=1)
     sketch = sketches.count_min_build(
         stream.select("event_type"), "event_type", depth=4, width=64
     )
-    qn = f"events_stream_cm_{next(_STREAM_QUERY_SEQ)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sketch.writeStream.format("memory")
-            .queryName(qn)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    state = spark.table(qn)
+    q = feeds._drain(sketch, "complete")
+    state = spark.table(q.name)
     truth = ev.groupBy("event_type").agg(F.count("*").alias("true_n"))
     est = sketches.count_min_estimate(
         state, truth, "event_type", depth=4, width=64

@@ -53,6 +53,31 @@ def test_ivf_full_probe_equals_bruteforce(spark, sf_dir):
     assert exact == full_probe  # probing every cell degenerates to exact
 
 
+def test_ivf_probe_skips_zero_norm_centroid(spark):
+    """An explicit zero-norm centroid is skipped by the probe, as by the
+    assignment: every vector lands in cell 1, so probing one cell is the
+    exact top-k instead of a DIVIDE_BY_ZERO."""
+    emb = spark.createDataFrame(
+        [(i, [0.1 * (i + 1), 0.05 * (12 - i), 0.2 * (i % 3)]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    seeds = emb.filter(F.col("vec_id") < 2)
+    centroids = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0], 0), (1, [500.0, 1000.0, 0.0], 1250000)],
+        "cell_id int, ccv array<double>, ccn long",
+    )
+    got = sorted(
+        tuple(r)
+        for r in similarity.ivf_ann_topk(
+            emb, seeds, k=3, n_probe=1, centroids=centroids, dims=3
+        ).collect()
+    )
+    exact = sorted(
+        tuple(r) for r in similarity.cosine_topk_bruteforce(emb, seeds, k=3).collect()
+    )
+    assert len(got) == 6 and got == exact
+
+
 def test_ivf_kmeans_refined_recall_and_full_probe(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
     seeds = emb.filter(F.col("vec_id") < 5)

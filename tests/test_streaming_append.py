@@ -7,9 +7,16 @@ to a file sink, state dropped as the watermark closes windows.
 
 from __future__ import annotations
 
+import os
+
+import duckdb
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from neo4j_enterprise_spark.catalog import load_table
+from neo4j_enterprise_spark.plans import all_queries
 from neo4j_enterprise_spark.plans.relational import run_events_append_rollup
 
 
@@ -107,23 +114,72 @@ def test_session_append_matches_batch_and_evicts_state(spark, sf_dir):
     )
 
 
-def test_catchup_tail_keeps_null_ts_rows(spark, tmp_path):
-    """The r10 catch-up twin's seam predicate: a NULL ts fails BOTH
-    range filters, so without the explicit isNull() branch those rows
-    vanish from the union while the batch oracle keeps them as a NULL
-    hour group. Replay the seam logic on a frame with NULL ts rows."""
-    ev = spark.createDataFrame(
-        [
-            (1, "2024-01-01 05:00:00", "click", 1.0),
-            (2, "2024-01-02 05:00:00", "click", 2.0),
-            (3, None, "click", 4.0),
-        ],
-        "event_id long, ts_s string, event_type string, value double",
-    ).select("event_id", F.to_timestamp("ts_s").alias("ts"), "event_type", "value")
-    lo, hi = ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).first()
-    cut = (lo + hi) // 2
-    backfill = ev.filter((F.unix_micros("ts") < cut) | F.col("ts").isNull())
-    tail = ev.filter(F.unix_micros("ts") >= cut)
-    union = backfill.unionByName(tail)
-    assert union.count() == ev.count()  # nothing lost at the seam
-    assert backfill.filter(F.col("ts").isNull()).count() == 1
+def _events_copy(sf_dir, tmp_path, edit=lambda t: t) -> str:
+    """A tmp sf_dir holding ``edit`` applied to the events table (a
+    pyarrow Table); calling it again rewrites the file in place."""
+    table = edit(pq.read_table(os.path.join(sf_dir, "events.parquet")))
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+def _matches_oracle(spark, sf_dir, name) -> list[tuple]:
+    """Run registry query ``name`` on Spark and its oracle on DuckDB over
+    ``sf_dir``'s events; assert equal columns and rows, return the rows."""
+    q = all_queries()[name]
+    sdf = q.spark(spark, sf_dir)
+    s_rows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM read_parquet("
+        f"'{os.path.join(sf_dir, 'events.parquet')}')"
+    )
+    res = con.execute(q.oracle)
+    d_cols = [d[0] for d in res.description]
+    d_rows = res.fetchall()
+    con.close()
+
+    def norm(rows):
+        return sorted(tuple((x is None, str(x)) for x in r) for r in rows)
+
+    assert sdf.columns == d_cols, name
+    assert len(s_rows) == len(d_rows), f"{name}: {len(s_rows)} vs {len(d_rows)} rows"
+    assert norm(s_rows) == norm(d_rows), f"{name}: rows differ from the oracle"
+    return s_rows
+
+
+def test_append_queries_follow_a_rewritten_events_file(spark, sf_dir, tmp_path):
+    """The append-mode queries keep a checkpoint and an output dir between
+    runs, and a file-stream source never re-reads a path it has seen:
+    after the events file is rewritten in place, each must still return
+    the new file's rows, not the ones its first run saved."""
+    names = (
+        "events_stream_hourly_append",
+        "events_stream_sessions_append",
+        "events_stream_leaderboard",
+    )
+    copy = _events_copy(sf_dir, tmp_path)
+    before = {n: len(_matches_oracle(spark, copy, n)) for n in names}
+    _events_copy(
+        sf_dir,
+        tmp_path,
+        lambda t: t.filter(pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)),
+    )
+    after = {n: len(_matches_oracle(spark, copy, n)) for n in names}
+    assert all(after[n] < before[n] for n in names), (before, after)
+
+
+def test_catchup_tail_keeps_null_ts_rows(spark, sf_dir, tmp_path):
+    """A NULL ts fails both of the catch-up query's range predicates
+    (backfill ts < cut, tail ts >= cut), so the backfill leg must take
+    those rows, or they vanish at the snapshot/stream seam while the
+    oracle keeps them as a NULL hour group."""
+
+    def null_every_8th_ts(t):
+        ts = t["ts"]
+        hit = pc.equal(pc.bit_wise_and(t["event_id"], 7), 0)
+        nulls = pc.if_else(hit, pa.scalar(None, ts.type), ts)
+        return t.set_column(t.schema.get_field_index("ts"), "ts", nulls)
+
+    copy = _events_copy(sf_dir, tmp_path, null_every_8th_ts)
+    rows = _matches_oracle(spark, copy, "events_stream_catchup_tail")
+    assert any(r[0] is None for r in rows), "no NULL hour group"
