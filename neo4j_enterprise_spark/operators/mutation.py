@@ -2,7 +2,7 @@
 snapshot lineage.
 
 Reference surface:
-- P2 ``setProperty``/``removeProperty`` batches (`LockableNode.java:81-89`).
+- P2 ``setProperty`` batches (`LockableNode.java:81-89`).
 - Id allocation: the master hands out 1000-id ranges
   (`MasterImpl.java:75,406-412`, `IdAllocation.java:25-57`,
   `HaIdGeneratorFactory.java:129-200`) — here a window over the current
@@ -49,11 +49,6 @@ def upsert_properties(props: DataFrame, updates: DataFrame) -> DataFrame:
     pick = lambda c: F.coalesce(F.col(f"new.{c}"), F.col(f"old.{c}"))  # noqa: E731
     cols = [c for c in props.columns if c not in key]
     return merged.select(*key, *[pick(c).alias(c) for c in cols])
-
-
-def remove_properties(props: DataFrame, removals: DataFrame) -> DataFrame:
-    """P2 removeProperty: anti-join on the property key triple."""
-    return props.join(removals, ["owner_kind", "owner_id", "key_id"], "left_anti")
 
 
 # --- snapshot lineage (BranchedDataPolicy analog) -----------------------

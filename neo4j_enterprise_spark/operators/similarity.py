@@ -250,37 +250,50 @@ def _probe(seeds: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
     )
 
 
-def cosine_topk_bruteforce(
-    embeddings: DataFrame, seeds: DataFrame, k: int = 5
+def _scan_topk(
+    embeddings: DataFrame,
+    seeds: DataFrame,
+    k: int,
+    item: str,
+    label: str | None = None,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each seed.
+    """(seed, ``item``, score, rk): each seed's top-k corpus vectors by
+    quantized cosine, every searchable corpus vector a candidate; with
+    ``label``, only vectors whose label differs from the seed's.
 
-    ``embeddings``: (vec_id, embedding array<float>); ``seeds``: subset
-    with the same schema. Seeds are collected (planner-sized by
-    construction — same contract as the IVF/PQ codebook collects) and
-    closed over an Arrow ``mapInPandas`` scorer: each corpus batch is
-    one integer numpy matmul against the seed matrix — dense linear
-    algebra is where Arrow-batched numpy IS the vectorized path
-    (Catalyst's higher-order zip_with/aggregate functions run
-    interpreted, measured ~9x slower at sf1). Each batch emits only its
-    per-seed top-k under the total order (score desc, neighbor asc) —
-    a superset of the global top-k regardless of batch boundaries — so
-    the final window ranks ~batches*k*|seeds| rows, not |corpus|*|seeds|.
+    Seeds are collected (planner-sized by construction — same contract
+    as the IVF/PQ codebook collects) and closed over an Arrow
+    ``mapInPandas`` scorer: each corpus batch is one integer numpy
+    matmul against the seed matrix — dense linear algebra is where
+    Arrow-batched numpy IS the vectorized path (Catalyst's higher-order
+    zip_with/aggregate functions run interpreted, measured ~9x slower
+    at sf1). Each batch emits only its per-seed top-k under the total
+    order (score desc, item asc) — a superset of the global top-k
+    regardless of batch boundaries — so the final window ranks
+    ~batches*k*|seeds| rows, not |corpus|*|seeds|.
+
+    Quantization happens INSIDE the Arrow batch (``_np_quantize`` —
+    exact Spark/DuckDB ROUND half-away-from-zero, see its proof), not
+    as a Catalyst ``transform`` lambda on the corpus side, where the
+    interpreted-HOF tax on |corpus|·dims elements measured 0.71 s of
+    the brute-force query's 1.2 s wall at sf1.
 
     Determinism: quantized BIGINT dots and norms, one int->double cast
     each, one multiply, one sqrt, one divide — bit-identical to the SQL
     oracle's expression (same IEEE op sequence, numpy or JVM).
-
-    Quantization happens INSIDE the Arrow batch (``_np_quantize`` —
-    exact Spark/DuckDB ROUND half-away-from-zero, see its proof), not
-    as a Catalyst ``transform`` lambda on the corpus side: the
-    interpreted-HOF tax on |corpus|·dims elements measured 0.71 s of
-    this query's 1.2 s wall at sf1 (58%) — the numpy form is free
-    inside the batch the scorer already owns.
     """
     embeddings = drop_unsearchable(embeddings)
     seeds = drop_unsearchable(seeds)
-    seed_rows = seeds.select(F.col("vec_id"), "embedding").collect()
+    extra = []
+    if label:
+        # NULL labels can never satisfy the different-label predicate
+        # (SQL `<>` is NULL-unknown on either side), and a None in the
+        # numpy int64 label array crashes the Arrow batch — filter
+        # JVM-side; the oracle's <> drops the same rows without a filter.
+        embeddings = embeddings.filter(F.col(label).isNotNull())
+        seeds = seeds.filter(F.col(label).isNotNull())
+        extra = [label]
+    seed_rows = seeds.select("vec_id", "embedding", *extra).collect()
     # The scorer is dims-agnostic (media features are 8-dim, the
     # embeddings table 64), so the scoring dimensionality is inferred
     # from the seeds: modal length, ties to the smaller. Seeds and
@@ -291,31 +304,34 @@ def cosine_topk_bruteforce(
 
     lens = Counter(len(r["embedding"]) for r in seed_rows)
     dims = max(lens, key=lambda d: (lens[d], -d)) if lens else 0
-    seed_rows = [r for r in seed_rows if len(r["embedding"]) == dims]
+    seed_rows = sorted(
+        (r for r in seed_rows if len(r["embedding"]) == dims),
+        key=lambda r: r["vec_id"],
+    )
     embeddings = embeddings.filter(F.size("embedding") == dims)
     sid = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
+    # reshaped so that no seeds is a (0, 0) matrix and scores nothing
     smat = _np_quantize(
-        np.array([r["embedding"] for r in seed_rows], dtype=np.float64)
+        np.array([r["embedding"] for r in seed_rows], dtype=np.float64).reshape(
+            len(seed_rows), dims
+        )
     )
-    order = np.argsort(sid)
-    sid, smat = sid[order], smat[order]
     sn = (smat * smat).sum(axis=1)
+    slab = np.array([r[label] for r in seed_rows], dtype=np.int64) if label else None
 
     def score_batches(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            cmat = _np_quantize(
-                np.array(pdf["emb"].tolist(), dtype=np.float64)
-            )
+            cmat = _np_quantize(np.array(pdf["emb"].tolist(), dtype=np.float64))
             cn = (cmat * cmat).sum(axis=1)
             # cosine is undefined for the zero vector: a 0-norm row would
             # score NaN, which numpy's lexsort and Spark's window order
             # DIFFERENTLY (partition-dependent output). Exclude them from
             # candidacy outright — same rule on every engine.
             nz = cn > 0
-            ids, cmat, cn = ids[nz], cmat[nz], cn[nz]
+            ids, cmat, cn = pdf["vec_id"].to_numpy(np.int64)[nz], cmat[nz], cn[nz]
+            labs = pdf[label].to_numpy(np.int64)[nz] if label else None
             if ids.size == 0:
                 continue
             ip = cmat @ smat.T  # (batch, seeds) exact int64
@@ -327,22 +343,34 @@ def cosine_topk_bruteforce(
                 if sn[j] == 0:  # zero-norm seed: no defined neighbors
                     continue
                 mask = ids != sid[j]
+                if label:
+                    mask &= labs != slab[j]
                 idj, scj = ids[mask], score[mask, j]
                 if idj.size == 0:
                     continue
                 top = np.lexsort((idj, -scj))[: min(k, idj.size)]
                 out.append(
-                    pd.DataFrame(
-                        {"seed": sid[j], "neighbor": idj[top], "score": scj[top]}
-                    )
+                    pd.DataFrame({"seed": sid[j], item: idj[top], "score": scj[top]})
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
     scored = embeddings.select(
-        "vec_id", F.col("embedding").alias("emb")
-    ).mapInPandas(score_batches, "seed long, neighbor long, score double")
-    return _topk(scored, k)
+        "vec_id", F.col("embedding").alias("emb"), *extra
+    ).mapInPandas(score_batches, f"seed long, {item} long, score double")
+    return _topk(scored, k, item=item)
+
+
+def cosine_topk_bruteforce(
+    embeddings: DataFrame, seeds: DataFrame, k: int = 5
+) -> DataFrame:
+    """Exact top-k cosine neighbors for each seed: (seed, neighbor,
+    score, rk), every corpus vector a candidate (``_scan_topk``).
+
+    ``embeddings``: (vec_id, embedding array<float>); ``seeds``: subset
+    with the same schema.
+    """
+    return _scan_topk(embeddings, seeds, k, "neighbor")
 
 
 def ivf_assign(
@@ -1078,86 +1106,15 @@ def hard_negatives(
 ) -> DataFrame:
     """Hard-negative mining for contrastive/metric training: for each
     seed, the top-k most-similar corpus vectors with a DIFFERENT label
-    — the negatives that actually move a loss, found with the same
-    Arrow integer-matmul scorer as :func:`cosine_topk_bruteforce`
-    plus a label mask per seed.
+    — the negatives that actually move a loss: (seed, negative, score,
+    rk), scored as in :func:`cosine_topk_bruteforce` with a label mask
+    per seed (``_scan_topk``).
 
     ``embeddings``/``seeds``: (vec_id, embedding array<float>,
-    label int). Seeds are planner-sized and collected; per-batch
-    top-k emission keeps the final window input at
-    ~batches·k·|seeds| rows. Same determinism contract: quantized
-    BIGINT dots, one multiply + sqrt + divide per score. At 100 TB
-    the brute-force scan swaps for the LSH/IVF candidate paths with
-    the identical mask-and-rank tail.
+    label int). At 100 TB the brute-force scan swaps for the LSH/IVF
+    candidate paths with the identical mask-and-rank tail.
     """
-    # NULL labels can never satisfy the different-label predicate (SQL
-    # `clabel <> slabel` is NULL-unknown on either side), and a None in
-    # the numpy int64 label array crashes the Arrow batch — filter
-    # JVM-side; the oracle's <> drops the same rows without a filter.
-    embeddings = drop_unsearchable(embeddings).filter(F.col("label").isNotNull())
-    seeds = drop_unsearchable(seeds).filter(F.col("label").isNotNull())
-    seed_rows = seeds.select(
-        F.col("vec_id"), quantize(F.col("embedding")).alias("qv"), "label"
-    ).collect()
-    # seed-modal dims inference + corpus length filter, exactly as in
-    # cosine_topk_bruteforce (same Arrow matmul, same ragged hazard)
-    from collections import Counter
-
-    lens = Counter(len(r["qv"]) for r in seed_rows)
-    dims = max(lens, key=lambda d: (lens[d], -d)) if lens else 0
-    seed_rows = [r for r in seed_rows if len(r["qv"]) == dims]
-    embeddings = embeddings.filter(F.size("embedding") == dims)
-    sid = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
-    smat = np.array([r["qv"] for r in seed_rows], dtype=np.int64)
-    slab = np.array([r["label"] for r in seed_rows], dtype=np.int64)
-    order = np.argsort(sid)
-    sid, smat, slab = sid[order], smat[order], slab[order]
-    sn = (smat * smat).sum(axis=1)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            labs = pdf["label"].to_numpy(np.int64)
-            cmat = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            cn = (cmat * cmat).sum(axis=1)
-            # zero-norm rows score NaN and order differently in numpy's
-            # lexsort vs Spark's window — exclude, as in
-            # cosine_topk_bruteforce
-            nz = cn > 0
-            ids, labs, cmat, cn = ids[nz], labs[nz], cmat[nz], cn[nz]
-            if ids.size == 0:
-                continue
-            ip = cmat @ smat.T
-            score = ip.astype(np.float64) / np.sqrt(
-                (cn[:, None] * sn[None, :]).astype(np.float64)
-            )
-            out = []
-            for j in range(sid.shape[0]):
-                if sn[j] == 0:  # zero-norm seed: no defined negatives
-                    continue
-                mask = (ids != sid[j]) & (labs != slab[j])
-                idj, scj = ids[mask], score[mask, j]
-                if idj.size == 0:
-                    continue
-                top = np.lexsort((idj, -scj))[: min(k, idj.size)]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "seed": sid[j],
-                            "negative": idj[top],
-                            "score": scj[top],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv"), "label"
-    ).mapInPandas(score_batches, "seed long, negative long, score double")
-    return _topk(scored, k, item="negative")
+    return _scan_topk(embeddings, seeds, k, "negative", label="label")
 
 
 def _semdedup_scored_pairs(

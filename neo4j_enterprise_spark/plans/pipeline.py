@@ -16,7 +16,7 @@ from ..operators import dedup, similarity, text
 from . import register
 
 # Oracle twin of ``similarity.drop_invalid_embeddings(dims=64)`` — the
-# r12 invalid-vector contract (NULL row / NULL component / NaN / ±Inf /
+# invalid-vector contract (NULL row / NULL component / NaN / ±Inf /
 # wrong length). Interpolated, never inlined as a literal, so plan and
 # oracle cannot silently diverge; the zero-norm clause of
 # ``drop_unsearchable`` is applied as ``list_dot_product(qv, qv) > 0``
@@ -34,6 +34,213 @@ _EMB_FINITE_OR_NULL = (
     "(embedding IS NULL OR list_bool_and(list_transform(embedding, "
     "x -> x IS NOT NULL AND isfinite(CAST(x AS DOUBLE)))))"
 )
+
+# --- oracle SQL builders ---------------------------------------------------
+# Each DuckDB fragment that several oracles share is written once below,
+# and each mirrors one Spark helper. Oracles share text only with other
+# oracles, never with a Spark plan, so every twin stays independent.
+
+
+def _md5_int(expr: str) -> str:
+    """The first 15 hex digits of md5(``expr``) as a BIGINT: the
+    portable hash of the md5 sketch family (``portable=True`` paths)."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+def _split_case(cuts: dict[str, str], rest: str, key: str = "doc_id") -> str:
+    """Twin of ``sampling.hash_split``: the first split whose cut the
+    4-hex-digit md5 prefix of ``key`` sorts below, else ``rest``. The
+    cuts are the hex renders of the cumulative weights, written out so
+    the oracle replays the exact assignment."""
+    prefix = f"substr(md5(CAST({key} AS VARCHAR)), 1, 4)"
+    arms = " ".join(f"WHEN {prefix} < '{c}' THEN '{n}'" for n, c in cuts.items())
+    return f"CASE {arms} ELSE '{rest}' END"
+
+
+_SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
+_SPLIT_CUTS = {"train": "cccc", "val": "e666"}  # cumulative 0.8, 0.9
+_SPLIT_CASE = _split_case(_SPLIT_CUTS, "test")
+_TRAIN_EVAL_CASE = _split_case({"train": "e666"}, "eval")  # 0.9 / 0.1
+
+
+def _shingles(where: str = "TRUE", split: bool = False) -> str:
+    """CTEs ``toks``, ``sh``: each doc's distinct word 5-shingles,
+    (doc_id, [split,] shingle) — twin of ``dedup.shingles``. A doc of
+    fewer than five tokens is one shingle; a NULL-text doc has none
+    (DuckDB's greatest() skips NULLs, so unfiltered it would yield one
+    NULL shingle). ``split`` tags each doc with ``_TRAIN_EVAL_CASE``."""
+    keep = "doc_id, split" if split else "doc_id"
+    tag = f", {_TRAIN_EVAL_CASE} AS split" if split else ""
+    return rf"""toks AS (
+      SELECT doc_id{tag}, string_split_regex(trim(text), '\s+') AS t
+      FROM documents WHERE {where} AND text IS NOT NULL),
+    sh AS (
+      SELECT DISTINCT {keep}, shingle FROM (
+        SELECT {keep},
+               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
+                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
+        FROM toks))"""
+
+
+# CTEs sizes, inter over CTE sh: each doc's shingle count, and for each
+# pair a < b that shares a shingle, the shared count — the exact counts
+# of ``dedup.ngram_jaccard`` / ``ngram_containment``.
+_SHINGLE_OVERLAP = """sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+              GROUP BY a.doc_id, b.doc_id)"""
+
+
+def _minhash_bands(where: str = "TRUE", max_bucket: int | None = None) -> str:
+    """CTEs ``toks`` … ``bands``: the (doc_id, band, bucket) MinHash-LSH
+    buckets of ``dedup.minhash_buckets(portable=True)`` — md5 base hash,
+    the engine's 32 affine permutations mod 2^31-1 (seed 42) embedded as
+    a VALUES list, 16 two-row bands; CTE ``mins`` keeps each
+    doc's 32 minima. With ``max_bucket``, a (band, bucket) holding more
+    docs is dropped, as ``dedup.drop_oversized_buckets`` does."""
+    from ..operators.dedup import minhash_params
+
+    perms = ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(32, 42))
+    )
+    cap = (
+        ""
+        if max_bucket is None
+        else f" QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= {max_bucket}"
+    )
+    return f"""{_shingles(where)},
+    hx AS (SELECT doc_id, {_md5_int("shingle")} AS hx FROM sh),
+    perms(i, a, b) AS (VALUES {perms}),
+    mins AS (
+      SELECT doc_id, p.i,
+             MIN((hx % 2147483647 * p.a + p.b) % 2147483647) AS mh
+      FROM hx CROSS JOIN perms p GROUP BY doc_id, p.i),
+    bands_all AS (
+      SELECT doc_id, i // 2 AS band,
+             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
+      FROM mins GROUP BY doc_id, i // 2),
+    bands AS (SELECT doc_id, band, bucket FROM bands_all{cap})"""
+
+
+_QV = "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+
+
+def _qvecs(
+    cte: str = "q",
+    key: str = "vec_id",
+    v: str = "qv",
+    where: str = "TRUE",
+    label: str = "",
+) -> str:
+    """CTE ``cte`` (key, [label,] v): the searchable embeddings (valid
+    per ``_EMB_OK``, nonzero once quantized), each quantized to BIGINTs
+    — twin of ``similarity._quantized`` after ``drop_unsearchable``."""
+    lab = f", label AS {label}" if label else ""
+    return f"""{cte} AS (SELECT * FROM (
+                 SELECT vec_id AS {key}{lab}, {_QV} AS {v}
+                 FROM embeddings WHERE {where} AND {_EMB_OK})
+               WHERE list_dot_product({v}, {v}) > 0)"""
+
+
+def _qcos(u: str, v: str) -> str:
+    """The quantized cosine of BIGINT vectors ``u``, ``v`` — twin of
+    ``similarity._cosine``: the exact dot over one sqrt of the norm
+    product."""
+    return (
+        f"list_dot_product({u}, {v})\n"
+        f"             / sqrt(list_dot_product({u}, {u}) * list_dot_product({v}, {v}))"
+    )
+
+
+def _topk_tail(item: str) -> str:
+    """Each seed's top 5 rows of CTE s (seed, ``item``, score) by (score
+    desc, item asc), numbered rk — twin of ``similarity._topk``."""
+    return f"""SELECT seed, {item}, score, rk FROM (
+      SELECT seed, {item}, score,
+             ROW_NUMBER() OVER (PARTITION BY seed ORDER BY score DESC, {item}) AS rk
+      FROM s)
+    WHERE rk <= 5 ORDER BY seed, rk"""
+
+
+# CTE s + the top-5 tail: the (seed, neighbor) rows of CTE cand scored
+# over CTE q — twin of ``similarity._rerank``.
+_RERANK = f"""s AS (
+      SELECT c.seed, c.neighbor, {_qcos("qs.qv", "qc.qv")} AS score
+      FROM cand c
+      JOIN q qs ON qs.vec_id = c.seed
+      JOIN q qc ON qc.vec_id = c.neighbor)
+    {_topk_tail("neighbor")}"""
+
+
+def _nearest_cells(key: str, n: int, where: str = "TRUE") -> str:
+    """(key, cell_id): each vector of CTE q with its ``n`` nearest cells
+    of CTE cent by cosine, ties to the lower cell id — twin of
+    ``similarity._assign_to_centroids`` (n = 1) and ``_probe``."""
+    return f"""SELECT {key}, cell_id FROM (
+        SELECT v.vec_id AS {key}, c.cell_id,
+               ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+                 list_dot_product(v.qv, c.ccv)
+                 / sqrt(CAST(list_dot_product(v.qv, v.qv) AS DOUBLE)
+                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
+                 c.cell_id) AS rk
+        FROM q v CROSS JOIN cent c WHERE {where})
+      WHERE rk <= {n}"""
+
+
+# CTEs cent, assign: the first 8 searchable vectors as fixed centroids
+# (``similarity.ivf_fixed_centroids``), every vector in its nearest cell.
+_IVF_ASSIGN = f"""cent AS (SELECT CAST(vec_id AS INTEGER) AS cell_id, qv AS ccv
+             FROM q WHERE vec_id < 8),
+    assign AS ({_nearest_cells("vec_id", 1)})"""
+# CTE probes: the 3 nearest cells of each seed (vec_id < 20).
+_IVF_PROBES = f"probes AS ({_nearest_cells('seed', 3, 'v.vec_id < 20')})"
+
+
+def _sq_dist(u: str) -> str:
+    """Exact BIGINT squared L2 distance of sub-vector ``u`` to code c.cv."""
+    return (
+        f"CAST(list_dot_product({u}, {u}) - 2 * list_dot_product({u}, c.cv)\n"
+        "                        + list_dot_product(c.cv, c.cv) AS BIGINT)"
+    )
+
+
+# CTEs subs … lut — twin of ``similarity._pq_fixed_codes``: 8 sub-vectors
+# of 8 dims, the first 16 vectors' sub-vectors as the fixed codebook, each
+# sub-vector encoded to its nearest code (ties to the lower code), and the
+# seeds' (vec_id < 20) distance to every code.
+_PQ_FIXED = f"""subs AS (SELECT unnest(generate_series(0, 7)) AS sub_id),
+    sub AS (SELECT q.vec_id, s.sub_id,
+                   qv[s.sub_id * 8 + 1 : s.sub_id * 8 + 8] AS sv
+            FROM q CROSS JOIN subs s),
+    cb AS (SELECT sub_id, CAST(vec_id AS INT) AS code, sv AS cv
+           FROM sub WHERE vec_id < 16),
+    enc AS (SELECT vec_id, sub_id, code FROM (
+        SELECT v.vec_id, v.sub_id, c.code,
+               ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.sub_id ORDER BY
+                 {_sq_dist("v.sv")},
+                 c.code) AS rk
+        FROM sub v JOIN cb c USING (sub_id))
+      WHERE rk = 1),
+    lut AS (SELECT s.vec_id AS seed, s.sub_id, c.code,
+                   {_sq_dist("s.sv")} AS ldist
+            FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 20)"""
+
+
+def _adc_cut(scan: str) -> str:
+    """CTEs adc, cand — twin of ``similarity._adc_candidates``: each
+    seed's asymmetric distance to every code row ``enc e`` reaches
+    through the joins ``scan`` (which bind the LUT as ``l``), and the 20
+    nearest per seed (ties to the lower id) as candidates."""
+    return f"""adc AS (SELECT l.seed, e.vec_id AS neighbor,
+                   CAST(SUM(l.ldist) AS BIGINT) AS adc
+            FROM enc e {scan}
+            WHERE e.vec_id <> l.seed
+            GROUP BY l.seed, e.vec_id),
+    cand AS (SELECT seed, neighbor FROM (
+        SELECT seed, neighbor,
+               ROW_NUMBER() OVER (PARTITION BY seed
+                                  ORDER BY adc, neighbor) AS crk
+        FROM adc) WHERE crk <= 20)"""
 
 
 @register(
@@ -106,37 +313,19 @@ def docs_lang_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_cosine_top5",
     f"""
-    WITH q AS (SELECT seed, qv FROM (
-                 SELECT vec_id AS seed,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-                 FROM embeddings WHERE vec_id < 20 AND {_EMB_OK})
-               WHERE list_dot_product(qv, qv) > 0),
-         c AS (SELECT neighbor, cv FROM (
-                 SELECT vec_id AS neighbor,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS cv
-                 FROM embeddings WHERE {_EMB_OK})
-               WHERE list_dot_product(cv, cv) > 0),
-         s AS (SELECT seed, neighbor,
-                      list_dot_product(qv, cv)
-                      / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) AS score
+    WITH {_qvecs("q", "seed", where="vec_id < 20")},
+         {_qvecs("c", "neighbor", "cv")},
+         s AS (SELECT seed, neighbor, {_qcos("qv", "cv")} AS score
                FROM q CROSS JOIN c WHERE neighbor <> seed)
-    SELECT seed, neighbor, score, rk FROM (
-      SELECT seed, neighbor, score,
-             ROW_NUMBER() OVER (PARTITION BY seed ORDER BY score DESC, neighbor) AS rk
-      FROM s)
-    WHERE rk <= 5 ORDER BY seed, rk
+    {_topk_tail("neighbor")}
     """,
     doc="Similarity search baseline: exact top-5 cosine neighbors per "
     "seed over quantized embeddings (integer dot products → "
-    "order-independent, engine-exact doubles). r8: quantization moved "
-    "INTO the Arrow batch (similarity._np_quantize — proof-exact "
-    "HALF_UP twin of the SQL round), deleting the interpreted "
-    "transform lambda from the corpus path (was 0.71 s of 1.24 s at "
-    "sf1; 1.24 s -> 1.06 s measured end-to-end). Remaining sf1 floor "
-    "is per-job scheduling (~0.2 s x 5 jobs: seed collect, scan, "
-    "scorer, window, sort) — vanishes at volume; LSH "
-    "(ann_lsh_md5_top5) and IVF (ann_ivf_fixed_top5) are the scale "
-    "paths that avoid scoring the full corpus per seed.",
+    "order-independent, engine-exact doubles). Quantization runs inside "
+    "the Arrow batch (similarity._np_quantize, the exact HALF_UP twin of "
+    "the SQL round), so the corpus path has no interpreted transform "
+    "lambda. LSH (ann_lsh_md5_top5) and IVF (ann_ivf_fixed_top5) are the "
+    "scale paths that avoid scoring the full corpus per seed.",
     bench=True,
 )
 def ann_cosine_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,17 +337,10 @@ def ann_cosine_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "docs_embedding_near_dup",
     f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-                 SELECT vec_id,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-                 FROM embeddings WHERE {_EMB_OK})
-               WHERE list_dot_product(qv, qv) > 0)
-    SELECT a.vec_id AS a, b.vec_id AS b,
-           list_dot_product(a.qv, b.qv)
-           / sqrt(list_dot_product(a.qv, a.qv) * list_dot_product(b.qv, b.qv)) AS score
+    WITH {_qvecs()}
+    SELECT a.vec_id AS a, b.vec_id AS b, {_qcos("a.qv", "b.qv")} AS score
     FROM q a JOIN q b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.qv, b.qv)
-          / sqrt(list_dot_product(a.qv, a.qv) * list_dot_product(b.qv, b.qv)) >= 0.4
+    WHERE {_qcos("a.qv", "b.qv")} >= 0.4
     ORDER BY a, b
     """,
     doc="Embedding-cosine near-duplicate pairs (exact all-pairs verify; "
@@ -210,11 +392,7 @@ def _lsh_oracle_sql(bands: int, planes_per_band: int, dims: int, seed: int) -> s
         f"({p}, {_plane_signs(p, dims, seed)})" for p in range(n_planes)
     )
     return f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-                 SELECT vec_id,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-                 FROM embeddings WHERE {_EMB_OK})
-               WHERE list_dot_product(qv, qv) > 0),
+    WITH {_qvecs()},
     planes AS (SELECT * FROM (VALUES
       {rows}) AS t(plane, signs)),
     sig AS (
@@ -234,18 +412,7 @@ def _lsh_oracle_sql(bands: int, planes_per_band: int, dims: int, seed: int) -> s
              FROM seedb s JOIN buckets b
                ON s.band = b.band AND s.bucket = b.bucket
              WHERE b.vec_id <> s.seed),
-    scored AS (
-      SELECT c.seed, c.neighbor,
-             list_dot_product(qs.qv, qc.qv)
-             / sqrt(list_dot_product(qs.qv, qs.qv) * list_dot_product(qc.qv, qc.qv)) AS score
-      FROM cand c
-      JOIN q qs ON qs.vec_id = c.seed
-      JOIN q qc ON qc.vec_id = c.neighbor)
-    SELECT seed, neighbor, score, rk FROM (
-      SELECT seed, neighbor, score,
-             ROW_NUMBER() OVER (PARTITION BY seed ORDER BY score DESC, neighbor) AS rk
-      FROM scored)
-    WHERE rk <= 5 ORDER BY seed, rk
+    {_RERANK}
     """
 
 
@@ -271,48 +438,13 @@ def ann_lsh_md5_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_ivf_fixed_top5",
     f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings WHERE {_EMB_OK})
-          WHERE list_dot_product(qv, qv) > 0),
-    cent AS (SELECT CAST(vec_id AS INTEGER) AS cell_id, qv AS ccv
-             FROM q WHERE vec_id < 8),
-    assign AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                 list_dot_product(v.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(v.qv, v.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q v CROSS JOIN cent c)
-      WHERE rk = 1),
-    probes AS (
-      SELECT seed, cell_id FROM (
-        SELECT s.vec_id AS seed, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-                 list_dot_product(s.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(s.qv, s.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q s CROSS JOIN cent c WHERE s.vec_id < 20)
-      WHERE rk <= 3),
+    WITH {_qvecs()},
+    {_IVF_ASSIGN},
+    {_IVF_PROBES},
     cand AS (SELECT DISTINCT p.seed, a.vec_id AS neighbor
              FROM probes p JOIN assign a USING (cell_id)
              WHERE a.vec_id <> p.seed),
-    scored AS (
-      SELECT c.seed, c.neighbor,
-             list_dot_product(qs.qv, qc.qv)
-             / sqrt(list_dot_product(qs.qv, qs.qv) * list_dot_product(qc.qv, qc.qv)) AS score
-      FROM cand c
-      JOIN q qs ON qs.vec_id = c.seed
-      JOIN q qc ON qc.vec_id = c.neighbor)
-    SELECT seed, neighbor, score, rk FROM (
-      SELECT seed, neighbor, score,
-             ROW_NUMBER() OVER (PARTITION BY seed ORDER BY score DESC, neighbor) AS rk
-      FROM scored)
-    WHERE rk <= 5 ORDER BY seed, rk
+    {_RERANK}
     """,
     doc="IVF-ANN with a fully ORACLE-CHECKED pipeline at small config "
     "(8 fixed cells / 3 probes): portable first-K centroids "
@@ -355,45 +487,11 @@ def docs_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(docs).orderBy("doc_a", "doc_b")
 
 
-def _minhash_oracle_sql(max_bucket_size: int | None = None) -> str:
-    """Embed the identical permutation family as a VALUES list so the
-    full shingle → minhash → band-bucket pipeline has an exact SQL twin
-    (md5 base hash, M = 2^31-1 keeps every product within BIGINT).
-    ``max_bucket_size`` defaults to the engine's MAX_BUCKET_DEFAULT —
-    the oracle replays the same oversized-bucket drop (QUALIFY window
-    count) the Spark plan applies."""
-    from ..operators.dedup import MAX_BUCKET_DEFAULT, minhash_params
-
-    if max_bucket_size is None:
-        max_bucket_size = MAX_BUCKET_DEFAULT
-    perms = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(32, 42))
-    )
-    return rf"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE doc_id < 200),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    hx AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS hx FROM sh),
-    perms(i, a, b) AS (VALUES {perms}),
-    mins AS (
-      SELECT doc_id, p.i,
-             MIN((hx % 2147483647 * p.a + p.b) % 2147483647) AS mh
-      FROM hx CROSS JOIN perms p GROUP BY doc_id, p.i),
-    bands_all AS (
-      SELECT doc_id, i // 2 AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-      FROM mins GROUP BY doc_id, i // 2),
-    bands AS (
-      -- mirror the engine's oversized-bucket drop (quadratic guard)
-      SELECT doc_id, band, bucket FROM bands_all
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= {max_bucket_size})
+def _minhash_oracle_sql(max_bucket_size: int = dedup.MAX_BUCKET_DEFAULT) -> str:
+    """Oracle of ``docs_minhash_md5_candidates``: the doc pairs that
+    share a band bucket."""
+    return f"""
+    WITH {_minhash_bands("doc_id < 200", max_bucket_size)}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
     WHERE a.doc_id < b.doc_id
@@ -417,23 +515,9 @@ def docs_minhash_md5_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_ngram_jaccard_pairs",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE doc_id < 30),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM sizes a JOIN sizes b ON a.doc_id < b.doc_id),
-    inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS n_inter
-              FROM pairs p JOIN sh sa ON sa.doc_id = p.doc_a
-                           JOIN sh sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-              GROUP BY p.doc_a, p.doc_b)
+    f"""
+    WITH {_shingles("doc_id < 30")},
+    {_SHINGLE_OVERLAP}
     SELECT i.doc_a, i.doc_b,
            CAST(i.n_inter AS DOUBLE)
            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
@@ -466,23 +550,29 @@ def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash64(docs).orderBy("doc_id")
 
 
-@register(
-    "docs_simhash_md5",
-    r"""
-    WITH toks AS (
+# CTEs toks … sig: each doc's 60-bit SimHash over md5 token hashes —
+# twin of ``dedup.simhash_md5_60``.
+_SIMHASH_SIG = rf"""toks AS (
       SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
       FROM documents WHERE doc_id < 200),
-    h AS (
-      SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
+    h AS (SELECT doc_id, {_md5_int("tok")} AS h FROM toks),
     votes AS (
       SELECT doc_id, bit,
              SUM(CASE WHEN (h >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
       FROM h, (SELECT unnest(range(0, 60)) AS bit) bits
-      GROUP BY doc_id, bit)
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
-                AS BIGINT) AS simhash
-    FROM votes GROUP BY doc_id ORDER BY doc_id
+      GROUP BY doc_id, bit),
+    sig AS (
+      SELECT doc_id,
+             CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
+                  AS BIGINT) AS simhash
+      FROM votes GROUP BY doc_id)"""
+
+
+@register(
+    "docs_simhash_md5",
+    f"""
+    WITH {_SIMHASH_SIG}
+    SELECT doc_id, simhash FROM sig ORDER BY doc_id
     """,
     doc="SimHash with a portable md5-derived 60-bit token hash: the full "
     "bit-vote accumulation is oracle-checked end-to-end (the xxhash64 "
@@ -494,26 +584,11 @@ def docs_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_pairs_oracle_sql() -> str:
-    """Banded-hamming oracle with the bucket cap interpolated from the
-    engine constant (ADVICE r11: a literal 1024 here would silently
-    diverge from the plan if dedup.MAX_BUCKET_DEFAULT ever changed; the
-    minhash oracles already interpolate it via _minhash_oracle_sql)."""
-    return rf"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-      FROM documents WHERE doc_id < 200),
-    h AS (
-      SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-    votes AS (
-      SELECT doc_id, bit,
-             SUM(CASE WHEN (h >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-      FROM h, (SELECT unnest(range(0, 60)) AS bit) bits
-      GROUP BY doc_id, bit),
-    sig AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
-                  AS BIGINT) AS simhash
-      FROM votes GROUP BY doc_id),
+    """Banded-hamming oracle; the bucket cap is interpolated from the
+    engine constant, as in the MinHash oracles, so plan and oracle
+    cannot silently diverge."""
+    return f"""
+    WITH {_SIMHASH_SIG},
     banded_all AS (
       SELECT doc_id, simhash, band, (simhash >> (band * 15)) & 32767 AS chunk
       FROM sig, (SELECT unnest(range(0, 4)) AS band) bands),
@@ -557,7 +632,7 @@ def docs_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "docs_incremental_dedup",
     """
-    -- NULL-text contract (r12 sweep): content dedup is over docs WITH
+    -- NULL-text contract: content dedup is over docs WITH
     -- content, explicit on both sides. Also defuses the classic SQL
     -- trap this sweep exposed: one NULL md5 in the corpus made
     -- `NOT IN (corpus)` three-valued-NULL for EVERY row (0-row output)
@@ -595,7 +670,7 @@ def docs_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "duplicate must both be rejected.",
 )
 def docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-text contract (r12 sweep): content dedup only sees docs with
+    # NULL-text contract: content dedup only sees docs with
     # content (mirrors the oracle's explicit filters; a NULL content_hash
     # would be un-joinable noise in the persisted index)
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -631,7 +706,7 @@ def docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_chunk_windows",
     r"""
     WITH base AS (
-      -- NULL-text contract (r12 sweep): no tokens -> no chunks, stated
+      -- NULL-text contract: no tokens -> no chunks, stated
       -- explicitly on both sides (Spark's greatest(NULL-1, 0) otherwise
       -- emitted one garbage chunk per NULL doc)
       SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -699,11 +774,11 @@ def docs_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_decode_pipeline",
-    """
+    f"""
     WITH m AS (
-      -- NULL-text contract (r12 sweep): no content -> no media row
+      -- NULL-text contract: no content -> no media row
       SELECT doc_id AS media_id,
-             ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
+             {_md5_int("text")} AS h
       FROM documents WHERE doc_id < 100 AND text IS NOT NULL)
     SELECT media_id,
            CAST(h % 1920 + 1 AS INT) AS width,
@@ -751,16 +826,6 @@ def docs_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.quality_scores(docs).select(
         "doc_id", "n_chars_actual", "n_tokens", "avg_token_len", "passes_quality"
     )
-
-
-# deterministic md5-prefix thresholds (operators/sampling.py): hex render
-# of cumulative weights — hardcoded in the SQL so the oracle replays the
-# exact same assignment
-_SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}  # → 'cccc', 'e666'
-_SPLIT_CASE = """
-    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccc' THEN 'train'
-         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'val'
-         ELSE 'test' END"""
 
 
 @register(
@@ -815,21 +880,8 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_train_eval_contamination",
-    rf"""
-    WITH toks AS (
-      -- NULL-text contract (r12 sweep): a NULL doc has NO shingles and is
-      -- absent from the report — DuckDB's greatest() skips NULLs, so
-      -- without the filter it manufactured one ''-shingle per NULL doc
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                  THEN 'train' ELSE 'eval' END AS split
-      FROM documents WHERE text IS NOT NULL),
-    sh AS (
-      SELECT DISTINCT doc_id, split, shingle FROM (
-        SELECT doc_id, split,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
+    f"""
+    WITH {_shingles(split=True)},
     tr AS (SELECT DISTINCT shingle FROM sh WHERE split = 'train'),
     ev AS (SELECT doc_id, shingle FROM sh WHERE split = 'eval')
     SELECT ev.doc_id, COUNT(*) AS n_shingles,
@@ -986,10 +1038,9 @@ def events_per_user_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Dedup health rollup: per source, documents that are redundant "
     "copies (beyond the first of each content group) and the redundancy "
     "rate — the monitoring view over the exact-dedup ladder. Integer "
-    "counts; one IEEE division. Renamed from docs_dup_rate_by_source in "
-    "r11: that name was accidentally reused by the corpus-wide "
-    "(source x lang) variant, which keeps it; this one counts duplicate "
-    "groups WITHIN each source only.",
+    "counts; one IEEE division. Duplicate groups are counted WITHIN each "
+    "source; docs_dup_rate_by_source is the corpus-wide (source x lang) "
+    "variant.",
 )
 def docs_dup_rate_within_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1012,24 +1063,11 @@ def docs_dup_rate_within_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "docs_neardup_clusters",
-    r"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-    inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-              FROM cand c JOIN sh sa ON sa.doc_id = c.doc_a
-                          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-              GROUP BY c.doc_a, c.doc_b),
+# CTEs toks … canon: near-dup clusters — shingle-Jaccard >= 0.6 edges,
+# their transitive closure, canonical = the least member; each clustered
+# doc with its canonical id. Needs WITH RECURSIVE.
+_NEARDUP_CANON = f"""{_shingles()},
+    {_SHINGLE_OVERLAP},
     edges AS (
       SELECT i.doc_a AS a, i.doc_b AS b FROM inter i
       JOIN sizes za ON za.doc_id = i.doc_a
@@ -1041,23 +1079,17 @@ def docs_dup_rate_within_source(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a, b FROM bi
       UNION
       SELECT r.a, p.b FROM reach r JOIN bi p ON p.a = r.b),
-    members AS (SELECT a, b FROM reach UNION SELECT DISTINCT a, a FROM bi)
-    SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS canonical_id
-    FROM members GROUP BY a ORDER BY doc_id
-    """,
-    doc="End-to-end near-dup clustering: co-shingle candidate pairs → "
-    "exact Jaccard ≥ 0.6 verify → connected components → canonical = "
-    "min doc id per cluster (the doc_id → keep mapping a dedup job "
-    "emits). Spark side runs iterative min-label propagation; the "
-    "oracle replays it as a recursive-CTE transitive closure — an "
-    "ORACLE-CHECKED iterative graph algorithm. At scale the candidate "
-    "stage swaps to MinHash-LSH (docs_minhash_lsh_candidates) with "
-    "identical downstream plumbing.",
-)
-def docs_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    members AS (SELECT a, b FROM reach UNION SELECT DISTINCT a, a FROM bi),
+    canon AS (SELECT a AS doc_id, MIN(b) AS canonical_id
+              FROM members GROUP BY a)"""
+
+
+def _neardup_canon(docs: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id): each clustered doc with the least member
+    of its cluster, where pairs that share a shingle and reach shingle
+    Jaccard 0.6 are joined, and clusters are their connected components."""
     from ..operators.traversal import connected_components
 
-    docs = load_table(spark, sf_dir, "documents")
     sh = dedup.shingles(docs)
     cand = (
         sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -1071,23 +1103,36 @@ def docs_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= 0.6)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    cc = connected_components(edges)
-    return cc.select(
+    return connected_components(edges).select(
         F.col("node_id").alias("doc_id"),
         F.col("component").cast("long").alias("canonical_id"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
-    "docs_repetition_stats",
-    r"""
-    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                  FROM documents),
-    words AS (SELECT doc_id, unnest(t) AS g FROM toks),
-    wmax AS (SELECT doc_id, MAX(c) AS max_w FROM
-               (SELECT doc_id, g, COUNT(*) AS c FROM words GROUP BY 1, 2)
-             GROUP BY 1),
-    bi AS (SELECT doc_id,
+    "docs_neardup_clusters",
+    f"""
+    WITH RECURSIVE {_NEARDUP_CANON}
+    SELECT doc_id, CAST(canonical_id AS BIGINT) AS canonical_id
+    FROM canon ORDER BY doc_id
+    """,
+    doc="End-to-end near-dup clustering: co-shingle candidate pairs → "
+    "exact Jaccard ≥ 0.6 verify → connected components → canonical = "
+    "min doc id per cluster (the doc_id → keep mapping a dedup job "
+    "emits). Spark side runs iterative min-label propagation; the "
+    "oracle replays it as a recursive-CTE transitive closure — an "
+    "ORACLE-CHECKED iterative graph algorithm. At scale the candidate "
+    "stage swaps to MinHash-LSH (docs_minhash_lsh_candidates) with "
+    "identical downstream plumbing.",
+)
+def docs_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return _neardup_canon(docs).orderBy("doc_id")
+
+
+# CTEs bi … tstat over CTE toks (doc_id, t): each doc's top bigram count
+# and its trigram total and distinct count (``text.repetition_stats``).
+_GRAM_REPEATS = """bi AS (SELECT doc_id,
                   unnest(list_transform(range(1, len(t)),
                                         i -> array_to_string(t[i:i+1], ' '))) AS g
            FROM toks WHERE len(t) >= 2),
@@ -1099,7 +1144,19 @@ def docs_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          i -> array_to_string(t[i:i+2], ' '))) AS g
             FROM toks WHERE len(t) >= 3),
     tstat AS (SELECT doc_id, COUNT(*) AS n_tri, COUNT(DISTINCT g) AS d_tri
-              FROM tri GROUP BY 1)
+              FROM tri GROUP BY 1)"""
+
+
+@register(
+    "docs_repetition_stats",
+    rf"""
+    WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+                  FROM documents),
+    words AS (SELECT doc_id, unnest(t) AS g FROM toks),
+    wmax AS (SELECT doc_id, MAX(c) AS max_w FROM
+               (SELECT doc_id, g, COUNT(*) AS c FROM words GROUP BY 1, 2)
+             GROUP BY 1),
+    {_GRAM_REPEATS}
     SELECT k.doc_id,
            CAST(len(k.t) AS BIGINT) AS n_tokens,
            CAST(w.max_w AS DOUBLE) / CAST(len(k.t) AS DOUBLE) AS top_word_frac,
@@ -1238,23 +1295,11 @@ def docs_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_filter_pipeline",
-    r"""
+    rf"""
     WITH toks AS (SELECT doc_id, text,
                          string_split_regex(trim(text), '\s+') AS t
                   FROM documents),
-    bi AS (SELECT doc_id,
-                  unnest(list_transform(range(1, len(t)),
-                                        i -> array_to_string(t[i:i+1], ' '))) AS g
-           FROM toks WHERE len(t) >= 2),
-    bmax AS (SELECT doc_id, MAX(c) AS max_b FROM
-               (SELECT doc_id, g, COUNT(*) AS c FROM bi GROUP BY 1, 2)
-             GROUP BY 1),
-    tri AS (SELECT doc_id,
-                   unnest(list_transform(range(1, len(t) - 1),
-                                         i -> array_to_string(t[i:i+2], ' '))) AS g
-            FROM toks WHERE len(t) >= 3),
-    tstat AS (SELECT doc_id, COUNT(*) AS n_tri, COUNT(DISTINCT g) AS d_tri
-              FROM tri GROUP BY 1),
+    {_GRAM_REPEATS},
     m AS (
       SELECT k.doc_id,
              len(k.t) AS n_tokens,
@@ -1353,7 +1398,7 @@ def docs_term_lift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "docs_span_dedup",
     """
-    WITH t AS (-- NULL-text contract (r12 sweep): no content -> no spans
+    WITH t AS (-- NULL-text contract: no content -> no spans
                SELECT doc_id, string_split(text, ' ') AS toks
                FROM documents WHERE text IS NOT NULL),
     b AS (SELECT doc_id, CAST(i AS INT) AS block_idx,
@@ -1402,33 +1447,29 @@ def docs_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.epoch_shuffle(docs, n_shards=8, seed=7).orderBy("shard", "pos")
 
 
-@register(
-    "docs_heavy_hitter_terms",
-    """
+# Oracle of both heavy-hitter plans: terms with frequency > N/32.
+_HEAVY_HITTER_ORACLE = """
     WITH t AS (SELECT unnest(string_split(text, ' ')) AS value FROM documents),
     c AS (SELECT value, COUNT(*) AS exact_count FROM t GROUP BY value),
     tot AS (SELECT SUM(exact_count) AS n FROM c)
     SELECT c.value, c.exact_count
     FROM c, tot WHERE c.exact_count * 32 > tot.n
     ORDER BY exact_count DESC, value
-    """,
+    """
+
+
+@register(
+    "docs_heavy_hitter_terms",
+    _HEAVY_HITTER_ORACLE,
     doc="Heavy hitters over document terms, frequency > N/32. Exact "
-    "one-scan plan (r5, was the two-pass MG pipeline): explode -> "
-    "partial-hash-aggregated wordcount (the exchange carries per-task "
-    "DISTINCT terms — Zipfian token domains are tiny next to the "
-    "corpus, and all JVM-side) -> total from the counted table (never "
-    "a second token scan) -> broadcast threshold filter. The r4 MG "
-    "pipeline paid Arrow transit for every token in the mapInPandas "
-    "partial plus a verify re-scan: 2.39s vs this plan's ~0.6s at sf1 "
-    "(8.6x -> ~2x vs the identical DuckDB oracle). Misra-Gries remains "
-    "the documented path for UNBOUNDED/adversarial key domains where "
-    "the vocabulary itself cannot be shuffled — driver-checked via "
-    "docs_heavy_hitter_mg, bound-tested in test_sketches. sf10 "
-    "root-cause (BASELINE sec 10): 58% of wall is the raw explode "
-    "primitive itself (1.93 of 3.30s; DuckDB's vectorized unnest runs "
-    "the WHOLE query in 0.69s) — an engine-primitive floor: linear, "
-    "partition-parallel, skew-free; the aggregate on top is already "
-    "map-side-combined and vocabulary-sized.",
+    "one-scan plan: explode -> partial-hash-aggregated wordcount (the "
+    "exchange carries per-task DISTINCT terms — Zipfian token domains "
+    "are tiny next to the corpus, and all JVM-side) -> total from the "
+    "counted table (never a second token scan) -> broadcast threshold "
+    "filter. A Misra-Gries pipeline would pay Arrow transit for every "
+    "token; it remains the path for UNBOUNDED key domains where the "
+    "vocabulary itself cannot be shuffled (docs_heavy_hitter_mg). The "
+    "raw explode is the floor: linear, partition-parallel, skew-free.",
     bench=True,
 )
 def docs_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,14 +1484,7 @@ def docs_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_heavy_hitter_mg",
-    """
-    WITH t AS (SELECT unnest(string_split(text, ' ')) AS value FROM documents),
-    c AS (SELECT value, COUNT(*) AS exact_count FROM t GROUP BY value),
-    tot AS (SELECT SUM(exact_count) AS n FROM c)
-    SELECT c.value, c.exact_count
-    FROM c, tot WHERE c.exact_count * 32 > tot.n
-    ORDER BY exact_count DESC, value
-    """,
+    _HEAVY_HITTER_ORACLE,
     doc="Two-pass Misra-Gries heavy hitters (the 100 TB unbounded-domain "
     "path): mapInPandas k-counter partials (<= k rows shuffled per task "
     "regardless of input size) -> merged candidates -> exact verify of "
@@ -1534,46 +1568,15 @@ def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CANON_SPLIT_CASE = _SPLIT_CASE.replace("doc_id", "canonical_id")
-
-
 @register(
     "docs_leakage_safe_split",
-    rf"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-    inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-              FROM cand c JOIN sh sa ON sa.doc_id = c.doc_a
-                          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-              GROUP BY c.doc_a, c.doc_b),
-    edges AS (
-      SELECT i.doc_a AS a, i.doc_b AS b FROM inter i
-      JOIN sizes za ON za.doc_id = i.doc_a
-      JOIN sizes zb ON zb.doc_id = i.doc_b
-      WHERE CAST(i.n_inter AS DOUBLE)
-            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.6),
-    bi AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-    reach(a, b) AS (
-      SELECT a, b FROM bi
-      UNION
-      SELECT r.a, p.b FROM reach r JOIN bi p ON p.a = r.b),
-    members AS (SELECT a, b FROM reach UNION SELECT DISTINCT a, a FROM bi),
-    canon AS (SELECT a AS doc_id, MIN(b) AS canonical_id
-              FROM members GROUP BY a),
+    f"""
+    WITH RECURSIVE {_NEARDUP_CANON},
     assigned AS (
       SELECT d.doc_id,
              CAST(COALESCE(c.canonical_id, d.doc_id) AS BIGINT) AS canonical_id
       FROM documents d LEFT JOIN canon c USING (doc_id))
-    SELECT {_CANON_SPLIT_CASE} AS split,
+    SELECT {_split_case(_SPLIT_CUTS, "test", "canonical_id")} AS split,
            COUNT(*) AS n_docs,
            CAST(COUNT(DISTINCT canonical_id) AS BIGINT) AS n_clusters
     FROM assigned GROUP BY 1 ORDER BY split
@@ -1587,33 +1590,11 @@ _CANON_SPLIT_CASE = _SPLIT_CASE.replace("doc_id", "canonical_id")
 )
 def docs_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sampling
-    from ..operators.traversal import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.shingles(docs)
-    cand = (
-        sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    edges = (
-        dedup.ngram_jaccard(docs, cand)
-        .filter(F.col("jaccard") >= 0.6)
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
-    cc = connected_components(edges)
     assigned = (
         docs.select("doc_id")
-        .join(
-            cc.select(
-                F.col("node_id").alias("doc_id"),
-                F.col("component").cast("long").alias("canonical_id"),
-            ),
-            "doc_id",
-            "left",
-        )
+        .join(_neardup_canon(docs), "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce(F.col("canonical_id"), F.col("doc_id")).alias(
@@ -1735,23 +1716,9 @@ def docs_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_containment_pairs",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE doc_id < 30),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM sizes a JOIN sizes b ON a.doc_id < b.doc_id),
-    inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS n_inter
-              FROM pairs p JOIN sh sa ON sa.doc_id = p.doc_a
-                           JOIN sh sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-              GROUP BY p.doc_a, p.doc_b)
+    f"""
+    WITH {_shingles("doc_id < 30")},
+    {_SHINGLE_OVERLAP}
     SELECT i.doc_a, i.doc_b,
            CAST(i.n_inter AS DOUBLE)
            / CAST(least(za.n_sh, zb.n_sh) AS DOUBLE) AS containment
@@ -1869,10 +1836,9 @@ def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle of label×dims rows) with a single final division per dim — "
     "the nearest-class-mean / cluster-balanced-curation primitive. The "
     "vector payload is oracle-checked EXPLODED to (label, d, value) "
-    "rows: list cells are unhashable in the driver's pandas canon "
-    "(the r04 correctness run failed on it), and double→string "
-    "rendering is not cross-engine stable, so exploded doubles are the only "
-    "payload-exact encoding.",
+    "rows: list cells are unhashable in the driver's pandas canon, and "
+    "double→string rendering is not cross-engine stable, so exploded "
+    "doubles are the only payload-exact encoding.",
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2061,22 +2027,13 @@ def docs_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division left to the consumer keeps the row engine-exact). Spark "
     "builds bigrams ARRAY-SIDE (transform over the token array — "
     "scan-fused, zero shuffle until the count) where the oracle "
-    "self-joins on ordinality; same multiset, Spark plan avoids the "
-    "per-doc join. Total order (count desc, w1, w2) bounds the LIMIT. "
-    "r7 A/B (BASELINE sec 10): the posexplode+LEAD window form wins "
-    "18% at sf10 on local[32] (19.8s vs 24.2s) but shuffles the "
-    "ENTIRE token stream by doc — kept zero-shuffle deliberately: "
-    "local mode underprices shuffles, and at cluster scale the "
-    "struct-ref lambda's per-row CPU is embarrassingly parallel while "
-    "a 100 TB token shuffle is not. r13 (guide §2.4): the prefix "
+    "self-joins on ordinality. A posexplode+LEAD window form runs faster "
+    "in local mode but shuffles the ENTIRE token stream by doc; the "
+    "array form keeps that shuffle off a 100 TB corpus. The prefix "
     "marginal is a SUM window over the pair table partitioned by w1, "
-    "not a second aggregate joined back — the r12 'AQE exchange reuse "
-    "dedupes the explode subtree' claim was FALSE (checkpointing the "
-    "pair table beat the lazy join form 0.525s vs 0.600s at sf0.1, so "
-    "the subtree WAS re-executed); the window form evaluates the "
-    "explode once BY CONSTRUCTION and drops the join outright "
-    "(receipts: sf0.1 0.600→0.483s, "
-    "sf10 interleaved 5.563→5.383s, rows IDENTICAL both scales).",
+    "so the explode is evaluated once by construction (a joined-back "
+    "second aggregate re-executed it). Total order (count desc, w1, w2) "
+    "bounds the LIMIT.",
 )
 def docs_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2087,7 +2044,7 @@ def docs_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
         )
         .select(
-            # size(t) >= 2 guard (r12 NULL/empty-text sweep): Spark's
+            # size(t) >= 2 guard (NULL/empty-text sweep): Spark's
             # sequence(1, 0) is DESCENDING [1, 0], not empty, so a
             # single-token doc crashed the lambda with INVALID_ARRAY_INDEX
             # (same guard as the text.py bigram sites)
@@ -2344,7 +2301,7 @@ def docs_prefix_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_countmin_freq",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT lower(unnest(regexp_split_to_array(trim(text), '\s+'))) AS tok
       FROM documents),
@@ -2354,8 +2311,7 @@ def docs_prefix_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                ORDER BY true_n DESC, tok LIMIT 10),
     cells AS (
       SELECT CAST(r.i AS INT) AS row,
-             CAST(('0x' || substr(md5(CAST(r.i AS VARCHAR) || '|' || tok),
-                                  1, 15))::BIGINT % 256 AS INT) AS cell,
+             CAST({_md5_int("CAST(r.i AS VARCHAR) || '|' || tok")} % 256 AS INT) AS cell,
              COUNT(*) AS cnt
       FROM tf CROSS JOIN range(4) r(i) GROUP BY 1, 2),
     est AS (
@@ -2363,8 +2319,7 @@ def docs_prefix_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM probes p CROSS JOIN range(4) r(i)
       LEFT JOIN cells c
         ON c.row = CAST(r.i AS INT)
-       AND c.cell = CAST(('0x' || substr(md5(CAST(r.i AS VARCHAR) || '|'
-                          || p.tok), 1, 15))::BIGINT % 256 AS INT)
+       AND c.cell = CAST({_md5_int("CAST(r.i AS VARCHAR) || '|' || p.tok")} % 256 AS INT)
       GROUP BY p.tok, p.true_n)
     SELECT tok AS term, true_n, CAST(cm_est AS BIGINT) AS cm_est,
            CAST(cm_est - true_n AS BIGINT) AS overcount
@@ -2411,26 +2366,12 @@ def docs_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_hard_negatives",
     f"""
-    WITH q AS (SELECT seed, slabel, qv FROM (
-                 SELECT vec_id AS seed, label AS slabel,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-                 FROM embeddings WHERE vec_id < 20 AND {_EMB_OK})
-               WHERE list_dot_product(qv, qv) > 0),
-         c AS (SELECT negative, clabel, cv FROM (
-                 SELECT vec_id AS negative, label AS clabel,
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS cv
-                 FROM embeddings WHERE {_EMB_OK})
-               WHERE list_dot_product(cv, cv) > 0),
-         s AS (SELECT seed, negative,
-                      list_dot_product(qv, cv)
-                      / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) AS score
+    WITH {_qvecs("q", "seed", where="vec_id < 20", label="slabel")},
+         {_qvecs("c", "negative", "cv", label="clabel")},
+         s AS (SELECT seed, negative, {_qcos("qv", "cv")} AS score
                FROM q CROSS JOIN c
                WHERE negative <> seed AND clabel <> slabel)
-    SELECT seed, negative, score, rk FROM (
-      SELECT seed, negative, score,
-             ROW_NUMBER() OVER (PARTITION BY seed ORDER BY score DESC, negative) AS rk
-      FROM s)
-    WHERE rk <= 5 ORDER BY seed, rk
+    {_topk_tail("negative")}
     """,
     doc="Hard-negative mining (similarity.hard_negatives): per seed, "
     "the top-5 most-similar embeddings with a DIFFERENT label — the "
@@ -2450,32 +2391,8 @@ def _minhash_incr_oracle_sql() -> str:
     """Incremental twin of ``_minhash_oracle_sql``: the corpus
     (doc_id % 5 <> 0) is bucketed as the INDEX, the new batch
     (doc_id % 5 = 0) buckets join it on (band, bucket)."""
-    from ..operators.dedup import minhash_params
-
-    perms = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(32, 42))
-    )
-    return rf"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    hx AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS hx FROM sh),
-    perms(i, a, b) AS (VALUES {perms}),
-    mins AS (
-      SELECT doc_id, p.i,
-             MIN((hx % 2147483647 * p.a + p.b) % 2147483647) AS mh
-      FROM hx CROSS JOIN perms p GROUP BY doc_id, p.i),
-    bands AS (
-      SELECT doc_id, i // 2 AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-      FROM mins GROUP BY doc_id, i // 2)
+    return f"""
+    WITH {_minhash_bands()}
     SELECT DISTINCT n.doc_id AS new_doc, c.doc_id AS corpus_doc
     FROM bands n JOIN bands c ON n.band = c.band AND n.bucket = c.bucket
     WHERE n.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
@@ -2510,11 +2427,10 @@ def docs_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_bigram_fluency",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                  THEN 'train' ELSE 'eval' END AS split
+             {_TRAIN_EVAL_CASE} AS split
       FROM documents),
     u AS (SELECT doc_id, split, unnest(t) AS tok,
                  generate_subscripts(t, 1) AS ord
@@ -2562,7 +2478,7 @@ def docs_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_bm25_search",
     r"""
     WITH toks AS (
-      -- NULL-text contract (r12 sweep): NULL docs are outside the corpus
+      -- NULL-text contract: NULL docs are outside the corpus
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
       FROM documents WHERE text IS NOT NULL),
     u AS (SELECT doc_id, unnest(t) AS tok FROM toks),
@@ -2636,22 +2552,8 @@ def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_bloom_contamination",
-    r"""
-    WITH toks AS (
-      -- NULL-text contract (r12 sweep): a NULL doc has NO shingles and is
-      -- absent from the report — DuckDB's greatest() skips NULLs, so
-      -- without the filter it manufactured one ''-shingle per NULL doc
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                  THEN 'train' ELSE 'eval' END AS split
-      FROM documents WHERE text IS NOT NULL),
-    sh AS (
-      SELECT DISTINCT doc_id, split, shingle FROM (
-        SELECT doc_id, split,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' ')))
-                 AS shingle
-        FROM toks)),
+    f"""
+    WITH {_shingles(split=True)},
     tr AS (SELECT DISTINCT shingle FROM sh WHERE split = 'train'),
     hp AS (SELECT shingle,
                   ('0x' || substr(md5(shingle), 1 + 7 * i, 7))::BIGINT
@@ -2777,11 +2679,10 @@ def docs_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_nb_lang_classifier",
-    r"""
+    rf"""
     WITH base AS (
       SELECT doc_id, lang, lower(trim(text)) AS t,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                  THEN 'train' ELSE 'eval' END AS split
+             {_TRAIN_EVAL_CASE} AS split
       FROM documents WHERE length(trim(text)) > 0),
     u AS (SELECT doc_id, lang, split,
                  unnest(string_split_regex(t, '\s+')) AS tok
@@ -2853,7 +2754,7 @@ def docs_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_dsir_importance",
-    r"""
+    rf"""
     WITH base AS (
       SELECT doc_id, lang, lower(trim(text)) AS t
       FROM documents WHERE length(trim(text)) > 0),
@@ -2861,7 +2762,7 @@ def docs_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
                  unnest(string_split_regex(t, '\s+')) AS tok
           FROM base),
     ut AS (SELECT doc_id, lang,
-                  ('0x' || substr(md5(tok), 1, 15))::BIGINT % 4096 AS bucket
+                  {_md5_int("tok")} % 4096 AS bucket
            FROM u WHERE tok <> ''),
     st AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS cf_r,
                   CAST(COUNT(*) FILTER (WHERE lang = 'en') AS BIGINT) AS cf_t
@@ -2903,9 +2804,9 @@ def docs_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.dsir_importance(docs)
 
 
-@register(
-    "docs_phrase_search",
-    r"""
+# Oracle of the three phrase-search plans ('table scan'): per doc, the
+# count of consecutive occurrences and the 0-based first position.
+_PHRASE_ORACLE = r"""
     WITH toks AS (
       SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
       FROM documents WHERE length(trim(text)) > 0),
@@ -2917,21 +2818,23 @@ def docs_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
            CAST(hits[1] - 1 AS BIGINT) AS first_pos
     FROM h WHERE len(hits) > 0 ORDER BY doc_id
-    """,
+    """
+
+
+@register(
+    "docs_phrase_search",
+    _PHRASE_ORACLE,
     doc="Exact-phrase retrieval (phrase 'table scan'): docs whose "
     "token stream contains the query tokens CONSECUTIVELY, with "
     "occurrence count and 0-based first position — the positional "
-    "phrase query of classic IR, the retrieval mode bag-of-words "
-    "tf-idf and BM25 cannot express. DEFAULT PLAN (swapped r8, "
-    "VERDICT r7 ask #3): text.phrase_search_postings — coarse rlike "
+    "phrase query of classic IR, which bag-of-words tf-idf and BM25 "
+    "cannot express. Runs text.phrase_search_postings — coarse rlike "
     "superset-gate (codegen, no false negatives) -> posexplode "
     "CANDIDATES ONLY -> filter to the m phrase terms -> m-1 "
-    "(doc, position)-keyed equi-joins, zero interpreted lambdas. "
-    "Measured: 1.1x the DuckDB oracle at sf10 and 0.38x (WINS) at "
-    "sf1, vs 8.8x at sf10 for the zero-shuffle HOF-verify twin "
-    "(docs_phrase_search_hof) whose interpreted-lambda tax grows "
-    "with candidate volume (BASELINE sec 10). Both variants stay "
-    "registered and A/B-measured; the oracle is plan-independent.",
+    "(doc, position)-keyed equi-joins, zero interpreted lambdas, which "
+    "scales with candidate volume where the HOF-verify twin "
+    "(docs_phrase_search_hof) pays an interpreted-lambda tax per "
+    "candidate. The oracle is plan-independent.",
 )
 def docs_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2940,31 +2843,16 @@ def docs_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_phrase_search_hof",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
-    h AS (SELECT doc_id,
-                 list_filter(range(1, len(t)),
-                             i -> t[i] = 'table' AND t[i+1] = 'scan')
-                   AS hits
-          FROM toks WHERE len(t) >= 2)
-    SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
-           CAST(hits[1] - 1 AS BIGINT) AS first_pos
-    FROM h WHERE len(hits) > 0 ORDER BY doc_id
-    """,
+    _PHRASE_ORACLE,
     doc="Exact-phrase retrieval, ZERO-SHUFFLE variant "
     "(text.phrase_search): coarse JVM-regex prefilter (codegen, "
     "strict superset — no false negatives) then the exact array-side "
     "filter(sequence(...)) verify with OVERLAPPING-occurrence "
-    "semantics on candidates only. No shuffle, no explode, no Python "
-    "— embarrassingly parallel at any corpus size, but the verify "
-    "lambda is interpreter-evaluated and its tax grows with candidate "
-    "volume: 8.8x the oracle at sf10 vs 1.1x for the postings plan "
-    "that is now the registered default (docs_phrase_search). Use "
-    "this form when the phrase is rare (few candidates) and the "
-    "doc-position shuffle of the postings joins costs more than the "
-    "lambda; the A/B is in BASELINE sec 10.",
+    "semantics on candidates only. No shuffle, no explode, no Python, "
+    "but the verify lambda is interpreter-evaluated and its cost grows "
+    "with candidate volume. Use this form when the phrase is rare (few "
+    "candidates) and the doc-position shuffle of the postings plan "
+    "(docs_phrase_search) costs more than the lambda.",
 )
 def docs_phrase_search_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -3014,11 +2902,10 @@ def docs_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_ngram_novelty",
-    r"""
+    rf"""
     WITH base AS (
       SELECT doc_id, lower(trim(text)) AS t,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666'
-                  THEN 'train' ELSE 'eval' END AS split
+             {_TRAIN_EVAL_CASE} AS split
       FROM documents WHERE length(trim(text)) > 0),
     tk AS (SELECT doc_id, split, string_split_regex(t, '\s+') AS toks
            FROM base),
@@ -3058,28 +2945,14 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_phrase_search_postings",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0),
-    h AS (SELECT doc_id,
-                 list_filter(range(1, len(t)),
-                             i -> t[i] = 'table' AND t[i+1] = 'scan')
-                   AS hits
-          FROM toks WHERE len(t) >= 2)
-    SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
-           CAST(hits[1] - 1 AS BIGINT) AS first_pos
-    FROM h WHERE len(hits) > 0 ORDER BY doc_id
-    """,
+    _PHRASE_ORACLE,
     doc="Exact-phrase retrieval via POSITIONAL POSTINGS self-joins "
-    "(text.phrase_search_postings) — the MEASURED SCALE PATH for "
-    "phrase queries (BASELINE sec 10): coarse rlike superset-gate "
-    "(codegen, no false negatives) -> posexplode CANDIDATES ONLY -> "
-    "filter to the m phrase terms (the postings an inverted index "
-    "would hand us) -> m-1 (doc, position)-keyed equi-joins — zero "
-    "interpreted lambdas, all codegen. At sf10: 7.0s = 1.1x the "
-    "DuckDB oracle, vs 56.3s/8.8x for the HOF-verify twin "
-    "(docs_phrase_search) whose lambda tax grows with volume.",
+    "(text.phrase_search_postings) — the scale path for phrase queries: "
+    "coarse rlike superset-gate (codegen, no false negatives) -> "
+    "posexplode CANDIDATES ONLY -> filter to the m phrase terms (the "
+    "postings an inverted index would hand us) -> m-1 (doc, "
+    "position)-keyed equi-joins — zero interpreted lambdas, all "
+    "codegen.",
 )
 def docs_phrase_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -3089,29 +2962,11 @@ def docs_phrase_search_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_semdedup",
     f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings WHERE {_EMB_OK})
-          WHERE list_dot_product(qv, qv) > 0),
-    cent AS (SELECT CAST(vec_id AS INTEGER) AS cell_id, qv AS ccv
-             FROM q WHERE vec_id < 8),
-    assign AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                 list_dot_product(v.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(v.qv, v.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q v CROSS JOIN cent c)
-      WHERE rk = 1),
+    WITH {_qvecs()},
+    {_IVF_ASSIGN},
     m AS (SELECT a.vec_id, a.qv, s.cell_id
           FROM q a JOIN assign s USING (vec_id)),
-    p AS (SELECT x.cell_id, x.vec_id AS a, y.vec_id AS b,
-                 list_dot_product(x.qv, y.qv)
-                 / sqrt(list_dot_product(x.qv, x.qv)
-                        * list_dot_product(y.qv, y.qv)) AS score
+    p AS (SELECT x.cell_id, x.vec_id AS a, y.vec_id AS b, {_qcos("x.qv", "y.qv")} AS score
           FROM m x JOIN m y
             ON x.cell_id = y.cell_id AND x.vec_id < y.vec_id),
     f AS (SELECT cell_id, a, b, score,
@@ -3138,30 +2993,11 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_semdedup_greedy",
     f"""
-    WITH RECURSIVE
-    q AS (SELECT vec_id, qv FROM (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings WHERE {_EMB_OK})
-          WHERE list_dot_product(qv, qv) > 0),
-    cent AS (SELECT CAST(vec_id AS INTEGER) AS cell_id, qv AS ccv
-             FROM q WHERE vec_id < 8),
-    assign AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                 list_dot_product(v.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(v.qv, v.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q v CROSS JOIN cent c)
-      WHERE rk = 1),
+    WITH RECURSIVE {_qvecs()},
+    {_IVF_ASSIGN},
     m AS (SELECT a.vec_id, a.qv, s.cell_id
           FROM q a JOIN assign s USING (vec_id)),
-    p AS (SELECT x.cell_id, x.vec_id AS a, y.vec_id AS b,
-                 list_dot_product(x.qv, y.qv)
-                 / sqrt(list_dot_product(x.qv, x.qv)
-                        * list_dot_product(y.qv, y.qv)) AS score
+    p AS (SELECT x.cell_id, x.vec_id AS a, y.vec_id AS b, {_qcos("x.qv", "y.qv")} AS score
           FROM m x JOIN m y
             ON x.cell_id = y.cell_id AND x.vec_id < y.vec_id),
     ed AS (SELECT cell_id, a, b, score FROM p WHERE score >= 0.4),
@@ -3204,18 +3040,17 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY dropped
     """,
     doc="SemDeDup with the PAPER-EXACT sequential-greedy drop rule "
-    "(similarity.semdedup_greedy; Abbas et al. 2023 sec 3, the r7 "
-    "ADVICE chain finding): scan each cluster in ascending id order, "
-    "drop a vector iff a SURVIVING lower-id cell-mate scores >= 0.4 — "
-    "so 'kept' is a true retained representative, and chains (0~1, "
-    "1~2 >= t, 0~2 < t) keep 2 where the one-pass emb_semdedup "
-    "over-drops it. Spark: the shared cell-gated candidate stage "
-    "(broadcast assign + cell-keyed pair join, JVM-side scores) feeds "
-    "one applyInPandas per cell replaying the paper's sequential scan "
-    "over the BOUNDED per-cell edge list (the recursion is inherently "
-    "sequential within a cell; cells are independent). Oracle: the "
-    "same greedy as a recursive CTE stepping cell-rank with a kept_ids "
-    "list accumulator — the full semantics replayed in SQL.",
+    "(similarity.semdedup_greedy; Abbas et al. 2023 sec 3): scan each "
+    "cluster in ascending id order, drop a vector iff a SURVIVING "
+    "lower-id cell-mate scores >= 0.4 — so 'kept' is a true retained "
+    "representative, and chains (0~1, 1~2 >= t, 0~2 < t) keep 2 where "
+    "the one-pass emb_semdedup over-drops it. Spark: the shared "
+    "cell-gated candidate stage (broadcast assign + cell-keyed pair "
+    "join, JVM-side scores) feeds one applyInPandas per cell replaying "
+    "the paper's sequential scan over the BOUNDED per-cell edge list "
+    "(the recursion is inherently sequential within a cell; cells are "
+    "independent). Oracle: the same greedy as a recursive CTE stepping "
+    "cell-rank with a kept_ids list accumulator.",
 )
 def emb_semdedup_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3227,54 +3062,10 @@ def emb_semdedup_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_pq_fixed_top5",
     f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings WHERE {_EMB_OK})
-          WHERE list_dot_product(qv, qv) > 0),
-    subs AS (SELECT unnest(generate_series(0, 7)) AS sub_id),
-    sub AS (SELECT q.vec_id, s.sub_id,
-                   qv[s.sub_id * 8 + 1 : s.sub_id * 8 + 8] AS sv
-            FROM q CROSS JOIN subs s),
-    cb AS (SELECT sub_id, CAST(vec_id AS INT) AS code, sv AS cv
-           FROM sub WHERE vec_id < 16),
-    enc AS (SELECT vec_id, sub_id, code FROM (
-        SELECT v.vec_id, v.sub_id, c.code,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.sub_id ORDER BY
-                 CAST(list_dot_product(v.sv, v.sv)
-                      - 2 * list_dot_product(v.sv, c.cv)
-                      + list_dot_product(c.cv, c.cv) AS BIGINT),
-                 c.code) AS rk
-        FROM sub v JOIN cb c USING (sub_id))
-      WHERE rk = 1),
-    lut AS (SELECT s.vec_id AS seed, s.sub_id, c.code,
-                   CAST(list_dot_product(s.sv, s.sv)
-                        - 2 * list_dot_product(s.sv, c.cv)
-                        + list_dot_product(c.cv, c.cv) AS BIGINT) AS ldist
-            FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 20),
-    adc AS (SELECT l.seed, e.vec_id AS neighbor,
-                   CAST(SUM(l.ldist) AS BIGINT) AS adc
-            FROM enc e JOIN lut l ON e.sub_id = l.sub_id AND e.code = l.code
-            WHERE e.vec_id <> l.seed
-            GROUP BY l.seed, e.vec_id),
-    cand AS (SELECT seed, neighbor FROM (
-        SELECT seed, neighbor,
-               ROW_NUMBER() OVER (PARTITION BY seed
-                                  ORDER BY adc, neighbor) AS crk
-        FROM adc) WHERE crk <= 20),
-    scored AS (SELECT c.seed, c.neighbor,
-                      list_dot_product(a.qv, b.qv)
-                      / sqrt(list_dot_product(a.qv, a.qv)
-                             * list_dot_product(b.qv, b.qv)) AS score
-               FROM cand c
-               JOIN q a ON a.vec_id = c.seed
-               JOIN q b ON b.vec_id = c.neighbor)
-    SELECT seed, neighbor, score, rk FROM (
-      SELECT seed, neighbor, score,
-             ROW_NUMBER() OVER (PARTITION BY seed
-                                ORDER BY score DESC, neighbor) AS rk
-      FROM scored)
-    WHERE rk <= 5 ORDER BY seed, rk
+    WITH {_qvecs()},
+    {_PQ_FIXED},
+    {_adc_cut("JOIN lut l ON e.sub_id = l.sub_id AND e.code = l.code")},
+    {_RERANK}
     """,
     doc="PORTABLE product-quantization ANN (similarity."
     "pq_fixed_ann_topk): fixed integer codebook (subvectors of the "
@@ -3335,94 +3126,34 @@ def ann_pq_fixed_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one span with exact boundaries, no suffix array materialized. "
     "Plan: k-grams off ONE per-doc sort; corpus-wide occurrence count "
     "as a map-side-combinable groupBy over 16-byte gram digests + "
-    "digest-keyed LEFT SEMI join-back (r8: replaced the unbounded "
-    "gram-window — partial aggregation absorbs hot stopword-run grams "
-    "before the shuffle, AQE skew-join splits the join); island merge "
+    "digest-keyed LEFT SEMI join-back (partial aggregation absorbs hot "
+    "stopword-run grams before the shuffle, where an unbounded gram "
+    "window would not; AQE skew-join splits the join); island merge "
     "= one doc-keyed window whose exchange the final per-doc rollup "
-    "reuses. 4 shuffles, all codegen.",
+    "reuses.",
 )
 def docs_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.exact_substr_spans(docs, k=4, min_count=2).orderBy("doc_id")
 
 
-@register(
-    "ann_ivf_pq_fixed_top5",
-    f"""
-    WITH q AS (SELECT vec_id, qv FROM (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-            FROM embeddings WHERE {_EMB_OK})
-          WHERE list_dot_product(qv, qv) > 0),
-    cent AS (SELECT CAST(vec_id AS INTEGER) AS cell_id, qv AS ccv
-             FROM q WHERE vec_id < 8),
-    assign AS (
-      SELECT vec_id, cell_id FROM (
-        SELECT v.vec_id, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-                 list_dot_product(v.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(v.qv, v.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q v CROSS JOIN cent c)
-      WHERE rk = 1),
-    probes AS (
-      SELECT seed, cell_id FROM (
-        SELECT s.vec_id AS seed, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-                 list_dot_product(s.qv, c.ccv)
-                 / sqrt(CAST(list_dot_product(s.qv, s.qv) AS DOUBLE)
-                        * CAST(list_dot_product(c.ccv, c.ccv) AS DOUBLE)) DESC,
-                 c.cell_id) AS rk
-        FROM q s CROSS JOIN cent c WHERE s.vec_id < 20)
-      WHERE rk <= 3),
-    subs AS (SELECT unnest(generate_series(0, 7)) AS sub_id),
-    sub AS (SELECT q.vec_id, s.sub_id,
-                   qv[s.sub_id * 8 + 1 : s.sub_id * 8 + 8] AS sv
-            FROM q CROSS JOIN subs s),
-    cb AS (SELECT sub_id, CAST(vec_id AS INT) AS code, sv AS cv
-           FROM sub WHERE vec_id < 16),
-    enc AS (SELECT vec_id, sub_id, code FROM (
-        SELECT v.vec_id, v.sub_id, c.code,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.sub_id ORDER BY
-                 CAST(list_dot_product(v.sv, v.sv)
-                      - 2 * list_dot_product(v.sv, c.cv)
-                      + list_dot_product(c.cv, c.cv) AS BIGINT),
-                 c.code) AS rk
-        FROM sub v JOIN cb c USING (sub_id))
-      WHERE rk = 1),
-    lut AS (SELECT s.vec_id AS seed, s.sub_id, c.code,
-                   CAST(list_dot_product(s.sv, s.sv)
-                        - 2 * list_dot_product(s.sv, c.cv)
-                        + list_dot_product(c.cv, c.cv) AS BIGINT) AS ldist
-            FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 20),
-    adc AS (SELECT l.seed, e.vec_id AS neighbor,
-                   CAST(SUM(l.ldist) AS BIGINT) AS adc
-            FROM enc e
+# the LUT rows of each code row's probed seeds: its cell is one of theirs
+_PROBED_LUT = """
             JOIN assign a ON a.vec_id = e.vec_id
             JOIN probes p ON p.cell_id = a.cell_id
             JOIN lut l ON l.seed = p.seed
-                      AND l.sub_id = e.sub_id AND l.code = e.code
-            WHERE e.vec_id <> l.seed
-            GROUP BY l.seed, e.vec_id),
-    cand AS (SELECT seed, neighbor FROM (
-        SELECT seed, neighbor,
-               ROW_NUMBER() OVER (PARTITION BY seed
-                                  ORDER BY adc, neighbor) AS crk
-        FROM adc) WHERE crk <= 20),
-    scored AS (SELECT c.seed, c.neighbor,
-                      list_dot_product(a.qv, b.qv)
-                      / sqrt(list_dot_product(a.qv, a.qv)
-                             * list_dot_product(b.qv, b.qv)) AS score
-               FROM cand c
-               JOIN q a ON a.vec_id = c.seed
-               JOIN q b ON b.vec_id = c.neighbor)
-    SELECT seed, neighbor, score, rk FROM (
-      SELECT seed, neighbor, score,
-             ROW_NUMBER() OVER (PARTITION BY seed
-                                ORDER BY score DESC, neighbor) AS rk
-      FROM scored)
-    WHERE rk <= 5 ORDER BY seed, rk
+                      AND l.sub_id = e.sub_id AND l.code = e.code"""
+
+
+@register(
+    "ann_ivf_pq_fixed_top5",
+    f"""
+    WITH {_qvecs()},
+    {_IVF_ASSIGN},
+    {_IVF_PROBES},
+    {_PQ_FIXED},
+    {_adc_cut(_PROBED_LUT)},
+    {_RERANK}
     """,
     doc="PORTABLE IVF-PQ (similarity.ivf_pq_fixed_ann_topk): the full "
     "production ANN stack — coarse cell routing (fixed centroids, "
@@ -3516,15 +3247,12 @@ def _gini_oracle_sql() -> str:
     "for low-diversity/spam screening (keyboard mash, repeated-char "
     "padding, template boilerplate score near 0; natural prose high). "
     "Entropy needs log (not bit-stable cross-engine); Gini is integer "
-    "arithmetic + ONE IEEE divide, hash-exact by construction. Plan: "
-    "ONE Arrow mapInPandas counting pass (C-speed str.count per "
-    "letter) fused onto the scan — ZERO shuffle/explode at any corpus "
-    "size; the r8 first rendering (26 Catalyst length/replace pairs, "
-    "pure codegen) allocated a document copy per letter and measured "
-    "76 s vs DuckDB's 5.3 s at sf10, so the batch form replaced it "
-    "(BASELINE sec 11). The oracle keeps the replace expression tree "
-    "(no char-unnest, whose grapheme semantics differ across "
-    "engines); both count the same code points.",
+    "arithmetic + ONE IEEE divide. Plan: ONE Arrow mapInPandas counting "
+    "pass (C-speed str.count per letter) fused onto the scan — zero "
+    "shuffle; 26 Catalyst length/replace pairs would copy the document "
+    "once per letter. The oracle keeps the replace expression tree "
+    "(no char-unnest, whose grapheme semantics differ across engines); "
+    "both count the same code points.",
 )
 def docs_char_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -3577,13 +3305,11 @@ def docs_char_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     "word-count bounds, mean-word-length bounds, symbol ratio, bullet/"
     "ellipsis line fractions, alpha-word fraction, stopword presence. "
     "Every rule an EXACT INTEGER comparison (3*n_words <= word_chars "
-    "instead of mean >= 3.0 — no float thresholds, hash-exact). Plan: "
-    "ONE Arrow mapInPandas pass computing every signal with C-speed "
-    "string primitives, tokenization parity pinned (re.ASCII \\\\s == "
-    "Java \\\\s, JVM-side lower) — zero shuffle, scan-fused. Third "
-    "rendering, each measured at sf10: list_filter lambdas 52.9 s -> "
-    "JVM regexp_count 21.9 s (the JVM regex engine is ~4x RE2) -> "
-    "C-speed batch 12.6 s vs DuckDB 4.1 s (BASELINE sec 11).",
+    "instead of mean >= 3.0 — no float thresholds). Plan: ONE Arrow "
+    "mapInPandas pass computing every signal with C-speed string "
+    "primitives, tokenization parity pinned (re.ASCII \\\\s == Java "
+    "\\\\s, JVM-side lower) — zero shuffle, scan-fused; per-rule "
+    "list_filter lambdas or JVM regexes are several times slower.",
 )
 def docs_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -3665,11 +3391,7 @@ def docs_langid_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_norm_outliers",
     f"""
-    WITH n AS (SELECT vec_id,
-                      list_dot_product(
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)),
-                        list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))
-                      ) AS norm2
+    WITH n AS (SELECT vec_id, list_dot_product({_QV}, {_QV}) AS norm2
                FROM embeddings WHERE {_EMB_OK}),
     q AS (SELECT quantile_cont(norm2, 0.25) AS q1,
                  quantile_cont(norm2, 0.75) AS q3 FROM n),
@@ -3698,39 +3420,9 @@ def emb_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_calibration_oracle_sql() -> str:
     """Extends ``_minhash_oracle_sql``'s pipeline past candidates:
     per-pair signature-component match count (the MinHash estimate)
-    next to exact shingle Jaccard and the signed error. Replays the
-    same oversized-bucket drop as the engine (QUALIFY)."""
-    from ..operators.dedup import MAX_BUCKET_DEFAULT, minhash_params
-
-    perms = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(minhash_params(32, 42))
-    )
-    max_bucket_size = MAX_BUCKET_DEFAULT
-    return rf"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      FROM documents WHERE doc_id < 200),
-    sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(t) - 5, 0) + 2),
-                                     i -> array_to_string(t[i:i+4], ' '))) AS shingle
-        FROM toks)),
-    hx AS (
-      SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS hx FROM sh),
-    perms(i, a, b) AS (VALUES {perms}),
-    mins AS (
-      SELECT doc_id, p.i,
-             MIN((hx % 2147483647 * p.a + p.b) % 2147483647) AS mh
-      FROM hx CROSS JOIN perms p GROUP BY doc_id, p.i),
-    bands_all AS (
-      SELECT doc_id, i // 2 AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-      FROM mins GROUP BY doc_id, i // 2),
-    bands AS (
-      -- mirror the engine's oversized-bucket drop (quadratic guard)
-      SELECT doc_id, band, bucket FROM bands_all
-      QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= {max_bucket_size}),
+    next to exact shingle Jaccard and the signed error."""
+    return f"""
+    WITH {_minhash_bands("doc_id < 200", dedup.MAX_BUCKET_DEFAULT)},
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -3743,27 +3435,20 @@ def _minhash_calibration_oracle_sql() -> str:
       JOIN mins x ON x.doc_id = c.doc_a
       JOIN mins y ON y.doc_id = c.doc_b AND y.i = x.i
       GROUP BY c.doc_a, c.doc_b),
-    szs AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-            FROM sh GROUP BY doc_id),
-    intr AS (
-      SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-      GROUP BY c.doc_a, c.doc_b)
+    {_SHINGLE_OVERLAP}
     SELECT m.doc_a, m.doc_b, m.n_match,
            CAST(m.n_match AS DOUBLE) / 32 AS est_sim,
            COALESCE(i.n_inter, 0) AS n_inter,
-           CAST(sa.n + sb.n - COALESCE(i.n_inter, 0) AS BIGINT) AS n_union,
+           CAST(sa.n_sh + sb.n_sh - COALESCE(i.n_inter, 0) AS BIGINT) AS n_union,
            CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-             / (sa.n + sb.n - COALESCE(i.n_inter, 0)) AS jaccard,
+             / (sa.n_sh + sb.n_sh - COALESCE(i.n_inter, 0)) AS jaccard,
            CAST(m.n_match AS DOUBLE) / 32
              - CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
-               / (sa.n + sb.n - COALESCE(i.n_inter, 0)) AS err
+               / (sa.n_sh + sb.n_sh - COALESCE(i.n_inter, 0)) AS err
     FROM mtch m
-    LEFT JOIN intr i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
-    JOIN szs sa ON sa.doc_id = m.doc_a
-    JOIN szs sb ON sb.doc_id = m.doc_b
+    LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
+    JOIN sizes sa ON sa.doc_id = m.doc_a
+    JOIN sizes sb ON sb.doc_id = m.doc_b
     ORDER BY m.doc_a, m.doc_b
     """
 
@@ -3907,7 +3592,7 @@ def _rrf_fusion_oracle_sql() -> str:
     b = _bm25_ranked_cte(("merge", "window", "batch"), "b", 50)
     return rf"""
     WITH toks AS (
-      -- NULL-text contract (r12 sweep): NULL docs are outside the corpus
+      -- NULL-text contract: NULL docs are outside the corpus
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
       FROM documents WHERE text IS NOT NULL),
     u AS (SELECT doc_id, unnest(t) AS tok FROM toks),{a},{b}

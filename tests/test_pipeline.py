@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from neo4j_enterprise_spark.catalog import load_table
@@ -599,6 +600,9 @@ def test_cosine_topk_zero_norm_vectors_excluded(spark):
     assert 3 not in by_seed.get(1, set()), "zero-norm corpus row ranked"
     assert 3 not in by_seed, "zero-norm seed produced rows"
     assert by_seed[1] == {2, 4}
+    # no searchable seed at all: no rows, not an error
+    only_zero = emb.filter(F.col("vec_id") == 3)
+    assert similarity.cosine_topk_bruteforce(emb, only_zero, k=4).collect() == []
 
 
 def test_bruteforce_modal_dims_inference(spark):
@@ -645,6 +649,8 @@ def test_hard_negatives_zero_norm_excluded(spark):
     got = similarity.hard_negatives(emb, seeds, k=4).collect()
     negs = {r["negative"] for r in got}
     assert negs == {2, 4}, negs
+    only_zero = emb.filter(F.col("vec_id") == 3)
+    assert similarity.hard_negatives(emb, only_zero, k=4).collect() == []
 
 
 def test_bigram_fluency_hand_corpus(spark):
@@ -1808,3 +1814,101 @@ def test_embedding_guard_edge_semantics(spark):
     # unsearchable: zero-norm (true zero AND sub-quantization) goes;
     # 0.0005 * 1000 = 0.5 rounds half-away-from-zero to 1 -> kept
     assert ids(drop_unsearchable(df, dims=2)) == [0, 10]
+
+
+def _shingle_twin(spark):
+    from neo4j_enterprise_spark.plans.pipeline import _shingles
+
+    docs = spark.createDataFrame(
+        [
+            (0, None),
+            (1, ""),
+            (2, "   "),
+            (3, "solo"),
+            (4, "a b c d e"),
+            (5, "a\tb  c\t\td e   f"),
+            (6, "  lead and trail  "),
+            (7, "x y z w v u t s x y z w"),
+        ],
+        "doc_id long, text string",
+    )
+    sql = f"WITH {_shingles()} SELECT doc_id, shingle FROM sh"
+    return docs, "documents", sql, dedup.shingles(docs)
+
+
+def _edge_vectors(spark):
+    """64-dim vectors: the zero vector, one that quantizes to zero,
+    exact ±0.0005 ties, negative components and mixed-sign patterns."""
+    rows = [
+        (0, [0.0] * 64),
+        (1, [0.0004, -0.0004] * 32),
+        (2, [0.0005, -0.0005] * 32),
+        (3, [-0.3, -0.7, 0.2, -0.0625] * 16),
+        (4, [0.0625, -0.1875, 0.0005, -0.9] * 16),
+    ] + [
+        (i, [((i * 7 + d * 13) % 19 - 9) / 8.0 + (-0.0005 if d % 3 else 0.0005)
+             for d in range(64)])
+        for i in range(5, 22)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _cosine_twin(spark):
+    from neo4j_enterprise_spark.plans.pipeline import _qcos, _qvecs
+
+    emb = _edge_vectors(spark)
+    q = similarity._quantized(similarity.drop_unsearchable(emb))
+    a = q.select(F.col("vec_id").alias("a"), F.col("qv").alias("qa"), F.col("qn").alias("na"))
+    b = q.select(F.col("vec_id").alias("b"), F.col("qv").alias("qb"), F.col("qn").alias("nb"))
+    plan = a.join(b, F.col("a") < F.col("b")).select(
+        "a", "b", similarity._cosine("qa", "qb", "na", "nb")
+    )
+    sql = (
+        f"WITH {_qvecs()} SELECT a.vec_id, b.vec_id, {_qcos('a.qv', 'b.qv')} "
+        "FROM q a JOIN q b ON a.vec_id < b.vec_id"
+    )
+    return emb, "embeddings", sql, plan
+
+
+def _pq_codes_twin(spark):
+    from neo4j_enterprise_spark.plans.pipeline import _PQ_FIXED, _qvecs
+
+    emb = _edge_vectors(spark)
+    ok = similarity.drop_unsearchable(emb, dims=64)
+    codes, lut = similarity._pq_fixed_codes(
+        ok, ok.filter(F.col("vec_id") < 20), m=8, codes_k=16, dims=64
+    )
+    plan = codes.select(
+        F.lit("enc").alias("t"), "vec_id", "sub_id", "code", F.lit(None).cast("long")
+    ).unionAll(lut.select(F.lit("lut"), "seed", "sub_id", "code", "ldist"))
+    sql = (
+        f"WITH {_qvecs()}, {_PQ_FIXED} "
+        "SELECT 'enc', vec_id, sub_id, code, NULL FROM enc "
+        "UNION ALL SELECT 'lut', seed, sub_id, code, ldist FROM lut"
+    )
+    return emb, "embeddings", sql, plan
+
+
+@pytest.mark.parametrize(
+    "twin", [_shingle_twin, _cosine_twin, _pq_codes_twin],
+    ids=["shingles", "quantized_cosine", "pq_fixed_codes"],
+)
+def test_oracle_builder_matches_spark_helper(spark, twin):
+    """Each shared oracle SQL fragment, run in DuckDB, returns exactly
+    the rows of the Spark helper it mirrors on the same edge-case
+    frame."""
+    import duckdb
+    import pandas as pd
+
+    frame, table, sql, plan = twin(spark)
+    rows = frame.collect()
+    pdf = pd.DataFrame(
+        {c: [r[c] if not isinstance(r[c], list) else [float(x) for x in r[c]]
+             for r in rows] for c in frame.columns}
+    )
+    con = duckdb.connect()
+    con.register(table, pdf)
+    got = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    want = sorted(tuple(r) for r in plan.collect())
+    assert got == want
+    assert want
