@@ -33,7 +33,7 @@ Scale notes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .superstep import cut, supersteps
@@ -518,12 +518,17 @@ def _brandes(edges: DataFrame, sources: DataFrame | None, max_depth: int) -> Dat
     share = F.lit(1) if exact else F.col("sig_u").cast("double") / F.col("sig_w")
     dmax = seen["depth"]
 
+    def total(c: Column) -> Column:
+        # doubles are summed in DECIMAL and cast back once, so the sum does
+        # not depend on the order rows reach the aggregate
+        return F.sum(c) if exact else F.sum(c.cast("decimal(38,18)")).cast("double")
+
     def accumulate(delta: DataFrame, i: int) -> DataFrame:
         contrib = (
             dag.filter(F.col("du") == dmax - i)
             .join(delta.select("s", F.col("v").alias("w"), "delta"), ["s", "w"])
             .groupBy("s", F.col("u").alias("v"))
-            .agg(F.sum(share * (F.lit(1) + F.col("delta"))).alias("inc"))
+            .agg(total(share * (F.lit(1) + F.col("delta"))).alias("inc"))
         )
         return delta.join(contrib, ["s", "v"], "left").select(
             "s", "v", (F.col("delta") + F.coalesce(F.col("inc"), zero)).alias("delta")
@@ -535,7 +540,7 @@ def _brandes(edges: DataFrame, sources: DataFrame | None, max_depth: int) -> Dat
     return (
         delta.filter(F.col("s") != F.col("v"))
         .groupBy(F.col("v").alias("node_id"))
-        .agg(F.sum("delta").alias("bc"))
+        .agg(total(F.col("delta")).alias("bc"))
     )
 
 
@@ -549,9 +554,10 @@ def betweenness_sampled(
     undirected. Returns (node_id, bc) — the exact Brandes contribution
     summed over the given sources (sample all nodes for exact BC; a
     uniform source sample is the standard unbiased estimator at scale).
-    Float ratios appear only here (like pagerank, the reduction order is
-    engine-internal → rows-only oracle; the python-reference property
-    test pins values).
+    Float ratios appear only here: each σ(v)/σ(w) share is one IEEE
+    division, and the dependency and ``bc`` sums run in DECIMAL, so the
+    rows do not depend on the partitioning. No oracle replays the float
+    ratios (rows-only); the python-reference property test pins values.
     """
     return _brandes(edges, sources.select(F.col("source").alias("s")), max_depth)
 

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.model import NO_POINTER, PropertyGraph
+from .superstep import cut
 from .validation import _violation
 
 
@@ -109,7 +110,7 @@ def check_relationships(g: PropertyGraph) -> DataFrame:
     """RELATIONSHIP store checks: label validity (J2/P6), endpoint
     integrity (J4), chain pointer symmetry (J3).
 
-    THREE passes over the store (r13, guide §2.4), down from five:
+    THREE passes over the store:
     - both label rules in one scan — left join to the broadcast
       dictionary, when-chain picks illegalLabel (type_id < 0, never a
       dictionary hit) vs labelNotInUse (type_id >= 0, no live entry);
@@ -161,12 +162,10 @@ def check_nodes(g: PropertyGraph) -> DataFrame:
     this node, and be first in its chain (`NodeRecordCheck.java:39-107`);
     W1 first-in-chain = null prev pointer on the matching endpoint.
 
-    ONE pass (r13, guide §2.4): the three rules are mutually exclusive
-    per node (missing / foreign / not-first), so they fold into one
-    when-chain over a single node⋈rel join instead of three union
-    branches that each re-scan both stores and re-execute the same join
-    (the r12 plan: 6 store scans, 3 joins, 3 broadcast builds for one
-    logical lookup)."""
+    ONE pass: the three rules are mutually exclusive per node (missing /
+    foreign / not-first), so they fold into one when-chain over a single
+    node⋈rel join instead of three union branches that would each
+    re-scan both stores and re-execute the same join."""
     nodes = g.nodes.filter(F.col("in_use"))
     has_rel = nodes.filter(F.col("next_rel") != NO_POINTER)
     rel = g.relationships.filter(F.col("in_use")).select(
@@ -186,8 +185,8 @@ def check_nodes(g: PropertyGraph) -> DataFrame:
         F.when(F.col("r_id").isNull(), F.lit("relationshipNotInUse"))
         .when(~involves, F.lit("relationshipForOtherNode"))
         # `involves &` kept explicitly: with a NULL endpoint `involves`
-        # is NULL (neither branch above fires) and the r12 branch filter
-        # `involves & (...)` emitted nothing — preserve that exactly.
+        # is NULL (neither branch above fires), and such a node is not
+        # reported as not-first either.
         .when(involves & (prev_here != NO_POINTER), F.lit("relationshipNotFirstInChain"))
     )
     return (
@@ -219,11 +218,10 @@ def check_primitive_first_property(g: PropertyGraph) -> DataFrame:
     """J5: owner.next_prop must exist, be in use, be first in chain
     (prev == -1), and claim this owner (`PrimitiveRecordCheck.java:60-101`).
 
-    ONE pass (r13, guide §2.4): the r12 shape executed the owners⋈props
-    join THREE times (one union branch per rule). NotFirstInChain and
+    ONE pass over one owners⋈props join. NotFirstInChain and
     ForOtherOwner can co-occur on one record, so instead of a when-chain
     the applicable rules are exploded from a per-row array (null entries
-    filtered) — same row multiset, one join."""
+    filtered): the row multiset of one union branch per rule, one join."""
     owners = _owners(g).filter(F.col("next_prop") != NO_POINTER)
     props = g.properties.filter(F.col("in_use")).select(
         F.col("id").alias("p_id"),
@@ -356,12 +354,12 @@ def check_ownership(g: PropertyGraph) -> DataFrame:
     - multipleOwners: a head referenced by >1 primitives (group count).
     - orphanChain: a live chain head no primitive references (anti-join).
 
-    ONE join (r13, guide §2.4): both rules read off a single full-outer
-    join of the per-pointer claim counts against the live chain heads —
-    the r12 shape shuffled the 2-records-per-primitive owner set twice
-    (once for the group count, once more, ungrouped, as the anti-join
-    build side). The claims side arrives already partitioned by the
-    join key, so its exchange is reused.
+    ONE join: both rules read off a single full-outer join of the
+    per-pointer claim counts against the live chain heads, so the
+    2-records-per-primitive owner set is shuffled once, not once for the
+    group count and again as an anti-join build side. The claims side
+    arrives already partitioned by the join key, so its exchange is
+    reused.
     """
     owners = _owners(g).filter(F.col("next_prop") != NO_POINTER)
     claims = owners.groupBy("next_prop").agg(F.count("*").alias("n_owners"))
@@ -427,9 +425,8 @@ def check_graph_props(g: PropertyGraph) -> DataFrame:
         empty = g.properties.limit(0)
         return _violation(empty, "NEO_STORE", "never", "id", F.col("id"))
     live = g.graph_props.filter(F.col("in_use"))
-    # chain head cardinality: != 1 head on a non-empty chain is corruption.
-    # r13 (guide §2.4): both counts in ONE aggregate over one scan — the
-    # r12 shape ran two aggregation jobs and cross-joined the results.
+    # chain head cardinality: != 1 head on a non-empty chain is corruption;
+    # both counts come from ONE aggregate over one scan.
     stats = live.agg(
         F.count("*").alias("m"),
         F.count(F.when(F.col("prev_prop") == NO_POINTER, F.lit(1))).alias("n"),
@@ -441,9 +438,9 @@ def check_graph_props(g: PropertyGraph) -> DataFrame:
         F.col("n").cast("string").alias("detail"),
     )
     # graph ownership + key validity; the keyNotInUse guard here is
-    # __key_live.isNull() with NO key_id >= 0 pre-filter, exactly
-    # mirroring the r12 left_anti (a NULL key_id never matches the
-    # dictionary and IS reported, unlike the property-store rule).
+    # __key_live.isNull() with NO key_id >= 0 pre-filter: a NULL key_id
+    # never matches the dictionary and IS reported, unlike the
+    # property-store rule.
     key_rules = [
         _entry(
             (F.col("owner_kind") != "graph") | (F.col("owner_id") != 0),
@@ -511,7 +508,7 @@ def validate(g: PropertyGraph) -> DataFrame:
     family is one Catalyst plan and AQE sizes the shuffles — both knobs
     dissolve.
 
-    Each family's violations are materialized via ``localCheckpoint``
+    Each family's violations are materialized by ``superstep.cut``
     before the union. This bounds plan size: the all-in-one union (~35
     branches sharing deep window subtrees) chokes the optimizer at
     scale, while the per-family plans each run in seconds — the same
@@ -528,6 +525,6 @@ def validate(g: PropertyGraph) -> DataFrame:
     builders = list(_FAMILY_BUILDERS.values())
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
         families = list(
-            pool.map(lambda build: build(g).localCheckpoint(eager=True), builders)
+            pool.map(lambda build: cut(build(g))[0], builders)
         )
     return reduce(DataFrame.unionByName, families)

@@ -21,6 +21,7 @@ _LANG_MARKERS = {
 
 
 from ..functions.text import n_tokens as _n_tokens
+from .superstep import cut, release
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -57,8 +58,8 @@ def language_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     counts exactly the tokens equal to a marker (markers are distinct,
     a token matches at most once), identical to the original split +
     per-marker ``list_filter`` form, which paid the interpreted-lambda
-    tax on every token x 12 markers (51.5 s vs DuckDB 3.2 s at sf10 —
-    BASELINE sec 11). Case-sensitive, as before (tokens not lowered).
+    tax on every token x 12 markers (51.5 s vs DuckDB 3.2 s at sf10).
+    Case-sensitive, as before (tokens not lowered).
     """
     t = F.trim(F.col(text_col))
     cols = []
@@ -327,7 +328,7 @@ def chunk_documents(
     n_chunks = F.floor((n - 1).cast("double") / stride).cast("int") + 1
     starts = F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
     chunks = F.transform(starts, lambda i: F.slice(tokens, i * stride + 1, window))
-    # NULL-text contract (r12 sweep): no tokens -> no chunks. Without the
+    # NULL-text contract: no tokens -> no chunks. Without the
     # filter, greatest(NULL - 1, 0) SKIPS the NULL and yields start 0, so
     # every NULL doc emitted one garbage (NULL-token) chunk.
     out = docs.filter(F.col(text_col).isNotNull()).select(
@@ -360,50 +361,6 @@ def _merge_pair(sym, a: str, b: str):
     )
 
 
-_WARNED_NO_PROMPT_RELEASE = False
-
-
-def _release_checkpoint_blocks(df: DataFrame, expect_rdd: bool = True) -> None:
-    """Free a retired round-table's materialized blocks NOW.
-
-    ``DataFrame.unpersist()`` only clears CacheManager entries; a
-    ``localCheckpoint(eager=False)`` frame's blocks are held by the
-    underlying RDD (a ``LogicalRDD`` plan node), so after round 1 it
-    would be a no-op and a long (32k-vocab) train would accumulate one
-    round-table per merge round until GC + ContextCleaner reap them.
-    We unpersist BOTH: the CacheManager entry (round 0's ``persist()``)
-    and, when the plan is a LogicalRDD, its JVM RDD directly. Fallback
-    (plan shape changed across Spark versions): the ContextCleaner still
-    reclaims blocks on GC — correct, just not prompt.
-    """
-    df.unpersist()
-    prompt_release = False
-    try:
-        node = df._jdf.queryExecution().logical()
-        if node.getClass().getSimpleName() == "LogicalRDD":
-            node.rdd().unpersist(False)
-            prompt_release = True
-    except Exception:
-        pass  # best-effort: ContextCleaner remains the backstop
-    if expect_rdd and not prompt_release:
-        # Spark-version canary (ADVICE r11): the py4j plan-node probe is
-        # internal API; if an upgrade renames LogicalRDD or the accessor
-        # chain, prompt release silently degrades to GC-paced cleanup.
-        # Say so once per session instead of hiding it in except-pass.
-        global _WARNED_NO_PROMPT_RELEASE
-        if not _WARNED_NO_PROMPT_RELEASE:
-            _WARNED_NO_PROMPT_RELEASE = True
-            import warnings
-
-            warnings.warn(
-                "bpe_train: localCheckpoint block release fell back to "
-                "GC-paced cleanup (LogicalRDD probe failed — Spark "
-                "internals changed?); long trains may hold extra blocks",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-
-
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
@@ -417,17 +374,18 @@ def bpe_train(
     one explode + one partial-agg shuffle on the pair key — then ONE
     top-K collect to the driver (the merge decision is a global scalar
     set, planner-sized like the IVF codebook collect); the merges apply
-    as array folds fused into one projection (no shuffle). ONE driver
-    action per round: the top-K collect doubles as the materialization
-    of the current (lazily persisted) word table — the previous round's
-    cache is dropped only after its child is cached, so lineage stays
-    one round deep. The word table carries one row per DISTINCT word
+    as array folds fused into one projection (no shuffle), and the new
+    word table is ``cut``: a persisted table would keep every round's
+    array folds in its logical plan, and by ~30 rounds the nested
+    lambdas exhaust the driver heap just rendering the plan. The
+    retired round's table is released as soon as its successor is cut.
+    The word table carries one row per DISTINCT word
     (frequency-weighted), so round cost scales with vocabulary, not
     corpus size — the standard trainer shape at 100 TB where the
     word-count table is millions of rows against trillions of tokens.
 
-    ROUND BATCHING (``max_batch``, VERDICT r9 ask #6 — one driver
-    round-trip per merge caps realistic vocab size at 32k): each round
+    ROUND BATCHING (``max_batch``; one driver round-trip per merge
+    would cap a realistic vocabulary at 32k): each round
     accepts a PREFIX of the rank order (count desc, a, b) whose merges
     are provably the next sequential picks, so the learned merge list
     is IDENTICAL to the one-merge-per-round trainer (pinned in
@@ -452,9 +410,10 @@ def bpe_train(
     to one merge per round — never to a wrong merge list. A 32k-vocab
     train on a Zipf corpus takes ~32000/avg_batch driver round-trips.
 
-    Returns (merges list[(a, b)], words DataFrame(word, count, syms)).
+    Returns (merges list[(a, b)], words DataFrame(word, count, syms));
+    ``words`` is a cut, which the caller frees with ``superstep.release``.
     """
-    words = (
+    words, _ = cut(
         docs.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
@@ -464,16 +423,10 @@ def bpe_train(
                 F.split(F.col("w"), "(?!$)"), F.array(F.lit("</w>"))
             ),
         )
-        .persist()
     )
     merges: list[tuple[str, str]] = []
-    prev: DataFrame | None = None
-    prev_is_ckpt = False  # round 0's parent is the persist()ed seed
-    words_is_ckpt = False
     k_horizon = max(2 * max_batch, 32)
     while len(merges) < n_merges:
-        # the round's SINGLE action: the top-K scan also materializes
-        # ``words`` into its (lazy) persist cache as a side effect
         top = (
             words.select(
                 "cnt",
@@ -491,13 +444,6 @@ def bpe_train(
             .limit(k_horizon + 1)
             .collect()
         )
-        if prev is not None:
-            # ``words`` is cached now; its parent can go. Round 0's
-            # parent is the plain persist()ed seed frame (no LogicalRDD
-            # — unpersist alone IS the full release); only checkpointed
-            # parents should trip the version canary.
-            _release_checkpoint_blocks(prev, expect_rdd=prev_is_ckpt)
-            prev = None
         if not top or top[0]["n"] < 2:
             break
         # counts below the collected horizon are <= this bound; a
@@ -527,17 +473,9 @@ def bpe_train(
         sym = F.col("syms")
         for a, b in batch:
             sym = _merge_pair(sym, a, b)
-        # lazy localCheckpoint, not persist: persist caches DATA but the
-        # logical plan still stacks every round's array folds — by ~30
-        # rounds the nested lambda expressions OOM the driver just
-        # RENDERING the plan (measured: explainString heap blowup at 32
-        # merges). The checkpoint truncates lineage to a LogicalRDD, so
-        # every round's plan is one projection over a materialized table —
-        # constant-size forever. Lazy: the NEXT round's top-K collect
-        # materializes it (one action per round, as before).
-        nxt = words.withColumn("syms", sym).localCheckpoint(eager=False)
-        prev, words = words, nxt
-        prev_is_ckpt, words_is_ckpt = words_is_ckpt, True
+        nxt, _ = cut(words.withColumn("syms", sym))
+        release(words)
+        words = nxt
     return merges, words
 
 
@@ -798,7 +736,7 @@ def bm25_rank(
     c_tf = k1d * bd
     c_tl = k1n * (bd - bn)
     c_dl = k1n * bn
-    # NULL-text contract (r12 sweep): a NULL doc is not part of the
+    # NULL-text contract: a NULL doc is not part of the
     # retrieval corpus — it must not inflate n_docs (idf) or appear in
     # per-doc stats. Mirrored by WHERE text IS NOT NULL in the oracles.
     toks = docs.filter(F.col(text_col).isNotNull()).select(
@@ -1397,8 +1335,8 @@ def phrase_search_postings(
     classic inverted-index phrase plan (term_i at pos p joins term_{i+1}
     at pos p+1), implemented as the A/B twin of ``phrase_search``'s
     prefilter+HOF-verify plan so the two strategies stay measurable
-    against each other (BASELINE.md §9: the HOF verify lambda is the
-    interpreted-tax floor both engines pay; this variant trades it for
+    against each other (the HOF verify lambda is the interpreted-tax
+    floor both engines pay; this variant trades it for
     m-1 doc+position-keyed equi-joins, which win when a prebuilt
     postings index amortizes the explode — see docs_inverted_index).
 
@@ -1417,8 +1355,7 @@ def phrase_search_postings(
     HOF verify 56.3 s, postings corpus-wide 12.9 s, postings
     prefiltered wins again on top of that; the DuckDB oracle (the same
     list_filter loop) is 6.4 s, so at volume
-    the postings plan — NOT the HOF verify — is the scale path, and
-    BASELINE §10 re-documents the r6 floor claim accordingly.
+    the postings plan — NOT the HOF verify — is the scale path.
     """
     import re as _re
 
@@ -1480,14 +1417,14 @@ def tfidf_keywords(
     a total order (score desc, term asc). No corpus-sized join, no
     lambda, no Python.
 
-    The df join-back is a ZIPF HEAD/TAIL SPLIT (the r9 sf10 A/B,
-    BASELINE §12: the naive tf⋈df term-shuffle join re-shuffled the
-    whole tf table on the vocabulary's hot keys — 28.4s vs this plan's
-    ~9s at sf10): terms with df >= ``head_df`` (the Zipf head — 'the',
-    boilerplate; exactly the keys an AQE skew split would have to
-    rescue) are BROADCAST and map-side joined, so the hot keys never
-    shuffle; the remaining tail joins by term where every key carries
-    < head_df rows BY CONSTRUCTION — skew-free without relying on AQE.
+    The df join-back is a ZIPF HEAD/TAIL SPLIT (the naive tf⋈df
+    term-shuffle join re-shuffles the whole tf table on the vocabulary's
+    hot keys — 28.4 s vs this plan's ~9 s in an sf10 A/B): terms with
+    df >= ``head_df`` (the Zipf head — 'the', boilerplate; exactly the
+    keys an AQE skew split would have to rescue) are BROADCAST and
+    map-side joined, so the hot keys never shuffle; the remaining tail
+    joins by term where every key carries < head_df rows BY
+    CONSTRUCTION — skew-free without relying on AQE.
     head and tail PARTITION the df table, so the tail inner join
     already excludes every head term — no anti-join needed on the tail
     leg. The tf exchange is canonically identical under both consumers
@@ -1629,8 +1566,8 @@ def gopher_rules(
     Plan: one Arrow ``mapInPandas`` pass computing every signal with
     C-speed string primitives — zero shuffle, scan-fused,
     embarrassingly parallel at 100 TB. This is the op's THIRD
-    rendering, each measured at sf10 (500 k docs / 149 M chars,
-    BASELINE sec 11): split + per-token ``list_filter`` lambdas paid
+    rendering, each measured at sf10 (500 k docs / 149 M chars):
+    split + per-token ``list_filter`` lambdas paid
     the interpreted-HOF tax (52.9 s); single-pass ``regexp_count``
     with lookaround token boundaries stayed whole-stage-codegen but
     the JVM regex engine is ~4x DuckDB's RE2 on the same patterns
@@ -1687,7 +1624,7 @@ def gopher_rules(
                 # leading/trailing \n or \t — trim strips spaces only)
                 # bear no letter: the oracle's list_filter excludes
                 # them, and the noalpha regex cannot match '' — so
-                # subtract them explicitly (r8 VERDICT finding #1)
+                # subtract them explicitly
                 n_alpha = (
                     n_words
                     - len(noalpha.findall(tl))
@@ -1742,8 +1679,8 @@ def langid_agreement(docs: DataFrame, text_col: str = "text") -> DataFrame:
     structs — replicated verbatim by the oracle's (h DESC, l DESC)
     rank). Plan: the marker counting is the language_scores scan —
     one single-pass ``regexp_count`` per language with lookaround
-    token boundaries, zero shuffle (the r8 rewrite of the interpreted
-    list_filter form: 51.5 s → 4.2 s at sf10, BASELINE sec 11); the
+    token boundaries, zero shuffle (the interpreted list_filter form
+    took 51.5 s at sf10, this one 4.2 s); the
     rollup is one lang x predicted groupBy — at most |langs|² rows
     out of any corpus size.
 

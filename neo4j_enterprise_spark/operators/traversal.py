@@ -23,7 +23,6 @@ the rows the last round produced, and the loop halts when none is set.
 from __future__ import annotations
 
 from collections.abc import Iterable
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -105,57 +104,51 @@ def traverse(
     passed the same way (the UDF is evaluated once per frontier batch).
     ``nodes`` (with an ``id`` column) is read only by those two
     predicates; without them it may be None.
+
+    The loop state is the reached set, (seed, node_id, hops, fresh), with
+    ``fresh`` on the rows the last round reached: they are the next
+    frontier, and the loop halts when a round reaches none. A round
+    expands the frontier and merges the candidates into the reached set
+    with one groupBy-min on (seed, node_id), so a row is fresh iff its
+    minimal hop count is the round's depth.
     """
     edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
+    cached = cache_edges and k > 1
+    if cached:
         # pass cache_edges=False when ``rels`` is already persisted
-        # upstream: a second persist here is a per-invocation cache-entry
-        # leak (each call makes a new DataFrame → a new storage entry)
+        # upstream: a second persist here would cache the same rows twice
         edges = edges.persist()
-    # the frontiers of the rounds so far; their union is the visited set.
-    # The loop state proper is this list, not what supersteps returns:
-    # hop records each frontier it is handed, which relies on supersteps
-    # passing every round's (cut) state to step exactly once (every=1),
-    # and the last cut frontier, which no hop sees, is added after the loop
-    visited: list[DataFrame] = []
 
-    def hop(frontier: DataFrame, depth: int) -> DataFrame:
-        visited.append(frontier)
+    def hop(reached: DataFrame, depth: int) -> DataFrame:
+        frontier = reached.filter("fresh")
         if prune is not None:
-            frontier = (
-                frontier.join(nodes, frontier["node_id"] == nodes["id"])
-                .filter(~prune)
-                .select("seed", "node_id", "hops")
-            )
-        # each round's frontier is cut: it feeds the next round's expand
-        # join, every later anti-join and the final union, and left lazy
-        # it would be re-planned and re-run by each of them (O(k²) work)
+            hit = frontier.join(nodes, frontier["node_id"] == nodes["id"])
+            frontier = hit.filter(~prune).select("seed", "node_id")
+        cand = frontier.join(edges, frontier["node_id"] == edges["a"]).select(
+            "seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops")
+        )
         return (
-            frontier.join(edges, frontier["node_id"] == edges["a"])
-            .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
-            .join(
-                reduce(DataFrame.unionByName, visited).select("seed", "node_id"),
-                ["seed", "node_id"],
-                "left_anti",
-            )
+            reached.select("seed", "node_id", "hops")
+            .unionByName(cand)
             .groupBy("seed", "node_id")
             .agg(F.min("hops").alias("hops"))
+            .withColumn("fresh", F.col("hops") == depth)
         )
 
-    seeds = seeds.select(
-        F.col("seed").cast("long").alias("seed"),
-        F.col("seed").cast("long").alias("node_id"),
+    seed = F.col("seed").cast("long")
+    reached = seeds.select(
+        seed.alias("seed"),
+        seed.alias("node_id"),
         F.lit(0).alias("hops"),
+        F.lit(True).alias("fresh"),
     )
-    visited.append(supersteps(seeds, hop, k, halt=F.count("*")))
-    reached = reduce(DataFrame.unionByName, visited)
+    reached = supersteps(reached, hop, k, halt=F.count_if("fresh"))
+    if cached:
+        # the last round's cut no longer reads the edges
+        edges.unpersist()
     if emit is not None:
-        reached = (
-            reached.join(nodes, reached["node_id"] == nodes["id"])
-            .filter(emit)
-            .select("seed", "node_id", "hops")
-        )
-    return reached
+        reached = reached.join(nodes, reached["node_id"] == nodes["id"]).filter(emit)
+    return reached.select("seed", "node_id", "hops")
 
 
 def dfs_preorder(
@@ -201,7 +194,8 @@ def dfs_preorder(
     preorder) with preorder = 1-based rank.
     """
     edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
+    cached = cache_edges and k > 1
+    if cached:
         edges = edges.persist()
 
     def _enc(c) -> F.Column:
@@ -244,6 +238,8 @@ def dfs_preorder(
         )
     )
     best = supersteps(best, extend, k, halt=F.count_if("fresh"))
+    if cached:
+        edges.unpersist()
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("seed").orderBy("path")

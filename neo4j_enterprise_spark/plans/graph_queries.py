@@ -2420,7 +2420,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Strongly connected components of the nation-trade tournament "
     "(edge A→B iff A buys >5% more from B than B from A, exact DECIMAL "
     "margin). Spark: community.strongly_connected — path-doubling "
-    "closure (O(log d) self-join rounds, localCheckpoint lineage cuts) "
+    "closure (O(log d) self-join rounds, each round checkpointed) "
     "intersected with its reverse; scc_id = min mutual peer. Oracle: "
     "recursive-CTE closure with the same mutual/min reduction. The "
     "lineitem-scale aggregation is the distributed cost; the closure "
@@ -2474,8 +2474,9 @@ def graph_nation_trade_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_trade_condensation_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import condensation_layers, strongly_connected
+    from ..operators.superstep import cut
 
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges, _ = cut(_trade_edges(spark, sf_dir))
     scc = strongly_connected(edges)
     layers = condensation_layers(edges, scc)
     sizes = scc.groupBy("scc_id").agg(F.count("*").alias("n_nations"))
@@ -2747,7 +2748,7 @@ def graph_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = derived_nodes(spark, sf_dir)
     # tag includes the source mtimes so a regenerated fixture at the
-    # same path invalidates the staged export (ADVICE r3)
+    # same path invalidates the staged export
     real = os.path.realpath(sf_dir)
     mtimes = ",".join(
         str(int(os.path.getmtime(os.path.join(real, f))))
@@ -3125,8 +3126,8 @@ def graph_louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_betweenness_sampled",
-    None,  # float dependency accumulation (reduction order) → rows-only;
-    # values pinned vs a pure-python Brandes reference in test_community
+    None,  # float σ ratios have no DuckDB twin → rows-only; values are
+    # pinned vs a pure-python Brandes reference in test_community
     doc="Sampled Brandes betweenness over the 500-part co-purchase "
     "slice (community.betweenness_sampled): 8 lowest-id parts as "
     "sources, all advancing TOGETHER — each BFS level and each "
@@ -3703,17 +3704,17 @@ def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
                          UNION ALL SELECT b, a FROM e),
     l0 AS (SELECT DISTINCT u AS node_id, u AS label FROM adj),
-    r1 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
+    c1 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
            FROM adj a JOIN l0 l ON l.node_id = a.v GROUP BY 1, 2),
-    l1 AS (SELECT node_id, label FROM r1 QUALIFY ROW_NUMBER() OVER
+    l1 AS (SELECT node_id, label FROM c1 QUALIFY ROW_NUMBER() OVER
            (PARTITION BY node_id ORDER BY cnt DESC, label) = 1),
-    r2 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
+    c2 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
            FROM adj a JOIN l1 l ON l.node_id = a.v GROUP BY 1, 2),
-    l2 AS (SELECT node_id, label FROM r2 QUALIFY ROW_NUMBER() OVER
+    l2 AS (SELECT node_id, label FROM c2 QUALIFY ROW_NUMBER() OVER
            (PARTITION BY node_id ORDER BY cnt DESC, label) = 1),
-    r3 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
+    c3 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
            FROM adj a JOIN l2 l ON l.node_id = a.v GROUP BY 1, 2),
-    l3 AS (SELECT node_id, label FROM r3 QUALIFY ROW_NUMBER() OVER
+    l3 AS (SELECT node_id, label FROM c3 QUALIFY ROW_NUMBER() OVER
            (PARTITION BY node_id ORDER BY cnt DESC, label) = 1)
     SELECT CAST(node_id AS BIGINT) AS node_id, CAST(label AS BIGINT) AS label
     FROM l3 ORDER BY node_id
@@ -3809,20 +3810,20 @@ def graph_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT s.rel_id, r.src AS node FROM suspect s JOIN rels r ON r.id = s.rel_id
       UNION ALL
       SELECT s.rel_id, r.dst FROM suspect s JOIN rels r ON r.id = s.rel_id),
-    r1 AS (SELECT DISTINCT rel_id, found_rel FROM (
+    round1 AS (SELECT DISTINCT rel_id, found_rel FROM (
       SELECT e.rel_id, r.id AS found_rel FROM e0 e JOIN rels r ON e.node = r.src
       UNION ALL
       SELECT e.rel_id, r.id FROM e0 e JOIN rels r ON e.node = r.dst)),
     e2 AS (SELECT DISTINCT rel_id, node FROM (
-      SELECT x.rel_id, r.src AS node FROM r1 x JOIN rels r ON r.id = x.found_rel
+      SELECT x.rel_id, r.src AS node FROM round1 x JOIN rels r ON r.id = x.found_rel
       UNION ALL
-      SELECT x.rel_id, r.dst FROM r1 x JOIN rels r ON r.id = x.found_rel)),
-    r2 AS (SELECT DISTINCT rel_id, found_rel FROM (
+      SELECT x.rel_id, r.dst FROM round1 x JOIN rels r ON r.id = x.found_rel)),
+    round2 AS (SELECT DISTINCT rel_id, found_rel FROM (
       SELECT e.rel_id, r.id AS found_rel FROM e2 e JOIN rels r ON e.node = r.src
       UNION ALL
       SELECT e.rel_id, r.id FROM e2 e JOIN rels r ON e.node = r.dst))
     SELECT DISTINCT rel_id, found_rel FROM (
-      SELECT * FROM r1 UNION ALL SELECT * FROM r2)
+      SELECT * FROM round1 UNION ALL SELECT * FROM round2)
     ORDER BY rel_id, found_rel
     """,
     doc="T3/J13/U1 driver-checked (was pytest-only): the repair tool's "

@@ -1557,11 +1557,12 @@ def ann_ivf_pq_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "test_pipeline.",
 )
 def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.superstep import release
     from ..operators.text import bpe_train
 
     docs = load_table(spark, sf_dir, "documents")
     merges, words = bpe_train(docs, n_merges=8)
-    words.unpersist()
+    release(words)
     return spark.createDataFrame(
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string, merged string",

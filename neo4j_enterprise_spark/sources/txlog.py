@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..graph.model import NO_POINTER, PropertyGraph
+from ..operators.superstep import cut
 
 TXLOG_SCHEMA = (
     "tx_id long, master_id int, checksum long, op string, "
@@ -140,12 +141,11 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
     # after every replay, mirroring the kernel relinking chains on write
     w_src = Window.partitionBy("src").orderBy("id")
     w_dst = Window.partitionBy("dst").orderBy("id")
-    rels = (
+    rels, _ = cut(
         rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
         .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
         .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
         .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
-        .localCheckpoint(eager=True)
     )
 
     # property ops: last write per (owner, key) wins; remove drops the row
@@ -219,7 +219,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
     )
     all_props = updated.unionByName(inserts)
     w_owner = Window.partitionBy("owner_kind", "owner_id").orderBy("id")
-    all_props = (
+    all_props, _ = cut(
         all_props.withColumn(
             "prev_prop", F.coalesce(F.lag("id").over(w_owner), F.lit(NO_POINTER))
         )
@@ -228,7 +228,6 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
             "id", "in_use", "owner_id", "owner_kind", "prev_prop", "next_prop",
             "seq", "key_id", "vtype", "value_long", "value_string", "value_array",
         )
-        .localCheckpoint(eager=True)
     )
 
     # refresh node first-pointers from the two checkpoints above
@@ -238,7 +237,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
     first_prop = all_props.filter(
         (F.col("prev_prop") == NO_POINTER) & (F.col("owner_kind") == "node")
     ).select(F.col("owner_id").alias("id"), F.col("id").alias("new_next_prop"))
-    nodes = (
+    nodes, _ = cut(
         nodes.join(first_rel, "id", "left")
         .join(first_prop, "id", "left")
         .select(
@@ -247,7 +246,6 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
             F.coalesce("new_next_rel", F.lit(NO_POINTER)).alias("next_rel"),
             F.coalesce("new_next_prop", F.lit(NO_POINTER)).alias("next_prop"),
         )
-        .localCheckpoint(eager=True)
     )
 
     return PropertyGraph(

@@ -633,3 +633,27 @@ def test_betweenness_exact_tree_truncation_raises(spark):
     got = {r.node_id: r.bc for r in betweenness_exact_tree(path, max_depth=5).collect()}
     # interior node v at position p: ordered pairs = 2*p*(5-p)
     assert got[1] == 2 * 1 * 4 and got[2] == 2 * 2 * 3 and got[0] == 0
+
+
+def test_betweenness_sampled_ignores_the_partitioning(spark):
+    from neo4j_enterprise_spark.operators.community import betweenness_sampled
+
+    # a 5x5 grid: many parallel shortest paths, so each node's dependency
+    # sums shares of differing magnitudes
+    n = 5
+    cells = [(r * n + c) for r in range(n) for c in range(n)]
+    pairs = [(v, v + 1) for v in cells if v % n < n - 1]
+    pairs += [(v, v + n) for v in cells if v + n < n * n]
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    sources = spark.createDataFrame([(v,) for v in cells[::4]], "source long")
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    runs = []
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set(key, parts)
+            bc = betweenness_sampled(edges, sources, max_depth=3)
+            runs.append(sorted(map(tuple, bc.collect())))
+    finally:
+        spark.conf.set(key, old)
+    assert runs[0] == runs[1]

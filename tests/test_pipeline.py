@@ -492,6 +492,7 @@ def test_bpe_train_batched_matches_sequential(spark):
     the real documents table (natural Zipf ties + shared symbols) and
     on the toy corpus, at several merge depths."""
     from neo4j_enterprise_spark.catalog import load_table
+    from neo4j_enterprise_spark.operators.superstep import release
     from neo4j_enterprise_spark.operators.text import bpe_train
 
     corpora = {
@@ -505,19 +506,20 @@ def test_bpe_train_batched_matches_sequential(spark):
         for n in (4, 12):
             seq, w1 = bpe_train(docs, n_merges=n, max_batch=1)
             bat, w2 = bpe_train(docs, n_merges=n, max_batch=16)
-            w1.unpersist()
-            w2.unpersist()
+            release(w1)
+            release(w2)
             assert bat == seq, (name, n, seq, bat)
             assert len(seq) == n  # non-degenerate: corpus supports n merges
 
 
 def test_bpe_encode_compresses_with_trained_merges(spark):
+    from neo4j_enterprise_spark.operators.superstep import release
     from neo4j_enterprise_spark.operators.text import bpe_encode, bpe_train
 
     corpus = " ".join(["low"] * 5 + ["newest"] * 6)
     docs = spark.createDataFrame([(1, corpus)], "doc_id long, text string")
     merges, words = bpe_train(docs, n_merges=4)
-    words.unpersist()
+    release(words)
     out = bpe_encode(docs, merges).collect()[0]
     assert out["n_words"] == 11
     # chars+</w> baseline: 5*4 + 6*7 = 62 symbols; 4 merges must shrink it

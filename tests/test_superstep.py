@@ -1,18 +1,28 @@
 """The superstep primitive: ``cut``'s observed aggregates, ``supersteps``'
-halt, the job counts of the loops built on them, and the empty-input
-contract of every operator that runs on them."""
+halt and block lifetime, the job counts of the loops built on them, the
+empty-input contract of every operator that runs on them, and the rule
+that no other module makes or frees a local checkpoint."""
 
 from __future__ import annotations
 
+import ast
 import itertools
+import pathlib
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+import neo4j_enterprise_spark
 from neo4j_enterprise_spark.operators import community as C
 from neo4j_enterprise_spark.operators import traversal as T
-from neo4j_enterprise_spark.operators.superstep import cut, supersteps
+from neo4j_enterprise_spark.operators.superstep import cut, release, supersteps
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs that hold cached blocks (checkpoints included)."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {infos[i].id() for i in range(len(infos)) if infos[i].numCachedPartitions() > 0}
 
 
 def _jobs(spark, build):
@@ -69,6 +79,83 @@ def test_supersteps_stops_at_the_round_that_reads_zero(spark):
     assert calls == [1, 2, 3]
     assert sorted(r.n for r in out.collect()) == [-2, 0]
     assert [r.n for r in supersteps(start, step, 0).collect()] == [3, 1]
+
+
+def _path(spark, n):
+    return spark.createDataFrame(
+        [(v, v, v + 1, "T") for v in range(n - 1)],
+        "id long, src long, dst long, type_name string",
+    )
+
+
+def test_supersteps_frees_the_rounds_it_retires(spark):
+    # on a path, CC's minimum label moves one hop per round: the long
+    # path runs 8 rounds, the short one 2, and both leave behind only
+    # the edge invariant and the result
+    added = {}
+    for n in (2, 8):
+        before = _cached_rdd_ids(spark)
+        labels = T.connected_components(_path(spark, n))
+        assert {tuple(r) for r in labels.collect()} == {(v, 0) for v in range(n)}
+        added[n] = len(_cached_rdd_ids(spark) - before)
+    assert added[2] == added[8] <= 2, added
+
+
+@pytest.mark.parametrize("every", [1, 2])
+def test_supersteps_keeps_its_input_and_result(spark, every):
+    start, _ = cut(spark.range(4).select(F.col("id").alias("n")))
+
+    def step(state, _):
+        return state.select((F.col("n") + 1).alias("n"))
+
+    out = supersteps(start, step, 5, every=every)
+    assert sorted(r.n for r in start.collect()) == [0, 1, 2, 3]
+    assert sorted(r.n for r in out.collect()) == [5, 6, 7, 8]
+    with pytest.raises(ValueError, match="cut"):
+        release(out.select("n"))
+
+
+def test_bfs_leaves_no_cached_edges(spark):
+    before = _cached_rdd_ids(spark)
+    rows = T.bfs_reachable(_path(spark, 6), spark.createDataFrame([(0,)], "seed long"), k=3)
+    assert sorted(map(tuple, rows.collect())) == [(0, v, v) for v in range(4)]
+    # only the result's own checkpoint holds blocks
+    assert len(_cached_rdd_ids(spark) - before) == 1
+
+
+def _code_sites(module: pathlib.Path):
+    """(enclosing function, node) for every AST node of ``module``."""
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            yield inner, child
+            yield from walk(child, inner)
+
+    yield from walk(ast.parse(module.read_text()), None)
+
+
+def test_one_site_makes_and_frees_local_checkpoints():
+    package = pathlib.Path(neo4j_enterprise_spark.__file__).parent
+    makes, frees = set(), set()
+    for module in package.rglob("*.py"):
+        where = module.relative_to(package).as_posix()
+        for fn, node in _code_sites(module):
+            if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint":
+                makes.add(where)
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "LogicalRDD" in node.value
+            ) or (
+                isinstance(node, ast.Attribute)
+                and node.attr == "unpersist"
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "rdd"
+            ):
+                frees.add((where, fn))
+    assert makes == {"operators/superstep.py"}
+    assert frees == {("operators/superstep.py", "release")}
 
 
 # six 5-cliques joined in a ring, plus a separate 10-node path
