@@ -9,7 +9,13 @@ pruning are pushed to the scan by Catalyst, so loaders never pre-select.
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +52,51 @@ def _normalize_ts(events: DataFrame) -> DataFrame:
     if ts_type == "timestamp_ntz":
         return events.withColumn("ts", F.col("ts").cast("timestamp"))
     return events
+
+
+# a staged file's name: the path up to its source tag, then its identity tag
+_STAGED = re.compile(r"(nes_\w+?_[0-9a-f]{12})_[0-9a-f]{12}")
+
+
+def _tag(obj) -> str:
+    return hashlib.md5(repr(obj).encode()).hexdigest()[:12]
+
+
+def _temp(kind: str, *files: str) -> str:
+    """The temp-dir path ``nes_<kind>_<source>_<identity>`` for what a
+    query stages from ``files``: <source> hashes their realpaths and
+    <identity> their sizes and mtimes in ns; callers add suffixes for
+    the dirs and files they stage there. A file-stream source never
+    re-reads a path it has seen, so a file rewritten in place must get
+    fresh stage, checkpoint and output dirs, or append-mode queries
+    would return the old file's rows.
+
+    The first call for a new identity removes what ``kind`` staged for
+    the older identities of the same sources, and nothing else. A staged
+    input (a sentinel, a Count-Min half) counts as its source by its
+    name without the identity tag, so the stage built on a rewritten
+    file's staged inputs replaces the old one too."""
+    sources, ident = [], []
+    for f in files:
+        real = os.path.realpath(f)
+        st = os.stat(real)
+        sources.append(_STAGED.sub(r"\1", real))
+        ident.append((real, st.st_size, st.st_mtime_ns))
+    prefix = os.path.join(tempfile.gettempdir(), f"nes_{kind}_{_tag(sources)}_")
+    path = prefix + _tag(ident)
+    if not glob.glob(glob.escape(path) + "*"):
+        for old in glob.glob(glob.escape(prefix) + "*"):
+            if os.path.isdir(old) and not os.path.islink(old):
+                shutil.rmtree(old, ignore_errors=True)
+            else:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(old)
+    return path
+
+
+def _parquet_files(sf_dir: str) -> list[str]:
+    """The parquet tables of ``sf_dir``, in name order."""
+    return sorted(glob.glob(os.path.join(glob.escape(sf_dir), "*.parquet")))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -352,6 +352,50 @@ def graph_cte(*, nodes: bool = True, rels: bool = True) -> str:
     return "WITH " + ",\n".join(parts)
 
 
+# --- The part co-purchase graph -----------------------------------------
+# Not memoized: a persisted copy would change the plans of the queries
+# that build on it. ``max_part`` keeps parts below it; the graph queries
+# use 500, a fixed slice whose density grows with scale, so their
+# algorithms have non-trivial work at every sf.
+
+
+def basket(spark: SparkSession, sf_dir: str, max_part: int | None = None) -> DataFrame:
+    """The distinct (l_orderkey, l_partkey) order baskets."""
+    li = load_table(spark, sf_dir, "lineitem")
+    if max_part is not None:
+        li = li.filter(F.col("l_partkey") < max_part)
+    return li.select("l_orderkey", "l_partkey").distinct()
+
+
+def copurchase(spark: SparkSession, sf_dir: str, max_part: int | None = None) -> DataFrame:
+    """copurchase(a, b, n): one edge a < b per two parts that share an
+    order, ``n`` the number of orders they share."""
+    li = basket(spark, sf_dir, max_part)
+    return (
+        li.select("l_orderkey", F.col("l_partkey").alias("a"))
+        .join(li.select("l_orderkey", F.col("l_partkey").alias("b")), "l_orderkey")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def copurchase_cte(max_part: int | None = None) -> str:
+    """CTE-list text (no ``WITH``): ``li`` and ``e`` are the SQL twins of
+    ``basket`` and ``copurchase``; ``adj(u, v)`` holds each edge both
+    ways and ``deg(node_id, deg)`` each part's degree."""
+    where = "" if max_part is None else f" WHERE l_partkey < {max_part}"
+    return f"""li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem{where}),
+    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS n
+          FROM li a JOIN li b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+          GROUP BY 1, 2),
+    adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
+                         UNION ALL SELECT b, a FROM e),
+    deg AS MATERIALIZED (SELECT u AS node_id, COUNT(*) AS deg
+                         FROM adj GROUP BY 1)"""
+
+
 def write_graph_tables(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Materialize the derived graph as parquet (bucketing-ready layout).
 

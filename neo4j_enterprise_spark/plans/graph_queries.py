@@ -10,12 +10,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.derive import RELS_SQL, derived_nodes, derived_rels, graph_cte
+from ..graph.derive import (
+    RELS_SQL,
+    basket,
+    copurchase,
+    copurchase_cte,
+    derived_nodes,
+    derived_rels,
+    graph_cte,
+)
 from ..graph.derive import ORDER_OFF as ORDER_OFF_SQL
 from ..operators import community, reads, traversal, validation
 from ..operators.diff import snapshot_added
+from ..operators.pattern import cypher_match, cypher_query
 from . import register
 from ..catalog import load_table
+
+# the part slice of the co-purchase algorithms (see graph.derive.basket)
+_SLICE = 500
+# the BFS seeds of the k-hop queries: every relationship source <= 20
+_LOW_SRC_SEEDS = "SELECT src AS seed FROM rels WHERE src <= 20 GROUP BY src"
+
+
+def _cypher(spark: SparkSession, sf_dir: str, text: str, **match) -> DataFrame:
+    """``text`` compiled over the derived graph: a query (``MATCH ...``)
+    by ``pattern.cypher_query``, a bare pattern (``(a)-[...]->(b)``, with
+    ``cypher_match``'s keywords) by ``pattern.cypher_match``."""
+    nodes, rels = derived_nodes(spark, sf_dir), derived_rels(spark, sf_dir)
+    if text.startswith("("):
+        return cypher_match(nodes, rels, text, **match)
+    return cypher_query(nodes, rels, text)
+
+
+def _frontier_cte(seeds: str, k: int) -> str:
+    """CTE-list text: ``seeds`` (a SELECT of one ``seed`` column)
+    expanded ``k`` hops out along ``rels``, one DISTINCT frontier per
+    hop, and reach(seed, node_id, hops) with each reached node's minimal
+    hop count (the seed itself at 0): the SQL twin of
+    ``traversal.bfs_reachable``."""
+    ctes = f"""seeds AS ({seeds}),
+    hop0 AS (SELECT seed, seed AS node_id FROM seeds)"""
+    for i in range(1, k + 1):
+        ctes += f""",
+    hop{i} AS (SELECT h.seed, r.dst AS node_id FROM hop{i - 1} h
+             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst)"""
+    hops = " UNION ALL ".join(
+        f"SELECT seed, node_id, {i} AS hops FROM hop{i}" for i in range(k + 1)
+    )
+    return f"""{ctes},
+    reach AS (SELECT seed, node_id, MIN(hops) AS hops FROM ({hops})
+              GROUP BY seed, node_id)"""
 
 
 @register(
@@ -242,16 +286,7 @@ def chain_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bfs_2hop_reach",
     f"""
     {graph_cte(nodes=False)},
-    seeds AS (SELECT src AS seed FROM rels
-              WHERE src <= 20 GROUP BY src),
-    hop1 AS (SELECT s.seed, r.dst AS node_id FROM seeds s
-             JOIN rels r ON r.src = s.seed GROUP BY s.seed, r.dst),
-    hop2 AS (SELECT h.seed, r.dst AS node_id FROM hop1 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    reach AS (
-      SELECT seed, seed AS node_id FROM seeds
-      UNION SELECT seed, node_id FROM hop1
-      UNION SELECT seed, node_id FROM hop2)
+    {_frontier_cte(_LOW_SRC_SEEDS, 2)}
     SELECT seed, COUNT(*) AS n_reachable FROM reach GROUP BY seed ORDER BY seed
     """,
     doc="T2 fixed-k BFS reachability (`LockableNode.java:178-201` "
@@ -430,16 +465,13 @@ def pattern_2hop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(`pattern.cypher_match`) — path count per region.",
 )
 def cypher_region_supply_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_match
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    paths = cypher_match(
-        nodes, rels, "(s:supplier)-[:SUPP_NATION]->(n)-[:IN_REGION]->(r:region)"
+    paths = _cypher(
+        spark, sf_dir, "(s:supplier)-[:SUPP_NATION]->(n)-[:IN_REGION]->(r:region)"
     )
-    named = paths.join(
-        nodes.select(F.col("id").alias("r"), F.col("name").alias("region_name")), "r"
+    names = derived_nodes(spark, sf_dir).select(
+        F.col("id").alias("r"), F.col("name").alias("region_name")
     )
+    named = paths.join(names, "r")
     return (
         named.groupBy(F.col("r").alias("region_id"), "region_name")
         .agg(F.count("*").alias("n_paths"))
@@ -466,11 +498,7 @@ def cypher_region_supply_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count per customer.",
 )
 def cypher_var_length_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_match
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    paths = cypher_match(nodes, rels, "(c:customer)-[*1..2]->(x)").filter(
+    paths = _cypher(spark, sf_dir, "(c:customer)-[*1..2]->(x)").filter(
         F.col("c").between(1, 200)
     )
     return paths.groupBy("c").agg(F.count("*").alias("n_reach")).orderBy("c")
@@ -933,17 +961,9 @@ def row_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bfs_shortest_hops",
     f"""
     {graph_cte(nodes=False)},
-    seeds AS (SELECT src AS seed FROM rels WHERE src <= 20 GROUP BY src),
-    hop1 AS (SELECT s.seed, r.dst AS node_id FROM seeds s
-             JOIN rels r ON r.src = s.seed GROUP BY s.seed, r.dst),
-    hop2 AS (SELECT h.seed, r.dst AS node_id FROM hop1 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    reach AS (
-      SELECT seed, seed AS node_id, 0 AS hops FROM seeds
-      UNION ALL SELECT seed, node_id, 1 FROM hop1
-      UNION ALL SELECT seed, node_id, 2 FROM hop2)
-    SELECT seed, node_id, CAST(MIN(hops) AS INT) AS hops
-    FROM reach GROUP BY seed, node_id ORDER BY seed, node_id
+    {_frontier_cte(_LOW_SRC_SEEDS, 2)}
+    SELECT seed, node_id, CAST(hops AS INT) AS hops
+    FROM reach ORDER BY seed, node_id
     """,
     doc="Shortest-hop distances (≤2) per seed — bfs_reachable's minimal "
     "hop counts exposed row-level (first-seen min per round is a "
@@ -961,24 +981,12 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_harmonic_centrality",
     f"""
     {graph_cte(nodes=False)},
-    seeds AS (SELECT src AS seed FROM rels WHERE src <= 20 GROUP BY src),
-    hop1 AS (SELECT s.seed, r.dst AS node_id FROM seeds s
-             JOIN rels r ON r.src = s.seed GROUP BY s.seed, r.dst),
-    hop2 AS (SELECT h.seed, r.dst AS node_id FROM hop1 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    hop3 AS (SELECT h.seed, r.dst AS node_id FROM hop2 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    reach AS (
-      SELECT seed, node_id, 1 AS hops FROM hop1
-      UNION ALL SELECT seed, node_id, 2 FROM hop2
-      UNION ALL SELECT seed, node_id, 3 FROM hop3),
-    minr AS (SELECT seed, node_id, MIN(hops) AS hops
-             FROM reach GROUP BY seed, node_id)
+    {_frontier_cte(_LOW_SRC_SEEDS, 3)}
     SELECT seed,
            CAST(SUM(CASE hops WHEN 1 THEN 6 WHEN 2 THEN 3 ELSE 2 END)
                 AS BIGINT) AS harmonic_x6,
            COUNT(*) AS n_reached
-    FROM minr WHERE node_id <> seed
+    FROM reach WHERE node_id <> seed
     GROUP BY seed ORDER BY seed
     """,
     doc="Harmonic centrality (bounded radius 3) per seed: sum of 1/d "
@@ -1062,12 +1070,10 @@ def graph_betweenness_exact_small(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "parts_copurchase_top20",
-    """
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS n_orders
-    FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-    JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2 ORDER BY n_orders DESC, part_a, part_b LIMIT 20
+    f"""
+    WITH {copurchase_cte()}
+    SELECT a AS part_a, b AS part_b, n AS n_orders
+    FROM e ORDER BY n_orders DESC, part_a, part_b LIMIT 20
     """,
     doc="Bipartite co-purchase projection: weighted part-part edges from "
     "the order-part graph (one self-join keyed on the order — shuffle on "
@@ -1076,14 +1082,13 @@ def graph_betweenness_exact_small(spark: SparkSession, sf_dir: str) -> DataFrame
     "synthetic orders hold ≤7 lines so the exact projection is safe here.",
 )
 def parts_copurchase_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
-    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
     return (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count("*").alias("n_orders"))
+        copurchase(spark, sf_dir)
+        .select(
+            F.col("a").alias("part_a"),
+            F.col("b").alias("part_b"),
+            F.col("n").alias("n_orders"),
+        )
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(20)
     )
@@ -1235,13 +1240,9 @@ def property_store_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(pattern.cypher_match); customers per Asian nation.",
 )
 def cypher_property_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_match
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    paths = cypher_match(
-        nodes,
-        rels,
+    paths = _cypher(
+        spark,
+        sf_dir,
         "(r:region {name: 'ASIA'})<-[:IN_REGION]-(n)<-[:IN_NATION]-(c)",
         attach={"n": ["name"]},  # RETURN-projection analog
     )
@@ -1256,30 +1257,27 @@ def cypher_property_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parts_triangle_clustering",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    tri AS (SELECT e1.pa AS a, e1.pb AS b, e2.pb AS c
-            FROM e e1 JOIN e e2 ON e1.pb = e2.pa
-                      JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb),
+    f"""
+    WITH {copurchase_cte()},
+    e2 AS (SELECT a AS pa, b AS pb FROM e WHERE n >= 2),
+    tri AS (SELECT x.pa AS a, x.pb AS b, y.pb AS c
+            FROM e2 x JOIN e2 y ON x.pb = y.pa
+                      JOIN e2 z ON z.pa = x.pa AND z.pb = y.pb),
     nodes AS (SELECT a AS node_id FROM tri
               UNION ALL SELECT b FROM tri
               UNION ALL SELECT c FROM tri),
     tcnt AS (SELECT node_id, COUNT(*) AS t FROM nodes GROUP BY node_id),
-    deg AS (SELECT node_id, COUNT(*) AS d
-            FROM (SELECT pa AS node_id FROM e UNION ALL SELECT pb FROM e)
-            GROUP BY node_id)
-    SELECT deg.node_id,
-           CAST(deg.d AS BIGINT) AS degree,
+    d2 AS (SELECT node_id, COUNT(*) AS d
+           FROM (SELECT pa AS node_id FROM e2 UNION ALL SELECT pb FROM e2)
+           GROUP BY node_id)
+    SELECT d2.node_id,
+           CAST(d2.d AS BIGINT) AS degree,
            CAST(COALESCE(tcnt.t, 0) AS BIGINT) AS triangles,
-           CASE WHEN deg.d >= 2
+           CASE WHEN d2.d >= 2
                 THEN CAST(2 * COALESCE(tcnt.t, 0) AS DOUBLE)
-                     / CAST(deg.d * (deg.d - 1) AS DOUBLE)
+                     / CAST(d2.d * (d2.d - 1) AS DOUBLE)
                 ELSE 0.0 END AS clustering
-    FROM deg LEFT JOIN tcnt USING (node_id)
+    FROM d2 LEFT JOIN tcnt USING (node_id)
     ORDER BY node_id
     """,
     doc="Triangle counting + local clustering coefficient over the "
@@ -1292,41 +1290,29 @@ def cypher_property_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(SURVEY §2.9 ext.).",
 )
 def parts_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
     edges = (
-        li.select("l_orderkey", F.col("l_partkey").alias("src"))
-        .join(li.select("l_orderkey", F.col("l_partkey").alias("dst")), "l_orderkey")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n"))
+        copurchase(spark, sf_dir)
         .filter(F.col("n") >= 2)
-        .select("src", "dst")
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
     return traversal.triangle_counts(edges).orderBy("node_id")
 
 
 @register(
     "parts_weighted_distances",
-    """
-    WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    und AS (SELECT a.l_partkey AS src, b.l_partkey AS dst,
-                   GREATEST(1, 5 - COUNT(*)) AS weight
-            FROM li a JOIN li b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    e AS (SELECT src, dst, weight FROM und
-          UNION ALL SELECT dst, src, weight FROM und),
-    seeds AS (SELECT DISTINCT src AS node_id FROM e WHERE src % 100 < 2),
+    f"""
+    WITH RECURSIVE {copurchase_cte()},
+    und AS (SELECT a AS src, b AS dst, GREATEST(1, 5 - n) AS weight
+            FROM e WHERE n >= 2),
+    we AS (SELECT src, dst, weight FROM und
+           UNION ALL SELECT dst, src, weight FROM und),
+    seeds AS (SELECT DISTINCT src AS node_id FROM we WHERE src % 100 < 2),
     walk(node_id, d) AS (
       SELECT node_id, CAST(0 AS BIGINT) FROM seeds
       UNION
-      SELECT e.dst, w.d + e.weight FROM walk w
-      JOIN e ON e.src = w.node_id
-      WHERE w.d + e.weight <= 12)
+      SELECT we.dst, w.d + we.weight FROM walk w
+      JOIN we ON we.src = w.node_id
+      WHERE w.d + we.weight <= 12)
     SELECT node_id, CAST(MIN(d) AS BIGINT) AS dist
     FROM walk GROUP BY node_id ORDER BY node_id
     """,
@@ -1340,19 +1326,14 @@ def parts_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fixpoint. Each Spark round shuffles only the improved frontier.",
 )
 def parts_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
     und = (
-        li.select("l_orderkey", F.col("l_partkey").alias("src"))
-        .join(li.select("l_orderkey", F.col("l_partkey").alias("dst")), "l_orderkey")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("n"))
+        copurchase(spark, sf_dir)
         .filter(F.col("n") >= 2)
-        .select("src", "dst", F.greatest(F.lit(1), F.lit(5) - F.col("n")).alias("weight"))
+        .select(
+            F.col("a").alias("src"),
+            F.col("b").alias("dst"),
+            F.greatest(F.lit(1), F.lit(5) - F.col("n")).alias("weight"),
+        )
     )
     edges = und.unionByName(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
@@ -1382,13 +1363,9 @@ def parts_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     "TakeOrderedAndProject, no global sort).",
 )
 def cypher_where_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:PLACED]->(o:order) "
         "WHERE c.in_use = true AND c.name < 'Customer#000000100' "
         "RETURN c.name AS customer_name, count(*) AS n_orders "
@@ -1426,13 +1403,9 @@ def cypher_where_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def cypher_with_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:PLACED]->(o) "
         "WITH c, count(*) AS n_orders "
         "WHERE n_orders >= 12 "
@@ -1469,13 +1442,9 @@ def cypher_with_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value-hash is engine-portable.",
 )
 def cypher_with_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    out = cypher_query(
-        nodes,
-        rels,
+    out = _cypher(
+        spark,
+        sf_dir,
         "MATCH (n:nation)-[:IN_REGION]->(r:region) "
         "WITH r, collect(n.name) AS names, count(*) AS n_nations "
         "WHERE n_nations >= 5 "
@@ -1502,13 +1471,9 @@ def cypher_with_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "relational OFFSET inside the same single plan.",
 )
 def cypher_skip_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer) WHERE c.in_use = true "
         "RETURN c.name AS customer_name "
         "ORDER BY customer_name SKIP 25 LIMIT 10",
@@ -1531,13 +1496,9 @@ def cypher_skip_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     "projection dedupe in the clause pipeline.",
 )
 def cypher_return_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:IN_NATION]->(n:nation) "
         "WHERE c.name < 'Customer#000000200' "
         "RETURN DISTINCT n.name AS nation_name ORDER BY nation_name",
@@ -1561,13 +1522,9 @@ def cypher_return_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "n_orders = 0. Oracle = the same left join in SQL.",
 )
 def cypher_optional_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer) OPTIONAL MATCH (c)-[:PLACED]->(o) "
         "RETURN c AS customer_id, count(o) AS n_orders ORDER BY customer_id",
     )
@@ -1590,13 +1547,9 @@ def cypher_optional_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LIKE patterns with escaped underscore.",
 )
 def cypher_string_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (s:supplier)-[:SUPP_NATION]->(n:nation) "
         "WHERE n.name STARTS WITH 'NATION_1' AND n.name ENDS WITH '5' "
         "RETURN n.name AS nation_name, count(*) AS n_suppliers "
@@ -1604,27 +1557,28 @@ def cypher_string_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _label_rounds_cte(rounds: int) -> str:
+    """CTE-list text: ``rounds`` unrolled synchronous label-propagation
+    rounds over ``adj(u, v)``, from l0 (each node its own label) to
+    l{rounds}: each node takes its neighbours' most frequent label, ties
+    to the smaller one."""
+    ctes = "l0 AS (SELECT DISTINCT u AS node_id, u AS label FROM adj)"
+    for r in range(1, rounds + 1):
+        ctes += f""",
+    c{r} AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
+           FROM adj a JOIN l{r - 1} l ON l.node_id = a.v GROUP BY 1, 2),
+    l{r} AS (SELECT node_id, label FROM c{r} QUALIFY ROW_NUMBER() OVER
+           (PARTITION BY node_id ORDER BY cnt DESC, label) = 1)"""
+    return ctes
+
+
 @register(
     "graph_label_propagation_derived",
     f"""
     {graph_cte(nodes=False)},
-    edges AS (SELECT src AS a, dst AS b FROM rels
-              UNION SELECT dst, src FROM rels),
-    l0 AS (SELECT DISTINCT a AS node_id, a AS label FROM edges),
-    c1 AS (SELECT e.a AS node_id, l.label, COUNT(*) AS n
-           FROM edges e JOIN l0 l ON e.b = l.node_id GROUP BY e.a, l.label),
-    l1 AS (SELECT node_id, label FROM (
-             SELECT node_id, label,
-                    ROW_NUMBER() OVER (PARTITION BY node_id
-                                       ORDER BY n DESC, label) AS rn
-             FROM c1) WHERE rn = 1),
-    c2 AS (SELECT e.a AS node_id, l.label, COUNT(*) AS n
-           FROM edges e JOIN l1 l ON e.b = l.node_id GROUP BY e.a, l.label),
-    l2 AS (SELECT node_id, label FROM (
-             SELECT node_id, label,
-                    ROW_NUMBER() OVER (PARTITION BY node_id
-                                       ORDER BY n DESC, label) AS rn
-             FROM c2) WHERE rn = 1)
+    adj AS (SELECT src AS u, dst AS v FROM rels
+            UNION SELECT dst, src FROM rels),
+    {_label_rounds_cte(2)}
     SELECT label AS community, COUNT(*) AS n_nodes
     FROM l2 GROUP BY label ORDER BY n_nodes DESC, community LIMIT 20
     """,
@@ -1875,20 +1829,9 @@ def index_put_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cypher_shortest_path",
     f"""
     {graph_cte()},
-    seeds AS (SELECT id AS seed FROM nodes WHERE kind = 'supplier'),
-    hop1 AS (SELECT s.seed, r.dst AS node_id FROM seeds s
-             JOIN rels r ON r.src = s.seed GROUP BY s.seed, r.dst),
-    hop2 AS (SELECT h.seed, r.dst AS node_id FROM hop1 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    hop3 AS (SELECT h.seed, r.dst AS node_id FROM hop2 h
-             JOIN rels r ON r.src = h.node_id GROUP BY h.seed, r.dst),
-    reach AS (SELECT seed, node_id, 1 AS hops FROM hop1
-              UNION ALL SELECT seed, node_id, 2 FROM hop2
-              UNION ALL SELECT seed, node_id, 3 FROM hop3),
-    minr AS (SELECT seed, node_id, MIN(hops) AS hops
-             FROM reach GROUP BY seed, node_id)
+    {_frontier_cte("SELECT id AS seed FROM nodes WHERE kind = 'supplier'", 3)}
     SELECT m.seed AS a, m.node_id AS b, CAST(m.hops AS INT) AS hops
-    FROM minr m JOIN nodes n ON n.id = m.node_id AND n.kind = 'region'
+    FROM reach m JOIN nodes n ON n.id = m.node_id AND n.kind = 'region'
     ORDER BY a, b
     """,
     doc="Cypher shortestPath(): MATCH p = shortestPath((a {kind:'supplier'})"
@@ -1897,13 +1840,9 @@ def index_put_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "endpoint-filtered — never an all-pairs product.",
 )
 def cypher_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH p = shortestPath((a {kind: 'supplier'})-[*1..3]->(b {kind: 'region'})) "
         "RETURN a, b, length(p) AS hops ORDER BY a, b",
     )
@@ -1925,13 +1864,9 @@ def cypher_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     "identity, which the flat-join oracle proves.",
 )
 def cypher_collect_unwind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (n:nation)<-[:SUPP_NATION]-(s) "
         "WITH n, collect(s) AS members "
         "UNWIND members AS m "
@@ -1957,13 +1892,9 @@ def cypher_collect_unwind(spark: SparkSession, sf_dir: str) -> DataFrame:
     "compile like node aggregates.",
 )
 def cypher_rel_var_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (o:order)-[r:CONTAINS]->(p:part) "
         "WITH p, count(r) AS n_lines "
         "WHERE n_lines > 3 "
@@ -1991,13 +1922,9 @@ def cypher_rel_var_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "works as a plain projection item.",
 )
 def cypher_case_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:IN_NATION]->(n) "
         "RETURN n, sum(CASE WHEN c.name CONTAINS '1' THEN 1 ELSE 0 END) AS n_ones, "
         "count(*) AS n_customers ORDER BY n",
@@ -2012,25 +1939,21 @@ def cypher_case_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rels r
     JOIN nodes nn ON nn.id = r.dst AND nn.kind = 'nation'
     JOIN nodes sn ON sn.id = r.src AND sn.kind = 'supplier'
-    WHERE r.type_name = 'SUPP_NATION' AND nn.name LIKE 'A%'
+    WHERE r.type_name = 'SUPP_NATION' AND nn.name LIKE 'NATION\\_1%' ESCAPE '\\'
     ORDER BY s
     """,
     doc="Cypher SET: MATCH (s:supplier)-[:SUPP_NATION]->(n) WHERE "
-    "n.name STARTS WITH 'A' SET s.tier = 'priority' RETURN s, s.tier, "
+    "n.name STARTS WITH 'NATION_1' SET s.tier = 'priority' RETURN s, s.tier, "
     "n.name — property mutation on the matched rows, returned as the "
     "updated projection (the store-level upsert twin is P2 "
     "`mutation.upsert_properties`, `q:property_upsert_projection`).",
 )
 def cypher_set_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (s:supplier)-[:SUPP_NATION]->(n) "
-        "WHERE n.name STARTS WITH 'A' "
+        "WHERE n.name STARTS WITH 'NATION_1' "
         "SET s.tier = 'priority' "
         "RETURN s, s.tier AS tier, n.name AS nation_name ORDER BY s",
     )
@@ -2082,13 +2005,9 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     "store pass), not a plan union.",
 )
 def cypher_type_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (m)-[:IN_NATION|SUPP_NATION]->(n:nation) "
         "RETURN n, count(m) AS n_members ORDER BY n",
     )
@@ -2210,13 +2129,9 @@ def txlog_as_of_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edge endpoints — a set-membership join, never a per-row subquery.",
 )
 def cypher_exists_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:IN_NATION]->(n) "
         "WHERE NOT EXISTS((c)-[:PLACED]->()) "
         "RETURN n, count(c) AS n_inactive ORDER BY n",
@@ -2510,13 +2425,9 @@ def graph_trade_condensation_layers(spark: SparkSession, sf_dir: str) -> DataFra
     "distinct, and mixing the two is rejected as in Neo4j.",
 )
 def cypher_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:IN_NATION]->(n:nation) "
         "WHERE n.name = 'NATION_3' RETURN c.name AS name "
         "UNION "
@@ -2527,15 +2438,9 @@ def cypher_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parts_brand_modularity",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
+    f"""
+    WITH {copurchase_cte()},
     m AS (SELECT COUNT(*) AS m FROM e),
-    deg AS (SELECT node_id, COUNT(*) AS deg FROM
-            (SELECT a AS node_id FROM e UNION ALL SELECT b FROM e)
-            GROUP BY 1),
     com AS (SELECT p_partkey AS node_id, p_brand AS community FROM part),
     intra AS (SELECT ca.community, COUNT(*) AS e_c
               FROM e JOIN com ca ON e.a = ca.node_id
@@ -2567,21 +2472,7 @@ def cypher_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parts_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import partition_modularity
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir).select("a", "b")
     com = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node_id"), F.col("p_brand").alias("community")
     )
@@ -2740,65 +2631,49 @@ def cypher_merge_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "format any downstream tool can consume.",
 )
 def graph_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
+    from ..catalog import _parquet_files, _temp
     from ..sources.sink import export_jsonl, import_jsonl
 
-    nodes = derived_nodes(spark, sf_dir)
-    # tag includes the source mtimes so a regenerated fixture at the
+    # keyed on the tables' identity, so a regenerated fixture at the
     # same path invalidates the staged export
-    real = os.path.realpath(sf_dir)
-    mtimes = ",".join(
-        str(int(os.path.getmtime(os.path.join(real, f))))
-        for f in sorted(os.listdir(real))
-        if f.endswith(".parquet")
-    )
-    tag = hashlib.md5(f"{real}|{mtimes}".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"nes_jsonl_nodes_{tag}")
+    out = _temp("jsonl_nodes", *_parquet_files(sf_dir))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        export_jsonl(nodes, out)
+        export_jsonl(derived_nodes(spark, sf_dir), out)
     back = import_jsonl(
         spark, out, "id long, kind string, in_use boolean, name string"
     )
     return back.select("id", "kind", "in_use", "name").orderBy("id")
 
 
+def _truss_cte(rounds: int) -> str:
+    """CTE-list text: ``rounds`` unrolled 4-truss peel rounds over the
+    co-purchase ``e``. e{r} holds the edges left after r rounds and
+    sup{r} the triangle support of each of them; round r + 1 keeps the
+    edges of support >= 2."""
+    ctes = "e0 AS (SELECT a, b FROM e)"
+    for r in range(rounds + 1):
+        if r:
+            ctes += f",\n    e{r} AS (SELECT a, b FROM sup{r - 1} WHERE support >= 2)"
+        ctes += f""",
+    adj{r} AS (SELECT a AS u, b AS v FROM e{r} UNION ALL SELECT b, a FROM e{r}),
+    tri{r} AS (SELECT e.a, e.b, COUNT(*) AS n FROM e{r} e
+               JOIN adj{r} x ON x.u = e.a
+               JOIN adj{r} y ON y.u = e.b AND y.v = x.v
+               GROUP BY e.a, e.b),
+    sup{r} AS (SELECT e.a, e.b, COALESCE(t.n, 0) AS support FROM e{r} e
+               LEFT JOIN tri{r} t ON t.a = e.a AND t.b = e.b)"""
+    return ctes
+
+
 @register(
     "parts_ktruss_bounded",
     bench=True,  # iterative wedge-join peeling in the headline set
-    oracle="""
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e0 AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-           FROM li a JOIN li b
-           ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-           GROUP BY 1, 2),
-    adj0 AS (SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0),
-    sup0 AS (SELECT e.a, e.b, COUNT(*) AS sup FROM e0 e
-             JOIN adj0 x ON x.u = e.a
-             JOIN adj0 y ON y.u = e.b AND y.v = x.v
-             GROUP BY e.a, e.b),
-    e1 AS (SELECT e.a, e.b FROM e0 e
-           LEFT JOIN sup0 s ON s.a = e.a AND s.b = e.b
-           WHERE COALESCE(s.sup, 0) >= 2),
-    adj1 AS (SELECT a AS u, b AS v FROM e1 UNION ALL SELECT b, a FROM e1),
-    sup1 AS (SELECT e.a, e.b, COUNT(*) AS sup FROM e1 e
-             JOIN adj1 x ON x.u = e.a
-             JOIN adj1 y ON y.u = e.b AND y.v = x.v
-             GROUP BY e.a, e.b),
-    e2 AS (SELECT e.a, e.b FROM e1 e
-           LEFT JOIN sup1 s ON s.a = e.a AND s.b = e.b
-           WHERE COALESCE(s.sup, 0) >= 2),
-    adj2 AS (SELECT a AS u, b AS v FROM e2 UNION ALL SELECT b, a FROM e2),
-    sup2 AS (SELECT e.a, e.b, COUNT(*) AS sup FROM e2 e
-             JOIN adj2 x ON x.u = e.a
-             JOIN adj2 y ON y.u = e.b AND y.v = x.v
-             GROUP BY e.a, e.b)
-    SELECT e.a AS part_a, e.b AS part_b,
-           COALESCE(s.sup, 0) AS support
-    FROM e2 e LEFT JOIN sup2 s ON s.a = e.a AND s.b = e.b
+    oracle=f"""
+    WITH {copurchase_cte(_SLICE)},
+    {_truss_cte(2)}
+    SELECT a AS part_a, b AS part_b, support FROM sup2
     ORDER BY part_a, part_b
     """,
     doc="4-truss extraction (community.ktruss_peel, 2 bounded peel "
@@ -2815,22 +2690,7 @@ def graph_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def parts_ktruss_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import ktruss_peel
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return (
         ktruss_peel(e, k=4, rounds=2)
         .select(
@@ -2864,13 +2724,9 @@ def parts_ktruss_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     "subplans.",
 )
 def cypher_where_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:IN_NATION]->(n:nation) "
         "WHERE n.name = 'NATION_7' "
         "OR c.name >= 'Customer#000000190' AND c.name < 'Customer#000000200' "
@@ -2904,13 +2760,9 @@ def cypher_where_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expand) as one Catalyst plan.",
 )
 def cypher_with_topk_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pattern import cypher_query
-
-    nodes = derived_nodes(spark, sf_dir)
-    rels = derived_rels(spark, sf_dir)
-    return cypher_query(
-        nodes,
-        rels,
+    return _cypher(
+        spark,
+        sf_dir,
         "MATCH (c:customer)-[:PLACED]->(o) "
         "WITH c, count(*) AS n_orders ORDER BY n_orders DESC, c LIMIT 3 "
         "MATCH (c)-[:IN_NATION]->(n:nation) "
@@ -2921,9 +2773,8 @@ def cypher_with_topk_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parts_frequent_triples",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
+    f"""
+    WITH {copurchase_cte(_SLICE)},
     t AS (
       SELECT a.l_partkey AS pa, b.l_partkey AS pb, c.l_partkey AS pc,
              COUNT(*) AS support
@@ -2943,12 +2794,7 @@ def cypher_with_topk_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     "candidate space — documented, not needed at fixture k.",
 )
 def parts_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
+    li = basket(spark, sf_dir, _SLICE)
     a = li.select("l_orderkey", F.col("l_partkey").alias("pa"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("pb"))
     c = li.select("l_orderkey", F.col("l_partkey").alias("pc"))
@@ -2964,48 +2810,56 @@ def parts_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "graph_louvain_move_round",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-    m AS (SELECT COUNT(*) AS m FROM e),
-    deg AS (SELECT u AS node_id, COUNT(*) AS deg FROM adj GROUP BY 1),
-    com AS (SELECT node_id, node_id AS community FROM deg),
-    nbr AS (SELECT a.u AS node_id, c.community AS cand, COUNT(*) AS k_in
-            FROM adj a JOIN com c ON c.node_id = a.v GROUP BY 1, 2),
-    own AS (SELECT node_id, community AS cand FROM com),
-    cands AS (
+def _louvain_cte(rounds: int) -> str:
+    """CTE-list text: ``rounds`` unrolled Louvain move rounds over the
+    co-purchase ``adj`` / ``deg``, from the singleton start com0 to
+    com{rounds}. Round r scores each (node, candidate community) pair in
+    best{r}, ranked by ``rk``. A no-change round is idempotent, so
+    unrolling a FIXED number of rounds equals the Spark loop even when
+    it early-exits."""
+    ctes = """m AS (SELECT COUNT(*) AS m FROM e),
+    com0 AS MATERIALIZED (SELECT node_id, node_id AS community FROM deg)"""
+    for r in range(rounds):
+        ctes += f""",
+    nbr{r} AS MATERIALIZED (SELECT a.u AS node_id, c.community AS cand,
+                      COUNT(*) AS k_in
+               FROM adj a JOIN com{r} c ON c.node_id = a.v GROUP BY 1, 2),
+    own{r} AS (SELECT node_id, community AS cand FROM com{r}),
+    cands{r} AS (
       SELECT COALESCE(n.node_id, o.node_id) AS node_id,
              COALESCE(n.cand, o.cand) AS cand,
              COALESCE(n.k_in, 0) AS k_in
-      FROM nbr n FULL OUTER JOIN own o
+      FROM nbr{r} n FULL OUTER JOIN own{r} o
         ON n.node_id = o.node_id AND n.cand = o.cand),
-    dtot AS (SELECT c.community AS cand, SUM(COALESCE(d.deg, 0)) AS d_tot
-             FROM com c LEFT JOIN deg d USING (node_id) GROUP BY 1),
-    scored AS (
+    dtot{r} AS (SELECT c.community AS cand, SUM(COALESCE(d.deg, 0)) AS d_tot
+                FROM com{r} c LEFT JOIN deg d USING (node_id) GROUP BY 1),
+    scored{r} AS (
       SELECT x.node_id, x.cand, c.community,
              2 * m.m * x.k_in
                - (CASE WHEN x.cand = c.community
                        THEN t.d_tot - d.deg ELSE t.d_tot END) * d.deg
                AS score_num
-      FROM cands x
-      JOIN com c USING (node_id)
-      JOIN dtot t ON t.cand = x.cand
+      FROM cands{r} x
+      JOIN com{r} c USING (node_id)
+      JOIN dtot{r} t ON t.cand = x.cand
       JOIN deg d ON d.node_id = x.node_id, m),
-    best AS (
-      SELECT node_id, community AS old_com, cand AS new_com, score_num,
-             ROW_NUMBER() OVER (PARTITION BY node_id
-                                ORDER BY score_num DESC, cand) AS rk
-      FROM scored)
-    SELECT node_id, old_com, new_com,
+    best{r} AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY node_id
+                                   ORDER BY score_num DESC, cand) AS rk
+      FROM scored{r}),
+    com{r + 1} AS MATERIALIZED (SELECT node_id, cand AS community
+                   FROM best{r} WHERE rk = 1)"""
+    return ctes
+
+
+@register(
+    "graph_louvain_move_round",
+    f"""
+    WITH {copurchase_cte(_SLICE)},
+    {_louvain_cte(1)}
+    SELECT node_id, community AS old_com, cand AS new_com,
            CAST(score_num AS BIGINT) AS score_num
-    FROM best WHERE rk = 1 ORDER BY node_id
+    FROM best0 WHERE rk = 1 ORDER BY node_id
     """,
     doc="One exact Louvain phase-1 move round "
     "(community.louvain_move_round) over the 500-part co-purchase "
@@ -3020,77 +2874,15 @@ def parts_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_louvain_move_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import louvain_move_round
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return louvain_move_round(e).orderBy("node_id")
-
-
-def _louvain_round_cte(r: int) -> str:
-    """One unrolled Louvain move round as CTE text: com{r} → com{r+1}.
-    A no-change round is idempotent, so unrolling a FIXED number of
-    rounds equals the Spark loop even when it early-exits."""
-    return f"""
-    nbr{r} AS MATERIALIZED (SELECT a.u AS node_id, c.community AS cand,
-                      COUNT(*) AS k_in
-               FROM adj a JOIN com{r} c ON c.node_id = a.v GROUP BY 1, 2),
-    own{r} AS (SELECT node_id, community AS cand FROM com{r}),
-    cands{r} AS (
-      SELECT COALESCE(n.node_id, o.node_id) AS node_id,
-             COALESCE(n.cand, o.cand) AS cand,
-             COALESCE(n.k_in, 0) AS k_in
-      FROM nbr{r} n FULL OUTER JOIN own{r} o
-        ON n.node_id = o.node_id AND n.cand = o.cand),
-    dtot{r} AS (SELECT c.community AS cand, SUM(COALESCE(d.deg, 0)) AS d_tot
-                FROM com{r} c LEFT JOIN deg d USING (node_id) GROUP BY 1),
-    best{r} AS (
-      SELECT x.node_id, x.cand,
-             ROW_NUMBER() OVER (
-               PARTITION BY x.node_id
-               ORDER BY 2 * m.m * x.k_in
-                        - (CASE WHEN x.cand = c.community
-                                THEN t.d_tot - d.deg ELSE t.d_tot END)
-                          * d.deg DESC,
-                        x.cand) AS rk
-      FROM cands{r} x
-      JOIN com{r} c USING (node_id)
-      JOIN dtot{r} t ON t.cand = x.cand
-      JOIN deg d ON d.node_id = x.node_id, m),
-    com{r + 1} AS MATERIALIZED (SELECT node_id, cand AS community
-                   FROM best{r} WHERE rk = 1)"""
 
 
 @register(
     "graph_louvain_communities",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
-                         UNION ALL SELECT b, a FROM e),
-    m AS (SELECT COUNT(*) AS m FROM e),
-    deg AS MATERIALIZED (SELECT u AS node_id, COUNT(*) AS deg
-                         FROM adj GROUP BY 1),
-    com0 AS MATERIALIZED (SELECT node_id, node_id AS community FROM deg),
-    """
-    + ",\n".join(_louvain_round_cte(r) for r in range(4))
-    + """
+    f"""
+    WITH {copurchase_cte(_SLICE)},
+    {_louvain_cte(4)}
     SELECT node_id, community FROM com4 ORDER BY node_id
     """,
     doc="Louvain phase-1 to bounded fixpoint "
@@ -3105,22 +2897,7 @@ def _louvain_round_cte(r: int) -> str:
 def graph_louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import louvain_communities
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return louvain_communities(e, max_rounds=4).orderBy("node_id")
 
 
@@ -3139,22 +2916,7 @@ def graph_louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import betweenness_sampled
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     sources = (
         e.select(F.col("a").alias("source"))
         .unionByName(e.select(F.col("b").alias("source")))
@@ -3169,11 +2931,17 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mis_round_cte(r: int) -> str:
-    """One unrolled Luby round: act{r} → win{r}/act{r+1} (md5
-    priorities make the randomized algorithm a pure function of the
-    seed, so the oracle replays it; empty-active rounds are no-ops)."""
-    return f"""
+def _mis_cte(rounds: int) -> str:
+    """CTE-list text: ``rounds`` unrolled Luby rounds over the
+    co-purchase ``adj``, act{r} → win{r} / act{r + 1}, and ``won``, the
+    winners of all rounds (md5 priorities make the randomized algorithm
+    a pure function of the seed, so the oracle replays it; empty-active
+    rounds are no-ops)."""
+    ctes = """act0 AS MATERIALIZED (SELECT DISTINCT u AS node_id,
+                    md5('0|' || CAST(u AS VARCHAR)) AS pri
+             FROM adj)"""
+    for r in range(rounds):
+        ctes += f""",
     nmin{r} AS MATERIALIZED (SELECT a.u AS node_id, MIN(p.pri) AS min_nbr
                 FROM adj a JOIN act{r} p ON p.node_id = a.v GROUP BY 1),
     win{r} AS MATERIALIZED (SELECT x.node_id FROM act{r} x
@@ -3185,31 +2953,16 @@ def _mis_round_cte(r: int) -> str:
     act{r + 1} AS MATERIALIZED (SELECT x.node_id, x.pri FROM act{r} x
                    LEFT JOIN kill{r} k USING (node_id)
                    WHERE k.node_id IS NULL)"""
+    won = " UNION ALL ".join(f"SELECT node_id FROM win{r}" for r in range(rounds))
+    return f"{ctes},\n    won AS ({won})"
 
 
 @register(
     "graph_mis_luby",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
-                         UNION ALL SELECT b, a FROM e),
-    act0 AS MATERIALIZED (SELECT DISTINCT u AS node_id,
-                    md5('0|' || CAST(u AS VARCHAR)) AS pri
-             FROM adj),
-    """
-    + ",\n".join(_mis_round_cte(r) for r in range(8))
-    + """
-    SELECT node_id FROM (
-      SELECT node_id FROM win0 UNION ALL SELECT node_id FROM win1
-      UNION ALL SELECT node_id FROM win2 UNION ALL SELECT node_id FROM win3
-      UNION ALL SELECT node_id FROM win4 UNION ALL SELECT node_id FROM win5
-      UNION ALL SELECT node_id FROM win6 UNION ALL SELECT node_id FROM win7)
-    ORDER BY node_id
+    f"""
+    WITH {copurchase_cte(_SLICE)},
+    {_mis_cte(8)}
+    SELECT node_id FROM won ORDER BY node_id
     """,
     doc="Luby maximal independent set, deterministic "
     "(community.maximal_independent_set): md5(seed|node) priorities "
@@ -3224,22 +2977,7 @@ def _mis_round_cte(r: int) -> str:
 def graph_mis_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import maximal_independent_set
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return maximal_independent_set(e, seed=0, max_rounds=8).orderBy("node_id")
 
 
@@ -3332,17 +3070,8 @@ def graph_katz_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_assortativity",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
-                         UNION ALL SELECT b, a FROM e),
-    deg AS MATERIALIZED (SELECT u AS node_id, COUNT(*) AS deg
-                         FROM adj GROUP BY 1),
+    f"""
+    WITH {copurchase_cte(_SLICE)},
     s AS (
       SELECT COUNT(*) AS m2,
              SUM(dx.deg * dy.deg) AS sxy,
@@ -3370,22 +3099,7 @@ def graph_katz_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import degree_assortativity
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return degree_assortativity(e)
 
 
@@ -3407,22 +3121,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_coloring_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.community import greedy_coloring
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return (
         greedy_coloring(e, seed=0, max_colors=24)
         .groupBy("color")
@@ -3493,15 +3192,8 @@ def graph_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_rich_club",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS (SELECT a AS u FROM e UNION ALL SELECT b FROM e),
-    deg AS (SELECT u AS node_id, COUNT(*) AS deg FROM adj GROUP BY 1),
+    f"""
+    WITH {copurchase_cte(_SLICE)},
     ks(k) AS (VALUES (5), (10), (20)),
     club AS (SELECT ks.k, d.node_id FROM ks JOIN deg d ON d.deg > ks.k),
     nk AS (SELECT k, COUNT(*) AS n_k FROM club GROUP BY k),
@@ -3524,22 +3216,7 @@ def graph_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division per k.",
 )
 def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     deg = (
         e.select(F.col("a").alias("node_id"))
         .unionByName(e.select(F.col("b").alias("node_id")))
@@ -3577,9 +3254,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parts_association_rules",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
+    f"""
+    WITH {copurchase_cte(_SLICE)},
     n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM li),
     supp AS (SELECT l_partkey AS item, COUNT(*) AS s FROM li GROUP BY 1),
     pair AS (SELECT a.l_partkey AS ante, b.l_partkey AS cons,
@@ -3605,12 +3281,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     "family: pair counts → triples → directed rules.",
 )
 def parts_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
+    li = basket(spark, sf_dir, _SLICE)
     n = li.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     supp = li.groupBy(F.col("l_partkey").alias("item")).agg(
         F.count("*").alias("s")
@@ -3669,23 +3340,14 @@ def parts_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "when absent.",
 )
 def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
+    from ..catalog import _parquet_files, _temp
     from ..sources.sink import export_orc, import_orc
 
-    nodes = derived_nodes(spark, sf_dir)
-    real = os.path.realpath(sf_dir)
-    mtimes = ",".join(
-        str(int(os.path.getmtime(os.path.join(real, f))))
-        for f in sorted(os.listdir(real))
-        if f.endswith(".parquet")
-    )
-    tag = hashlib.md5(f"orc|{real}|{mtimes}".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"nes_orc_nodes_{tag}")
+    out = _temp("orc_nodes", *_parquet_files(sf_dir))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        export_orc(nodes, out)
+        export_orc(derived_nodes(spark, sf_dir), out)
     back = import_orc(
         spark, out, "id long, kind string, in_use boolean, name string"
     )
@@ -3694,28 +3356,9 @@ def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_label_propagation",
-    """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_partkey < 500),
-    e AS (SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM li a JOIN li b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2),
-    adj AS MATERIALIZED (SELECT a AS u, b AS v FROM e
-                         UNION ALL SELECT b, a FROM e),
-    l0 AS (SELECT DISTINCT u AS node_id, u AS label FROM adj),
-    c1 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
-           FROM adj a JOIN l0 l ON l.node_id = a.v GROUP BY 1, 2),
-    l1 AS (SELECT node_id, label FROM c1 QUALIFY ROW_NUMBER() OVER
-           (PARTITION BY node_id ORDER BY cnt DESC, label) = 1),
-    c2 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
-           FROM adj a JOIN l1 l ON l.node_id = a.v GROUP BY 1, 2),
-    l2 AS (SELECT node_id, label FROM c2 QUALIFY ROW_NUMBER() OVER
-           (PARTITION BY node_id ORDER BY cnt DESC, label) = 1),
-    c3 AS (SELECT a.u AS node_id, l.label, COUNT(*) AS cnt
-           FROM adj a JOIN l2 l ON l.node_id = a.v GROUP BY 1, 2),
-    l3 AS (SELECT node_id, label FROM c3 QUALIFY ROW_NUMBER() OVER
-           (PARTITION BY node_id ORDER BY cnt DESC, label) = 1)
+    f"""
+    WITH {copurchase_cte(_SLICE)},
+    {_label_rounds_cte(3)}
     SELECT CAST(node_id AS BIGINT) AS node_id, CAST(label AS BIGINT) AS label
     FROM l3 ORDER BY node_id
     """,
@@ -3730,22 +3373,7 @@ def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "label)) — no window, one combinable aggregation per round.",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") < 500)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    e = (
-        li.select(F.col("l_orderkey"), F.col("l_partkey").alias("a"))
-        .join(
-            li.select(F.col("l_orderkey"), F.col("l_partkey").alias("b")),
-            "l_orderkey",
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = copurchase(spark, sf_dir, _SLICE).select("a", "b")
     return (
         community.label_propagation(e, rounds=3)
         .select(F.col("node_id").cast("long"), F.col("label").cast("long"))

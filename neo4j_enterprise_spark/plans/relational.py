@@ -9,15 +9,13 @@ and broadcast of the dimension sides.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import _normalize_ts, load_table
+from ..catalog import _normalize_ts, _temp, load_table
 from ..operators.rankings import argmax, top_k_per_group
 from ..streaming import feeds
 from . import register
@@ -1210,20 +1208,6 @@ def _ensure_symlink(target: str, link: str) -> None:
 
 def _events_file(sf_dir: str) -> str:
     return os.path.join(sf_dir, "events.parquet")
-
-
-def _temp(kind: str, *files: str) -> str:
-    """A tempdir path named by ``kind`` and the identity of ``files``
-    (each one's realpath, size and mtime in ns). A file-stream source
-    never re-reads a path it has seen, so a file rewritten in place must
-    get fresh stage, checkpoint and output dirs, or append-mode queries
-    would return the old file's rows."""
-    ident = []
-    for f in files:
-        st = os.stat(f)
-        ident.append((os.path.realpath(f), st.st_size, st.st_mtime_ns))
-    tag = hashlib.md5(repr(ident).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"nes_{kind}_{tag}")
 
 
 def _stage_events(

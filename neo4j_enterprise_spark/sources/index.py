@@ -16,8 +16,6 @@ lookup then touches one partition x one bucket regardless of table size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,7 +103,7 @@ def put_if_absent(existing: DataFrame, batch: DataFrame) -> tuple[DataFrame, Dat
 
 
 def default_index_dir(sf_dir: str) -> str:
-    import tempfile
+    """A temp dir keyed on the identity of ``sf_dir``'s tables."""
+    from ..catalog import _parquet_files, _temp
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"nes_inverted_index_{tag}")
+    return _temp("inverted_index", *_parquet_files(sf_dir))

@@ -7,7 +7,9 @@ to a file sink, state dropped as the watermark closes windows.
 
 from __future__ import annotations
 
+import glob
 import os
+import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -151,14 +153,19 @@ def test_append_queries_follow_a_rewritten_events_file(spark, sf_dir, tmp_path):
     """The append-mode queries keep a checkpoint and an output dir between
     runs, and a file-stream source never re-reads a path it has seen:
     after the events file is rewritten in place, each must still return
-    the new file's rows, not the ones its first run saved."""
+    the new file's rows, not the ones its first run saved. The dirs and
+    files staged for the first file are removed once the rewritten one
+    is staged."""
     names = (
         "events_stream_hourly_append",
         "events_stream_sessions_append",
         "events_stream_leaderboard",
     )
+    staged = os.path.join(glob.escape(tempfile.gettempdir()), "nes_*")
+    seen = set(glob.glob(staged))
     copy = _events_copy(sf_dir, tmp_path)
     before = {n: len(_matches_oracle(spark, copy, n)) for n in names}
+    first = set(glob.glob(staged)) - seen
     _events_copy(
         sf_dir,
         tmp_path,
@@ -166,6 +173,8 @@ def test_append_queries_follow_a_rewritten_events_file(spark, sf_dir, tmp_path):
     )
     after = {n: len(_matches_oracle(spark, copy, n)) for n in names}
     assert all(after[n] < before[n] for n in names), (before, after)
+    assert first, "the first run staged nothing under the temp dir"
+    assert not first & set(glob.glob(staged)), sorted(first & set(glob.glob(staged)))
 
 
 def test_catchup_tail_keeps_null_ts_rows(spark, sf_dir, tmp_path):

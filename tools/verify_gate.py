@@ -8,8 +8,10 @@ execute.
 
 Usage: python tools/verify_gate.py [NAME ...]   (no names: the whole registry)
 
-Prints one line per query (OK / MISMATCH / ROWS_ONLY / ERROR) and a last
-line ``TOTAL_BAD <n> of <m>``; exits non-zero when n > 0.
+Prints one line per query (OK / EMPTY / MISMATCH / ROWS_ONLY / ERROR),
+then ``EMPTY <k>`` and a last line ``TOTAL_BAD <n> of <m>``; exits
+non-zero when n > 0. EMPTY means both sides returned no rows: the query
+passes, but its compare proves nothing about the plan.
 """
 
 from __future__ import annotations
@@ -44,7 +46,8 @@ def _same(x, y) -> bool:
 
 
 def compare(spark: SparkSession, con, q: Query) -> str:
-    """One query's verdict line: OK / MISMATCH / ROWS_ONLY, with detail."""
+    """One query's verdict line: OK / EMPTY / MISMATCH / ROWS_ONLY, with
+    detail."""
     sdf = q.spark(spark, SF_DIR)
     if q.oracle is None:
         return f"ROWS_ONLY {sdf.count()} rows"
@@ -61,7 +64,7 @@ def compare(spark: SparkSession, con, q: Query) -> str:
     for a, b in zip(_norm(s_rows, s_cols), _norm(d_rows, d_cols)):
         if not all(map(_same, a, b)):
             return f"MISMATCH first row diff {a} vs {b}"
-    return f"OK {len(s_rows)} rows"
+    return f"OK {len(s_rows)} rows" if s_rows else "EMPTY"
 
 
 def main(names: list[str]) -> int:
@@ -81,14 +84,16 @@ def main(names: list[str]) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    bad = 0
+    bad = empty = 0
     for name in names:
         try:
             verdict = compare(spark, con, queries[name])
         except Exception as ex:  # noqa: BLE001
             verdict = f"ERROR {type(ex).__name__}: {str(ex)[:150]}"
         bad += verdict.startswith(("MISMATCH", "ERROR"))
+        empty += verdict == "EMPTY"
         print(name, verdict, flush=True)
+    print("EMPTY", empty)
     print("TOTAL_BAD", bad, "of", len(names))
     return 1 if bad else 0
 
