@@ -9,11 +9,10 @@ The per-phase detail (elementCount, time, recordsPerSecond per query,
 mirroring the reference harness's JSON report schema,
 `enterprise-performance-tests/.../JsonReportWriter.java:106-131`,
 `TimingProgress.java:31-100`) is written to ``bench_report.json``
-(override with ``$SPARK_GRAFT_BENCH_OUT``). Until r12 the phases block
-was also inlined into the stdout line, which pushed it past the
-driver's 2000-char stdout tail; since r13 the stdout line is the
-compact contract schema only so any tail-bounded, last-line, or
-whole-stdout parser reads it (VERDICT r12 ask #3).
+(override with ``$SPARK_GRAFT_BENCH_OUT``). The stdout line is the
+compact contract schema only, so any tail-bounded, last-line, or
+whole-stdout parser reads it: with the phases block inlined it ran past
+a 2000-char stdout tail.
 
 Scale dir from ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
 cores from ``$SPARK_GRAFT_CPUS`` (default: the host's, see session.py).
@@ -92,8 +91,8 @@ def _timed_phase(spark, name, build, sf_dir, warm_s):
             if len(samples) + (4 * runs - attempts) >= runs:
                 continue
             # budget exhausted: the polluted sample is kept, but the
-            # artifact must say so (BENCH_r05's 4x jump was exactly
-            # this, silently — see VERDICT r5 "What's wrong" #1)
+            # artifact must say so (an unflagged polluted sample once
+            # showed as a 4x jump)
             polluted += 1
             steal_kept += st
         samples.append(dt_s)
@@ -116,8 +115,8 @@ def _timed_phase(spark, name, build, sf_dir, warm_s):
     return phase, samples
 
 
-# the orderkey-bucketed at-rest layout (VERDICT r9 item 1): bucket/sort
-# column and registered table name per fact table
+# the orderkey-bucketed at-rest layout: bucket/sort column and
+# registered table name per fact table
 _BUCKET_SPEC = {
     "lineitem": ("l_orderkey", "bkt_lineitem"),
     "orders": ("o_orderkey", "bkt_orders"),
@@ -397,8 +396,8 @@ def main() -> None:
             f.write("\n")
     except OSError as exc:
         print(f"# bench_report write failed: {exc!r}", file=sys.stderr)
-    # r13 contract hardening (VERDICT r12 ask #3): BENCH_r11 was lost to a
-    # parse failure, erasing a whole round of comparability. The stdout
+    # contract hardening: one bench run was lost to a parse failure,
+    # erasing a whole round of comparability. The stdout
     # line is now the COMPACT contract schema only (metric/value/unit/
     # queries/sf — exactly the documented one-line contract; ~1 KB), so
     # it survives a 2000-char tail truncation AND stays a single JSON

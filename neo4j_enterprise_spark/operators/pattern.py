@@ -662,10 +662,10 @@ def _deferrable_attach_vars(
 ) -> set[str]:
     """Vars whose property attach can move PAST the aggregation.
 
-    The r9 sf10 finding (BASELINE §12): ``RETURN n.name, count(*)``
-    attached ``name`` onto the full match frame — an id-keyed join of
-    millions of path rows against the entire node store — when grouping
-    by the node ID first shrinks the frame to the group count, the
+    At sf10, ``RETURN n.name, count(*)`` attached ``name`` onto the
+    full match frame — an id-keyed join of millions of path rows
+    against the entire node store — when grouping by the node ID first
+    shrinks the frame to the group count, the
     attach join becomes a broadcast of the aggregated side, and a
     trivial re-aggregate by the property merges id-groups that share a
     property value. Safe only when (a) every aggregate is mergeable
@@ -715,8 +715,8 @@ def _deferrable_kind_semis(items, match_body, opt_body):
     in the var, so dropping non-matching groups after the aggregate
     drops exactly the rows the pre-agg semi would have) — defer them
     past the aggregation so the full match frame is never
-    sort-merge-joined against the node store (the r9 sf10
-    cypher_with_having finding, BASELINE §12). Returns
+    sort-merge-joined against the node store (at sf10 that join
+    dominated cypher_with_having). Returns
     ({var: kind}, {var: alias}); empty when the stage has no items, no
     match, or a shortestPath match (which applies labels internally).
     Vars bound by OPTIONAL MATCH are excluded — their NULL ids would be

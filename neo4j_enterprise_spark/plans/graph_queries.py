@@ -2624,9 +2624,10 @@ def cypher_merge_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "import_jsonl): the full node store written as JSON-lines and read "
     "back with an EXPLICIT schema (no inference pass), hash-matched "
     "against the oracle's node derivation — proving the interchange "
-    "path is lossless for long/bool/string payloads. Stage dir keyed "
-    "on a hash of the absolute sf_dir; rewritten only when absent "
-    "(idempotent re-runs). The reference's whole-file store streaming "
+    "path is lossless for long/bool/string payloads. The stage dir is "
+    "named by `catalog._temp` from the tables' realpaths, sizes and "
+    "mtimes; it is written only when absent (idempotent re-runs), and "
+    "a rewritten fixture gets a fresh one. The reference's whole-file store streaming "
     "(Master.copyStore / BackupService.doFullBackup:85-180) in a "
     "format any downstream tool can consume.",
 )
@@ -3336,8 +3337,8 @@ def parts_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pinned schema, hash-matched against the oracle's node derivation "
     "— the columnar-interchange sibling of graph_jsonl_roundtrip "
     "(Hive/Trino ecosystems speak ORC; parquet remains the native "
-    "format). Stage dir keyed on source path+mtimes, rewritten only "
-    "when absent.",
+    "format). The stage dir is named by `catalog._temp` from the "
+    "tables' realpaths, sizes and mtimes, and written only when absent.",
 )
 def graph_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

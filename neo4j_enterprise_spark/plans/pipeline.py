@@ -243,6 +243,34 @@ def _adc_cut(scan: str) -> str:
         FROM adc) WHERE crk <= 20)"""
 
 
+def _bigrams(split: bool = False) -> str:
+    """CTEs ``u``, ``bg``: each doc's tokens (array ``t`` of CTE
+    ``toks``) with their ordinal, and its adjacent non-empty token pairs
+    (w1, w2) by an ordinal self-join — the twin of the array-side bigram
+    build of ``docs_bigram_counts`` and ``text.bigram_fluency``.
+    ``split`` carries the doc's split tag through."""
+    tag, a_tag = (", split", ", a.split") if split else ("", "")
+    return f"""u AS (SELECT doc_id{tag}, unnest(t) AS tok,
+                 generate_subscripts(t, 1) AS ord
+          FROM toks),
+    bg AS (SELECT a.doc_id{a_tag}, a.tok AS w1, b.tok AS w2
+           FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
+           WHERE a.tok <> '' AND b.tok <> '')"""
+
+
+def _bm25_ppb(tf: str, df: str) -> str:
+    """One term's exact-integer BM25 score in ppb, replaying
+    ``text.bm25_rank`` (k1=6/5, b=3/4 → cleared coefficients 44/20/6/18,
+    see its docstring): ``tf`` names the term's per-doc count in ``p``,
+    ``df`` its doc frequency in the corpus row ``g``."""
+    return f"""CASE WHEN p.{tf} > 0 THEN CAST(
+          (CAST(44 AS HUGEINT) * p.{tf} * g.total_len
+             * (2 * g.n_docs - 2 * g.{df} + 1) * 1000000000)
+          // ((CAST(20 AS HUGEINT) * p.{tf} * g.total_len
+             + 6 * g.total_len + 18 * p.dl * g.n_docs)
+             * (2 * g.{df} + 1)) AS BIGINT) ELSE 0 END"""
+
+
 @register(
     "docs_exact_dup_groups",
     """
@@ -2004,17 +2032,11 @@ def docs_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "docs_bigram_counts",
     bench=True,  # array-side n-gram build (zero-shuffle until the count)
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
       FROM documents),
-    u AS (
-      SELECT doc_id, unnest(t) AS tok, generate_subscripts(t, 1) AS ord
-      FROM toks),
-    bg AS (
-      SELECT a.tok AS w1, b.tok AS w2
-      FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-      WHERE a.tok <> '' AND b.tok <> ''),
+    {_bigrams()},
     pair AS (SELECT w1, w2, COUNT(*) AS pair_n FROM bg GROUP BY w1, w2),
     pre AS (SELECT w1, CAST(SUM(pair_n) AS BIGINT) AS prefix_n
             FROM pair GROUP BY w1)
@@ -2433,12 +2455,7 @@ def docs_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t,
              {_TRAIN_EVAL_CASE} AS split
       FROM documents),
-    u AS (SELECT doc_id, split, unnest(t) AS tok,
-                 generate_subscripts(t, 1) AS ord
-          FROM toks),
-    bg AS (SELECT a.doc_id, a.split, a.tok AS w1, b.tok AS w2
-           FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-           WHERE a.tok <> '' AND b.tok <> ''),
+    {_bigrams(split=True)},
     pair AS (SELECT w1, w2, COUNT(*) AS pair_n FROM bg
              WHERE split = 'train' GROUP BY w1, w2),
     pre AS (SELECT w1, CAST(SUM(pair_n) AS BIGINT) AS prefix_n
@@ -2477,7 +2494,7 @@ def docs_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_bm25_search",
-    r"""
+    rf"""
     WITH toks AS (
       -- NULL-text contract: NULL docs are outside the corpus
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
@@ -2502,26 +2519,9 @@ def docs_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
                   CAST(p.tf_dup AS BIGINT) AS tf_dup,
                   CAST(p.tf_vector AS BIGINT) AS tf_vector,
                   CAST(p.tf_stream AS BIGINT) AS tf_stream,
-        CASE WHEN p.tf_dup > 0 THEN CAST(
-          (CAST(44 AS HUGEINT) * p.tf_dup * g.total_len
-             * (2 * g.n_docs - 2 * g.df_dup + 1) * 1000000000)
-          // ((CAST(20 AS HUGEINT) * p.tf_dup * g.total_len
-             + 6 * g.total_len + 18 * p.dl * g.n_docs)
-             * (2 * g.df_dup + 1)) AS BIGINT) ELSE 0 END AS s_dup_ppb,
-        CASE WHEN p.tf_vector > 0 THEN CAST(
-          (CAST(44 AS HUGEINT) * p.tf_vector * g.total_len
-             * (2 * g.n_docs - 2 * g.df_vector + 1) * 1000000000)
-          // ((CAST(20 AS HUGEINT) * p.tf_vector * g.total_len
-             + 6 * g.total_len + 18 * p.dl * g.n_docs)
-             * (2 * g.df_vector + 1)) AS BIGINT) ELSE 0 END
-          AS s_vector_ppb,
-        CASE WHEN p.tf_stream > 0 THEN CAST(
-          (CAST(44 AS HUGEINT) * p.tf_stream * g.total_len
-             * (2 * g.n_docs - 2 * g.df_stream + 1) * 1000000000)
-          // ((CAST(20 AS HUGEINT) * p.tf_stream * g.total_len
-             + 6 * g.total_len + 18 * p.dl * g.n_docs)
-             * (2 * g.df_stream + 1)) AS BIGINT) ELSE 0 END
-          AS s_stream_ppb
+        {_bm25_ppb("tf_dup", "df_dup")} AS s_dup_ppb,
+        {_bm25_ppb("tf_vector", "df_vector")} AS s_vector_ppb,
+        {_bm25_ppb("tf_stream", "df_stream")} AS s_stream_ppb
      FROM per p, g)
     SELECT doc_id, dl, tf_dup, tf_vector, tf_stream,
            s_dup_ppb, s_vector_ppb, s_stream_ppb,
@@ -3547,8 +3547,7 @@ def docs_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bm25_ranked_cte(terms: tuple[str, ...], s: str, depth: int) -> str:
     """DuckDB CTE fragment replaying text.bm25_rank's exact-integer BM25
-    (k1=6/5, b=3/4 -> cleared coefficients 44/20/6/18 — see bm25_rank's
-    docstring derivation) for one term set, ranked and truncated to
+    (``_bm25_ppb`` per term) for one term set, ranked and truncated to
     ``depth``. Suffix ``s`` namespaces the CTEs so two rankers coexist
     in one WITH clause."""
     tf_cols = ",\n".join(
@@ -3560,13 +3559,7 @@ def _bm25_ranked_cte(terms: tuple[str, ...], s: str, depth: int) -> str:
         for i in range(len(terms))
     )
     score_cols = ",\n".join(
-        f"""        CASE WHEN p.tf_{i} > 0 THEN CAST(
-          (CAST(44 AS HUGEINT) * p.tf_{i} * g.total_len
-             * (2 * g.n_docs - 2 * g.df_{i} + 1) * 1000000000)
-          // ((CAST(20 AS HUGEINT) * p.tf_{i} * g.total_len
-             + 6 * g.total_len + 18 * p.dl * g.n_docs)
-             * (2 * g.df_{i} + 1)) AS BIGINT) ELSE 0 END AS s_{i}"""
-        for i in range(len(terms))
+        f"        {_bm25_ppb(f'tf_{i}', f'df_{i}')} AS s_{i}" for i in range(len(terms))
     )
     total = " + ".join(f"s_{i}" for i in range(len(terms)))
     return f"""

@@ -1,8 +1,8 @@
 """Relational declared queries (TPC-H-shaped) over the driver testdata.
 
 These exercise the engine's scan → filter → join → aggregate → window →
-top-k pipeline on the star schema; they double as the BENCH headline set
-(BASELINE.md B6). All plans are pure DataFrame API — Catalyst does
+top-k pipeline on the star schema; the ``bench=True`` ones are the bench
+headline set. All plans are pure DataFrame API — Catalyst does
 pushdown/pruning/join-selection; `.explain` on each shows PushedFilters
 and broadcast of the dimension sides.
 """
@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import _normalize_ts, _temp, load_table
@@ -22,77 +22,229 @@ from . import register
 
 DEC = "decimal(18,2)"
 
+# --- the shared vocabulary ---------------------------------------------
+# Each piece that several queries share is written once below: a Spark
+# helper and, where oracles share it, its SQL twin. Oracles share text
+# only with other oracles, never with a Spark plan, so every twin stays
+# independent.
+
 
 def _d(c: str) -> F.Column:
     return F.col(c).cast(DEC)
 
 
+# DECIMAL(18,2) money: sums stay exact, cast to DOUBLE once at the end.
+_PRICE_DEC_SQL = "CAST(l_extendedprice AS DECIMAL(18,2))"
+_REV_DEC_SQL = f"{_PRICE_DEC_SQL} * (1 - CAST(l_discount AS DECIMAL(18,2)))"
+
+
+def _rev_dec() -> F.Column:
+    """Discounted revenue price·(1 − disc) in DECIMAL (``_REV_DEC_SQL``)."""
+    return _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
+
+
+def _cents(c: str, unit: int = 100) -> F.Column:
+    """``c`` as an exact integer count of 1/``unit``: round(c·unit) as a
+    long (cents at 100, milli-units at 1000). Long sums of these run as
+    primitive arithmetic in codegen; both engines round half away from
+    zero."""
+    return F.round(F.col(c) * unit).cast("long")
+
+
+def _cents_sql(x: str, unit: int = 100) -> str:
+    """Twin of ``_cents``."""
+    return f"CAST(ROUND({x} * {unit}) AS BIGINT)"
+
+
+def _rev_cents() -> F.Column:
+    """Discounted revenue in 1/10⁴ units, exact: with money in cents,
+    price·(1 − disc) ≡ pq·(100 − dq) (``_REV_CENTS_SQL``)."""
+    return _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+
+
+_REV_CENTS_SQL = f"{_cents_sql('l_extendedprice')} * (100 - {_cents_sql('l_discount')})"
+
+
+def _exact_sum(c: F.Column) -> F.Column:
+    """Exact Σc (c ≥ 0) as decimal(38,0) from two primitive-long sums.
+
+    A DECIMAL sum past precision 18 pays BigDecimal arithmetic per row;
+    split c = hi·10⁶ + lo instead, sum hi and lo as longs inside codegen
+    and reassemble Σhi·10⁶ + Σlo in DECIMAL once per group. hi divides
+    an exact multiple of 10⁶ below 2⁵³, so its double round-trip is
+    exact; lo < 10⁶ keeps Σlo inside int64 up to 9·10¹² rows per group.
+    The reassembled integer equals the oracle's SUM, so the final double
+    is bit-equal to it.
+    """
+    m = F.lit(1_000_000)
+    lo = c % m
+    hi = ((c - lo) / m).cast("long")
+    return F.sum(hi).cast("decimal(38,0)") * m + F.sum(lo).cast("decimal(38,0)")
+
+
+def _hour_epoch() -> F.Column:
+    """Epoch seconds of the hour ``ts`` falls in (``_HOUR_EPOCH_SQL``)."""
+    return F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
+
+
+_HOUR_EPOCH_SQL = "CAST(epoch(date_trunc('hour', ts)) AS BIGINT)"
+
+
+def _top3_per_hour(hourly: DataFrame) -> DataFrame:
+    """The three event types with the most events in each ``hour_epoch``
+    of ``hourly`` (ties to the lower type), ranked ``rk`` 1..3. The rank
+    window runs on the aggregated buckets, never the raw events."""
+    w = Window.partitionBy("hour_epoch").orderBy(F.desc("n_events"), "event_type")
+    return (
+        hourly.withColumn("rk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rk") <= 3)
+        .select("hour_epoch", "event_type", "n_events", "rk")
+        .orderBy("hour_epoch", "rk")
+    )
+
+
+_HOURLY_TOP3_SQL = f"""
+    WITH b AS (
+      SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
+             event_type, COUNT(*) AS n_events
+      FROM events GROUP BY 1, 2),
+    r AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY hour_epoch
+                ORDER BY n_events DESC, event_type) AS rk
+      FROM b)
+    SELECT hour_epoch, event_type, n_events, CAST(rk AS INT) AS rk
+    FROM r WHERE rk <= 3 ORDER BY hour_epoch, rk
+    """
+
+
+def _dense(b: DataFrame, key: str, n: str, step: int | None = None) -> DataFrame:
+    """``b``'s count ``n`` on the dense grid of ``key`` from its minimum
+    to its maximum, ``step`` apart (default 1), 0 where ``b`` has no row.
+    The grid is generated from the bounds: O(grid), never O(events)."""
+    bounds = b.agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
+    grid = bounds.select(
+        F.explode(
+            F.sequence(F.col("lo"), F.col("hi"), None if step is None else F.lit(step))
+        ).alias(key)
+    )
+    return grid.join(b, key, "left").select(key, F.coalesce(F.col(n), F.lit(0)).alias(n))
+
+
+def _dense_sql(key: str, n: str, step: int = 1) -> str:
+    """CTEs ``bounds``, ``grid``, ``dense``: twin of ``_dense`` over CTE ``b``."""
+    return f"""bounds AS (SELECT MIN({key}) AS lo, MAX({key}) AS hi FROM b),
+    grid AS (SELECT unnest(generate_series(lo, hi, {step})) AS {key} FROM bounds),
+    dense AS (SELECT g.{key}, COALESCE(b.{n}, 0) AS {n}
+              FROM grid g LEFT JOIN b USING ({key}))"""
+
+
+def _timed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events that have a ``ts``. Rows without one cannot be
+    time-ordered, and Spark and DuckDB disagree on NULL sort position
+    and on NULL comparisons inside window and as-of logic, so every
+    time-ordered query drops them, and its oracle says so."""
+    return load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+
+
+def _sessions(events: DataFrame) -> DataFrame:
+    """``events`` plus ``ts_us`` (``ts`` in epoch µs), ``new_session`` (1
+    on a user's first event and on one more than 30 minutes after the
+    user's previous event) and ``session_id`` (the running count of
+    ``new_session`` per user), in (ts, event_id) order. The gap compares
+    exact µs, as the oracle's interval compare does; NULL ``ts`` is left
+    to the caller."""
+    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+    prev = F.lag("ts_us").over(w)
+    return (
+        events.withColumn("ts_us", F.unix_micros("ts"))
+        .withColumn(
+            "new_session",
+            (prev.isNull() | ((F.col("ts_us") - prev) > 1_800_000_000)).cast("int"),
+        )
+        .withColumn(
+            "session_id",
+            F.sum("new_session").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        )
+    )
+
+
+_SESSION_GAP_SQL = "INTERVAL 30 MINUTE"
+
+
+def _sessions_sql(where: str = "TRUE") -> str:
+    """CTEs ``s``, ``g``: twin of ``_sessions`` over ``events WHERE
+    where`` (``new_s``, ``sid``)."""
+    return f"""s AS (
+      SELECT user_id, ts, event_id,
+             CASE WHEN LAG(ts) OVER w IS NULL
+                       OR ts - LAG(ts) OVER w > {_SESSION_GAP_SQL}
+                  THEN 1 ELSE 0 END AS new_s
+      FROM events WHERE {where}
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), g AS (
+      SELECT user_id, ts, event_id, new_s,
+             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                              ROWS UNBOUNDED PRECEDING) AS sid
+      FROM s
+    )"""
+
+
+# The batch oracle of both session-window queries, streamed and batch.
+_SESSION_WINDOWS_SQL = f"""
+    WITH {_sessions_sql("ts IS NOT NULL")}
+    SELECT user_id,
+           CAST(epoch_us(MIN(ts)) AS BIGINT) AS session_start_us,
+           CAST(epoch_us(MAX(ts) + {_SESSION_GAP_SQL}) AS BIGINT) AS session_end_us,
+           COUNT(*) AS n_events
+    FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_us
+    """
+
+# The batch oracle of both driven hourly rollups (complete and append).
+_STREAM_HOURLY_SQL = f"""
+    SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
+           event_type,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """
+
+
 @register(
     "q1_pricing_summary",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS sum_disc_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-                    * (100 + CAST(ROUND(l_tax * 100) AS BIGINT))) AS DOUBLE) / 1000000.0 AS sum_charge,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 / COUNT(*) AS avg_qty,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / COUNT(*) AS avg_price,
-           CAST(SUM(CAST(ROUND(l_discount * 100) AS BIGINT)) AS DOUBLE) / 100.0 / COUNT(*) AS avg_disc,
+           CAST(SUM({_cents_sql('l_quantity')}) AS DOUBLE) / 100.0 AS sum_qty,
+           CAST(SUM({_cents_sql('l_extendedprice')}) AS DOUBLE) / 100.0 AS sum_base_price,
+           CAST(SUM({_REV_CENTS_SQL}) AS DOUBLE) / 10000.0 AS sum_disc_price,
+           CAST(SUM({_REV_CENTS_SQL} * (100 + {_cents_sql('l_tax')}))
+                AS DOUBLE) / 1000000.0 AS sum_charge,
+           CAST(SUM({_cents_sql('l_quantity')}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_qty,
+           CAST(SUM({_cents_sql('l_extendedprice')}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_price,
+           CAST(SUM({_cents_sql('l_discount')}) AS DOUBLE) / 100.0 / COUNT(*) AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= DATE '1999-12-01'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    doc="TPC-H Q1 pricing summary: the canonical scan+agg; exact "
-    "partial aggregation (map-side combine) on cent-quantized BIGINTs "
-    "(the q5 pattern: money columns ARE cents, so price*(1-d)*(1+t) ≡ "
-    "pq*(100-dq)*(100+tq) exactly — codegen int64 multiplies instead "
-    "of interpreted-cost DECIMAL ones). r9: money sums use the hi/lo "
-    "SPLIT-SUM accumulators (BASELINE §12 — DECIMAL past precision 18 "
-    "pays BigDecimal per row; two primitive-long sums reassembled in "
-    "DECIMAL once per group, overflow-safe past 10¹³ rows/group, "
-    "5.1 s → 2.1 s at sf10); the same division sequence as the oracle "
-    "at the end keeps every output bit-exact.",
+    doc="TPC-H Q1 pricing summary: the canonical scan+agg with partial "
+    "aggregation (map-side combine). Money is in exact cents, so "
+    "price·(1−d)·(1+t) ≡ pq·(100−dq)·(100+tq) runs as int64 multiplies "
+    "instead of DECIMAL ones, and the money sums are `_exact_sum` "
+    "hi/lo split sums (5.1 s → 2.1 s at sf10 against decimal(27,0) "
+    "sums). The oracle's division sequence at the end keeps every "
+    "output bit-exact.",
     bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The r9 sf10 attribution (BASELINE §12): decimal(27,0) sums were
-    # HALF the wall (5.1s vs 2.5s with long sums) — Spark's Decimal agg
-    # leaves compact-long representation past precision 18, so every
-    # row paid BigDecimal arithmetic. The exact fix: split each
-    # quantized money value x = hi·10⁶ + lo (both non-negative longs),
-    # SUM hi and lo as PRIMITIVE LONGS inside whole-stage codegen, and
-    # reassemble sum(x) = sum(hi)·10⁶ + sum(lo) in DECIMAL once per
-    # GROUP (6 groups). Overflow bounds at 100 TB (6·10¹¹ rows/group):
-    # lo < 10⁶ → Σlo ≤ 6·10¹⁷; hi ≤ 1.2·10⁵ (charge) → Σhi ≤ 7·10¹⁶ —
-    # both inside int64 with ≥15× margin (the decimal form returns at
-    # ~10¹³ rows PER GROUP, documented here as the swap-back bound).
-    # The reassembled integer is identical, so the final double is
-    # bit-equal to the oracle's.
     li = load_table(spark, sf_dir, "lineitem")
-    qq = F.round(F.col("l_quantity") * 100).cast("long")
-    pq = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dq = F.round(F.col("l_discount") * 100).cast("long")
-    tq = F.round(F.col("l_tax") * 100).cast("long")
-    disc_price_q = pq * (F.lit(100) - dq)
-    charge_q = disc_price_q * (F.lit(100) + tq)
-    M = F.lit(1_000_000)
-
-    def _split_sum(c: F.Column) -> F.Column:
-        """Exact Σc as DECIMAL via two primitive-long sums (c ≥ 0).
-        hi = (c - c%M)/M divides an exact multiple of M (both ≤ 1.2·10¹¹
-        < 2⁵³, so the double round-trip is exact)."""
-        lo = c % M
-        hi = ((c - lo) / M).cast("long")
-        return (
-            F.sum(hi).cast("decimal(38,0)") * M
-            + F.sum(lo).cast("decimal(38,0)")
-        ).cast("double")
-
+    qq, pq, dq = _cents("l_quantity"), _cents("l_extendedprice"), _cents("l_discount")
+    disc_price_q = _rev_cents()
+    charge_q = disc_price_q * (F.lit(100) + _cents("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1999-12-01").cast("date"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -100,11 +252,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             # qty/discount quantize to ≤5100/≤100 — plain long sums are
             # safe to ~10¹⁵ rows per group
             (F.sum(qq).cast("double") / F.lit(100.0)).alias("sum_qty"),
-            (_split_sum(pq) / F.lit(100.0)).alias("sum_base_price"),
-            (_split_sum(disc_price_q) / F.lit(10000.0)).alias("sum_disc_price"),
-            (_split_sum(charge_q) / F.lit(1000000.0)).alias("sum_charge"),
+            (_exact_sum(pq).cast("double") / F.lit(100.0)).alias("sum_base_price"),
+            (_exact_sum(disc_price_q).cast("double") / F.lit(10000.0)).alias(
+                "sum_disc_price"
+            ),
+            (_exact_sum(charge_q).cast("double") / F.lit(1000000.0)).alias("sum_charge"),
             (F.sum(qq).cast("double") / F.lit(100.0) / F.count("*")).alias("avg_qty"),
-            (_split_sum(pq) / F.lit(100.0) / F.count("*")).alias("avg_price"),
+            (_exact_sum(pq).cast("double") / F.lit(100.0) / F.count("*")).alias(
+                "avg_price"
+            ),
             (F.sum(dq).cast("double") / F.lit(100.0) / F.count("*")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
@@ -114,11 +270,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    """
+    f"""
     SELECT o.o_orderkey,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
-                AS DOUBLE) / 10000.0 AS revenue,
+           CAST(SUM({_REV_CENTS_SQL}) AS DOUBLE) / 10000.0 AS revenue,
            CAST(o.o_orderdate AS DATE) AS orderdate
     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
                     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -129,13 +283,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o.o_orderkey
     LIMIT 10
     """,
-    doc="TPC-H Q3: selective dim filter (broadcast), fact join, "
-    "agg + deterministic top-10. r9: revenue on cent-quantized BIGINTs "
-    "with the q1 hi/lo split sums (BASELINE §12 — decimal(18,2) "
-    "products summed in a >18-precision buffer pay BigDecimal per "
-    "row), and shuffle_hash on the fact join so the lineitem side "
-    "never sorts; the oracle mirrors the quantized op sequence "
-    "(identical exact value, identical final IEEE ops).",
+    doc="TPC-H Q3: selective dim filter (broadcast), fact join, agg + "
+    "deterministic top-10. Revenue is the exact-cent `_exact_sum` (a "
+    "decimal(18,2) product summed in a >18-precision buffer pays "
+    "BigDecimal per row), and the fact join is shuffle_hash so the "
+    "lineitem side never sorts.",
     bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,12 +298,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("date")
     )
-    rev_q = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
-    M = F.lit(1_000_000)
-    lo = rev_q % M
-    hi = ((rev_q - lo) / M).cast("long")
     co = F.broadcast(c).join(o, c["c_custkey"] == o["o_custkey"])
     return (
         # the hint sits on the JOINED (customer⋈orders) frame so it
@@ -160,15 +306,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         co.hint("shuffle_hash")
         .join(li, li["l_orderkey"] == o["o_orderkey"])
         .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            (
-                (
-                    F.sum(hi).cast("decimal(38,0)") * M
-                    + F.sum(lo).cast("decimal(38,0)")
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("revenue")
-        )
+        .agg((_exact_sum(_rev_cents()).cast("double") / F.lit(10000.0)).alias("revenue"))
         .select(
             "o_orderkey", "revenue", F.col("o_orderdate").cast("date").alias("orderdate")
         )
@@ -179,11 +317,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
-    """
+    f"""
     SELECT n.n_name,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
-                AS DOUBLE) / 10000.0 AS revenue
+           CAST(SUM({_REV_CENTS_SQL}) AS DOUBLE) / 10000.0 AS revenue
     FROM customer c
       JOIN orders o   ON c.c_custkey = o.o_custkey
       JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -194,22 +330,21 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     ORDER BY revenue DESC, n.n_name
     """,
-    doc="TPC-H Q5: 6-way join. r5 rewrite after the sf1 profile "
-    "(BASELINE.md §8): (1) revenue is computed on cent-quantized "
-    "BIGINTs — price·(1-disc) ≡ pq·(100-dq) exactly, ×2.2 cheaper than "
-    "DECIMAL multiplies (0.56s→0.40s per li pass at sf1) — r9: "
-    "accumulated via the hi/lo SPLIT SUMS (BASELINE §12; primitive-"
-    "long accumulators, DECIMAL reassembly once per group, overflow-"
-    "safe past 10¹³ rows/group) with ONE sum→double conversion and "
-    "ONE ÷10⁴ at the end (identical IEEE op sequence in the oracle: "
-    "bit-exact by construction); (2) join order starts from lineitem "
-    "(li⋈o on orderkey, then customer on custkey + the nation-match "
-    "conjunct) with minimal projections and r9 shuffle_hash hints on "
-    "the orders/customer joins — the fact side never SORTS, the build "
-    "sides hash per partition under AQE sizing (the scale-safe middle "
-    "between SMJ's fact sort and a static broadcast, which q18 showed "
-    "OOMs at 100 TB); at broadcast-small runtime sizes AQE still "
-    "upgrades the hinted joins to broadcasts.",
+    doc="TPC-H Q5: 6-way join. Revenue is computed in exact cents "
+    "(×2.2 cheaper than DECIMAL multiplies, 0.56 s → 0.40 s per "
+    "lineitem pass at sf1) and summed by `_exact_sum`, with one "
+    "sum→double conversion and one ÷10⁴ at the end, the oracle's IEEE "
+    "sequence. The dimension side is joined first: the date-sliced "
+    "orders ⋈ customer on custkey, projected to (orderkey, nationkey), "
+    "then that against the fact on orderkey, so the custkey exchange "
+    "moves to the orders slice and the fact's joined output never "
+    "re-shuffles (on an orderkey-bucketed layout the fact side's "
+    "exchange goes too). Both joins are shuffle_hash (4.25 s → 3.10 s for the "
+    "core joins at sf10): the fact side never sorts, the build sides "
+    "hash per partition under AQE sizing (the scale-safe middle "
+    "between a sort-merge join's fact sort and a static broadcast); at "
+    "broadcast-small runtime sizes AQE still upgrades them to "
+    "broadcasts.",
     bench=True,
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,35 +354,17 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("date"))
     ).select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("rev_q"),
+        "l_orderkey", "l_suppkey", _rev_cents().alias("rev_q")
     )
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    # r10 reorder (sf10 A/B in BASELINE §13): build the DIMENSION side
-    # first — orders(date-sliced) ⋈ customer on custkey, both small,
-    # projected to TWO columns (orderkey, c_nationkey) — then join THAT
-    # against the fact on orderkey. The r9 shape joined li⋈o first and
-    # then shuffled the 17M-row JOINED OUTPUT by custkey to meet
-    # customer; here the custkey exchange moves to the 4.3M-row orders
-    # slice and the fact's joined output never re-shuffles. On an
-    # orderkey-bucketed at-rest layout the fact side's exchange
-    # disappears too — the oc side alone re-hashes to the bucket count.
+    # the (orderkey, nationkey) dimension side, built before the fact join
     oc = (
         o.join(c.hint("shuffle_hash"), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "c_nationkey")
     )
     return (
-        # shuffle-hash, not sort-merge (r9 sf10 A/B: 4.25s -> 3.10s for
-        # the core joins): the 60M-row lineitem side never SORTS; the
-        # build side (oc, two ints per row) hashes per partition under
-        # AQE sizing — the scale-safe middle between SMJ's fact sort
-        # and a static broadcast
         li.join(oc.hint("shuffle_hash"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
             F.broadcast(s),
@@ -258,25 +375,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(
-            # exact hi/lo split sum (the q1 pattern, BASELINE §12):
-            # rev_q ≤ 1.1·10⁹ → hi ≤ 1.1·10³, lo < 10⁶ — both primitive
-            # long sums, overflow-safe past 10¹³ rows/group; reassembled
-            # in DECIMAL once per group, bit-equal to the decimal form
-            (
-                (
-                    F.sum(
-                        (
-                            (F.col("rev_q") - F.col("rev_q") % F.lit(1_000_000))
-                            / F.lit(1_000_000)
-                        ).cast("long")
-                    ).cast("decimal(38,0)")
-                    * F.lit(1_000_000)
-                    + F.sum(F.col("rev_q") % F.lit(1_000_000)).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("revenue")
+            (_exact_sum(F.col("rev_q")).cast("double") / F.lit(10000.0)).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "n_name")
     )
@@ -284,8 +383,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q6_forecast_revenue",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+    f"""
+    SELECT CAST(SUM({_PRICE_DEC_SQL} * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
     FROM lineitem
     WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1998-01-01'
       AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
@@ -342,9 +441,8 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         # the date-window lower bound implies l_shipdate > 1997-01-01 —
         # stating it redundantly reaches the parquet scan as a pushed
-        # filter (row-group pruning at rest; 2.39s -> 1.92s at sf10,
-        # BASELINE §12) where the join's non-equi l_shipdate >
-        # o_orderdate cannot
+        # filter (row-group pruning at rest; 2.39s -> 1.92s at sf10)
+        # where the join's non-equi l_shipdate > o_orderdate cannot
         li.filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("date"))
         .join(
             # shuffle-hash, not sort-merge: the fact side never sorts
@@ -363,11 +461,9 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q10_returned_items",
-    """
+    f"""
     SELECT c.c_custkey, c.c_name,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
-                    * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
-                AS DOUBLE) / 10000.0 AS revenue,
+           CAST(SUM({_REV_CENTS_SQL}) AS DOUBLE) / 10000.0 AS revenue,
            n.n_name
     FROM customer c
       JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -379,17 +475,15 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     doc="TPC-H Q10 shape: returned-item revenue per customer, top 20. "
-    "Revenue on cent-quantized BIGINTs like q5 (exact integer "
-    "arithmetic; r9: hi/lo split-sum accumulation, BASELINE §12 — "
-    "overflow-safe past 10¹³ rows/group), ONE sum->double cast + ONE /10^4 at "
-    "the end. Profiled at sf1: the "
-    "per-order pre-aggregate the r3-r5 plan carried only shrinks the "
-    "returned-lineitem side 1.5M->1.0M rows and costs its own hash "
-    "aggregate — dropping it is 20% faster (1.28s -> 1.03s); the "
-    "residual vs DuckDB (0.29s) is the 3 shuffle legs (li-by-orderkey, "
-    "orders-by-orderkey, joined-by-custkey ~= 0.38s) a partitioned "
-    "engine must pay and a single-node pipelined hash join does not, "
-    "plus the ~0.1s scheduler floor — see BASELINE.md §8.",
+    "Revenue is the exact-cent `_exact_sum` like q5, with one "
+    "sum→double cast and one ÷10⁴ at the end. No per-order "
+    "pre-aggregate: it only shrinks the returned-lineitem side "
+    "1.5M → 1.0M rows at sf1 and costs its own hash aggregate "
+    "(dropping it: 1.28 s → 1.03 s). The rest of the gap to DuckDB "
+    "(0.29 s) is the three shuffle legs (lineitem and orders by "
+    "orderkey, the join by custkey, ~0.38 s together) that a "
+    "partitioned engine pays and a single-node pipelined hash join "
+    "does not, plus the ~0.1 s scheduler floor.",
     bench=True,
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,28 +491,14 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     n = load_table(spark, sf_dir, "nation")
-    rev_q = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
     # shuffle-hash: the static planner broadcast a fact-sized orders
     # relation here (~300 MB at sf1, degrading 4.7s -> 11s across runs)
-    M = F.lit(1_000_000)
-    lo = F.col("rq") % M
-    hi = ((F.col("rq") - lo) / M).cast("long")
     return (
-        li.select("l_orderkey", rev_q.alias("rq"))
+        li.select("l_orderkey", _rev_cents().alias("rq"))
         .hint("shuffle_hash")
         .join(o, F.col("l_orderkey") == o["o_orderkey"])
         .groupBy("o_custkey")
-        # hi/lo split sums (the r9 q1 finding, BASELINE §12): primitive
-        # long accumulators in codegen, reassembled in DECIMAL once per
-        # customer — exact past 10¹³ rows/group, bit-equal output
-        .agg(
-            (
-                F.sum(hi).cast("decimal(38,0)") * M
-                + F.sum(lo).cast("decimal(38,0)")
-            ).alias("rev_cust")
-        )
+        .agg(_exact_sum(F.col("rq")).alias("rev_cust"))
         .join(c, F.col("o_custkey") == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .select(
@@ -434,11 +514,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q14_promo_effect",
-    """
-    SELECT CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                    THEN CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))
+    f"""
+    SELECT CAST(SUM(CASE WHEN p.p_type = 'PROMO' THEN {_REV_DEC_SQL}
                     ELSE 0 END) AS DOUBLE)
-           / CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+           / CAST(SUM({_REV_DEC_SQL}) AS DOUBLE)
            * 100 AS promo_revenue_pct
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= DATE '1997-09-01' AND l.l_shipdate < DATE '1997-10-01'
@@ -451,7 +530,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("date"))
     )
     p = load_table(spark, sf_dir, "part")
-    rev = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
+    rev = _rev_dec()
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(DEC))
     return (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
@@ -586,24 +665,23 @@ def property_projection_default(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q18_large_volume_customers",
-    """
+    f"""
     SELECT c.c_custkey, c.c_name, o.o_orderkey,
            CAST(o.o_totalprice AS DOUBLE) AS totalprice,
-           CAST(SUM(CAST(ROUND(l.l_quantity * 100) AS BIGINT)) AS DOUBLE)
-             / 100.0 AS total_qty
+           CAST(SUM({_cents_sql('l_quantity')}) AS DOUBLE) / 100.0 AS total_qty
     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
                     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
-    HAVING SUM(CAST(ROUND(l.l_quantity * 100) AS BIGINT)) > 15000
+    HAVING SUM({_cents_sql('l_quantity')}) > 15000
     ORDER BY totalprice DESC, o.o_orderkey
     LIMIT 20
     """,
-    doc="TPC-H Q18 shape: HAVING over a fact aggregation, top-20. r9: "
-    "quantity summed as cent-quantized primitive longs (the q1 "
-    "BigDecimal finding; ≤7 lineitems per order so the long sum is "
-    "unbounded-scale safe), HAVING compared in exact integers, oracle "
-    "mirrored — the §9 analysis put 88% of the wall in this fact "
-    "aggregate, which now runs whole-stage-codegen long arithmetic.",
+    doc="TPC-H Q18 shape: HAVING over a fact aggregation, top-20. "
+    "Quantity is summed in exact cents as primitive longs (≤7 "
+    "lineitems per order, so the long sum is safe at any scale) and "
+    "HAVING compares exact integers. The fact aggregate was 88% of "
+    "this query's wall time as a DECIMAL sum; it now runs as "
+    "whole-stage-codegen long arithmetic.",
     bench=True,
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,9 +695,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table twice and shuffling it once.
     big = (
         li.groupBy("l_orderkey")
-        .agg(
-            F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("qty_q")
-        )
+        .agg(F.sum(_cents("l_quantity")).alias("qty_q"))
         .filter(F.col("qty_q") > 15000)
     )
     # shuffle-hash with the aggregated side as build: the static
@@ -644,10 +720,9 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q15_top_supplier",
-    """
+    f"""
     WITH rev AS (
-      SELECT l_suppkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS r
+      SELECT l_suppkey, SUM({_REV_DEC_SQL}) AS r
       FROM lineitem
       WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1997-04-01'
       GROUP BY l_suppkey)
@@ -665,9 +740,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("date"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(
-        F.sum(_d("l_extendedprice") * (F.lit(1) - _d("l_discount"))).alias("r")
-    )
+    rev = li.groupBy("l_suppkey").agg(F.sum(_rev_dec()).alias("r"))
     max_r = rev.agg(F.max("r").alias("m"))
     return (
         s.join(rev, s["s_suppkey"] == rev["l_suppkey"])
@@ -679,10 +752,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q7_volume_shipping",
-    """
+    f"""
     SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+           CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS revenue
     FROM customer c
       JOIN orders o   ON c.c_custkey = o.o_custkey
       JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -708,7 +781,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 4)
     cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
     sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    rev = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
     return (
         c.join(o, c["c_custkey"] == o["o_custkey"])
         .join(li, F.col("l_orderkey") == o["o_orderkey"])
@@ -717,17 +789,17 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
         .filter(F.col("c_nk") != F.col("s_nk"))
         .groupBy("cust_nation", "supp_nation", F.year("l_shipdate").cast("long").alias("l_year"))
-        .agg(F.sum(rev).cast("double").alias("revenue"))
+        .agg(F.sum(_rev_dec()).cast("double").alias("revenue"))
         .orderBy("cust_nation", "supp_nation", "l_year")
     )
 
 
 @register(
     "q8_market_share",
-    """
+    f"""
     WITH vol AS (
       SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
-             CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS rev,
+             {_REV_DEC_SQL} AS rev,
              sn.n_name AS supp_nation
       FROM customer c
         JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
@@ -756,7 +828,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
     vol = (
         c.join(F.broadcast(cn), c["c_nationkey"] == cn["n_nationkey"])
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -777,7 +848,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.year("o_orderdate").cast("long").alias("o_year"),
-            rev.alias("rev"),
+            _rev_dec().alias("rev"),
             "is_target_nation",
         )
     )
@@ -791,12 +862,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q17_small_quantity_revenue",
-    """
+    f"""
     WITH pq AS (SELECT l_partkey,
                        SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty,
                        COUNT(*) AS cnt
                 FROM lineitem GROUP BY l_partkey)
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
+    SELECT CAST(SUM({_PRICE_DEC_SQL}) AS DOUBLE) / 7.0 AS avg_yearly
     FROM lineitem l
       JOIN part p ON p.p_partkey = l.l_partkey
       JOIN pq ON pq.l_partkey = l.l_partkey
@@ -887,18 +958,23 @@ def q16_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer c, stats
     -- acctbal > avg without decimal division: bal * n > total (exact)
     WHERE CAST(c.c_acctbal AS DECIMAL(18,2)) * stats.n > stats.total
-      AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+      AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
+                                                AND o.o_orderdate >= DATE '2000-01-01')
     GROUP BY c.c_nationkey ORDER BY c.c_nationkey
     """,
     doc="TPC-H Q22 shape: above-average filter (decimal-exact, "
-    "division-free) + no-orders anti-join.",
+    "division-free) + anti-join against the customers with an order "
+    "since 2000-01-01. Every test-data customer has some order, so the "
+    "anti-join is scoped to the recent orders: it keeps the lapsed "
+    "customers (5 at sf0.001, 55 at sf0.01).",
 )
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     pos = c.filter(F.col("c_acctbal") > 0.0).select(_d("c_acctbal").alias("bal"))
     stats = pos.agg(F.sum("bal").alias("total"), F.count("*").alias("n"))
-    no_orders = c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti")
+    recent = o.filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("date"))
+    no_orders = c.join(recent, c["c_custkey"] == recent["o_custkey"], "left_anti")
     return (
         no_orders.join(F.broadcast(stats))
         .filter(_d("c_acctbal") * F.col("n") > F.col("total"))
@@ -913,13 +989,11 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q11_part_value_threshold",
-    """
+    f"""
     WITH ns AS (SELECT s_suppkey FROM supplier
                 JOIN nation ON s_nationkey = n_nationkey
                 WHERE n_name = 'NATION_3'),
-    val AS (SELECT l_partkey,
-                   SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                       * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS v
+    val AS (SELECT l_partkey, SUM({_REV_DEC_SQL}) AS v
             FROM lineitem JOIN ns ON l_suppkey = ns.s_suppkey
             GROUP BY l_partkey),
     tot AS (SELECT SUM(v) AS t FROM val)
@@ -945,11 +1019,10 @@ def q11_part_value_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
                s["s_nationkey"] == n["n_nationkey"])
         .select("s_suppkey")
     )
-    rev = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
     val = (
         li.join(F.broadcast(ns), li["l_suppkey"] == ns["s_suppkey"])
         .groupBy("l_partkey")
-        .agg(F.sum(rev).alias("v"))
+        .agg(F.sum(_rev_dec()).alias("v"))
     )
     tot = val.agg(F.sum("v").alias("t"))
     return (
@@ -1100,8 +1173,6 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # satisfies the window's clustering too — so the EXISTS/NOT-EXISTS
     # pair costs no shuffle and no self-join at all (vs the former
     # agg⟕per_order join: one extra aggregate + one extra exchange)
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("l_orderkey")
     return (
         agg.withColumn("n_supp", F.count("*").over(w))
@@ -1126,7 +1197,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY returnflag, linestatus
     """,
     doc="ROLLUP subtotals — grouping sets are Catalyst built-ins "
-    "(SURVEY §2.4: absent in the reference, native in Spark).",
+    "(absent in the reference, native in Spark).",
 )
 def pricing_rollup_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -1148,38 +1219,30 @@ def pricing_rollup_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_hourly_rollup",
-    """
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
+    f"""
+    SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
            event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS total_value
+           CAST(SUM({_cents_sql('value')}) AS DOUBLE) / 100.0 AS total_value
     FROM events
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
-    doc="Tumbling-window rollup over the events stream table (batch view "
-    "of the Structured Streaming window agg; SURVEY §2.10 extension). "
-    "r9: value summed as cent-quantized primitive longs (the q1 "
-    "finding — a DECIMAL(18,2) sum buffer is past compact precision "
-    "and pays BigDecimal per row); vq ≤ 56,021 keeps a plain long sum "
-    "safe past 10¹⁴ rows per group, the rounding matches the oracle's "
-    "decimal(18,2) cast, and one final /100 double matches bit-exact.",
+    doc="Tumbling-window rollup over the events table (the batch view "
+    "of the Structured Streaming window aggregate). Value is summed in "
+    "exact cents as primitive longs: a DECIMAL(18,2) sum buffer is past "
+    "compact precision and pays BigDecimal per row, while cents ≤ "
+    "56,021 keep a plain long sum safe past 10¹⁴ rows per group. One "
+    "final /100 double matches the oracle bit-exact.",
     bench=True,
 )
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.groupBy(
-            F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("hour_epoch"),
-            "event_type",
-        )
+        ev.groupBy(_hour_epoch().alias("hour_epoch"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
-                / F.lit(100.0)
-            ).alias("total_value"),
+            (F.sum(_cents("value")).cast("double") / F.lit(100.0)).alias("total_value"),
         )
         .orderBy("hour_epoch", "event_type")
     )
@@ -1315,15 +1378,7 @@ def _hourly(events: DataFrame) -> DataFrame:
 
 @register(
     "events_stream_hourly_rollup",
-    """
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-           event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
+    _STREAM_HOURLY_SQL,
     doc="R2/R4 as a DRIVEN streaming query: the same hourly rollup run "
     "through Structured Streaming end-to-end — file-stream source → "
     "watermarked window aggregate → memory sink, Trigger.AvailableNow "
@@ -1333,7 +1388,7 @@ def _hourly(events: DataFrame) -> DataFrame:
     "ONLY: complete-mode + memory sink retains all aggregate state — the "
     "production path is `events_stream_hourly_append` (watermark-evicted "
     "append mode to a file sink).",
-    bench=True,  # B7: streaming micro-batch throughput in the headline set
+    bench=True,  # streaming micro-batch throughput in the headline set
 )
 def events_stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, _ = _stage_events(spark, _events_file(sf_dir))
@@ -1351,15 +1406,7 @@ def run_events_append_rollup(spark: SparkSession, sf_dir: str, fresh: bool = Fal
 
 @register(
     "events_stream_hourly_append",
-    """
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-           event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
+    _STREAM_HOURLY_SQL,
     doc="PRODUCTION twin of `events_stream_hourly_rollup`: outputMode("
     "append) + watermark EVICTION to a parquet file sink — state is "
     "dropped as windows close instead of held forever (complete mode is "
@@ -1376,31 +1423,12 @@ def events_stream_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_sessions_append",
-    """
-    WITH s AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                       OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), g AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM s
-    )
-    SELECT user_id,
-           CAST(epoch_us(MIN(ts)) AS BIGINT) AS session_start_us,
-           CAST(epoch_us(MAX(ts) + INTERVAL 30 MINUTE) AS BIGINT) AS session_end_us,
-           COUNT(*) AS n_events
-    FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_us
-    """,
+    _SESSION_WINDOWS_SQL,
     doc="DRIVEN STREAMING session windows: file-stream source → "
     "session_window(ts, 30 min) groupBy user_id → append mode + "
     "watermark eviction to a file sink, sentinel micro-batch closing "
     "every real session — hash-matched against the BATCH gap-session "
-    "oracle (the same lag/sum-over SQL as `events_session_windows`). "
+    "oracle (`events_session_windows`' lag/sum-over SQL). "
     "Proves the streaming session-MERGE state machine agrees with the "
     "batch definition, exactly-once, with state dropped at the "
     "watermark — the second driven streaming parity query beside the "
@@ -1418,8 +1446,7 @@ def run_events_sessions_append(
     sink (``_run_append``'s result and progress contract)."""
 
     def sessions(events: DataFrame) -> DataFrame:
-        # same NULL-ts contract as the batch twin: session_window() would
-        # silently drop NULL ts - filter explicitly, mirrored in the oracle
+        # the batch twin's NULL-ts contract (``_timed_events``)
         return feeds.session_windows(events.filter(F.col("ts").isNotNull())).select(
             "user_id",
             F.unix_micros("session_start").alias("session_start_us"),
@@ -1434,36 +1461,12 @@ def run_events_sessions_append(
 
 @register(
     "events_session_windows",
-    """
-    WITH s AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                       OR ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), g AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM s
-    )
-    SELECT user_id,
-           CAST(epoch_us(MIN(ts)) AS BIGINT) AS session_start_us,
-           CAST(epoch_us(MAX(ts) + INTERVAL 30 MINUTE) AS BIGINT) AS session_end_us,
-           COUNT(*) AS n_events
-    FROM g GROUP BY user_id, sid ORDER BY user_id, session_start_us
-    """,
+    _SESSION_WINDOWS_SQL,
     doc="session_window() gap sessions (batch twin of the streaming "
-    "feed `streaming.feeds.session_windows`; SURVEY §2.10 extension).",
+    "feed `streaming.feeds.session_windows`).",
 )
 def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-ts contract (r11, stated not accidental): rows without a
-    # timestamp cannot be time-ordered - both sides drop them explicitly
-    # (Spark and DuckDB disagree on NULL sort position and on NULL
-    # comparisons inside window/asof logic, so an unstated contract
-    # diverges the moment real data contains one NULL ts).
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = _timed_events(spark, sf_dir)
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
@@ -1500,12 +1503,7 @@ def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join
 
-    # NULL-ts contract (r11, stated not accidental): rows without a
-    # timestamp cannot be time-ordered - both sides drop them explicitly
-    # (Spark and DuckDB disagree on NULL sort position and on NULL
-    # comparisons inside window/asof logic, so an unstated contract
-    # diverges the moment real data contains one NULL ts).
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = _timed_events(spark, sf_dir)
     clicks = ev.filter(F.col("event_type") == "click")
     views = ev.filter(F.col("event_type") == "view").select("user_id", "ts", "event_id", "value")
     return asof_join(
@@ -1522,25 +1520,12 @@ def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_errors_per_session",
-    """
-    WITH flagged AS (
-      SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    tagged AS (
-      SELECT user_id, ts_us,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM flagged
-    ),
+    f"""
+    WITH {_sessions_sql()},
     sessions AS (
-      SELECT user_id, session_id,
-             MIN(ts_us) AS session_start_us, MAX(ts_us) AS session_end_us
-      FROM tagged GROUP BY user_id, session_id
+      SELECT user_id, sid,
+             epoch_us(MIN(ts)) AS session_start_us, epoch_us(MAX(ts)) AS session_end_us
+      FROM g GROUP BY user_id, sid
     )
     SELECT s.user_id, s.session_start_us, s.session_end_us,
            COUNT(*) AS n_errors
@@ -1557,27 +1542,15 @@ def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gives a raw BETWEEN join. All-µs integer math for oracle exactness.",
 )
 def events_errors_per_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from ..operators.ranges import range_join
 
-    ev = load_table(spark, sf_dir, "events").withColumn("ts_us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    prev = F.lag("ts_us").over(w)
-    flagged = ev.withColumn(
-        "new_session",
-        (prev.isNull() | ((F.col("ts_us") - prev) > 1_800_000_000)).cast("int"),
-    )
-    tagged = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    sessions = tagged.groupBy("user_id", "session_id").agg(
+    ev = load_table(spark, sf_dir, "events")
+    sessions = _sessions(ev).groupBy("user_id", "session_id").agg(
         F.min("ts_us").alias("session_start_us"), F.max("ts_us").alias("session_end_us")
     )
-    errors = ev.filter(F.col("event_type") == "error").select("user_id", "ts_us")
+    errors = ev.filter(F.col("event_type") == "error").select(
+        "user_id", F.unix_micros("ts").alias("ts_us")
+    )
     return (
         range_join(
             errors,
@@ -1612,40 +1585,22 @@ def events_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_user_sessions",
-    """
-    SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions
-    FROM (
-      SELECT user_id,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL 30 MINUTE OR
-                       LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events WHERE ts IS NOT NULL)
+    f"""
+    WITH {_sessions_sql("ts IS NOT NULL")}
+    SELECT user_id, CAST(SUM(new_s) AS BIGINT) AS n_sessions
+    FROM g
     GROUP BY user_id
-    HAVING SUM(new_session) > 0
+    HAVING SUM(new_s) > 0
     ORDER BY user_id
     """,
     doc="Sessionization (30-min gap) via lag window — batch twin of "
-    "session_window() in streaming.",
+    "session_window() in streaming. The gap is compared in exact µs: "
+    "whole seconds would merge a 1800.4 s gap into one session.",
 )
 def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    # NULL-ts contract (r11, stated not accidental): rows without a
-    # timestamp cannot be time-ordered - both sides drop them explicitly
-    # (Spark and DuckDB disagree on NULL sort position and on NULL
-    # comparisons inside window/asof logic, so an unstated contract
-    # diverges the moment real data contains one NULL ts).
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    new_session = (
-        prev_ts.isNull()
-        | ((F.col("ts").cast("long") - prev_ts.cast("long")) > 30 * 60)
-    ).cast("int")
-    sess = ev.withColumn("new_session", new_session)
     return (
-        sess.groupBy("user_id")
+        _sessions(_timed_events(spark, sf_dir))
+        .groupBy("user_id")
         .agg(F.sum("new_session").alias("n_sessions"))
         .filter(F.col("n_sessions") > 0)
         .select("user_id", F.col("n_sessions").cast("long").alias("n_sessions"))
@@ -1672,8 +1627,6 @@ def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the partition key; the year filter pushes to the scan.",
 )
 def orders_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
@@ -1741,9 +1694,7 @@ def orders_cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            F.sum(_d("o_totalprice")).cast("double").alias("total_price"),
         )
         .orderBy("o_orderstatus", "o_orderpriority")
     )
@@ -1751,9 +1702,9 @@ def orders_cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_incremental_rollup",
-    """
+    f"""
     SELECT event_type, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) AS BIGINT)
+           CAST(SUM({_cents_sql('value', 1000)}) AS BIGINT)
              AS sum_value_milli
     FROM events GROUP BY event_type ORDER BY event_type
     """,
@@ -1768,7 +1719,7 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import incremental
 
     ev = load_table(spark, sf_dir, "events")
-    milli = F.round(F.col("value") * 1000).cast("long")
+    milli = _cents("value", 1000)
     base = incremental.sum_state(
         ev.filter(F.col("event_id") % 7 != 0), ["event_type"], {"sum_value_milli": milli}
     )
@@ -1797,17 +1748,17 @@ def events_distinct_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_outliers",
-    """
+    f"""
     WITH q AS (
       SELECT event_type,
-             quantile_cont(CAST(ROUND(value * 1000) AS BIGINT), 0.25) AS q1,
-             quantile_cont(CAST(ROUND(value * 1000) AS BIGINT), 0.75) AS q3
+             quantile_cont({_cents_sql('value', 1000)}, 0.25) AS q1,
+             quantile_cont({_cents_sql('value', 1000)}, 0.75) AS q3
       FROM events GROUP BY event_type)
     SELECT e.event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CASE WHEN CAST(ROUND(e.value * 1000) AS BIGINT)
+           CAST(SUM(CASE WHEN {_cents_sql('e.value', 1000)}
                               < q.q1 - 1.5 * (q.q3 - q.q1)
-                          OR CAST(ROUND(e.value * 1000) AS BIGINT)
+                          OR {_cents_sql('e.value', 1000)}
                               > q.q3 + 1.5 * (q.q3 - q.q1)
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
     FROM events e JOIN q ON e.event_type = q.event_type
@@ -1823,7 +1774,7 @@ def events_distinct_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
-        "mv", F.round(F.col("value") * 1000).cast("long")
+        "mv", _cents("value", 1000)
     )
     q = ev.groupBy("event_type").agg(
         F.percentile("mv", F.lit(0.25)).alias("q1"),
@@ -1929,8 +1880,6 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "log in two shuffles.",
 )
 def events_gap_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "event_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -1982,12 +1931,10 @@ def events_funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "q9_profit_by_nation_year",
-    """
+    f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS o_year,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-             AS sum_profit
+           CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS sum_profit
     FROM lineitem l
     JOIN supplier s ON s.s_suppkey = l.l_suppkey
     JOIN nation n   ON n.n_nationkey = s.s_nationkey
@@ -2007,7 +1954,6 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = load_table(spark, sf_dir, "supplier")
     na = load_table(spark, sf_dir, "nation")
     pa = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    revenue = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
     return (
         li.join(F.broadcast(pa), li["l_partkey"] == pa["p_partkey"])
         .join(F.broadcast(su), li["l_suppkey"] == su["s_suppkey"])
@@ -2016,17 +1962,15 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("l_shipdate").cast("bigint").alias("o_year"),
         )
-        .agg(F.sum(revenue).cast("double").alias("sum_profit"))
+        .agg(F.sum(_rev_dec()).cast("double").alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 
 
 @register(
     "q19_disjunctive_revenue",
-    """
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-             AS revenue,
+    f"""
+    SELECT CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
@@ -2052,12 +1996,11 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm1 = (F.col("p_brand") == "Brand#12") & sz.between(1, 15) & q.between(1, 11)
     arm2 = (F.col("p_brand") == "Brand#23") & sz.between(1, 25) & q.between(10, 20)
     arm3 = (F.col("p_brand") == "Brand#34") & sz.between(1, 50) & q.between(20, 30)
-    revenue = _d("l_extendedprice") * (F.lit(1) - _d("l_discount"))
     return (
         li.join(F.broadcast(pa), li["l_partkey"] == pa["p_partkey"])
         .filter(arm1 | arm2 | arm3)
         .agg(
-            F.sum(revenue).cast("double").alias("revenue"),
+            F.sum(_rev_dec()).cast("double").alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2169,7 +2112,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_sliding_rollup",
-    """
+    f"""
     WITH slides AS (
       SELECT e.event_type, e.value,
              CAST(epoch_us(date_trunc('minute', e.ts))
@@ -2181,7 +2124,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT window_start_us,
            CAST(window_start_us + 3600000000 AS BIGINT) AS window_end_us,
            event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
+           CAST(SUM({_cents_sql('value')}) AS DOUBLE) / 100.0
              AS total_value
     FROM slides
     GROUP BY window_start_us, event_type
@@ -2196,25 +2139,21 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row at t belongs to the windows starting at its slot minus 0-3 "
     "slides, and counts/cent-sums merge associatively — but the ×4 "
     "row expansion happens on thousands of slot rows instead of every "
-    "raw event (the r10 sf30 A/B: 2.36 s → measured below; at 100 TB "
-    "the native form quadruples the pre-shuffle volume). Oracle "
+    "raw event (at 100 TB the native form quadruples the pre-shuffle "
+    "volume). Oracle "
     "derives the same starts arithmetically (floor-to-slide minus k "
     "slides). The STREAMING path keeps native window() — watermark "
     "eviction needs the built-in window column.",
     bench=True,  # the streaming-window scale path in the headline set
 )
 def events_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-ts contract, stated not accidental: window() silently drops
-    # NULL-timestamp rows, and the catch-up-seam work shows NULL ts is an
-    # anticipated input — filter explicitly and mirror it in the oracle
-    # (WHERE e.ts IS NOT NULL) so both engines agree by construction.
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = _timed_events(spark, sf_dir)  # window() would drop NULL ts silently
     slots = ev.groupBy(
         F.window("ts", "15 minutes").alias("s"), "event_type"
     ).agg(
         F.count("*").alias("n"),
-        # cent-quantized long sum (see events_hourly_rollup's r9 note)
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("vc"),
+        # exact-cent long sum, as in events_hourly_rollup
+        F.sum(_cents("value")).alias("vc"),
     )
     return (
         slots.select(
@@ -2250,10 +2189,10 @@ def events_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_incremental_join_view",
-    """
+    f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_rows,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(SUM({_cents_sql('l_extendedprice')}) AS BIGINT)
              AS sum_price_cents
     FROM orders JOIN lineitem ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority ORDER BY o_orderpriority
@@ -2276,7 +2215,7 @@ def orders_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("k"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents"),
+        _cents("l_extendedprice").alias("price_cents"),
         "l_shipdate",
     )
     bo, do_ = o.filter(F.col("o_orderdate") < cut), o.filter(F.col("o_orderdate") >= cut)
@@ -2319,8 +2258,6 @@ def orders_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "canonical scale rewrite of rolling-distinct analytics.",
 )
 def events_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("first_day")
@@ -2339,17 +2276,12 @@ def events_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_hourly_gapfill",
-    """
+    f"""
     WITH b AS (
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-             COUNT(*) AS n_events
+      SELECT {_HOUR_EPOCH_SQL} AS hour_epoch, COUNT(*) AS n_events
       FROM events WHERE event_type = 'purchase' GROUP BY 1),
-    bounds AS (SELECT MIN(hour_epoch) AS lo, MAX(hour_epoch) AS hi FROM b),
-    grid AS (SELECT lo + 3600 * CAST(i AS BIGINT) AS hour_epoch
-             FROM bounds, UNNEST(range(CAST((hi - lo) / 3600 + 1 AS BIGINT))) AS u(i))
-    SELECT g.hour_epoch, COALESCE(b.n_events, 0) AS n_events
-    FROM grid g LEFT JOIN b USING (hour_epoch)
-    ORDER BY g.hour_epoch
+    {_dense_sql("hour_epoch", "n_events", 3600)}
+    SELECT hour_epoch, n_events FROM dense ORDER BY hour_epoch
     """,
     doc="Time-series gap fill: a dense hourly grid (sequence/explode "
     "from the observed bounds — generated distributed, no driver loop) "
@@ -2360,20 +2292,8 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    b = ev.groupBy(
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("hour_epoch")
-    ).agg(F.count("*").alias("n_events"))
-    bounds = b.agg(F.min("hour_epoch").alias("lo"), F.max("hour_epoch").alias("hi"))
-    grid = bounds.select(
-        F.explode(F.sequence(F.col("lo"), F.col("hi"), F.lit(3600))).alias(
-            "hour_epoch"
-        )
-    )
-    return (
-        grid.join(b, "hour_epoch", "left")
-        .select("hour_epoch", F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"))
-        .orderBy("hour_epoch")
-    )
+    b = ev.groupBy(_hour_epoch().alias("hour_epoch")).agg(F.count("*").alias("n_events"))
+    return _dense(b, "hour_epoch", "n_events", 3600).orderBy("hour_epoch")
 
 
 @register(
@@ -2459,13 +2379,13 @@ def customer_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_equidepth_histogram",
-    """
+    f"""
     WITH t AS (
-      -- NULL-value contract (r12 sweep): histograms describe values;
+      -- NULL-value contract: histograms describe values;
       -- NULLs are null_frac, not a bucket member (and NTILE NULL
       -- ordering differs across engines anyway)
-      SELECT CAST(ROUND(value * 1000) AS BIGINT) AS v, event_id,
-             NTILE(8) OVER (ORDER BY CAST(ROUND(value * 1000) AS BIGINT),
+      SELECT {_cents_sql('value', 1000)} AS v, event_id,
+             NTILE(8) OVER (ORDER BY {_cents_sql('value', 1000)},
                             event_id) AS bucket
       FROM events WHERE value IS NOT NULL)
     SELECT bucket, MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n_rows
@@ -2480,7 +2400,7 @@ def events_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.profile import equidepth_histogram
 
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id", F.round(F.col("value") * 1000).cast("long").alias("v")
+        "event_id", _cents("value", 1000).alias("v")
     )
     return equidepth_histogram(ev, "v", buckets=8, id_col="event_id")
 
@@ -2552,10 +2472,10 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_stateful_totals",
-    """
+    f"""
     SELECT user_id,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) AS BIGINT)
+           CAST(SUM({_cents_sql('value', 1000)}) AS BIGINT)
              AS total_milli
     FROM events GROUP BY user_id ORDER BY user_id
     """,
@@ -2568,8 +2488,6 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stateful families: windowed aggregates, joins, and custom state.",
 )
 def events_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     stream, _ = _stage_events(spark, _events_file(sf_dir))
     totals = feeds.stateful_user_totals(stream.filter(F.col("user_id").isNotNull()))
     q = feeds._drain(totals, "update")
@@ -2601,8 +2519,6 @@ def events_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     "its partition; the rate-limiter/abuse-detection primitive).",
 )
 def events_rolling_hour_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = (
@@ -2650,11 +2566,11 @@ def events_stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_pushk_parity",
-    """
+    f"""
     SELECT s.sink_id,
            e.event_type,
            COUNT(*) * 2 AS n_events,
-           CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) * 2 AS BIGINT)
+           CAST(SUM({_cents_sql('value', 1000)}) * 2 AS BIGINT)
              AS total_milli
     FROM events e
     CROSS JOIN (SELECT 0 AS sink_id UNION ALL SELECT 1
@@ -2692,7 +2608,7 @@ def events_stream_pushk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000).cast("long"))
+            F.sum(_cents("value", 1000))
             .cast("long")
             .alias("total_milli"),
         )
@@ -2707,12 +2623,11 @@ def events_stream_pushk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_catchup_tail",
-    """
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
+    f"""
+    SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
            event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) AS BIGINT)
-             AS total_milli
+           CAST(SUM({_cents_sql('value', 1000)}) AS BIGINT) AS total_milli
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
     doc="DRIVEN late-joiner catch-up (R5 — the reference's backup-then-"
@@ -2745,12 +2660,12 @@ def events_stream_catchup_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         backfill.unionByName(spark.table(q.name).select(*cols))
         .groupBy(
-            F.unix_seconds(F.date_trunc("hour", "ts")).alias("hour_epoch"),
+            _hour_epoch().alias("hour_epoch"),
             "event_type",
         )
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000).cast("long"))
+            F.sum(_cents("value", 1000))
             .cast("long")
             .alias("total_milli"),
         )
@@ -2760,36 +2675,18 @@ def events_stream_catchup_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_hourly_leaderboard",
-    """
-    WITH b AS (
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-             event_type, COUNT(*) AS n_events
-      FROM events GROUP BY 1, 2),
-    r AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY hour_epoch
-                ORDER BY n_events DESC, event_type) AS rk
-      FROM b)
-    SELECT hour_epoch, event_type, n_events, CAST(rk AS INT) AS rk
-    FROM r WHERE rk <= 3 ORDER BY hour_epoch, rk
-    """,
+    _HOURLY_TOP3_SQL,
     doc="Windowed leaderboard: top-3 event types per hour (rollup + "
     "per-window rank, deterministic tie-break) — the dashboard query "
     "every event pipeline serves; rank window runs on the already-"
     "aggregated buckets, never the raw stream.",
 )
 def events_hourly_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
-    b = ev.groupBy(
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("hour_epoch"),
-        "event_type",
-    ).agg(F.count("*").alias("n_events"))
-    w = Window.partitionBy("hour_epoch").orderBy(F.desc("n_events"), "event_type")
-    return (
-        b.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 3)
-        .orderBy("hour_epoch", "rk")
+    return _top3_per_hour(
+        ev.groupBy(_hour_epoch().alias("hour_epoch"), "event_type").agg(
+            F.count("*").alias("n_events")
+        )
     )
 
 
@@ -2903,14 +2800,7 @@ def store_upgrade_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "PARTITIONED by user (no global sort) + one counting shuffle.",
 )
 def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    # NULL-ts contract (r11, stated not accidental): rows without a
-    # timestamp cannot be time-ordered - both sides drop them explicitly
-    # (Spark and DuckDB disagree on NULL sort position and on NULL
-    # comparisons inside window/asof logic, so an unstated contract
-    # diverges the moment real data contains one NULL ts).
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = _timed_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         F.col("event_type").alias("e1"),
@@ -2927,10 +2817,10 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_rfm_segments",
-    """
+    f"""
     WITH o AS (
       SELECT o_custkey, o_orderdate,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+             {_cents_sql('o_totalprice')} AS cents
       FROM orders),
     ref AS (SELECT MAX(o_orderdate) AS ref_date FROM o),
     rfm AS (
@@ -2976,7 +2866,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        _cents("o_totalprice").alias("cents"),
     )
     ref = o.agg(F.max("o_orderdate").alias("ref_date"))
     rfm = (
@@ -3044,10 +2934,9 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "supplier_pareto_share",
-    """
+    f"""
     WITH rev AS (
-      SELECT s.s_suppkey, s.s_name,
-             SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS revenue
+      SELECT s.s_suppkey, s.s_name, SUM({_PRICE_DEC_SQL}) AS revenue
       FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
       GROUP BY s.s_suppkey, s.s_name),
     tot AS (SELECT SUM(revenue) AS total FROM rev),
@@ -3071,14 +2960,12 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fact scale); the fact-table work is one partial-aggregated join.",
 )
 def supplier_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice")
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     rev = (
         li.join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .groupBy("s_suppkey", "s_name")
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("revenue"))
+        .agg(F.sum(_d("l_extendedprice")).alias("revenue"))
     )
     tot = rev.agg(F.sum("revenue").alias("total"))
     w = Window.orderBy(F.desc("revenue"), F.asc("s_suppkey")).rowsBetween(
@@ -3102,10 +2989,10 @@ def supplier_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_activity_streaks",
-    """
+    f"""
     WITH h AS (
       SELECT DISTINCT user_id,
-             CAST(epoch(date_trunc('hour', ts)) / 3600 AS BIGINT) AS hr
+             CAST({_HOUR_EPOCH_SQL} / 3600 AS BIGINT) AS hr
       FROM events),
     isl AS (
       SELECT user_id, hr,
@@ -3133,14 +3020,10 @@ def supplier_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact on both engines.",
 )
 def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         "user_id",
-        (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
-        .cast("long")
-        .alias("hr"),
+        (_hour_epoch() / 3600).cast("long").alias("hr"),
     ).distinct()
     w = Window.partitionBy("user_id").orderBy("hr")
     isl = h.withColumn("grp", F.col("hr") - F.row_number().over(w))
@@ -3160,11 +3043,11 @@ def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_time_profile",
-    """
+    f"""
     SELECT CAST(dayofweek(ts) AS INT) AS dow,
            CAST(hour(ts) AS INT) AS hour_of_day,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 1000) AS BIGINT)) AS BIGINT)
+           CAST(SUM({_cents_sql('value', 1000)}) AS BIGINT)
              AS total_value_milli
     FROM events
     GROUP BY 1, 2 ORDER BY dow, hour_of_day
@@ -3185,7 +3068,7 @@ def events_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000).cast("long"))
+            F.sum(_cents("value", 1000))
             .cast("long")
             .alias("total_value_milli"),
         )
@@ -3195,19 +3078,7 @@ def events_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stream_leaderboard",
-    """
-    WITH hourly AS (
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-             event_type, COUNT(*) AS n_events
-      FROM events GROUP BY 1, 2),
-    ranked AS (
-      SELECT hour_epoch, event_type, n_events,
-             ROW_NUMBER() OVER (PARTITION BY hour_epoch
-                                ORDER BY n_events DESC, event_type) AS rk
-      FROM hourly)
-    SELECT hour_epoch, event_type, n_events, CAST(rk AS INT) AS rk
-    FROM ranked WHERE rk <= 3 ORDER BY hour_epoch, rk
-    """,
+    _HOURLY_TOP3_SQL,
     doc="STREAMING leaderboard: top-3 event types per hour computed on "
     "the APPEND-mode streaming rollup's closed-window sink output "
     "(run_events_append_rollup — watermark-evicted, exactly-once) with "
@@ -3217,37 +3088,23 @@ def events_time_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count-and-rank oracle end-to-end.",
 )
 def events_stream_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     rolled, _ = run_events_append_rollup(spark, sf_dir)
-    w = Window.partitionBy("hour_epoch").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    return (
-        rolled.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 3)
-        .select("hour_epoch", "event_type", "n_events", "rk")
-        .orderBy("hour_epoch", "rk")
-    )
+    return _top3_per_hour(rolled)
 
 
 @register(
     "events_hourly_autocorr",
-    """
+    f"""
     WITH b AS (
-      SELECT CAST(epoch(date_trunc('hour', ts)) / 3600 AS BIGINT) AS hr,
-             COUNT(*) AS c
+      SELECT CAST({_HOUR_EPOCH_SQL} / 3600 AS BIGINT) AS hr, COUNT(*) AS c
       FROM events GROUP BY 1),
-    bounds AS (SELECT MIN(hr) AS lo, MAX(hr) AS hi FROM b),
-    grid AS (SELECT unnest(generate_series(lo, hi)) AS hr FROM bounds),
-    s AS (SELECT g.hr, COALESCE(b.c, 0) AS c
-          FROM grid g LEFT JOIN b USING (hr)),
+    {_dense_sql("hr", "c")},
     lags(lag) AS (VALUES (1), (2), (3), (24)),
     pairs AS (
       SELECT l.lag, x.c AS x, y.c AS y
       FROM lags l
-      JOIN s x ON TRUE
-      JOIN s y ON y.hr = x.hr + l.lag),
+      JOIN dense x ON TRUE
+      JOIN dense y ON y.hr = x.hr + l.lag),
     stats AS (
       SELECT lag, COUNT(*) AS n, SUM(x * y) AS sxy,
              SUM(x) AS sx, SUM(y) AS sy,
@@ -3272,18 +3129,10 @@ def events_stream_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    b = ev.groupBy(
-        (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
-        .cast("long")
-        .alias("hr")
-    ).agg(F.count("*").alias("c"))
-    bounds = b.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    grid = bounds.select(
-        F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("hr")
+    b = ev.groupBy((_hour_epoch() / 3600).cast("long").alias("hr")).agg(
+        F.count("*").alias("c")
     )
-    s = grid.join(b, "hr", "left").select(
-        "hr", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    s = _dense(b, "hr", "c")
     lags = spark.createDataFrame([(1,), (2,), (3,), (24,)], "lag int")
     x = s.select(F.col("hr"), F.col("c").alias("x"))
     y = s.select(F.col("hr").alias("hr_y"), F.col("c").alias("y"))
@@ -3315,9 +3164,9 @@ def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_burst_hours",
-    """
+    f"""
     WITH hourly AS (
-      SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
+      SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
              CAST(dayofweek(ts) AS INT) AS dow,
              CAST(hour(ts) AS INT) AS hod,
              COUNT(*) AS c
@@ -3342,9 +3191,7 @@ def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_burst_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
-        .cast("long")
-        .alias("hour_epoch"),
+        _hour_epoch().alias("hour_epoch"),
         (F.dayofweek("ts") - 1).cast("int").alias("dow"),
         F.hour("ts").cast("int").alias("hod"),
     ).agg(F.count("*").alias("c"))
@@ -3371,10 +3218,9 @@ def events_burst_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nation_supplier_hhi",
-    """
+    f"""
     WITH rev AS (
-      SELECT s.s_nationkey AS nation, l.l_suppkey,
-             SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS r
+      SELECT s.s_nationkey AS nation, l.l_suppkey, SUM({_PRICE_DEC_SQL}) AS r
       FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
       GROUP BY 1, 2),
     revq AS (
@@ -3406,7 +3252,7 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.join(supp, li["l_suppkey"] == supp["s_suppkey"])
         .groupBy(F.col("s_nationkey").alias("nation"), F.col("l_suppkey"))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r"))
+        .agg(F.sum(_d("l_extendedprice")).alias("r"))
     )
     revq = rev.select(
         "nation",
@@ -3431,10 +3277,10 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_spend_gini",
-    """
+    f"""
     WITH x AS (
       SELECT o_custkey,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
+             SUM({_cents_sql('o_totalprice')}) AS cents
       FROM orders GROUP BY o_custkey),
     r AS (
       SELECT cents,
@@ -3456,13 +3302,11 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "supplier_pareto_share); tie order pinned by custkey.",
 )
 def customer_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     x = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+            F.sum(_cents("o_totalprice")).alias("cents")
         )
     )
     w = Window.orderBy("cents", "o_custkey")

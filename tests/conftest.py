@@ -8,15 +8,13 @@ from neo4j_enterprise_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# Default fast lane (r13, VERDICT r12 ask #2): the 967-test suite outgrew
-# the driver's verification budget (r12: cut at ~96%, tests_ok=false with
-# zero failures visible). The NULL-data replay sweeps are the designated
-# slow lane: they re-run ~80 whole-query DuckDB parity comparisons over
-# regenerated 10%-NULL fixtures, every divergence they ever found is now
-# pinned by the fixed plans' own oracle rows (all certified in the r12
-# window) and the fixtures are immutable — so by default they SKIP, and
-# SPARK_GRAFT_SLOW_TESTS=1 runs the full lane (done at least once per
-# round; receipt in OPTIMIZATION_r13.md).
+# Default fast lane: the full suite outgrew its verification time
+# budget. The NULL-data replay sweeps are the designated slow lane: they
+# re-run ~80 whole-query DuckDB parity comparisons over regenerated
+# 10%-NULL fixtures, every divergence they ever found is now pinned by
+# the fixed plans' own oracle rows, and the fixtures are immutable — so
+# by default they SKIP, and SPARK_GRAFT_SLOW_TESTS=1 runs the full lane
+# (run it after any change to NULL handling).
 _SLOW_SWEEP_FILES = {
     "test_null_contract_sweep.py",
     "test_events_null_ts.py",

@@ -1,4 +1,4 @@
-"""Driver-contract pins for bench.py (VERDICT r12 ask #3): the stdout
+"""Driver-contract pins for bench.py: the stdout
 line must stay parseable under the driver's 2000-char stdout tail, and
 the $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS environment contract must
 stay wired (a hard-coded master ruins the driver's low-core scaling

@@ -1,6 +1,6 @@
 """NULL/empty-input contract sweeps for the docs and events families
-(VERDICT r11 ask #4 — the NULL-ts sweep found 4 real divergences, so the
-same class is now tested for every other nullable input):
+(the NULL-ts sweep found 4 real divergences, so the same class is
+tested for every other nullable input):
 
 - NULL / empty / whitespace-only ``text`` in the documents family:
   tokenizers, shingles, and regex splits are exactly where Spark and

@@ -234,8 +234,8 @@ def test_cypher_collect_distinct(spark, sf_dir):
         assert ids == sorted(set(ids))  # sorted, deduped
 
 
-# ------------------------------------------------- r9 deferral rewrites
-# The deferred-attach and deferred-label-semi rewrites (BASELINE §12)
+# ---------------------------------------------------- deferral rewrites
+# The deferred-attach and deferred-label-semi rewrites
 # must be OBSERVATIONALLY INVISIBLE: every query runs once with the
 # rewrites active and once with both eligibility gates forced empty,
 # and the sorted results must match exactly.

@@ -162,7 +162,7 @@ def test_gopher_rules_is_shuffle_free_scan(spark, sf_dir):
     Exchange beyond the registered output sort, no Generate, no
     Catalyst lambdas, no row-at-a-time Python. (Third rendering:
     list_filter lambdas 52.9 s, JVM regexp_count 21.9 s, C-speed
-    batch ~5 s ≈ DuckDB parity at sf10 — BASELINE §11.)"""
+    batch ~5 s ≈ DuckDB parity at sf10.)"""
     plan = _plan(spark, sf_dir, "docs_gopher_rules")
     tree = _tree(plan)
     assert tree.count("Exchange") <= 1  # only the output sort
@@ -228,7 +228,7 @@ def test_semdedup_greedy_single_python_stage(spark, sf_dir):
 
 
 def test_endpoints_single_anti_join(spark, sf_dir):
-    """r12 optimization pinned (OPTIMIZATION_r12.md §3): the endpoint
+    """The endpoint
     existence check is ONE left-anti join over the stacked (src, dst)
     set. The old two-join form let Catalyst push the anti-join below
     the 5-branch rels union — 10 join branches, each rebuilding the
@@ -243,25 +243,22 @@ def test_endpoints_single_anti_join(spark, sf_dir):
 
 
 def test_bfs_frontier_lineage_is_cut_every_round(spark, sf_dir):
-    """r12 optimization pinned (OPTIMIZATION_r12.md §2): each BFS
-    round's frontier has three consumers, so it must be materialized
-    (Scan ExistingRDD) rather than re-derived — without the per-round
-    cut the k=2 plan carried 120 InMemoryTableScans (O(k²)
-    recomputation of the frontier cascade; the r12 doc's "297" was an
-    overstatement the r12 verdict corrected against the EXPLAIN
-    output — 120→10 is the real count)."""
+    """Each BFS round's frontier has three consumers, so it must be
+    materialized (Scan ExistingRDD) rather than re-derived — without the
+    per-round cut the k=2 plan carried 120 InMemoryTableScans (O(k²)
+    recomputation of the frontier cascade; 10 with it)."""
     plan = _plan(spark, sf_dir, "bfs_2hop_reach")
     assert "Scan ExistingRDD" in plan
     # the full 5-branch edge-union cache is scanned by the final
     # union-aggregate only; the checkpointed frontiers must not
-    # re-derive it per round. Measured after the r12 fix: 10 scans in
+    # re-derive it per round. Measured with the cut: 10 scans in
     # the EXPLAIN output, 120 before; bound at 2x the observed value so a partial regression
     # trips the pin without flaking on minor plan drift.
     assert plan.count("InMemoryTableScan") <= 20, plan.count("InMemoryTableScan")
 
 
 def test_lsh_signature_runs_once(spark, sf_dir):
-    """r12 optimization pinned (OPTIMIZATION_r12.md §1): the corpus
+    """The corpus
     LSH-signature Arrow UDF is materialized exactly once (eager
     checkpoint behind the capped bucket table); the downstream
     candidate-join plan must contain ZERO ArrowEvalPython nodes (the
@@ -274,11 +271,10 @@ def test_lsh_signature_runs_once(spark, sf_dir):
 
 
 def test_bigram_counts_single_explode_no_join(spark, sf_dir):
-    """r13 optimization pinned (OPTIMIZATION_r13.md §5): the prefix
-    marginal is a SUM window over the pair-count table, not a second
-    aggregate joined back — the join form re-executed the whole
-    tokenize+explode subtree (the r12 'AQE exchange reuse' claim was
-    disproved by a checkpoint A/B: 0.525s vs 0.600s lazy at sf0.1).
+    """The prefix marginal is a SUM window over the pair-count table,
+    not a second aggregate joined back — the join form re-executed the
+    whole tokenize+explode subtree (AQE exchange reuse did not save it:
+    a checkpoint A/B gave 0.525s vs 0.600s lazy at sf0.1).
     Exactly ONE Generate (explode) node and ZERO joins may appear."""
     import re
 

@@ -1,7 +1,7 @@
-"""Plan-shape pins for the r13 b1 branch fusion (OPTIMIZATION_r13.md §1):
-each check family must keep its fused single-pass shape — one join per
-cross-store lookup, one scan per store per pass — instead of regressing
-to the r12 one-union-branch-per-rule form (which re-scanned the stores
+"""Plan-shape pins for the b1 branch fusion: each check family must
+keep its fused single-pass shape — one join per cross-store lookup, one
+scan per store per pass — instead of regressing to the older
+one-union-branch-per-rule form (which re-scanned the stores
 and re-executed the same join once per rule).
 
 Tables are built as literal DataFrames (LocalTableScan leaves) so the

@@ -48,9 +48,8 @@ RUNS = 5
 # Rows whose Spark side pays fixed STREAMING MACHINERY (micro-batch
 # trigger loop, checkpoint dir, state store) against a plain batch
 # oracle: the ratio is a machinery-vs-batch artifact, volume-
-# independent, and must not be read as an engine gap (VERDICT r9 ask
-# #8 — at sf10 this row's 13.8× dominates worst-row optics while being
-# ~1.6 s absolute). Tagged † in the table; the aggregate is also
+# independent, and must not be read as an engine gap (at sf10 this
+# row's 13.8× dominates worst-row optics while being ~1.6 s absolute). Tagged † in the table; the aggregate is also
 # reported with these rows excluded.
 MACHINERY_ROWS = {
     "events_stream_hourly_rollup": (
@@ -151,20 +150,19 @@ def _oracle_median(sf_dir: str, sql: str, runs: int):
 def _spark_worker(sf_dir: str, name: str, runs: int, out_q) -> None:
     """Measure one Spark query inside a CHILD process — a fresh JVM.
 
-    r12 lesson: within one long compare session the Spark side drifts
+    Within one long compare session the Spark side drifts
     badly even with per-query clearCache/unpersist/System.gc hygiene —
     events_sliding_rollup measured 6.11 s late in a 2 h sf30 sweep and
     1.36 s in a fresh session minutes later on the same head and data
-    (BASELINE §15: the §8 grown-heap page-fault-storm class; the JVM's
-    RSS had reached ~70 GB). `spark.stop()` cannot fix it — a new
+    (a grown-heap page-fault storm; the JVM's RSS had reached ~70 GB). `spark.stop()` cannot fix it — a new
     getOrCreate reuses the same JVM and its heap. Process isolation is
     the only real reset, and it makes the two sides methodologically
     SYMMETRIC: every oracle already ran in a fresh child (OOM
     isolation); now every Spark measurement does too. Cost: one JVM
     startup (~10 s, un-timed) per query — noise against a multi-hour
     sweep. Full materialization via each engine's NATIVE columnar path
-    (Spark toPandas() Arrow batches vs DuckDB .df() C-native — the r5
-    transfer-equalization lesson) is unchanged, as is the warm un-timed
+    (Spark toPandas() Arrow batches vs DuckDB .df() C-native, so both
+    sides pay comparable transfer) is unchanged, as is the warm un-timed
     first run and the steal-clean median.
     """
     try:
@@ -177,8 +175,8 @@ def _spark_worker(sf_dir: str, name: str, runs: int, out_q) -> None:
         s = median5(lambda: q.spark(spark, sf_dir).toPandas(), pre=jgc)
         se = None
         if len(warm) > 1_000_000:
-            # transfer-heavy row (degree_by_type lesson, VERDICT r7 ask
-            # #7): ALSO report engine-only time — COUNT lets both
+            # transfer-heavy row (degree_by_type's time was mostly
+            # transfer): ALSO report engine-only time — COUNT lets both
             # engines prune the payload symmetrically
             se = median5(lambda: q.spark(spark, sf_dir).count(), pre=jgc)
         out_q.put(("ok", (s, len(warm), se)))

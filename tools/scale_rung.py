@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """One more scale-ladder rung: sf60 for the three volume-decisive
-queries (VERDICT r10 ask #8 — endpoints_not_in_use, docs_span_dedup,
+queries (endpoints_not_in_use, docs_span_dedup,
 q21_sole_late_supplier).
 
 Generates an sf60 SLICE (only the tables those queries touch —
