@@ -103,16 +103,27 @@ def _top3_per_hour(hourly: DataFrame) -> DataFrame:
     )
 
 
+# A row's rank is 1 + the rows of its hour that order ahead of it (a NULL
+# event type first, as in Spark's ascending sort). DuckDB 1.0's
+# ROW_NUMBER() OVER (PARTITION BY hour_epoch …) gave both rows of a NULL
+# hour rank 1 on about a third of 4-thread runs; the count gives the same
+# ranks on every run.
 _HOURLY_TOP3_SQL = f"""
     WITH b AS (
       SELECT {_HOUR_EPOCH_SQL} AS hour_epoch,
              event_type, COUNT(*) AS n_events
       FROM events GROUP BY 1, 2),
     r AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY hour_epoch
-                ORDER BY n_events DESC, event_type) AS rk
-      FROM b)
-    SELECT hour_epoch, event_type, n_events, CAST(rk AS INT) AS rk
+      SELECT a.hour_epoch, a.event_type, a.n_events,
+             CAST(1 + COUNT(c.n_events) AS INT) AS rk
+      FROM b AS a LEFT JOIN b AS c
+        ON c.hour_epoch IS NOT DISTINCT FROM a.hour_epoch
+       AND (c.n_events > a.n_events
+            OR (c.n_events = a.n_events
+                AND (c.event_type < a.event_type
+                     OR (c.event_type IS NULL AND a.event_type IS NOT NULL))))
+      GROUP BY 1, 2, 3)
+    SELECT hour_epoch, event_type, n_events, rk
     FROM r WHERE rk <= 3 ORDER BY hour_epoch, rk
     """
 

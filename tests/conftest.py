@@ -1,9 +1,14 @@
 from __future__ import annotations
 
+import datetime
+import functools
+import json
 import os
 
 import pytest
 
+from neo4j_enterprise_spark.catalog import TABLES
+from neo4j_enterprise_spark.plans import all_queries, oracle
 from neo4j_enterprise_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -41,3 +46,88 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def oracle_parity(spark):
+    """``run(q, data_dir, tables=TABLES)``: assert that registry query
+    ``q`` agrees with its oracle over ``data_dir``'s ``tables`` through
+    ``oracle.check``, and that a returned row's columns come in the
+    oracle's order and spelling, so a caller may read them by position;
+    return the Spark rows."""
+
+    def run(q, data_dir: str, tables=TABLES):
+        with oracle.connect(data_dir, tables) as con:
+            status, detail, rows = oracle.check(spark, con, q, data_dir)
+            assert status in (oracle.OK, oracle.EMPTY), f"{q.name}: {status} {detail}"
+            if rows:
+                assert list(rows[0].__fields__) == con.sql(q.oracle).columns, q.name
+        return rows
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def null_events(spark, tmp_path_factory):
+    """``write(col) -> data_dir``: a data dir whose events table (the
+    production schema, 200 rows three minutes apart) holds a NULL ``col``
+    (``ts``, ``user_id`` or ``value``) in every tenth row."""
+    base = datetime.datetime(2024, 1, 1, 0, 7, 0)
+
+    @functools.cache
+    def write(col: str) -> str:
+        rows = [
+            (
+                i,
+                None if col == "ts" and i % 10 == 0 else base + datetime.timedelta(minutes=3 * i),
+                None if col == "user_id" and i % 10 == 0 else i % 11,
+                "click" if i % 3 else "view",
+                None if col == "value" and i % 10 == 3 else float(i) / 7.0,
+                json.dumps({"k": i % 5, "s": f"x{i % 3}"}),
+            )
+            for i in range(200)
+        ]
+        df = spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        )
+        assert df.filter(f"{col} IS NULL").count() == 20
+        out = str(tmp_path_factory.mktemp(f"null_{col}"))
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "events.parquet"))
+        return out
+
+    return write
+
+
+@pytest.fixture(scope="session")
+def oracle_verdict(spark, sf_dir):
+    """``verdict(name) -> (status, detail)`` of ``oracle.check`` at
+    sf0.001 over one connection, run once per query: the parity and the
+    dtype tests report on the same run."""
+    queries = all_queries()
+    with oracle.connect(sf_dir) as con:
+
+        @functools.cache
+        def verdict(name: str):
+            return oracle.check(spark, con, queries[name], sf_dir)[:2]
+
+        yield verdict
+
+
+@pytest.fixture(scope="session")
+def sql_twin():
+    """``run(con, sql, frame)``: assert that ``sql`` on the DuckDB
+    connection ``con`` and the Spark ``frame`` return the same columns,
+    in the same order, and the same rows under ``oracle.canon``; return
+    the Spark rows."""
+
+    def run(con, sql: str, frame):
+        res = con.execute(sql)
+        cols = [d[0] for d in res.description]
+        assert cols == frame.columns, sql
+        rows = frame.collect()
+        assert oracle.canon(cols, res.fetchall()) == oracle.canon(cols, rows), sql
+        return rows
+
+    return run

@@ -1,22 +1,18 @@
 """NULL-timestamp contract sweep for the whole batch events family.
 
 The shipped testdata has no NULL ts, so engine/oracle agreement on NULL
-handling was untested until r11 — and four queries (session windows,
-as-of attribution, user sessions, path trigrams) genuinely diverged:
+handling went untested until this sweep came, and four queries (session
+windows, as-of attribution, user sessions, path trigrams) diverged:
 Spark and DuckDB disagree on NULL sort position and NULL comparisons
 inside window/asof logic, so any query whose oracle didn't state a
 filter drifted the moment a NULL ts appeared. Every time-ordered query
 now filters NULL ts explicitly ON BOTH SIDES; this sweep feeds a
 10%-NULL events table (full production schema, props included) to every
-oracle-bearing batch events query and requires exact parity."""
+oracle-bearing batch events query and requires exact parity
+(``oracle.check``)."""
 
 from __future__ import annotations
 
-import datetime
-import json
-import os
-
-import duckdb
 import pytest
 
 from neo4j_enterprise_spark.plans import all_queries
@@ -29,49 +25,6 @@ EVENTS_BATCH = sorted(
 )
 
 
-@pytest.fixture(scope="module")
-def null_events_dir(spark, tmp_path_factory):
-    base = datetime.datetime(2024, 1, 1, 0, 7, 0)
-    rows = []
-    for i in range(200):
-        ts = None if i % 10 == 0 else base + datetime.timedelta(minutes=3 * i)
-        rows.append(
-            (
-                i,
-                ts,
-                i % 11,
-                "click" if i % 3 else "view",
-                float(i) / 7.0,
-                json.dumps({"k": i % 5, "s": f"x{i % 3}"}),
-            )
-        )
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    assert df.filter("ts IS NULL").count() == 20
-    out = str(tmp_path_factory.mktemp("null_events"))
-    df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out, "events.parquet")
-    )
-    return out
-
-
-def _norm(rows):
-    return sorted(tuple((x is None, str(x)) for x in r) for r in rows)
-
-
 @pytest.mark.parametrize("name", EVENTS_BATCH)
-def test_null_ts_parity(spark, null_events_dir, name):
-    q = QUERIES[name]
-    s_rows = [tuple(r) for r in q.spark(spark, null_events_dir).collect()]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{null_events_dir}/events.parquet/*.parquet')"
-    )
-    d_rows = [tuple(r) for r in con.execute(q.oracle).fetchall()]
-    con.close()
-    assert len(s_rows) == len(d_rows), f"{name}: {len(s_rows)} vs {len(d_rows)}"
-    assert _norm(s_rows) == _norm(d_rows), f"{name}: value divergence on NULL ts"
+def test_null_ts_parity(oracle_parity, null_events, name):
+    oracle_parity(QUERIES[name], null_events("ts"), ("events",))

@@ -31,7 +31,7 @@ _LINES = [
 
 
 @pytest.mark.parametrize("max_part", [500, None], ids=["slice", "full"])
-def test_copurchase_builder_matches_sql_twin(spark, tmp_path, max_part):
+def test_copurchase_builder_matches_sql_twin(spark, sql_twin, tmp_path, max_part):
     table = pa.table(
         {
             "l_orderkey": pa.array([o for o, _ in _LINES], pa.int64()),
@@ -46,13 +46,10 @@ def test_copurchase_builder_matches_sql_twin(spark, tmp_path, max_part):
         ("e", copurchase(spark, str(tmp_path), max_part)),
     ):
         sql = f"WITH {copurchase_cte(max_part)} SELECT * FROM {name}"
-        got = sorted(con.execute(sql).fetchall(), key=repr)
-        want = sorted(map(tuple, frame.collect()), key=repr)
-        assert got == want, name
-        assert want, name
+        assert sql_twin(con, sql, frame), name
 
 
-def test_frontier_builder_matches_bfs_reachable(spark):
+def test_frontier_builder_matches_bfs_reachable(spark, sql_twin):
     # a 1 -> 2 -> 3 -> 1 cycle, a self-loop on 4, seeds 1 and 5
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (4, 6), (5, 1), (2, 7)]
     con = duckdb.connect()
@@ -61,11 +58,9 @@ def test_frontier_builder_matches_bfs_reachable(spark):
     WITH {_frontier_cte("SELECT DISTINCT src AS seed FROM rels WHERE src IN (1, 5)", 3)}
     SELECT seed, node_id, hops FROM reach
     """
-    got = sorted(con.execute(sql).fetchall())
     rels = spark.createDataFrame(edges, "src long, dst long")
     seeds = spark.createDataFrame([(1,), (5,)], "seed long")
-    want = sorted(map(tuple, bfs_reachable(rels, seeds, k=3, cache_edges=False).collect()))
-    assert got == want
+    want = sql_twin(con, sql, bfs_reachable(rels, seeds, k=3, cache_edges=False))
     assert (1, 1, 0) in want and (5, 7, 3) in want
 
 

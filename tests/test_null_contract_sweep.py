@@ -28,12 +28,9 @@ sides, and the fixed query's own oracle rows re-prove it in
 
 from __future__ import annotations
 
-import datetime
-import json
 import os
 import re
 
-import duckdb
 import pytest
 
 from neo4j_enterprise_spark.plans import all_queries
@@ -125,67 +122,9 @@ def null_docs_dir(spark, tmp_path_factory):
     return out
 
 
-def _events_rows(null_col: str):
-    base = datetime.datetime(2024, 1, 1, 0, 7, 0)
-    rows = []
-    for i in range(200):
-        user = None if (null_col == "user_id" and i % 10 == 0) else i % 11
-        value = None if (null_col == "value" and i % 10 == 3) else float(i) / 7.0
-        rows.append(
-            (
-                i,
-                base + datetime.timedelta(minutes=3 * i),
-                user,
-                "click" if i % 3 else "view",
-                value,
-                json.dumps({"k": i % 5, "s": f"x{i % 3}"}),
-            )
-        )
-    return rows
-
-
-def _write_events(spark, tmp_path_factory, null_col: str) -> str:
-    df = spark.createDataFrame(
-        _events_rows(null_col),
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    assert df.filter(f"{null_col} IS NULL").count() == 20
-    out = str(tmp_path_factory.mktemp(f"null_{null_col}"))
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "events.parquet"))
-    return out
-
-
-@pytest.fixture(scope="module")
-def null_user_dir(spark, tmp_path_factory):
-    return _write_events(spark, tmp_path_factory, "user_id")
-
-
-@pytest.fixture(scope="module")
-def null_value_dir(spark, tmp_path_factory):
-    return _write_events(spark, tmp_path_factory, "value")
-
-
-def _norm(rows):
-    return sorted(tuple((x is None, str(x)) for x in r) for r in rows)
-
-
-def _assert_parity(spark, q, data_dir: str, table: str, name: str):
-    s_rows = [tuple(r) for r in q.spark(spark, data_dir).collect()]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * FROM read_parquet("
-        f"'{data_dir}/{table}.parquet/*.parquet')"
-    )
-    d_rows = [tuple(r) for r in con.execute(q.oracle).fetchall()]
-    con.close()
-    assert len(s_rows) == len(d_rows), f"{name}: {len(s_rows)} vs {len(d_rows)} rows"
-    assert _norm(s_rows) == _norm(d_rows), f"{name}: value divergence"
-
-
 @pytest.mark.parametrize("name", DOCS_ONLY)
-def test_null_text_parity(spark, null_docs_dir, name):
-    _assert_parity(spark, QUERIES[name], null_docs_dir, "documents", name)
+def test_null_text_parity(oracle_parity, null_docs_dir, name):
+    oracle_parity(QUERIES[name], null_docs_dir, ("documents",))
 
 
 @pytest.fixture(scope="module")
@@ -216,13 +155,13 @@ def null_emb_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", EVENTS_USER)
-def test_null_user_id_parity(spark, null_user_dir, name):
-    _assert_parity(spark, QUERIES[name], null_user_dir, "events", name)
+def test_null_user_id_parity(oracle_parity, null_events, name):
+    oracle_parity(QUERIES[name], null_events("user_id"), ("events",))
 
 
 @pytest.mark.parametrize("name", EMB_ONLY)
-def test_null_embedding_parity(spark, null_emb_dir, name):
-    _assert_parity(spark, QUERIES[name], null_emb_dir, "embeddings", name)
+def test_null_embedding_parity(oracle_parity, null_emb_dir, name):
+    oracle_parity(QUERIES[name], null_emb_dir, ("embeddings",))
 
 
 @pytest.fixture(scope="module")
@@ -275,13 +214,13 @@ def invalid_emb_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", EMB_ONLY)
-def test_invalid_embedding_parity(spark, invalid_emb_dir, name):
-    _assert_parity(spark, QUERIES[name], invalid_emb_dir, "embeddings", name)
+def test_invalid_embedding_parity(oracle_parity, invalid_emb_dir, name):
+    oracle_parity(QUERIES[name], invalid_emb_dir, ("embeddings",))
 
 
 @pytest.mark.parametrize("name", DOCS_LANG_SOURCE)
-def test_null_lang_source_parity(spark, null_docs_lang_dir, name):
-    _assert_parity(spark, QUERIES[name], null_docs_lang_dir, "documents", name)
+def test_null_lang_source_parity(oracle_parity, null_docs_lang_dir, name):
+    oracle_parity(QUERIES[name], null_docs_lang_dir, ("documents",))
 
 
 @pytest.fixture(scope="module")
@@ -308,5 +247,5 @@ def null_docs_lang_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", EVENTS_VALUE)
-def test_null_value_parity(spark, null_value_dir, name):
-    _assert_parity(spark, QUERIES[name], null_value_dir, "events", name)
+def test_null_value_parity(oracle_parity, null_events, name):
+    oracle_parity(QUERIES[name], null_events("value"), ("events",))

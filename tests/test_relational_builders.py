@@ -14,7 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from neo4j_enterprise_spark.plans import all_queries, relational
+from neo4j_enterprise_spark.plans import all_queries, oracle, relational
 from neo4j_enterprise_spark.plans.relational import (
     _HOUR_EPOCH_SQL,
     _HOURLY_TOP3_SQL,
@@ -57,37 +57,33 @@ def _events(rows) -> pa.Table:
     )
 
 
-def _sorted(rows):
-    return sorted(map(tuple, rows), key=repr)
-
-
-def test_cents_match_their_sql_twin(spark):
+def test_cents_match_their_sql_twin(spark, sql_twin):
     # products that land on .5 exactly round away from zero on both sides
     xs = [0.005, 0.015, 0.125, 1.005, 1.115, 2.675, 56020.995, -0.005, -0.025, None]
     frame = spark.createDataFrame([(x,) for x in xs], "x double")
     con = duckdb.connect()
     con.register("t", pa.table({"x": pa.array(xs, pa.float64())}))
     for unit, edge in ((100, 1), (1000, 5)):
-        want = _sorted(frame.select(F.col("x"), _cents("x", unit)).collect())
-        got = _sorted(con.execute(f"SELECT x, {_cents_sql('x', unit)} FROM t").fetchall())
-        assert got == want, unit
+        want = sql_twin(
+            con,
+            f"SELECT x, {_cents_sql('x', unit)} AS c FROM t",
+            frame.select("x", _cents("x", unit).alias("c")),
+        )
         assert (0.005, edge) in want and (-0.005, -edge) in want, unit
 
 
-def test_exact_sum_carries_low_parts_past_a_million(spark):
+def test_exact_sum_carries_low_parts_past_a_million(spark, sql_twin):
     # each low part is near 10⁶, so Σlo carries into the high part
     rows = [(g, 999_999 + g * 1_000_000 * k) for g in (0, 1) for k in range(1, 40)]
     rows += [(1, 1_100_000_000_999_999), (2, 0), (2, 999_999)]
     frame = spark.createDataFrame(rows, "g int, c long")
-    want = _sorted(
-        frame.groupBy("g").agg(_exact_sum(F.col("c")).alias("s")).select(
-            "g", F.col("s").cast("string")
-        ).collect()
-    )
     con = duckdb.connect()
     con.register("t", pa.table({"g": [r[0] for r in rows], "c": [r[1] for r in rows]}))
-    got = _sorted(con.execute("SELECT g, CAST(SUM(c) AS VARCHAR) FROM t GROUP BY g").fetchall())
-    assert got == want
+    sql_twin(
+        con,
+        "SELECT g, CAST(SUM(c) AS VARCHAR) AS s FROM t GROUP BY g",
+        frame.groupBy("g").agg(_exact_sum(F.col("c")).cast("string").alias("s")),
+    )
 
 
 def test_revenue_matches_its_sql_twins(spark):
@@ -108,31 +104,32 @@ def test_revenue_matches_its_sql_twins(spark):
     assert float(got[1]) == want[1]
 
 
-def test_hour_helpers_match_their_sql_twins(spark, tmp_path):
-    # hours 0, 1 and 3 (2 is empty), ties inside an hour, NULL ts
+def test_hour_helpers_match_their_sql_twins(spark, sql_twin, tmp_path):
+    # hours 0, 1 and 3 (2 is empty), ties inside an hour, NULL ts, and a
+    # NULL event type tied with a named one
     rows = [
         (1, 10.5, 1, "view"), (2, 20, 1, "click"), (3, 30, 2, "view"),
         (4, 40, 2, "click"), (5, 50, 3, "purchase"), (6, 3599.999999, 1, "error"),
         (7, 3600, 1, "view"), (8, 3700, 2, "view"), (9, 11000, 3, "click"),
         (10, None, 1, "view"), (11, None, 2, "click"), (12, 11001, 1, "click"),
+        (13, 11002, 2, None), (14, 11003, 3, "view"),
     ]
     pq.write_table(_events(rows), str(tmp_path / "events.parquet"))
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    con = oracle.connect(str(tmp_path), ("events",))
     ev = relational.load_table(spark, str(tmp_path), "events")
 
-    got = _sorted(con.execute(f"SELECT event_id, {_HOUR_EPOCH_SQL} FROM events").fetchall())
-    want = _sorted(ev.select("event_id", _hour_epoch()).collect())
-    assert got == want
+    want = sql_twin(
+        con,
+        f"SELECT event_id, {_HOUR_EPOCH_SQL} AS hour_epoch FROM events",
+        ev.select("event_id", _hour_epoch().alias("hour_epoch")),
+    )
     assert (10, None) in want
 
     hourly = ev.groupBy(_hour_epoch().alias("hour_epoch"), "event_type").agg(
         F.count("*").alias("n_events")
     )
-    got = _sorted(con.execute(_HOURLY_TOP3_SQL).fetchall())
-    want = _sorted(_top3_per_hour(hourly).collect())
-    assert got == want
-    assert (None, "click", 1, 1) in want
+    want = sql_twin(con, _HOURLY_TOP3_SQL, _top3_per_hour(hourly))
+    assert (None, "click", 1, 1) in want and (1704067200 + 3 * 3600, None, 1, 2) in want
 
     b = ev.filter(F.col("ts").isNotNull()).groupBy(_hour_epoch().alias("hour_epoch")).agg(
         F.count("*").alias("n")
@@ -145,9 +142,7 @@ def test_hour_helpers_match_their_sql_twins(spark, tmp_path):
          + ", b AS (SELECT CAST(hour_epoch / 3600 AS BIGINT) AS hr, n FROM b0)"),
     ):
         dense = _dense_sql(key, "n") if step is None else _dense_sql(key, "n", step)
-        got = _sorted(con.execute(f"{sql_b}, {dense} SELECT * FROM dense").fetchall())
-        want = _sorted(_dense(frame, key, "n", step).collect())
-        assert got == want, key
+        want = sql_twin(con, f"{sql_b}, {dense} SELECT * FROM dense", _dense(frame, key, "n", step))
         assert len(want) == 4 and min(r[1] for r in want) == 0, key
 
 
@@ -171,8 +166,7 @@ def test_session_builder_matches_its_sql_twin(spark, tmp_path):
         (10, 50, 3, "view"),
     ]
     pq.write_table(_events(rows), str(tmp_path / "events.parquet"))
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    con = oracle.connect(str(tmp_path), ("events",))
     got = _session_groups(
         con.execute(
             f"WITH {_sessions_sql()} SELECT user_id, sid, event_id, ts IS NOT NULL FROM g"
@@ -193,8 +187,7 @@ def test_user_sessions_split_a_sub_second_gap(spark, tmp_path):
     rows = [(1, 0.1, 1, "view"), (2, 1800.5, 1, "click"), (3, 0, 2, "view"), (4, 600, 2, "view")]
     pq.write_table(_events(rows), str(tmp_path / "events.parquet"))
     q = all_queries()["events_user_sessions"]
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    con = oracle.connect(str(tmp_path), ("events",))
     assert con.execute(q.oracle).fetchall() == [(1, 2), (2, 1)]
     assert [tuple(r) for r in q.spark(spark, str(tmp_path)).collect()] == [(1, 2), (2, 1)]
 

@@ -1,54 +1,20 @@
 """Pin the events_sliding_rollup NULL-timestamp contract on data that
-actually CONTAINS NULL ts rows (the shipped testdata has none — the r10
-ADVICE found the old parity was accidental: Spark's window() silently
-drops NULL ts while the oracle's arithmetic derivation kept them as a
-NULL group). Both sides now state the filter explicitly; this test
-feeds a NULL-bearing events table to the registered plan AND its
-registered oracle and requires exact agreement."""
+actually CONTAINS NULL ts rows (the shipped testdata has none). The old
+parity was accidental: Spark's window() silently drops NULL ts while the
+oracle's arithmetic derivation kept them as a NULL group. Both sides now
+state the filter explicitly; this test feeds a NULL-bearing events table
+to the registered plan AND its registered oracle and requires exact
+agreement."""
 
 from __future__ import annotations
-
-import datetime
-import os
-
-import duckdb
-import pytest
 
 from neo4j_enterprise_spark.plans import all_queries
 
 
-@pytest.fixture(scope="module")
-def null_events_dir(spark, tmp_path_factory):
-    base = datetime.datetime(2024, 1, 1, 0, 7, 0)
-    rows = []
-    for i in range(200):
-        ts = None if i % 10 == 0 else base + datetime.timedelta(minutes=3 * i)
-        rows.append((i, ts, "click" if i % 3 else "view", float(i) / 7.0, i % 11))
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, event_type string, value double, user_id long"
-    )
-    assert df.filter("ts IS NULL").count() == 20
-    out = str(tmp_path_factory.mktemp("nulls"))
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out, "events.parquet"))
-    return out
-
-
-def test_sliding_rollup_null_ts_parity(spark, null_events_dir):
+def test_sliding_rollup_null_ts_parity(oracle_parity, null_events):
     q = all_queries()["events_sliding_rollup"]
-    sdf = q.spark(spark, null_events_dir)
-    s_rows = sorted(tuple(r) for r in sdf.collect())
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{null_events_dir}/events.parquet/*.parquet')"
-    )
-    d_rows = sorted(tuple(r) for r in con.execute(q.oracle).fetchall())
-    con.close()
-
-    assert len(s_rows) == len(d_rows) and len(s_rows) > 0
-    assert s_rows == d_rows
+    rows = oracle_parity(q, null_events("ts"), ("events",))
     # the contract: NULL-ts rows contribute to NO window on either side
-    n_events_total = sum(r[3] for r in s_rows)
+    n_events_total = sum(r[3] for r in rows)
     # 180 non-null rows x 4 sliding windows each
     assert n_events_total == 180 * 4

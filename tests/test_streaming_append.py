@@ -11,7 +11,6 @@ import glob
 import os
 import tempfile
 
-import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -20,6 +19,8 @@ from pyspark.sql import functions as F
 from neo4j_enterprise_spark.catalog import load_table
 from neo4j_enterprise_spark.plans import all_queries
 from neo4j_enterprise_spark.plans.relational import run_events_append_rollup
+
+QUERIES = all_queries()
 
 
 def test_append_rollup_matches_batch_and_evicts_state(spark, sf_dir):
@@ -124,32 +125,7 @@ def _events_copy(sf_dir, tmp_path, edit=lambda t: t) -> str:
     return str(tmp_path)
 
 
-def _matches_oracle(spark, sf_dir, name) -> list[tuple]:
-    """Run registry query ``name`` on Spark and its oracle on DuckDB over
-    ``sf_dir``'s events; assert equal columns and rows, return the rows."""
-    q = all_queries()[name]
-    sdf = q.spark(spark, sf_dir)
-    s_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'events.parquet')}')"
-    )
-    res = con.execute(q.oracle)
-    d_cols = [d[0] for d in res.description]
-    d_rows = res.fetchall()
-    con.close()
-
-    def norm(rows):
-        return sorted(tuple((x is None, str(x)) for x in r) for r in rows)
-
-    assert sdf.columns == d_cols, name
-    assert len(s_rows) == len(d_rows), f"{name}: {len(s_rows)} vs {len(d_rows)} rows"
-    assert norm(s_rows) == norm(d_rows), f"{name}: rows differ from the oracle"
-    return s_rows
-
-
-def test_append_queries_follow_a_rewritten_events_file(spark, sf_dir, tmp_path):
+def test_append_queries_follow_a_rewritten_events_file(oracle_parity, sf_dir, tmp_path):
     """The append-mode queries keep a checkpoint and an output dir between
     runs, and a file-stream source never re-reads a path it has seen:
     after the events file is rewritten in place, each must still return
@@ -164,20 +140,20 @@ def test_append_queries_follow_a_rewritten_events_file(spark, sf_dir, tmp_path):
     staged = os.path.join(glob.escape(tempfile.gettempdir()), "nes_*")
     seen = set(glob.glob(staged))
     copy = _events_copy(sf_dir, tmp_path)
-    before = {n: len(_matches_oracle(spark, copy, n)) for n in names}
+    before = {n: len(oracle_parity(QUERIES[n], copy, ("events",))) for n in names}
     first = set(glob.glob(staged)) - seen
     _events_copy(
         sf_dir,
         tmp_path,
         lambda t: t.filter(pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)),
     )
-    after = {n: len(_matches_oracle(spark, copy, n)) for n in names}
+    after = {n: len(oracle_parity(QUERIES[n], copy, ("events",))) for n in names}
     assert all(after[n] < before[n] for n in names), (before, after)
     assert first, "the first run staged nothing under the temp dir"
     assert not first & set(glob.glob(staged)), sorted(first & set(glob.glob(staged)))
 
 
-def test_catchup_tail_keeps_null_ts_rows(spark, sf_dir, tmp_path):
+def test_catchup_tail_keeps_null_ts_rows(oracle_parity, sf_dir, tmp_path):
     """A NULL ts fails both of the catch-up query's range predicates
     (backfill ts < cut, tail ts >= cut), so the backfill leg must take
     those rows, or they vanish at the snapshot/stream seam while the
@@ -190,5 +166,5 @@ def test_catchup_tail_keeps_null_ts_rows(spark, sf_dir, tmp_path):
         return t.set_column(t.schema.get_field_index("ts"), "ts", nulls)
 
     copy = _events_copy(sf_dir, tmp_path, null_every_8th_ts)
-    rows = _matches_oracle(spark, copy, "events_stream_catchup_tail")
+    rows = oracle_parity(QUERIES["events_stream_catchup_tail"], copy, ("events",))
     assert any(r[0] is None for r in rows), "no NULL hour group"
